@@ -121,6 +121,13 @@ class RunSummary:
         )
 
 
+def _observed(obs: Observation) -> dict:
+    """``obs``'s metrics, or ``{}`` when its plan saw no row: adaptive
+    execution drops an empty stage together with the observation in
+    it, and Spark then reports an empty row for it."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
 def run_job(
     spark: SparkSession,
     config: ETLConfig,
@@ -128,11 +135,23 @@ def run_job(
     output_root: str,
     run_ts: str,
 ) -> JobResult:
-    # S1/P1 — one partitioned read, Catalyst prunes to the configured
-    # (upgrade, state) directories.
+    # S1/P1 — one partitioned read of this job's partitions; Spark's
+    # file index for it is the job's input listing (one py4j call).
     ts_df = read_timeseries(spark, config, job)
+    listed_files = [f for f in ts_df.inputFiles() if fs.is_data_file(f)]
+    # O5 discrepancy accounting (tracker.py:194-289 restated) rides the
+    # write: the observed file-path set is the files the scan could
+    # actually read, so no second pass over the input runs. The set is
+    # O(files per job), the size of ``listed_files`` the driver already
+    # holds, so driver cost does not grow. ``input_file_name()`` cannot
+    # be observed (it must be initialized before eval); the
+    # ``_metadata.file_path`` column can.
     obs_in = Observation(f"{job.job_name}_in")
-    ts_df = ts_df.observe(obs_in, F.count(F.lit(1)).alias("rows_read"))
+    ts_df = ts_df.observe(
+        obs_in,
+        F.count(F.lit(1)).alias("rows_read"),
+        F.collect_set("_metadata.file_path").alias("files_read"),
+    )
 
     # A1/A2/F1/F2 — the hourly transform. Partition columns pass
     # through as group-key-independent `min` aggregates would mangle
@@ -150,44 +169,28 @@ def run_job(
     meta_srcs = [p for p in paths.resolve_metadata_paths(job) if fs.exists(p)]
     copied = sinks.bypass_metadata(meta_srcs, output_root, run_ts, job)
 
-    # O5 discrepancy accounting (tracker.py:194-289 restated): the
-    # full listing vs the files the scan could actually read. The
-    # read-side probe is a footer-only job — zero data columns, one
-    # file name per split — so it costs a listing, not a scan, even at
-    # lake scale; corrupt inputs (skipped via ignoreCorruptFiles) are
-    # exactly the difference.
-    listed_files = [
-        f
-        for p in paths.data_partition_prefixes(config, job)
-        for f in fs.list_files_recursive(p)
-    ]
-    distinct_read = ts_df.select(F.input_file_name().alias("f")).distinct()
-    n_read = distinct_read.count()
-    if n_read == len(listed_files):
-        # happy path: counts agree, no file names cross the driver
-        missing: list[str] = []
-    else:
-        read_files = {fs.normalize_uri(r["f"]) for r in distinct_read.collect()}
-        candidates = sorted(set(map(fs.normalize_uri, listed_files)) - read_files)
-        # a zero-row parquet file yields no input_file_name() rows but
-        # is NOT corrupt — distributed writers produce empty parts
-        # routinely. Re-probe each candidate with corrupt-skipping OFF
-        # (the set is discrepancy-sized, not lake-sized): readable →
-        # legitimately empty; raising → a confirmed discrepancy.
-        missing = []
-        for f in candidates:
-            # only a Spark read/analysis failure marks a discrepancy; a
-            # transient listing/IO hiccup gets ONE retry so a healthy
-            # file is never misfiled as corrupt on a blip
-            for attempt in (0, 1):
-                try:
-                    spark.read.option(
-                        "ignoreCorruptFiles", "false"
-                    ).parquet(f).count()
-                    break
-                except (PySparkException, Py4JJavaError):
-                    if attempt == 1:
-                        missing.append(f)
+    # Listed but never read: corrupt inputs (skipped via
+    # ignoreCorruptFiles) — or legitimately empty files.
+    in_metrics = _observed(obs_in)
+    read_files = {fs.normalize_uri(f) for f in in_metrics.get("files_read", [])}
+    candidates = sorted(set(map(fs.normalize_uri, listed_files)) - read_files)
+    # a zero-row parquet file contributes no rows (so no file path) but
+    # is NOT corrupt — distributed writers produce empty parts
+    # routinely. Re-probe each candidate with corrupt-skipping OFF (the
+    # set is discrepancy-sized, not lake-sized): readable → legitimately
+    # empty; raising → a confirmed discrepancy.
+    missing: list[str] = []
+    for f in candidates:
+        # only a Spark read/analysis failure marks a discrepancy; a
+        # transient listing/IO hiccup gets ONE retry so a healthy file
+        # is never misfiled as corrupt on a blip
+        for attempt in (0, 1):
+            try:
+                spark.read.option("ignoreCorruptFiles", "false").parquet(f).count()
+                break
+            except (PySparkException, Py4JJavaError):
+                if attempt == 1:
+                    missing.append(f)
     written = len(fs.list_files_recursive(data_path))
     return JobResult(
         job_name=job.job_name,
@@ -197,10 +200,10 @@ def run_job(
         data_files_written=written,
         metadata_files_listed=len(meta_srcs),
         metadata_files_uploaded=len(copied),
-        data_files_read=n_read,
+        data_files_read=len(read_files),
         missing_data_files=missing,
-        rows_read=int(obs_in.get["rows_read"]),
-        rows_written=int(obs_out.get["rows_written"]),
+        rows_read=int(in_metrics.get("rows_read", 0)),
+        rows_written=int(_observed(obs_out).get("rows_written", 0)),
     )
 
 

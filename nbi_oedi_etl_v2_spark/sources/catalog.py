@@ -17,7 +17,12 @@ unmodified.
 
 from __future__ import annotations
 
+import logging
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
 
 
 def _sq(ident: str) -> str:
@@ -35,7 +40,8 @@ def register_etl_output(
 ) -> dict[str, str]:
     """Register the ETL output as catalog tables + per-state views.
 
-    Returns {logical name → catalog identifier}.
+    Returns {logical name → catalog identifier}; ``"metadata"`` is
+    absent when the metadata root holds no file (logged as a WARNING).
     """
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {_sq(db)}")
 
@@ -52,19 +58,29 @@ def register_etl_output(
 
     registered = {"data": data_table}
 
-    # Metadata: bypass copies live scattered under the metadata output
-    # root with their full source-relative keys (not a uniform hive
-    # layout) → an external table with recursiveFileLookup reads them
-    # all without partition inference, preserving byte-copy parity.
+    # Metadata: bypass copies keep their v1/v2/v3 key below the
+    # metadata output root (not a uniform hive layout) → an external
+    # table with recursiveFileLookup reads them all without partition
+    # inference, preserving byte-copy parity.
     meta_name = f"{metadata_table_prefix}_parquet"
     if isinstance(metadata_paths_or_root, list):
         raise ValueError("pass the metadata output ROOT directory")
     spark.sql(f"DROP TABLE IF EXISTS {_sq(db)}.{_sq(meta_name)}")
-    spark.sql(
-        f"CREATE TABLE {_sq(db)}.{_sq(meta_name)} USING PARQUET "
-        f"OPTIONS (path '{metadata_paths_or_root}', recursiveFileLookup 'true')"
-    )
-    registered["metadata"] = f"{db}.{meta_name}"
+    try:
+        spark.sql(
+            f"CREATE TABLE {_sq(db)}.{_sq(meta_name)} USING PARQUET "
+            f"OPTIONS (path '{metadata_paths_or_root}', recursiveFileLookup 'true')"
+        )
+        registered["metadata"] = f"{db}.{meta_name}"
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        # a job whose metadata files all failed to resolve copies none;
+        # its data table and views are still worth registering
+        _LOG.warning(
+            "no metadata file under %s; metadata table %s.%s not registered",
+            metadata_paths_or_root, db, meta_name,
+        )
 
     for state in states or []:
         view = f"{data_table_prefix}_state_{state.lower()}"

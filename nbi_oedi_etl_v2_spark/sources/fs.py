@@ -10,11 +10,12 @@ back to local ``os`` implementations; results are identical for local
 paths.
 
 Scale note: ``list_files_recursive`` crosses the Py4J bridge once per
-file. Fine at reference scale (~1k files/run, the cost is the remote
-LIST not the bridge); a 100M-object lake should list distributedly
-(read the object inventory, or one listing task per partition dir)
-rather than through any single-process walker — including the
-reference's own paginator.
+file, so the ETL keeps it off the input side: the job's input listing
+is the file index Spark builds for the read itself (one
+``DataFrame.inputFiles()`` call), and only the job's few output files
+are counted here. Input-side listing at lake scale belongs to Spark's
+parallel partition discovery (or an object inventory), not to any
+single-process walker — including the reference's own paginator.
 """
 
 from __future__ import annotations
@@ -29,8 +30,9 @@ from pyspark.sql import SparkSession
 def normalize_uri(path: str) -> str:
     """Canonical comparable form of a file URI or plain path: local
     ``file:`` URIs lose their scheme, %-escapes decode. Lets listings
-    (Hadoop FS) and ``input_file_name()`` (URI-encoded) be
-    set-compared for the listed-vs-read discrepancy accounting."""
+    (Hadoop FS, ``DataFrame.inputFiles()``) and ``_metadata.file_path``
+    (URI-encoded) be set-compared for the listed-vs-read discrepancy
+    accounting."""
     p = unquote(path)
     if p.startswith("file:"):
         return "/" + p[len("file:"):].lstrip("/")
@@ -85,20 +87,24 @@ def list_dirs(path: str) -> list[str]:
     )
 
 
+def is_data_file(path: str, suffix: str = ".parquet") -> bool:
+    """Whether ``path`` names a data file: it ends with ``suffix`` and
+    its name is not a hidden/commit file (``_SUCCESS``, dotfiles),
+    which Spark's own listing skips too."""
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    return name.endswith(suffix) and not name.startswith(("_", "."))
+
+
 def list_files_recursive(path: str, suffix: str = ".parquet") -> list[str]:
-    """All data files under ``path`` — the analogue of the reference's
-    paginated list_objects_v2 (indexer.py:8-45). Hidden/commit files
-    (``_SUCCESS``, dotfiles) are excluded like Spark's own listing."""
+    """All data files under ``path`` (see ``is_data_file``) — the
+    analogue of the reference's paginated list_objects_v2
+    (indexer.py:8-45)."""
     h = _hadoop(path)
     if h is None:
         local = _strip_scheme(path)
         out: list[str] = []
         for root, _dirs, files in os.walk(local):
-            out.extend(
-                os.path.join(root, f)
-                for f in files
-                if f.endswith(suffix) and not f.startswith(("_", "."))
-            )
+            out.extend(os.path.join(root, f) for f in files if is_data_file(f, suffix))
         return sorted(out)
     _jvm, fs, jpath = h
     if not fs.exists(jpath):
@@ -106,10 +112,9 @@ def list_files_recursive(path: str, suffix: str = ".parquet") -> list[str]:
     out = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(suffix) and not name.startswith(("_", ".")):
-            out.append(normalize_uri(st.getPath().toString()))
+        p = it.next().getPath()
+        if is_data_file(p.getName(), suffix):
+            out.append(normalize_uri(p.toString()))
     return sorted(out)
 
 

@@ -11,11 +11,10 @@ Semantics from ``/root/reference/etl/oedi_etl/indexer.py``:
   buggy and disables it (README.md:113, indexer.py:117); this one is
   the *fixed* behavior (SURVEY §7 phase 2).
 
-In the Spark rebuild the data-partition paths exist mostly for layout
-parity and job planning; the actual scan is one
-``spark.read.parquet(release_root)`` whose WHERE clause on the
-partition columns Catalyst turns into partition pruning — the
-manual prefix enumeration the reference does by hand.
+In the Spark rebuild a job's scan is one ``spark.read.parquet`` over
+its existing data-partition prefixes with ``basePath`` at the release
+root, so the partition columns survive and a WHERE clause on them
+still prunes.
 """
 
 from __future__ import annotations

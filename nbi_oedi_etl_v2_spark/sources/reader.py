@@ -1,12 +1,12 @@
 """Partition-pruned reads of the OEDI-shaped lake (SURVEY §2.1 S1/S2, §2.2 P1).
 
 The reference enumerates S3 prefixes by hand per (upgrade, state)
-(indexer.py:180-240). Spark-first, the whole release is ONE
-partitioned-parquet read and the config's partition predicate is a
-WHERE on the partition columns — Catalyst's partition pruning then
-lists only the matching directories, which is exactly the manual
-prefix enumeration, but it composes with downstream filters, survives
-schema evolution, and parallelizes the listing on the driver.
+(indexer.py:180-240). Here a job is ONE partitioned-parquet read of its
+existing (upgrade, state) directories under the release root, and the
+config's partition predicate is a WHERE on the partition columns — it
+composes with downstream filters, survives schema evolution, and
+Spark's file index (listed in parallel when there are many
+directories) doubles as the job's input listing.
 """
 
 from __future__ import annotations
@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .paths import release_root, resolve_metadata_paths
+from . import fs
+from .paths import data_partition_prefixes, release_root, resolve_metadata_paths
 from ..config import ETLConfig, JobConfig
 
 
@@ -26,10 +27,12 @@ def read_timeseries(
 ) -> DataFrame:
     """The S1 scan + P1 partition predicate for one job.
 
-    ``upgrade`` / ``state`` are Hive partition columns; the ``where``
-    below compiles to partition pruning (verify: ``.explain`` shows
-    the pruned ``PartitionFilters``, no data files outside the
-    selected partitions are ever opened).
+    Only the job's existing ``upgrade=/state=`` directories are read,
+    with ``basePath`` at the release root so ``upgrade`` / ``state``
+    stay Hive partition columns. Spark's file index therefore lists
+    exactly this job's files (``DataFrame.inputFiles()`` is the job's
+    input listing), and the ``where`` below still compiles to
+    partition pruning (``.explain`` shows the ``PartitionFilters``).
 
     ``ignore_corrupt`` reproduces the reference's corrupt-file story
     (README.md:465-466: one corrupt input is *reported* in the run
@@ -40,16 +43,24 @@ def read_timeseries(
     """
     reader = spark.read
     if ignore_corrupt:
-        # mergeSchema makes schema inference read every footer (as a
-        # parallel job) instead of just the first file — necessary so
-        # a corrupt FIRST file doesn't kill inference before
-        # ignoreCorruptFiles can skip it. The release schema is
-        # uniform, so merging is semantics-neutral; the cost is one
-        # distributed footer pass, same order as the accounting probe.
+        # mergeSchema makes schema inference read every footer of this
+        # job's partitions (as a parallel job) instead of just the
+        # first file — necessary so a corrupt FIRST file doesn't kill
+        # inference before ignoreCorruptFiles can skip it. The release
+        # schema is uniform, so merging is semantics-neutral.
         reader = reader.option("ignoreCorruptFiles", "true").option(
             "mergeSchema", "true"
         )
-    df = reader.parquet(release_root(config, job))
+    root = release_root(config, job)
+    # Spark raises PATH_NOT_FOUND on a missing path: a configured
+    # upgrade without data is read as no files, not as an error
+    prefixes = [p for p in data_partition_prefixes(config, job) if fs.exists(p)]
+    if prefixes:
+        df = reader.option("basePath", root).parquet(*prefixes)
+    else:
+        # no partition of this job exists: an empty scan with the
+        # release's schema, so the job still writes a typed, empty output
+        df = reader.schema(reader.parquet(root).schema).parquet()
     pred = F.col("state") == job.state
     # partition values parse as strings or ints depending on layout;
     # compare as strings for both (Catalyst still prunes on the cast).

@@ -4,12 +4,11 @@ Output layout parity with the reference
 (worker.py:200-210 + main.py:47-49): everything for a run lands under
 ``{output_root}/{run_ts}/{job_name}/...``; transformed data keeps its
 ``upgrade=/state=`` partition dirs (Spark's ``partitionBy`` recreates
-them), metadata bypass files keep their full source-relative key.
+them), metadata bypass files keep their key relative to the job's
+metadata root.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,14 +58,26 @@ def bypass_metadata(
     Exact parity demands an object copy, not read→rewrite (a parquet
     round-trip could alter row-group layout / stats and break
     bit-level comparisons downstream).
+
+    Each copy is keyed by its path relative to ``job.metadata_root_dir``
+    (``by_state/state=AK/parquet/...``), so a relative root cannot
+    escape the output directory and no ancestor of the root whose name
+    starts with ``_`` or ``.`` (which Spark's listing skips) lands in
+    the copy's key.
     """
     dest_root = metadata_output_path(output_root, run_ts, job)
+    # scheme-normalized on both sides so file:-URI sources key the same
+    # as plain local paths
+    src_root = normalize_uri(job.metadata_root_dir).rstrip("/") + "/"
     copied = []
     for src in src_paths:
-        # scheme-normalize so file:-URI sources keep the same
-        # source-relative key layout as plain local paths
-        rel = normalize_uri(src).lstrip("/").replace(":", "_")
-        dest = os.path.join(dest_root, rel)
+        key = normalize_uri(src)
+        if not key.startswith(src_root):
+            raise ValueError(
+                f"metadata source {src!r} is not under the job's metadata "
+                f"root {job.metadata_root_dir!r}"
+            )
+        dest = f"{dest_root}/{key[len(src_root):]}"
         copy_file(src, dest)
         copied.append(dest)
     return copied

@@ -422,3 +422,188 @@ def test_compact_aborts_on_failed_rename(spark, tmp_path, monkeypatch):
         compact_partitions(spark, path, ["p"], 1000)
     # original data untouched by the aborted swap
     assert spark.read.parquet(path).count() == 100
+
+
+def _partition_files(info: dict, upgrade: str = "0") -> list[str]:
+    import glob
+
+    return sorted(glob.glob(os.path.join(
+        info["data_root"], f"upgrade={upgrade}", "state=AK", "*.parquet")))
+
+
+def test_missing_upgrade_partition_is_not_an_error(spark, tmp_path):
+    # upgrade 1 is configured but has no partition directory: Spark's
+    # read must not raise PATH_NOT_FOUND, and the accounting covers
+    # only the files that exist
+    generate_oedi_lake(str(tmp_path), upgrades=("0",))
+    config = _make_config(str(tmp_path))
+    assert config.job_specific[0].upgrades == ["0", "1"]
+
+    job = run_etl(spark, config, register_catalog=False).jobs[0]
+    assert job.data_files_listed == 4
+    assert job.data_files_read == 4
+    assert job.missing_data_files == []
+    assert job.rows_read == 560 * 192
+    assert job.rows_written == job.rows_read // 4
+    assert sorted(
+        d for d in os.listdir(job.data_path) if d.startswith("upgrade=")
+    ) == ["upgrade=0"]
+
+
+def test_job_without_any_partition_lists_nothing(spark, tmp_path):
+    # NY has no partition in the release at all: an empty, typed job
+    from dataclasses import replace
+
+    generate_oedi_lake(str(tmp_path))
+    config = _make_config(str(tmp_path))
+    config = replace(config, job_specific=[replace(config.job_specific[0], state="NY")])
+
+    job = run_etl(spark, config, register_catalog=False).jobs[0]
+    assert job.data_files_listed == 0
+    assert job.data_files_read == 0
+    assert job.missing_data_files == []
+    assert job.rows_read == job.rows_written == 0
+    assert job.data_files_written == 0
+
+
+def test_job_of_empty_files_reports_zero_rows(spark, tmp_path):
+    # no row reaches the write: adaptive execution drops the empty
+    # stages with their observations, which must read as zero rows
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    info = generate_oedi_lake(str(tmp_path), upgrades=("0",))
+    for f in _partition_files(info):
+        schema = pq.read_schema(f)
+        pq.write_table(pa.table({c.name: pa.array([], c.type) for c in schema}), f)
+
+    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    assert job.data_files_listed == 4
+    assert job.data_files_read == 0
+    assert job.missing_data_files == []  # empty ≠ corrupt
+    assert job.rows_read == job.rows_written == 0
+
+
+def test_stray_non_parquet_file_leaves_counts_unchanged(spark, tmp_path):
+    info = generate_oedi_lake(str(tmp_path))
+    part_dir = os.path.dirname(_partition_files(info)[0])
+    with open(os.path.join(part_dir, "notes.txt"), "w") as fh:
+        fh.write("not a data file")
+
+    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    assert job.data_files_listed == 8
+    assert job.data_files_read == 8
+    assert job.missing_data_files == []
+
+
+def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
+    # The listed-vs-read accounting rides the write (an Observation) and
+    # the input listing is the read's own file index, so a run is 7
+    # jobs: the mergeSchema footer job, 2 for the write, 2 failing
+    # re-probe attempts of the one corrupt candidate and 2 for the
+    # catalog registration. A probe scan creeping back shows up here.
+    info = generate_oedi_lake(str(tmp_path))
+    victim = _partition_files(info)[0]
+    blob = open(victim, "rb").read()
+    with open(victim, "wb") as f:
+        f.write(blob[: len(blob) // 3])
+
+    sc = spark.sparkContext
+    group = f"job-count-pin-{os.getpid()}"
+    sc.setJobGroup(group, "run_etl job-count pin")
+    try:
+        summary = run_etl(spark, _make_config(str(tmp_path)), db="job_count_pin")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(summary.jobs[0].missing_data_files) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+
+
+def test_bypass_keys_relative_root_stay_in_output(spark, tmp_path):
+    # a relative metadata root ("../...") must not make the copy key
+    # climb out of the metadata output directory
+    from nbi_oedi_etl_v2_spark.sources import sinks
+    from nbi_oedi_etl_v2_spark.sources.paths import resolve_metadata_paths
+
+    info = generate_oedi_lake(str(tmp_path / "lake"))
+    # relative to the working directory the JVM resolves paths against
+    job = JobConfig(RELEASE, YEAR, "AK", ["0", "1"], os.path.relpath(info["metadata_root"]), "1")
+    assert job.metadata_root_dir.startswith("..")
+
+    out = str(tmp_path / "out")
+    copied = sinks.bypass_metadata(resolve_metadata_paths(job), out, "ts", job)
+    dest_root = os.path.realpath(sinks.metadata_output_path(out, "ts", job))
+    assert [os.path.relpath(os.path.realpath(c), dest_root) for c in copied] == [
+        "by_state/state=AK/parquet/AK_baseline_metadata_and_annual_results.parquet",
+        "by_state/state=AK/parquet/AK_upgrade01_metadata_and_annual_results.parquet",
+    ]
+    assert all(os.path.isfile(c) for c in copied)
+    with pytest.raises(ValueError, match="not under the job's metadata root"):
+        sinks.bypass_metadata([str(tmp_path / "elsewhere.parquet")], out, "ts", job)
+
+
+def test_bypass_keys_skip_hidden_ancestors(spark, tmp_path):
+    # an ancestor of the metadata root named "_..." must not reappear
+    # below the output root, where Spark's listing would skip it and
+    # the metadata table would have no file to infer a schema from
+    lake_root = str(tmp_path / "_staging")
+    info = generate_oedi_lake(lake_root)
+    config = _make_config(lake_root)
+
+    summary = run_etl(spark, config, db="bypass_keys")
+    job = summary.jobs[0]
+    assert job.metadata_files_uploaded == 2
+    table = f"bypass_keys.metadata_{job.job_name}_parquet".lower()
+    # 560 data buildings + 20 metadata-only, per upgrade file
+    assert spark.table(table).count() == 2 * 580
+    assert info["metadata_root"].startswith(lake_root)
+
+
+def test_register_without_metadata_file_skips_metadata_table(spark, tmp_path, caplog):
+    import logging
+
+    from nbi_oedi_etl_v2_spark.sources.catalog import register_etl_output
+
+    db = "no_meta"
+    data_path = str(tmp_path / "data")
+    spark.createDataFrame([(1, "AK"), (2, "AK")], ["bldg_id", "state"]).write.partitionBy(
+        "state").parquet(data_path)
+    stale = str(tmp_path / "stale_meta")
+    spark.range(3).write.parquet(stale)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    spark.sql(f"CREATE TABLE {db}.m_parquet USING PARQUET LOCATION '{stale}'")
+
+    with caplog.at_level(logging.WARNING):
+        registered = register_etl_output(
+            spark, db=db, data_path=data_path,
+            metadata_paths_or_root=str(tmp_path / "no_metadata_here"),
+            data_table_prefix="d", metadata_table_prefix="m", states=["AK"],
+        )
+    assert "metadata" not in registered
+    assert registered["data"] == f"{db}.d"
+    assert spark.table(registered["data_state_ak"]).count() == 2
+    assert not spark.catalog.tableExists(f"{db}.m_parquet")  # stale table dropped
+    assert any("no metadata file" in r.getMessage() for r in caplog.records)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_write_query_result_roundtrip(spark, tmp_path, fmt):
+    import glob
+
+    from nbi_oedi_etl_v2_spark.sources.sinks import write_query_result
+
+    df = spark.range(0, 100, numPartitions=4).selectExpr(
+        "id", "CAST(id * 2 AS STRING) AS doubled")
+    out = write_query_result(df, str(tmp_path), "q1", fmt=fmt, single_file=True)
+    assert out == f"{tmp_path}/query-results/q1"
+    parts = glob.glob(os.path.join(out, f"part-*.{fmt}"))
+    assert len(parts) == 1  # Athena's one-result-object convention
+    if fmt == "csv":
+        with open(parts[0]) as fh:
+            assert fh.readline().strip() == "id,doubled"
+        got = spark.read.option("header", "true").csv(out)
+        assert got.columns == ["id", "doubled"]
+    else:
+        got = spark.read.parquet(out)
+    assert sorted(int(r["id"]) for r in got.collect()) == list(range(100))
