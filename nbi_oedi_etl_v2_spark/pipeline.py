@@ -1,6 +1,6 @@
 """Batch ETL orchestrator (SURVEY §2.11 O1, §3 EP1 restated).
 
-Per job (config.sample.json ``job_specific`` entry):
+Per job (config.sample.json ``job_specific`` entry), one chain:
 
 1. partition-pruned read of the 15-min time-series (S1/P1),
 2. hourly downsample with the ``{col}_{fn}`` naming (A1/A2/F1/F2),
@@ -11,9 +11,11 @@ Per job (config.sample.json ``job_specific`` entry):
 then one run summary in the reference tracker's JSON shape
 (tracker.py:291-392; sample at README.md:467-493).
 
-Everything the reference does with worker pools, queues, poison
-pills, crash monitors and back-pressure (O2/O3/O4, manager.py) is
-absent by design: Spark's scheduler owns parallelism, retries
+The reference's worker pool (O2, manager.py) survives only as one
+driver thread per job chain, so one job's driver work (listing, footer
+merge, accounting, catalog DDL) overlaps another job's Spark jobs.
+Queues, poison pills, crash monitors and back-pressure (O3/O4) are
+absent by design: Spark's scheduler owns task parallelism, retries
 (``spark.task.maxFailures``) and memory. The tracker (O5) survives as
 file-count accounting around the declarative pipeline — Spark either
 completes a write atomically (via the parquet commit protocol) or
@@ -25,10 +27,12 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.errors import PySparkException
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
@@ -213,41 +217,33 @@ def run_etl(
     output_root: str | None = None,
     register_catalog: bool = True,
     db: str = "nbi_analytics",
-    max_concurrent_jobs: int = 1,
 ) -> RunSummary:
-    """EP1 end-to-end: all jobs, then catalog registration (O7 —
-    the reference's on-success crawler trigger becomes sequential
-    driver code).
+    """EP1 end-to-end: each job runs as one chain, ``run_job`` and then
+    its catalog registration (O7 — the reference's on-success crawler
+    trigger), and all chains run concurrently on a thread pool of
+    ``min(jobs, defaultParallelism)`` threads. Output paths and catalog
+    names are disjoint per job, so chains share nothing; job names must
+    therefore be unique (``ValueError`` otherwise, before any work).
 
-    ``max_concurrent_jobs > 1`` submits jobs from a thread pool — the
-    reference's worker-pool knob (O2) reduced to letting Spark's FIFO
-    scheduler interleave independent write pipelines; output paths are
-    disjoint per job, so no coordination is needed. Catalog updates
-    stay serialized on the driver either way.
+    Each chain inherits the caller's local properties (job group,
+    scheduler pool), so every Spark job the run submits is attributed
+    as if submitted by the caller. Waits for every chain, then raises
+    the first failure in ``job_specific`` order; results come back in
+    that order.
     """
+    names = [job.job_name for job in config.job_specific]
+    duplicates = sorted({n for n in names if names.count(n) > 1})
+    if duplicates:
+        raise ValueError(f"duplicate job names {duplicates}: they would share "
+                         "output directories and catalog tables")
     t0 = time.perf_counter()
     run_ts = run_timestamp()
     output_root = output_root or config.output_dir
-    summary = RunSummary()
+    if register_catalog:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
 
-    if max_concurrent_jobs > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_concurrent_jobs) as pool:
-            results = list(
-                pool.map(
-                    lambda job: run_job(spark, config, job, output_root, run_ts),
-                    config.job_specific,
-                )
-            )
-    else:
-        results = [
-            run_job(spark, config, job, output_root, run_ts)
-            for job in config.job_specific
-        ]
-
-    for job, result in zip(config.job_specific, results):
-        summary.jobs.append(result)
+    def chain(job: JobConfig) -> JobResult:
+        result = run_job(spark, config, job, output_root, run_ts)
         if register_catalog:
             register_etl_output(
                 spark,
@@ -260,6 +256,16 @@ def run_etl(
                 metadata_table_prefix=f"metadata_{job.job_name}".lower(),
                 states=[job.state],
             )
+        return result
 
+    workers = max(1, min(len(names), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # wrapped per chain, so each chain gets its own copy of the
+        # caller's properties: Spark SQL sets its execution id in them
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(chain), job)
+            for job in config.job_specific
+        ]
+    summary = RunSummary(jobs=[f.result() for f in futures])
     summary.total_time_seconds = time.perf_counter() - t0
     return summary

@@ -29,6 +29,20 @@ def _sq(ident: str) -> str:
     return f"`{ident}`"
 
 
+def _create_unless_no_file(spark: SparkSession, ddl: str, kind: str, root: str) -> bool:
+    """Run ``ddl``, which creates a table over ``root``; when ``root``
+    holds no file to infer a schema from, log a WARNING and return
+    False instead."""
+    try:
+        spark.sql(ddl)
+        return True
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        _LOG.warning("no %s file under %s; table not registered: %s", kind, root, ddl)
+        return False
+
+
 def register_etl_output(
     spark: SparkSession,
     db: str,
@@ -38,57 +52,55 @@ def register_etl_output(
     metadata_table_prefix: str = "metadata_table",
     states: list[str] | None = None,
 ) -> dict[str, str]:
-    """Register the ETL output as catalog tables + per-state views.
+    """Register the ETL output as catalog tables + per-state views in
+    the existing database ``db``.
 
-    Returns {logical name → catalog identifier}; ``"metadata"`` is
-    absent when the metadata root holds no file (logged as a WARNING).
+    Returns {logical name → catalog identifier}. A ``data_path`` holding
+    no file (a job that wrote no row) gets no data table and no
+    per-state views; a metadata root holding no file gets no
+    ``"metadata"`` table. Either skip is logged as a WARNING, and a
+    stale table or view of the same name is still dropped.
     """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {_sq(db)}")
-
-    data_table = f"{db}.{data_table_prefix}"
-    spark.sql(f"DROP TABLE IF EXISTS {_sq(db)}.{_sq(data_table_prefix)}")
-    spark.sql(
-        f"CREATE TABLE {_sq(db)}.{_sq(data_table_prefix)} "
-        f"USING PARQUET LOCATION '{data_path}'"
+    registered = {}
+    data_table = f"{_sq(db)}.{_sq(data_table_prefix)}"
+    spark.sql(f"DROP TABLE IF EXISTS {data_table}")
+    has_data = _create_unless_no_file(
+        spark, f"CREATE TABLE {data_table} USING PARQUET LOCATION '{data_path}'",
+        "data", data_path,
     )
-    try:
-        spark.sql(f"ALTER TABLE {_sq(db)}.{_sq(data_table_prefix)} RECOVER PARTITIONS")
-    except Exception:
-        pass  # unpartitioned layout — nothing to recover
-
-    registered = {"data": data_table}
+    if has_data:
+        try:
+            spark.sql(f"ALTER TABLE {data_table} RECOVER PARTITIONS")
+        except Exception:
+            pass  # unpartitioned layout — nothing to recover
+        registered["data"] = f"{db}.{data_table_prefix}"
 
     # Metadata: bypass copies keep their v1/v2/v3 key below the
     # metadata output root (not a uniform hive layout) → an external
     # table with recursiveFileLookup reads them all without partition
-    # inference, preserving byte-copy parity.
+    # inference, preserving byte-copy parity. A job whose metadata
+    # files all failed to resolve copies none; its data table and views
+    # are still worth registering.
     meta_name = f"{metadata_table_prefix}_parquet"
     if isinstance(metadata_paths_or_root, list):
         raise ValueError("pass the metadata output ROOT directory")
-    spark.sql(f"DROP TABLE IF EXISTS {_sq(db)}.{_sq(meta_name)}")
-    try:
-        spark.sql(
-            f"CREATE TABLE {_sq(db)}.{_sq(meta_name)} USING PARQUET "
-            f"OPTIONS (path '{metadata_paths_or_root}', recursiveFileLookup 'true')"
-        )
+    meta_table = f"{_sq(db)}.{_sq(meta_name)}"
+    spark.sql(f"DROP TABLE IF EXISTS {meta_table}")
+    if _create_unless_no_file(
+        spark,
+        f"CREATE TABLE {meta_table} USING PARQUET "
+        f"OPTIONS (path '{metadata_paths_or_root}', recursiveFileLookup 'true')",
+        "metadata", metadata_paths_or_root,
+    ):
         registered["metadata"] = f"{db}.{meta_name}"
-    except AnalysisException as e:
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-            raise
-        # a job whose metadata files all failed to resolve copies none;
-        # its data table and views are still worth registering
-        _LOG.warning(
-            "no metadata file under %s; metadata table %s.%s not registered",
-            metadata_paths_or_root, db, meta_name,
-        )
 
     for state in states or []:
         view = f"{data_table_prefix}_state_{state.lower()}"
         spark.sql(f"DROP VIEW IF EXISTS {_sq(db)}.{_sq(view)}")
-        spark.sql(
-            f"CREATE VIEW {_sq(db)}.{_sq(view)} AS "
-            f"SELECT * FROM {_sq(db)}.{_sq(data_table_prefix)} "
-            f"WHERE state = '{state}'"
-        )
-        registered[f"data_state_{state.lower()}"] = f"{db}.{view}"
+        if has_data:
+            spark.sql(
+                f"CREATE VIEW {_sq(db)}.{_sq(view)} AS "
+                f"SELECT * FROM {data_table} WHERE state = '{state}'"
+            )
+            registered[f"data_state_{state.lower()}"] = f"{db}.{view}"
     return registered

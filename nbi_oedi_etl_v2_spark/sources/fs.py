@@ -48,7 +48,7 @@ def _hadoop(path: str):
     None when no session is up (local fallback).
 
     The active session is thread-local in the JVM, so worker threads
-    (run_etl's ThreadPoolExecutor) often see None — fall back to the
+    (run_etl's per-job chain threads) often see None — fall back to the
     process-wide instantiated session before giving up. Silently
     falling back to ``os.*`` on an object-store URI would return empty
     listings, so a remote scheme with no session at all raises.

@@ -194,29 +194,48 @@ def test_partition_pruned_scan(spark, etl_config):
     assert df.count() == 560 * 192 * 2
 
 
+def _job_counts(job) -> tuple:
+    return (job.data_files_listed, job.data_files_read, job.data_files_written,
+            job.metadata_files_listed, job.metadata_files_uploaded,
+            job.rows_read, job.rows_written, job.missing_data_files)
+
+
 def test_concurrent_jobs_match_sequential(spark, etl_config, lake, tmp_path):
-    # one job per state run from a thread pool; job_name derives from
-    # release/state, so states give the jobs disjoint output paths
+    # one job per state, their chains run concurrently; job_name derives
+    # from release/state, so states give the jobs disjoint output paths.
+    # Each job must come out exactly as when it runs alone.
     from dataclasses import replace
 
-    two_jobs = replace(
-        etl_config,
-        job_specific=[
-            etl_config.job_specific[0],
-            replace(etl_config.job_specific[0], state="CA"),
-        ],
-    )
-    out = str(tmp_path / "concurrent")
-    summary = run_etl(
-        spark, two_jobs, output_root=out, register_catalog=False,
-        max_concurrent_jobs=2,
-    )
-    assert len(summary.jobs) == 2
-    assert {j.job_name for j in summary.jobs} == {
-        j.job_name for j in two_jobs.job_specific
-    }
-    assert all(j.data_files_written > 0 for j in summary.jobs)
-    assert all(0 < j.rows_written < j.rows_read for j in summary.jobs)
+    jobs = [etl_config.job_specific[0], replace(etl_config.job_specific[0], state="CA")]
+    together = run_etl(
+        spark, replace(etl_config, job_specific=jobs),
+        output_root=str(tmp_path / "concurrent"), register_catalog=False,
+    ).jobs
+    alone = [
+        run_etl(spark, replace(etl_config, job_specific=[job]),
+                output_root=str(tmp_path / job.state), register_catalog=False).jobs[0]
+        for job in jobs
+    ]
+    assert [j.job_name for j in together] == [j.job_name for j in jobs]
+    for got, want in zip(together, alone):
+        assert _job_counts(got) == _job_counts(want)
+        assert 0 < got.rows_written < got.rows_read
+        assert sorted(spark.read.parquet(got.data_path).collect(), key=str) == sorted(
+            spark.read.parquet(want.data_path).collect(), key=str)
+
+
+def test_duplicate_job_names_rejected_before_any_work(spark, etl_config, tmp_path):
+    # two entries with one job_name would write one output directory and
+    # one set of catalog names
+    from dataclasses import replace
+
+    job = etl_config.job_specific[0]
+    config = replace(etl_config, job_specific=[job, replace(job, upgrades=["0"])])
+    out = tmp_path / "dup"
+    with pytest.raises(ValueError, match="duplicate job names"):
+        run_etl(spark, config, output_root=str(out), db="duplicate_names")
+    assert not out.exists()
+    assert not spark.catalog.databaseExists("duplicate_names")
 
 
 def _make_config(lake_root: str, scheme: str = "") -> ETLConfig:
@@ -518,6 +537,89 @@ def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert len(summary.jobs[0].missing_data_files) == 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+
+
+def _corrupt(path: str) -> None:
+    blob = open(path, "rb").read()
+    with open(path, "wb") as f:
+        f.write(blob[: len(blob) // 3])  # destroys the footer
+
+
+def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
+    # The chains run on pool threads: each must carry the caller's job
+    # group, or the run's jobs escape it. A corrupt-file job (7 jobs, as
+    # above) plus a healthy one (footer job, 2 write jobs, 2 catalog
+    # jobs) is 12, the same on every run.
+    from dataclasses import replace
+
+    info = generate_oedi_lake(str(tmp_path))
+    _corrupt(_partition_files(info)[0])
+    config = _make_config(str(tmp_path))
+    config = replace(config, job_specific=[
+        config.job_specific[0], replace(config.job_specific[0], state="CA")])
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"two-job-pin-{os.getpid()}-{tmp_path.name}"
+    sc.setJobGroup(group, "two-job run_etl attribution")
+    try:
+        summary = run_etl(spark, config, output_root=str(tmp_path / "out"),
+                          db="two_job_pin")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [len(j.missing_data_files) for j in summary.jobs] == [1, 0]
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) == 12
+
+
+def test_failing_job_raises_after_healthy_chain_finishes(spark, tmp_path):
+    # the first job's every input is corrupt, so its read fails in
+    # schema inference; the second job is healthy and must still run
+    # to its last catalog step before run_etl raises
+    import threading
+    from dataclasses import replace
+
+    from pyspark.errors import AnalysisException
+
+    info = generate_oedi_lake(str(tmp_path))
+    for upgrade in ("0", "1"):
+        for f in _partition_files(info, upgrade):
+            _corrupt(f)
+    config = _make_config(str(tmp_path))
+    bad = config.job_specific[0]
+    good = replace(bad, state="CA")
+    config = replace(config, job_specific=[bad, good])
+
+    db = "failing_job"
+    before = set(threading.enumerate())
+    with pytest.raises(AnalysisException) as err:
+        run_etl(spark, config, output_root=str(tmp_path / "out"), db=db)
+    assert err.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+    assert not [t for t in threading.enumerate() if t not in before and t.is_alive()]
+    data, meta = f"data_{good.job_name}".lower(), f"metadata_{good.job_name}_parquet".lower()
+    assert {t.name for t in spark.catalog.listTables(db)} == {data, f"{data}_state_ca", meta}
+    assert spark.table(f"{db}.{data}_state_ca").count() > 0
+    assert spark.table(f"{db}.{meta}").count() > 0
+
+
+def test_job_without_any_partition_registers_no_data_table(spark, tmp_path, caplog):
+    # the NY job of test_job_without_any_partition_lists_nothing, catalog
+    # on: its data table and view are skipped with a WARNING, not a crash
+    import logging
+    from dataclasses import replace
+
+    generate_oedi_lake(str(tmp_path))
+    config = _make_config(str(tmp_path))
+    config = replace(config, job_specific=[replace(config.job_specific[0], state="NY")])
+
+    db = "no_partition"
+    with caplog.at_level(logging.WARNING):
+        job = run_etl(spark, config, db=db).jobs[0]
+    assert job.rows_written == job.data_files_written == 0
+    assert spark.catalog.listTables(db) == []
+    assert any("no data file" in r.getMessage() for r in caplog.records)
 
 
 def test_bypass_keys_relative_root_stay_in_output(spark, tmp_path):
