@@ -402,29 +402,6 @@ def bfs_levels(
     return dist
 
 
-def bfs_oracle_sql(max_depth: int = 6) -> str:
-    """DuckDB mirror of ``bfs_levels`` over the lineitem co-purchase
-    graph, sourced at the minimum part key: a bounded recursive CTE
-    (UNION dedups (node, dist) pairs; cycles cannot recurse past
-    ``max_depth``), then MIN(dist) per node."""
-    return f"""
-    WITH RECURSIVE edges AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-      WHERE a.l_partkey <> b.l_partkey
-    ),
-    walk(node, dist) AS (
-      SELECT (SELECT MIN(l_partkey) FROM lineitem), 0
-      UNION
-      SELECT e.dst, w.dist + 1
-      FROM walk w JOIN edges e ON e.src = w.node
-      WHERE w.dist < {max_depth}
-    )
-    SELECT node, CAST(MIN(dist) AS INTEGER) AS dist
-    FROM walk GROUP BY node ORDER BY node
-    """
-
-
 def weighted_sssp(
     edges: DataFrame,
     sources: DataFrame,

@@ -33,7 +33,6 @@ from datetime import datetime, timezone
 
 from py4j.protocol import Py4JJavaError
 from pyspark import inheritable_thread_target
-from pyspark.errors import PySparkException
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -178,23 +177,29 @@ def run_job(
     in_metrics = _observed(obs_in)
     read_files = {fs.normalize_uri(f) for f in in_metrics.get("files_read", [])}
     candidates = sorted(set(map(fs.normalize_uri, listed_files)) - read_files)
-    # a zero-row parquet file contributes no rows (so no file path) but
-    # is NOT corrupt — distributed writers produce empty parts
-    # routinely. Re-probe each candidate with corrupt-skipping OFF (the
-    # set is discrepancy-sized, not lake-sized): readable → legitimately
-    # empty; raising → a confirmed discrepancy.
+    # Each candidate's footer is read on the driver (the set is
+    # discrepancy-sized, not lake-sized). A zero-row parquet file
+    # contributes no file path but is NOT corrupt — distributed writers
+    # produce empty parts routinely — so a footer declaring 0 rows
+    # clears it. An unreadable footer, or one declaring rows the scan
+    # never produced (corrupt pages), is a confirmed discrepancy:
+    # read_timeseries' `where` prunes partitions only, so every row of
+    # a readable listed file reaches the observation. Not covered: a
+    # file that fails partway, after some of its rows were read, is in
+    # `read_files` and never becomes a candidate.
     missing: list[str] = []
     for f in candidates:
-        # only a Spark read/analysis failure marks a discrepancy; a
-        # transient listing/IO hiccup gets ONE retry so a healthy file
-        # is never misfiled as corrupt on a blip
-        for attempt in (0, 1):
+        declared = None
+        # only a JVM read failure counts; one retry, so a transient IO
+        # blip never files a healthy file as corrupt
+        for _ in range(2):
             try:
-                spark.read.option("ignoreCorruptFiles", "false").parquet(f).count()
+                declared = fs.parquet_row_count(f)
                 break
-            except (PySparkException, Py4JJavaError):
-                if attempt == 1:
-                    missing.append(f)
+            except Py4JJavaError:
+                pass
+        if declared != 0:
+            missing.append(f)
     written = len(fs.list_files_recursive(data_path))
     return JobResult(
         job_name=job.job_name,

@@ -2,12 +2,12 @@
 
 Every helper routes through the JVM Hadoop FileSystem of the active
 SparkSession when one exists, so county discovery, the metadata
-byte-copy and run-file accounting speak any Hadoop FS URI (``file:``,
-``s3a:``, ``hdfs:``, ``abfss:``) exactly like ``spark.read`` /
-``df.write`` do — the reference is S3-native (indexer.py:5,
-worker.py:34). Without an active session (pure-unit tests) they fall
-back to local ``os`` implementations; results are identical for local
-paths.
+byte-copy, run-file accounting and Parquet footer reads speak any
+Hadoop FS URI (``file:``, ``s3a:``, ``hdfs:``, ``abfss:``) exactly like
+``spark.read`` / ``df.write`` do — the reference is S3-native
+(indexer.py:5, worker.py:34). Without an active session (pure-unit
+tests) they fall back to local ``os`` implementations; results are
+identical for local paths. The footer read has no such fallback.
 
 Scale note: ``list_files_recursive`` crosses the Py4J bridge once per
 file, so the ETL keeps it off the input side: the job's input listing
@@ -116,6 +116,25 @@ def list_files_recursive(path: str, suffix: str = ".parquet") -> list[str]:
         if is_data_file(p.getName(), suffix):
             out.append(normalize_uri(p.toString()))
     return sorted(out)
+
+
+def parquet_row_count(path: str) -> int:
+    """Row count the Parquet footer of ``path`` declares, read on the
+    driver through parquet-hadoop's ``ParquetFileReader`` (no Spark
+    job). Raises ``Py4JJavaError`` when the footer cannot be read: a
+    truncated, zero-byte or missing file."""
+    h = _hadoop(path)
+    if h is None:
+        raise RuntimeError(f"reading the Parquet footer of {path!r} needs a SparkSession")
+    jvm, fs, jpath = h
+    hadoop = jvm.org.apache.parquet.hadoop
+    reader = hadoop.ParquetFileReader.open(
+        hadoop.util.HadoopInputFile.fromPath(jpath, fs.getConf())
+    )
+    try:
+        return int(reader.getRecordCount())
+    finally:
+        reader.close()
 
 
 def copy_file(src: str, dest: str) -> None:

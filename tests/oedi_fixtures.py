@@ -18,6 +18,7 @@ saved-query-3 ``rn <= 500`` path truncates.
 from __future__ import annotations
 
 import os
+import zlib
 
 import numpy as np
 import pyarrow as pa
@@ -112,7 +113,8 @@ def generate_oedi_lake(root: str, states: tuple[str, ...] = ("AK", "CA"),
         plan = _building_plan(state)
         bldg_ids = [r[0] for r in plan]
         for upgrade in upgrades:
-            seed = hash((state, upgrade)) % (2**31)
+            # stable across processes, unlike the salted built-in hash()
+            seed = zlib.crc32(f"{state}/{upgrade}".encode())
             part_dir = os.path.join(data_root, f"upgrade={upgrade}", f"state={state}")
             os.makedirs(part_dir, exist_ok=True)
             # buildings never span files (SURVEY §4 parity)

@@ -450,6 +450,14 @@ def _partition_files(info: dict, upgrade: str = "0") -> list[str]:
         info["data_root"], f"upgrade={upgrade}", "state=AK", "*.parquet")))
 
 
+def _zero_rows(path: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(path)
+    pq.write_table(pa.table({c.name: pa.array([], c.type) for c in schema}), path)
+
+
 def test_missing_upgrade_partition_is_not_an_error(spark, tmp_path):
     # upgrade 1 is configured but has no partition directory: Spark's
     # read must not raise PATH_NOT_FOUND, and the accounting covers
@@ -488,13 +496,9 @@ def test_job_without_any_partition_lists_nothing(spark, tmp_path):
 def test_job_of_empty_files_reports_zero_rows(spark, tmp_path):
     # no row reaches the write: adaptive execution drops the empty
     # stages with their observations, which must read as zero rows
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     info = generate_oedi_lake(str(tmp_path), upgrades=("0",))
     for f in _partition_files(info):
-        schema = pq.read_schema(f)
-        pq.write_table(pa.table({c.name: pa.array([], c.type) for c in schema}), f)
+        _zero_rows(f)
 
     job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
     assert job.data_files_listed == 4
@@ -516,11 +520,12 @@ def test_stray_non_parquet_file_leaves_counts_unchanged(spark, tmp_path):
 
 
 def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
-    # The listed-vs-read accounting rides the write (an Observation) and
-    # the input listing is the read's own file index, so a run is 7
-    # jobs: the mergeSchema footer job, 2 for the write, 2 failing
-    # re-probe attempts of the one corrupt candidate and 2 for the
-    # catalog registration. A probe scan creeping back shows up here.
+    # The listed-vs-read accounting rides the write (an Observation),
+    # the input listing is the read's own file index and the corrupt
+    # candidate's footer is read on the driver, so a run is 5 jobs: the
+    # mergeSchema footer job, 2 for the write and 2 for the catalog
+    # registration. A probe scan or Spark re-check creeping back shows
+    # up here.
     info = generate_oedi_lake(str(tmp_path))
     victim = _partition_files(info)[0]
     blob = open(victim, "rb").read()
@@ -536,7 +541,7 @@ def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(summary.jobs[0].missing_data_files) == 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
 
 
 def _corrupt(path: str) -> None:
@@ -545,11 +550,101 @@ def _corrupt(path: str) -> None:
         f.write(blob[: len(blob) // 3])  # destroys the footer
 
 
+def _corrupt_pages(path: str) -> None:
+    with open(path, "r+b") as f:
+        f.seek(8)
+        f.write(bytes(3992))  # zeroes bytes 8-4000 (data pages); footer intact
+
+
+def test_page_corrupt_file_is_reported(spark, tmp_path):
+    # The footer still declares the file's 26,880 rows, but the scan
+    # skips it: those rows were lost and must be reported, not filed
+    # as a legitimately empty file.
+    info = generate_oedi_lake(str(tmp_path))
+    victim = _partition_files(info)[0]
+    _corrupt_pages(victim)
+
+    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    assert job.data_files_listed == 8
+    assert job.data_files_read == 7
+    assert [os.path.basename(f) for f in job.missing_data_files] == [
+        os.path.basename(victim)]
+    assert job.rows_read == 7 * 140 * 192
+
+
+def _zero_bytes(path: str) -> None:
+    open(path, "wb").close()
+
+
+def _run_one_job(spark, root: str):
+    from nbi_oedi_etl_v2_spark.pipeline import run_job
+
+    config = _make_config(root)
+    return run_job(spark, config, config.job_specific[0], os.path.join(root, "out"),
+                   "20240101T000000Z")
+
+
+@pytest.mark.parametrize("damage, declared, reported", [
+    (_corrupt, None, True),             # truncated footer
+    (_zero_bytes, None, True),
+    (_zero_rows, 0, False),
+    (_corrupt_pages, 140 * 192, True),  # footer intact, pages corrupt
+], ids=["truncated-footer", "zero-byte", "zero-row", "page-corrupt"])
+def test_unread_file_verdict(spark, tmp_path, damage, declared, reported):
+    # The footer read classifies each listed-but-unread file: cleared
+    # only when it declares 0 rows, reported when it is unreadable or
+    # declares rows the scan never read.
+    from py4j.protocol import Py4JJavaError
+
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+
+    info = generate_oedi_lake(str(tmp_path), upgrades=("0",))
+    victim = _partition_files(info)[0]
+    damage(victim)
+    if declared is None:
+        with pytest.raises(Py4JJavaError):
+            fsmod.parquet_row_count(victim)
+    else:
+        assert fsmod.parquet_row_count(victim) == declared
+
+    job = _run_one_job(spark, str(tmp_path))
+    assert job.data_files_listed == 4
+    assert job.data_files_read == 3
+    missing = [os.path.basename(f) for f in job.missing_data_files]
+    assert missing == ([os.path.basename(victim)] if reported else [])
+
+
+@pytest.mark.parametrize("failures, reported", [(1, False), (2, True)])
+def test_footer_read_retried_once(spark, tmp_path, monkeypatch, failures, reported):
+    # A zero-row file whose footer read fails once is still cleared by
+    # the retry; failing twice reports it.
+    from py4j.protocol import Py4JJavaError
+
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+
+    info = generate_oedi_lake(str(tmp_path), upgrades=("0",))
+    _zero_rows(_partition_files(info)[0])
+    real = fsmod.parquet_row_count
+    calls = []
+
+    def flaky(path):
+        calls.append(path)
+        if len(calls) <= failures:
+            raise Py4JJavaError("injected", spark._jvm.java.io.IOException("blip"))
+        return real(path)
+
+    monkeypatch.setattr(fsmod, "parquet_row_count", flaky)
+    job = _run_one_job(spark, str(tmp_path))
+    assert len(calls) == 2
+    assert [os.path.basename(f) for f in job.missing_data_files] == (
+        ["part-000.parquet"] if reported else [])
+
+
 def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
     # The chains run on pool threads: each must carry the caller's job
-    # group, or the run's jobs escape it. A corrupt-file job (7 jobs, as
-    # above) plus a healthy one (footer job, 2 write jobs, 2 catalog
-    # jobs) is 12, the same on every run.
+    # group, or the run's jobs escape it. Each job, the corrupt-file one
+    # as above and the healthy one alike, is the footer job, 2 write
+    # jobs and 2 catalog jobs: 10, the same on every run.
     from dataclasses import replace
 
     info = generate_oedi_lake(str(tmp_path))
@@ -571,7 +666,7 @@ def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert [len(j.missing_data_files) for j in summary.jobs] == [1, 0]
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert len(tracker.getJobIdsForGroup(group)) == 12
+    assert len(tracker.getJobIdsForGroup(group)) == 10
 
 
 def test_failing_job_raises_after_healthy_chain_finishes(spark, tmp_path):
