@@ -4,7 +4,10 @@ Mirrors the reference's ``etl_config`` JSON schema
 (``/root/reference/config.sample.json:14-55``, documented at
 ``README.md:89-141``): a shared section (buckets/roots) plus a list of
 ``job_specific`` entries (release, year, state, upgrades, metadata
-version/root, optional counties) and operational ``settings``.
+version/root, optional counties). The reference's operational
+``settings`` (worker counts, queue bounds, log files) and
+``glue_job_timeout`` have no Spark counterpart — the task scheduler
+owns them — so ``from_dict`` accepts and ignores them.
 
 The storage root is a generic filesystem/object-store URI here —
 ``file:/...`` locally, ``s3a://bucket`` on a cluster — Spark's
@@ -37,28 +40,12 @@ class JobConfig:
 
 
 @dataclass
-class Settings:
-    """Operational knobs (config.sample.json:47-54). Spark makes most
-    of them obsolete (worker counts, queue bounds → task scheduler);
-    kept for config-compat so reference configs parse unchanged."""
-
-    log_dir: str = "logs"
-    log_filename: str = "etl.log"
-    logging_level: str = "INFO"
-    idle_timeout_in_minutes: int = 5
-    listing_page_size: int = 500
-    max_listing_queue_size: int = 1000
-
-
-@dataclass
 class ETLConfig:
     src_bucket: str
     base_partition: str
     data_partition_in_release: str
     output_dir: str
     job_specific: list[JobConfig] = field(default_factory=list)
-    settings: Settings = field(default_factory=Settings)
-    glue_job_timeout: int = 14400
 
     @classmethod
     def from_dict(cls, raw: dict[str, Any]) -> "ETLConfig":
@@ -76,17 +63,10 @@ class ETLConfig:
             )
             for j in raw.get("job_specific", [])
         ]
-        settings_raw = {
-            k: v
-            for k, v in raw.get("settings", {}).items()
-            if k in Settings.__dataclass_fields__
-        }
         return cls(
             src_bucket=raw["src_bucket"],
             base_partition=raw["base_partition"],
             data_partition_in_release=raw["data_partition_in_release"],
             output_dir=raw.get("output_dir", "etl_output"),
             job_specific=jobs,
-            settings=Settings(**settings_raw),
-            glue_job_timeout=int(raw.get("glue_job_timeout", 14400)),
         )

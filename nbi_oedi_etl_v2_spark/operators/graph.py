@@ -694,7 +694,8 @@ def label_propagation(
             # max of (c, -lbl) picks the highest count, then the
             # smallest label — no per-node sort window (the window
             # formulation paid an extra sort-exchange per round).
-            # r11 decomposition ABA (tools/ab_labelprop_decompose.py)
+            # r11 decomposition ABA (plans/r11/AB_labelprop_decompose.json;
+            # script: git log --diff-filter=D -- tools/ab_labelprop_decompose.py)
             # measured and REJECTED two further round fusions here:
             # a decimal-packed HashAggregate argmax (neutral at
             # sf0.1, slightly worse at sf1 — the 128-bit arithmetic

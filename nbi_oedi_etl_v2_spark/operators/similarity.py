@@ -563,7 +563,9 @@ def semantic_dedup(
     # round-robin exchange is pure overhead (the minhash/ngram
     # lesson). Interleaved ABA at sf0.1: widen 2.58 vs no-widen
     # 2.21 s med (slower 6/7 reps); at sf1 the difference is inside
-    # noise (20.64 vs 21.15). tools/ab_widen_similarity.py.
+    # noise (20.64 vs 21.15). Evidence: OPTIMIZATION_r11.md and
+    # plans/r11/AB_widen_similarity_kept_sites.json; script:
+    # git log --diff-filter=D -- tools/ab_widen_similarity.py.
     v = with_norm(df, vec_col).select(
         F.col(f"`{id_col}`").alias("vid"), "vec", "norm"
     )

@@ -40,7 +40,7 @@ from .config import ETLConfig, JobConfig
 from .operators.downsample import downsample
 from .sources import fs, paths, sinks
 from .sources.catalog import register_etl_output
-from .sources.reader import read_metadata, read_timeseries
+from .sources.reader import read_timeseries
 
 
 def run_timestamp() -> str:
@@ -160,9 +160,8 @@ def run_job(
     # through as group-key-independent `min` aggregates would mangle
     # them, so keep them as extra grouping keys: they're constant per
     # input partition and must survive for partitionBy on write.
-    extra_keys = [c for c in ("upgrade", "state") if c in ts_df.columns]
     hourly = downsample(ts_df, timestamp_col="timestamp", entity_col="bldg_id",
-                        extra_group_cols=extra_keys)
+                        extra_group_cols=["upgrade", "state"])
     obs_out = Observation(f"{job.job_name}_out")
     hourly = hourly.observe(obs_out, F.count(F.lit(1)).alias("rows_written"))
 
@@ -254,9 +253,7 @@ def run_etl(
                 spark,
                 db=db,
                 data_path=result.data_path,
-                metadata_paths_or_root=sinks.metadata_output_path(
-                    output_root, run_ts, job
-                ),
+                metadata_root=sinks.metadata_output_path(output_root, run_ts, job),
                 data_table_prefix=f"data_{job.job_name}".lower(),
                 metadata_table_prefix=f"metadata_{job.job_name}".lower(),
                 states=[job.state],

@@ -23,12 +23,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-_STATE_STORE_PROVIDERS = {
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-    "hdfs": ("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"),
-}
+_ROCKSDB_STATE_STORE = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 def get_spark(
@@ -66,14 +63,8 @@ def get_spark(
         # by disk rather than executor heap — the 100 TB posture. The
         # HDFS-backed default keeps every state row on the heap, which
         # caps state at executor memory. Changelog checkpointing ships
-        # per-batch deltas instead of full snapshots. Override with
-        # SPARK_GRAFT_STATE_STORE=hdfs for the heap-backed provider.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            _STATE_STORE_PROVIDERS[
-                os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb")
-            ],
-        )
+        # per-batch deltas instead of full snapshots.
+        .config("spark.sql.streaming.stateStore.providerClass", _ROCKSDB_STATE_STORE)
         .config(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             "true",

@@ -47,7 +47,7 @@ def register_etl_output(
     spark: SparkSession,
     db: str,
     data_path: str,
-    metadata_paths_or_root: list[str] | str,
+    metadata_root: str,
     data_table_prefix: str = "data_table",
     metadata_table_prefix: str = "metadata_table",
     states: list[str] | None = None,
@@ -69,10 +69,7 @@ def register_etl_output(
         "data", data_path,
     )
     if has_data:
-        try:
-            spark.sql(f"ALTER TABLE {data_table} RECOVER PARTITIONS")
-        except Exception:
-            pass  # unpartitioned layout — nothing to recover
+        spark.sql(f"ALTER TABLE {data_table} RECOVER PARTITIONS")
         registered["data"] = f"{db}.{data_table_prefix}"
 
     # Metadata: bypass copies keep their v1/v2/v3 key below the
@@ -82,15 +79,13 @@ def register_etl_output(
     # files all failed to resolve copies none; its data table and views
     # are still worth registering.
     meta_name = f"{metadata_table_prefix}_parquet"
-    if isinstance(metadata_paths_or_root, list):
-        raise ValueError("pass the metadata output ROOT directory")
     meta_table = f"{_sq(db)}.{_sq(meta_name)}"
     spark.sql(f"DROP TABLE IF EXISTS {meta_table}")
     if _create_unless_no_file(
         spark,
         f"CREATE TABLE {meta_table} USING PARQUET "
-        f"OPTIONS (path '{metadata_paths_or_root}', recursiveFileLookup 'true')",
-        "metadata", metadata_paths_or_root,
+        f"OPTIONS (path '{metadata_root}', recursiveFileLookup 'true')",
+        "metadata", metadata_root,
     ):
         registered["metadata"] = f"{db}.{meta_name}"
 

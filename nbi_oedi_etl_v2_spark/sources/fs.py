@@ -1,13 +1,11 @@
 """Filesystem helpers for job planning & the bypass sink.
 
-Every helper routes through the JVM Hadoop FileSystem of the active
-SparkSession when one exists, so county discovery, the metadata
-byte-copy, run-file accounting and Parquet footer reads speak any
-Hadoop FS URI (``file:``, ``s3a:``, ``hdfs:``, ``abfss:``) exactly like
-``spark.read`` / ``df.write`` do — the reference is S3-native
-(indexer.py:5, worker.py:34). Without an active session (pure-unit
-tests) they fall back to local ``os`` implementations; results are
-identical for local paths. The footer read has no such fallback.
+Every helper routes through the JVM Hadoop FileSystem of the running
+SparkSession, so county discovery, the metadata byte-copy, run-file
+accounting and Parquet footer reads speak any Hadoop FS URI (``file:``,
+``s3a:``, ``hdfs:``, ``abfss:``) exactly like ``spark.read`` /
+``df.write`` do — the reference is S3-native (indexer.py:5,
+worker.py:34). Without a session they raise ``RuntimeError``.
 
 Scale note: ``list_files_recursive`` crosses the Py4J bridge once per
 file, so the ETL keeps it off the input side: the job's input listing
@@ -20,8 +18,6 @@ single-process walker — including the reference's own paginator.
 
 from __future__ import annotations
 
-import os
-import shutil
 from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
@@ -39,29 +35,16 @@ def normalize_uri(path: str) -> str:
     return p
 
 
-def _strip_scheme(path: str) -> str:
-    return normalize_uri(path) if path.startswith("file:") else path
-
-
 def _hadoop(path: str):
-    """(jvm, FileSystem, Path) for ``path`` via the active session, or
-    None when no session is up (local fallback).
+    """(jvm, FileSystem, Path) for ``path`` via the running session.
 
     The active session is thread-local in the JVM, so worker threads
     (run_etl's per-job chain threads) often see None — fall back to the
-    process-wide instantiated session before giving up. Silently
-    falling back to ``os.*`` on an object-store URI would return empty
-    listings, so a remote scheme with no session at all raises.
+    process-wide instantiated session before giving up.
     """
     spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession
     if spark is None:
-        scheme = path.split("://", 1)[0] if "://" in path else ""
-        if scheme not in ("", "file"):
-            raise RuntimeError(
-                f"no SparkSession available to access {path!r}; the os.* "
-                "fallback only handles local paths"
-            )
-        return None
+        raise RuntimeError(f"no SparkSession available to access {path!r}")
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -71,15 +54,7 @@ def _hadoop(path: str):
 def list_dirs(path: str) -> list[str]:
     """Names of the immediate child directories of ``path`` (county
     discovery — the fixed S3 wildcard walk, indexer.py:150-177)."""
-    h = _hadoop(path)
-    if h is None:
-        local = _strip_scheme(path)
-        if not os.path.isdir(local):
-            return []
-        return sorted(
-            d for d in os.listdir(local) if os.path.isdir(os.path.join(local, d))
-        )
-    _jvm, fs, jpath = h
+    _jvm, fs, jpath = _hadoop(path)
     if not fs.exists(jpath):
         return []
     return sorted(
@@ -99,14 +74,7 @@ def list_files_recursive(path: str, suffix: str = ".parquet") -> list[str]:
     """All data files under ``path`` (see ``is_data_file``) — the
     analogue of the reference's paginated list_objects_v2
     (indexer.py:8-45)."""
-    h = _hadoop(path)
-    if h is None:
-        local = _strip_scheme(path)
-        out: list[str] = []
-        for root, _dirs, files in os.walk(local):
-            out.extend(os.path.join(root, f) for f in files if is_data_file(f, suffix))
-        return sorted(out)
-    _jvm, fs, jpath = h
+    _jvm, fs, jpath = _hadoop(path)
     if not fs.exists(jpath):
         return []
     out = []
@@ -123,10 +91,7 @@ def parquet_row_count(path: str) -> int:
     driver through parquet-hadoop's ``ParquetFileReader`` (no Spark
     job). Raises ``Py4JJavaError`` when the footer cannot be read: a
     truncated, zero-byte or missing file."""
-    h = _hadoop(path)
-    if h is None:
-        raise RuntimeError(f"reading the Parquet footer of {path!r} needs a SparkSession")
-    jvm, fs, jpath = h
+    jvm, fs, jpath = _hadoop(path)
     hadoop = jvm.org.apache.parquet.hadoop
     reader = hadoop.ParquetFileReader.open(
         hadoop.util.HadoopInputFile.fromPath(jpath, fs.getConf())
@@ -142,48 +107,26 @@ def copy_file(src: str, dest: str) -> None:
     the reference uploads metadata bytes unchanged). Hadoop
     ``FileUtil.copy`` preserves bytes across any src/dest FS pair and
     creates parent directories."""
-    h = _hadoop(src)
-    if h is None:
-        s, d = _strip_scheme(src), _strip_scheme(dest)
-        os.makedirs(os.path.dirname(d), exist_ok=True)
-        shutil.copyfile(s, d)
-        return
-    jvm, sfs, spath = h
-    spark = SparkSession.getActiveSession() or SparkSession._instantiatedSession
-    conf = spark._jsc.hadoopConfiguration()
-    dpath = jvm.org.apache.hadoop.fs.Path(dest)
-    dfs = dpath.getFileSystem(conf)
-    jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, spath, dfs, dpath, False, True, conf)
+    jvm, sfs, spath = _hadoop(src)
+    _jvm, dfs, dpath = _hadoop(dest)
+    jvm.org.apache.hadoop.fs.FileUtil.copy(
+        sfs, spath, dfs, dpath, False, True, dfs.getConf()
+    )
 
 
 def exists(path: str) -> bool:
-    h = _hadoop(path)
-    if h is None:
-        return os.path.exists(_strip_scheme(path))
-    _jvm, fs, jpath = h
+    _jvm, fs, jpath = _hadoop(path)
     return fs.exists(jpath)
 
 
 def rename(src: str, dest: str) -> bool:
     """Directory/file rename — the atomic-on-HDFS (cheap-on-object-
     store) primitive behind staged swaps."""
-    h = _hadoop(src)
-    if h is None:
-        os.rename(_strip_scheme(src), _strip_scheme(dest))
-        return True
-    jvm, fs, spath = h
+    jvm, fs, spath = _hadoop(src)
     return bool(fs.rename(spath, jvm.org.apache.hadoop.fs.Path(dest)))
 
 
 def delete(path: str, recursive: bool = True) -> None:
-    h = _hadoop(path)
-    if h is None:
-        local = _strip_scheme(path)
-        if os.path.isdir(local):
-            shutil.rmtree(local)
-        elif os.path.exists(local):
-            os.remove(local)
-        return
-    _jvm, fs, jpath = h
+    _jvm, fs, jpath = _hadoop(path)
     if fs.exists(jpath):
         fs.delete(jpath, recursive)

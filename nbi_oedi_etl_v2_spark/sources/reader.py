@@ -15,16 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
-from .paths import data_partition_prefixes, release_root, resolve_metadata_paths
+from .paths import data_partition_prefixes, release_root
 from ..config import ETLConfig, JobConfig
 
 
-def read_timeseries(
-    spark: SparkSession,
-    config: ETLConfig,
-    job: JobConfig,
-    ignore_corrupt: bool = True,
-) -> DataFrame:
+def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> DataFrame:
     """The S1 scan + P1 partition predicate for one job.
 
     Only the job's existing ``upgrade=/state=`` directories are read,
@@ -34,23 +29,21 @@ def read_timeseries(
     input listing), and the ``where`` below still compiles to
     partition pruning (``.explain`` shows the ``PartitionFilters``).
 
-    ``ignore_corrupt`` reproduces the reference's corrupt-file story
-    (README.md:465-466: one corrupt input is *reported* in the run
-    summary, the job completes): unreadable files are skipped by the
-    scan and surface via the pipeline's listed-vs-read accounting
-    instead of failing the job. Scoped as a reader option, not a
-    session conf, so analytical queries still fail loudly on rot.
+    The scan always skips corrupt files, reproducing the reference's
+    corrupt-file story (README.md:465-466: one corrupt input is
+    *reported* in the run summary, the job completes): unreadable files
+    surface via the pipeline's listed-vs-read accounting instead of
+    failing the job. Scoped as a reader option, not a session conf, so
+    analytical queries still fail loudly on rot.
     """
-    reader = spark.read
-    if ignore_corrupt:
-        # mergeSchema makes schema inference read every footer of this
-        # job's partitions (as a parallel job) instead of just the
-        # first file — necessary so a corrupt FIRST file doesn't kill
-        # inference before ignoreCorruptFiles can skip it. The release
-        # schema is uniform, so merging is semantics-neutral.
-        reader = reader.option("ignoreCorruptFiles", "true").option(
-            "mergeSchema", "true"
-        )
+    # mergeSchema makes schema inference read every footer of this
+    # job's partitions (as a parallel job) instead of just the first
+    # file — necessary so a corrupt FIRST file doesn't kill inference
+    # before ignoreCorruptFiles can skip it. The release schema is
+    # uniform, so merging is semantics-neutral.
+    reader = spark.read.option("ignoreCorruptFiles", "true").option(
+        "mergeSchema", "true"
+    )
     root = release_root(config, job)
     # Spark raises PATH_NOT_FOUND on a missing path: a configured
     # upgrade without data is read as no files, not as an error
@@ -66,14 +59,6 @@ def read_timeseries(
     # compare as strings for both (Catalyst still prunes on the cast).
     pred &= F.col("upgrade").cast("string").isin([str(u) for u in job.upgrades])
     return df.where(pred)
-
-
-def read_metadata(spark: SparkSession, job: JobConfig) -> DataFrame:
-    """S2 — version-dispatched direct-path metadata read."""
-    paths = resolve_metadata_paths(job)
-    if not paths:
-        raise ValueError(f"no metadata paths resolve for job {job.job_name}")
-    return spark.read.parquet(*paths)
 
 
 INGEST_FORMATS = ("parquet", "csv", "json", "orc")

@@ -30,7 +30,6 @@ def write_hourly_data(
     output_root: str,
     run_ts: str,
     job: JobConfig,
-    partition_cols: tuple[str, ...] = ("upgrade", "state"),
 ) -> str:
     """S6 — snappy parquet sink, hive-partitioned by upgrade/state.
 
@@ -42,11 +41,8 @@ def write_hourly_data(
     pressure appears (AQE coalescing usually suffices).
     """
     out = data_output_path(output_root, run_ts, job)
-    cols_present = [c for c in partition_cols if c in df.columns]
     writer = df.write.mode("overwrite").option("compression", "snappy")
-    if cols_present:
-        writer = writer.partitionBy(*cols_present)
-    writer.parquet(out)
+    writer.partitionBy("upgrade", "state").parquet(out)
     return out
 
 

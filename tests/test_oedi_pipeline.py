@@ -174,8 +174,9 @@ def test_saved_query3_truncates(spark, etl_run):
     assert n < 520  # truncation really bit
 
 
-def test_county_discovery(lake):
-    # fixed S3 wildcard discovery (reference's is documented buggy)
+def test_county_discovery(spark, lake):
+    # fixed S3 wildcard discovery (reference's is documented buggy),
+    # through the session's Hadoop listing
     meta_root = os.path.join(
         lake["bucket"], BASE_PARTITION, YEAR, RELEASE, "metadata_and_annual_results"
     )
@@ -774,7 +775,7 @@ def test_register_without_metadata_file_skips_metadata_table(spark, tmp_path, ca
     with caplog.at_level(logging.WARNING):
         registered = register_etl_output(
             spark, db=db, data_path=data_path,
-            metadata_paths_or_root=str(tmp_path / "no_metadata_here"),
+            metadata_root=str(tmp_path / "no_metadata_here"),
             data_table_prefix="d", metadata_table_prefix="m", states=["AK"],
         )
     assert "metadata" not in registered
@@ -804,3 +805,112 @@ def test_write_query_result_roundtrip(spark, tmp_path, fmt):
     else:
         got = spark.read.parquet(out)
     assert sorted(int(r["id"]) for r in got.collect()) == list(range(100))
+
+
+class _RecoverFails:
+    """A session whose ``RECOVER PARTITIONS`` statement fails."""
+
+    def __init__(self, spark):
+        self._spark = spark
+
+    def sql(self, query, *args, **kwargs):
+        from pyspark.errors import AnalysisException
+
+        if "RECOVER PARTITIONS" in query:
+            raise AnalysisException("partition recovery failed")
+        return self._spark.sql(query, *args, **kwargs)
+
+
+def test_partition_recovery_failure_propagates(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from nbi_oedi_etl_v2_spark.sources.catalog import register_etl_output
+
+    db = "recover_fails"
+    data_path = str(tmp_path / "data")
+    spark.createDataFrame([(1, "0", "AK")], ["bldg_id", "upgrade", "state"]).write.partitionBy(
+        "upgrade", "state").parquet(data_path)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    # a table left without its partitions would answer every saved
+    # query with no rows, so the failure must not be swallowed
+    with pytest.raises(AnalysisException, match="partition recovery failed"):
+        register_etl_output(
+            _RecoverFails(spark), db=db, data_path=data_path,
+            metadata_root=str(tmp_path / "metadata"),
+            data_table_prefix="d", metadata_table_prefix="m", states=["AK"],
+        )
+
+
+@pytest.mark.parametrize("helper", ["exists", "list_dirs", "list_files_recursive"])
+def test_fs_helper_without_session_raises(tmp_path, monkeypatch, helper):
+    from pyspark.sql import SparkSession
+
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+
+    (tmp_path / "state=AK").mkdir()
+    (tmp_path / "state=AK" / "part-0.parquet").write_bytes(b"PAR1")
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    monkeypatch.setattr(SparkSession, "_instantiatedSession", None)
+    # one code path: a local path gets no os.* fallback either
+    with pytest.raises(RuntimeError, match="no SparkSession"):
+        getattr(fsmod, helper)(str(tmp_path))
+
+
+def test_etl_config_from_reference_dict():
+    shared = {
+        "src_bucket": "oedi-data-lake",
+        "base_partition": "nrel-pds-building-stock/end-use-load-profiles-for-us-building-stock",
+        "data_partition_in_release": "timeseries_individual_buildings/by_state",
+        "output_dir": "etl_output",
+        "job_specific": [
+            {
+                "release_name": "comstock_amy2018_release_1",
+                "release_year": "2021",
+                "state": "AK",
+                "upgrades": [0, 1],
+                "metadata_root_dir": "s3a://oedi-data-lake/metadata_and_annual_results",
+                "relative_metadata_prefix_type": 2,
+                "counties": ["G0200130", "G0200160"],
+            },
+            {
+                "release_name": "resstock_tmy3_release_1",
+                "release_year": "2024",
+                "state": "CA",
+                "upgrades": [0],
+                "metadata_root_dir": "s3a://oedi-data-lake/metadata",
+                "relative_metadata_prefix_type": "1",
+            },
+        ],
+    }
+    raw = {
+        **shared,
+        "settings": {
+            "log_dir": "logs",
+            "log_filename": "etl.log",
+            "logging_level": "INFO",
+            "idle_timeout_in_minutes": 5,
+            "listing_page_size": 100,
+            "max_listing_queue_size": 500,
+        },
+        "glue_job_timeout": 14400,
+    }
+    config = ETLConfig.from_dict(raw)
+
+    assert config.src_bucket == "oedi-data-lake"
+    assert config.base_partition == shared["base_partition"]
+    assert config.data_partition_in_release == "timeseries_individual_buildings/by_state"
+    assert config.output_dir == "etl_output"
+    ak, ca = config.job_specific
+    assert ak == JobConfig(
+        release_name="comstock_amy2018_release_1", release_year="2021", state="AK",
+        upgrades=["0", "1"],
+        metadata_root_dir="s3a://oedi-data-lake/metadata_and_annual_results",
+        relative_metadata_prefix_type="2", counties=["G0200130", "G0200160"],
+    )
+    assert ca.upgrades == ["0"] and ca.counties is None
+    assert ca.relative_metadata_prefix_type == "1"
+    assert [j.job_name for j in config.job_specific] == [
+        "comstock_amy2018_release_1_2021_AK", "resstock_tmy3_release_1_2024_CA"]
+    # the reference's operational keys are accepted and ignored
+    assert config == ETLConfig.from_dict(shared)
+    assert not hasattr(config, "settings") and not hasattr(config, "glue_job_timeout")
