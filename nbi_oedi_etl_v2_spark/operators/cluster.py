@@ -39,8 +39,7 @@ the analyzer/codegen chokes on the plan itself), and the BROADCAST
 path (``assign_clusters_broadcast``) ships the centroid matrix as a
 broadcast table — BroadcastNestedLoopJoin fan-out, map-side-combined
 ``min(struct(d, c))`` argmin, join back on the id. ``lloyd_kmeans``
-auto-switches at the threshold; the IVF index build
-(operators/similarity.py) is the large-k consumer.
+auto-switches at the threshold.
 """
 
 from __future__ import annotations
@@ -77,7 +76,8 @@ def _double_literal_sql(v: float) -> str:
     caught: ``CAST(-0.0 AS DOUBLE)`` goes through a DECIMAL literal
     (no signed zero) and silently yields +0.0. Negative zero is
     emitted as unary minus over +0.0 instead, which constant-folds to
-    a true -0.0 double (verified in tests/test_cluster.py)."""
+    a true -0.0 double (verified in tests/test_wave8.py,
+    ``test_assign_clusters_expr_matches_column_fallback``)."""
     import math
 
     if v == 0.0 and math.copysign(1.0, v) < 0.0:
@@ -187,68 +187,6 @@ def assign_clusters_broadcast(
     return df.join(best, id_col)
 
 
-def assign_clusters_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[list[float]],
-) -> DataFrame:
-    """Vectorized large-k·N hard assignment: the round-7 sf10 soak
-    showed the broadcast-join form solves the PLAN problem (no k·d
-    literals) but hits the next wall — `zip_with`/`aggregate`
-    higher-order folds are evaluated interpreted per joined row, and
-    600k vectors × 2048 centroids × 64 dims did not finish in 40 min
-    on the test box. This variant computes the same argmin with ONE
-    Arrow-batched BLAS matmul per batch (``|X|² − 2X·Cᵀ + |C|²``),
-    map-only over ``mapInPandas`` — 78 G multiply-adds become a dgemm.
-    Measured at sf10: >2400 s (killed) → seconds-scale (SCALE.md).
-
-    Contract difference, stated honestly: BLAS accumulation order ≠
-    the sequential fold, so sq_dist bits can differ in the last ulp
-    and an EXACT tie decided by the fold may fall the other way on a
-    near-tie here (argmin still takes the LOWEST cluster id on exact
-    float equality). Use the literal/broadcast strategies when the
-    bit-matched oracle is the contract; use this for index builds at
-    k in the thousands, where the clustering — not the bits — is the
-    product. Returns (id_col, cluster_id, sq_dist) joined back onto
-    ``df``, like :func:`assign_clusters_broadcast`."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            d2 = (
-                (X * X).sum(axis=1)[:, None]
-                - 2.0 * (X @ C.T)
-                + c2[None, :]
-            )
-            best = d2.argmin(axis=1)  # first index wins exact ties
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["_id"].to_numpy(),
-                    "cluster_id": best.astype("int32"),
-                    "sq_dist": d2[np.arange(len(best)), best],
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
-    )
-    out_schema = (
-        f"_id {dict(src.dtypes)['_id']}, cluster_id int, sq_dist double"
-    )
-    best = src.mapInPandas(assign, out_schema).withColumnRenamed(
-        "_id", id_col
-    )
-    return df.join(best, id_col)
-
-
 def _seed_centroids(
     df: DataFrame, id_col: str, vec_col: str, k: int
 ) -> list[list[float]]:
@@ -284,20 +222,14 @@ def lloyd_kmeans(
     large k), ``"auto"`` picks literal up to
     :data:`LITERAL_ASSIGN_MAX_K` and broadcast beyond. Both produce
     identical bits (same fold, same tie-break), so the switch never
-    changes answers — only the plan. ``"arrow"``
-    (:func:`assign_clusters_arrow`) is the explicit opt-in for
-    large k·N index builds: BLAS matmul distances, so near-tie
-    argmins and sq_dist ulps may differ from the fold — never picked
-    by auto, because auto promises bit stability."""
-    if assign_strategy not in ("auto", "literal", "broadcast", "arrow"):
+    changes answers — only the plan."""
+    if assign_strategy not in ("auto", "literal", "broadcast"):
         raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
     use_broadcast = assign_strategy == "broadcast" or (
         assign_strategy == "auto" and k > LITERAL_ASSIGN_MAX_K
     )
 
     def _assign(data: DataFrame, cs: list[list[float]]) -> DataFrame:
-        if assign_strategy == "arrow":
-            return assign_clusters_arrow(data, id_col, vec_col, cs)
         if use_broadcast:
             return assign_clusters_broadcast(data, id_col, vec_col, cs)
         return assign_clusters(data, vec_col, cs)

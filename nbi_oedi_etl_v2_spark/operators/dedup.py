@@ -669,15 +669,6 @@ def hamming_near_pairs(
     return pairs
 
 
-def simhash_near_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by SimHash — the text instantiation of
-    :func:`hamming_near_pairs`."""
-    sh = simhash(df, id_col, text_col)
-    return hamming_near_pairs(sh, "doc", "simhash", max_hamming)
-
-
 def duplicate_spans(
     df: DataFrame,
     id_col: str,

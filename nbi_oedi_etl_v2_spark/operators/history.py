@@ -14,7 +14,7 @@ window passes over the same (key, order) partitioning (Catalyst
 reuses the exchange), CDC merge is a latest-per-key window on the
 feed plus one equi full-outer join that AQE sizes. At 100 TB the
 snapshot side would be bucketed on the key so repeated merges skip
-its shuffle entirely (sources/bucketing.py provides the seam).
+its shuffle entirely (``DataFrameWriter.bucketBy`` is the seam).
 """
 
 from __future__ import annotations
@@ -257,7 +257,7 @@ def snapshot_diff(
     night's and alert on the classification, not on eyeballs.
 
     At 100 TB both snapshots would be bucketed on the key
-    (sources/bucketing.py) so the join needs no shuffle at all."""
+    (``DataFrameWriter.bucketBy``) so the join needs no shuffle at all."""
     payload = [c for c in old.columns if c not in key_cols]
     if set(old.columns) != set(new.columns):
         raise ValueError("snapshots must share a schema")

@@ -57,11 +57,6 @@ def minmax_surrogates(
     return out
 
 
-def minmax_surrogate(df: DataFrame, col: Column, bits: int) -> Column:
-    """Single-column convenience wrapper over ``minmax_surrogates``."""
-    return minmax_surrogates(df, [col], bits)[0]
-
-
 def zorder_key(surrogates: list[Column], bits: int) -> Column:
     """Interleave the low ``bits`` bits of the (non-negative long)
     surrogate columns into one Morton Z-value: bit ``b`` of dimension

@@ -20,7 +20,7 @@ runs):
   (Bloom filters have no false negatives) — those rows short-circuit
   map-only, never shuffling. Only the rows the sketch cannot refute
   (true members + the false-positive tail) carry into an exact
-  verify join, so the anti/semi join stays EXACT while its shuffle
+  verify join, so the anti join stays EXACT while its shuffle
   carries |members| + ε·|probes| rows instead of |probes| + |seen|.
 
 The fast path wins exactly when misses dominate — the incremental
@@ -179,22 +179,3 @@ def bloom_anti_join(
         seen_keys, probe[probe_key] == seen_keys[seen_key], "left_anti"
     )
     return definite.unionByName(verified)
-
-
-def bloom_semi_join(
-    probe: DataFrame,
-    probe_key: str,
-    seen: DataFrame,
-    seen_key: str,
-    bits: int = BLOOM_BITS,
-) -> DataFrame:
-    """EXACT ``probe LEFT SEMI JOIN seen``, dual of the anti form:
-    sketch-refuted rows drop map-only; candidates verify exactly."""
-    bloom = build_bloom(seen.select(seen_key), seen_key, bits)
-    c = F.col(probe_key)
-    candidate = c.isNotNull() & might_contain(c, bloom, bits)
-    # same duplicate-invariant seen-side distinct as bloom_anti_join
-    seen_keys = seen.select(seen_key).distinct()
-    return probe.where(candidate).join(
-        seen_keys, probe[probe_key] == seen_keys[seen_key], "left_semi"
-    )

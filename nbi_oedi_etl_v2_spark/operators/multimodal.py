@@ -2,7 +2,7 @@
 
 Treats image/audio/video payloads as opaque ``binary`` columns with a
 typed metadata struct, and implements decode / feature-extract /
-resize / frame-sample as Arrow-batched ``mapInPandas`` operators.
+frame-sample as Arrow-batched ``mapInPandas`` operators.
 
 The decode step is REAL for the two formats the standard library can
 handle without codec packages:
@@ -699,11 +699,6 @@ def _fingerprint_payload(payload: bytes) -> tuple[int, int, float]:
     return w, h, checksum
 
 
-# Backward-compatible alias: the codec seam's old name. Real formats
-# now route to decode_png / decode_wav in decode_media.
-_decode_payload = _fingerprint_payload
-
-
 def attach_binary_payload(
     df: DataFrame, id_col: str, text_col: str, media_type: str = "image"
 ) -> DataFrame:
@@ -926,76 +921,6 @@ def decode_media(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
-def _resize_png(b: bytes, tw: int, th: int) -> bytes:
-    """Real nearest-neighbor PNG resize: decode scanlines, sample
-    source pixel ``(ty*h//th, tx*w//tw)`` per target pixel, re-encode
-    (filter 0, zlib). Palette images resize as index maps (the PLTE
-    chunk is not carried — resized output is grayscale/truecolor
-    bytes of the index plane)."""
-    w, h, channels, pixels = _png_pixels(b)
-    stride = w * channels
-    out_rows = bytearray()
-    for ty in range(th):
-        sy = ty * h // th
-        out_rows.append(0)  # filter type None
-        base = sy * stride
-        for tx in range(tw):
-            sx = tx * w // tw
-            start = base + sx * channels
-            out_rows += pixels[start : start + channels]
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    ihdr = b"IHDR" + struct.pack(">IIBBBBB", tw, th, 8, color_type, 0, 0, 0)
-    idat = b"IDAT" + zlib.compress(bytes(out_rows))
-    iend = b"IEND"
-    out = bytearray(_PNG_SIG)
-    for chunk in (ihdr, idat, iend):
-        out += struct.pack(">I", len(chunk) - 4)
-        out += chunk
-        out += struct.pack(">I", zlib.crc32(chunk) & 0xFFFFFFFF)
-    return bytes(out)
-
-
-def resize_media(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    """Arrow-batched resize: payload → payload' plus recorded target
-    dims (MEDIA_SCHEMA in, MEDIA_SCHEMA + width/height out).
-
-    PNG payloads get a REAL nearest-neighbor resample (decode →
-    sample → re-encode, pure stdlib). Formats without a real decoder
-    here (JPEG, video, arbitrary bytes) yield a NULL payload — the
-    same quarantine convention as ``decode_media``'s corrupt rows —
-    because fabricating a "resized" byte stream would hand downstream
-    consumers payloads that decode to nothing. Corrupt PNGs quarantine
-    the same way. The Spark plumbing (binary in/out through Arrow,
-    bounded batches, no shuffle) is identical either way.
-    """
-    out_schema = T.StructType(
-        [*MEDIA_SCHEMA.fields,
-         T.StructField("width", T.IntegerType(), True),
-         T.StructField("height", T.IntegerType(), True)]
-    )
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def resample(p):
-            if p is None:
-                return None
-            b = bytes(p)
-            if b[:8] == _PNG_SIG:
-                try:
-                    return _resize_png(b, target_w, target_h)
-                except (ValueError, zlib.error, struct.error):
-                    return None  # corrupt image → null payload, dims kept
-            return None  # no real decoder for this format → quarantine
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = [resample(p) for p in pdf["payload"]]
-            out["width"] = target_w
-            out["height"] = target_h
-            yield out
-
-    return df.mapInPandas(resize_batches, schema=out_schema)
 
 
 def frame_sample_plan(

@@ -309,45 +309,6 @@ def ivf_centroids(
     return cents
 
 
-def ivf_centroids_kmeans(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 1024,
-    iterations: int = 2,
-    assign_strategy: str = "arrow",
-) -> DataFrame:
-    """IVF centroid table for LARGE ``nlist`` via the L2 Lloyd trainer
-    (operators/cluster.py) — the VERDICT r6 item-3 consumer: an IVF
-    index at 100 TB wants nlist in the thousands, where the literal
-    assign's k·d inlined doubles choke the analyzer. Default
-    ``assign_strategy="arrow"`` (BLAS matmul distances): the r7 sf10
-    soak showed the broadcast-join form fixes the plan but its
-    interpreted zip_with fold is the next wall at k·N this size —
-    and an index build wants the clustering, not fold-exact bits
-    (pass "broadcast" when byte-stable assignment matters more than
-    wall-clock). On L2-NORMALIZED
-    embeddings (``normalize_embeddings_arrow``) L2 argmin ≡ cosine
-    argmax, so the trained cells match :func:`ivf_centroids`'s
-    cosine semantics; on unnormalized inputs the cells are Euclidean
-    Voronoi cells — document which metric your index serves. Returns
-    the same (cid, c_vec, c_norm) contract ``ivf_assign`` consumes;
-    the driver holds nlist·dim doubles, everything data-sized stays
-    distributed."""
-    from . import cluster
-
-    cents, _ = cluster.lloyd_kmeans(
-        corpus, id_col, vec_col, k=nlist, iters=iterations,
-        assign_strategy=assign_strategy,
-    )
-    spark = corpus.sparkSession
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    cdf = spark.createDataFrame(rows, "cid int, c_vec array<double>")
-    return cdf.withColumn(
-        "c_norm", F.expr(f"sqrt({_dot('c_vec', 'c_vec')})")
-    )
-
-
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

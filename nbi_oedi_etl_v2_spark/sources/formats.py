@@ -1,20 +1,8 @@
-"""JSONL / CSV source-sink helpers.
+"""ORC source-sink helpers.
 
-The lake's interchange formats beyond parquet (reference scope is
-parquet-only — these are north-star additions for corpus ingest,
-where raw text data usually ARRIVES as jsonl/csv.gz). Conventions are
-pinned so a roundtrip is lossless and engine-portable:
-
-- explicit schema on read, never inference (inference samples data →
-  nondeterministic types across runs; at 100 TB it's also an extra
-  listing+sampling pass);
-- ISO-8601 UTC timestamps with microseconds (``TS_FORMAT``) — the
-  lexicographic==chronological property survives the text format;
-- multiLine off (the default): one record per line keeps files
-  SPLITTABLE — a 1 GB jsonl file becomes 8 × 128 MB input splits,
-  whereas a multiline JSON array is one unsplittable task.
-
-Readers return plain DataFrames; every downstream operator is
+The lake's interchange format beyond parquet (reference scope is
+parquet-only). The reader pins an explicit schema, never inference,
+and returns a plain DataFrame; every downstream operator is
 format-agnostic.
 """
 
@@ -22,60 +10,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("timestampFormat", TS_FORMAT)
-        .option("compression", "none")
-        .json(path)
-    )
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("timestampFormat", TS_FORMAT)
-        .option("mode", "FAILFAST")
-        .json(path)
-    )
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    (
-        df.write.mode("overwrite")
-        .option("header", "true")
-        .option("timestampFormat", TS_FORMAT)
-        # quote+escape defaults handle embedded delimiters/newlines;
-        # emptyValue disambiguates '' from NULL (unquoted empty)
-        .option("emptyValue", '""')
-        .csv(path)
-    )
-
-
-def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return (
-        spark.read.schema(schema)
-        .option("header", "true")
-        .option("timestampFormat", TS_FORMAT)
-        .option("emptyValue", '""')
-        .option("mode", "FAILFAST")
-        .csv(path)
-    )
-
 
 def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (zlib, Spark's native vectorized writer). ORC carries
-    types + per-stripe min/max in the file itself, so unlike jsonl/csv
-    no schema/timestamp conventions are needed — the roundtrip risk is
+    types + per-stripe min/max in the file itself, so no
+    schema/timestamp conventions are needed — the roundtrip risk is
     only timestamp semantics, covered by the roundtrip test/oracle."""
     df.write.mode("overwrite").orc(path)
 
 
 def read_orc(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Schema still pinned explicitly: consistent with the other
-    readers, it skips the footer-sampling inference pass and fails
-    fast on drift instead of silently widening types."""
+    """Schema pinned explicitly: it skips the footer-sampling
+    inference pass and fails fast on drift instead of silently widening
+    types."""
     return spark.read.schema(schema).orc(path)

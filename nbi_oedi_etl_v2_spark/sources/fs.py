@@ -118,15 +118,3 @@ def exists(path: str) -> bool:
     _jvm, fs, jpath = _hadoop(path)
     return fs.exists(jpath)
 
-
-def rename(src: str, dest: str) -> bool:
-    """Directory/file rename — the atomic-on-HDFS (cheap-on-object-
-    store) primitive behind staged swaps."""
-    jvm, fs, spath = _hadoop(src)
-    return bool(fs.rename(spath, jvm.org.apache.hadoop.fs.Path(dest)))
-
-
-def delete(path: str, recursive: bool = True) -> None:
-    _jvm, fs, jpath = _hadoop(path)
-    if fs.exists(jpath):
-        fs.delete(jpath, recursive)

@@ -60,47 +60,3 @@ def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> D
     pred &= F.col("upgrade").cast("string").isin([str(u) for u in job.upgrades])
     return df.where(pred)
 
-
-INGEST_FORMATS = ("parquet", "csv", "json", "orc")
-
-
-def read_any(
-    spark: SparkSession,
-    path: str | list[str],
-    fmt: str = "parquet",
-    schema=None,
-    **options,
-) -> DataFrame:
-    """Format-agnostic ingestion (beyond-reference: the reference lake
-    is parquet-only, but a complete engine must take csv/json deliveries).
-
-    Scale rules encoded here rather than left to callers:
-    - csv/json REQUIRE an explicit schema at scale — inference scans
-      the data once extra and funnels samples through the driver, so
-      it is only tolerated when ``schema`` is omitted AND
-      ``allow_infer`` is passed (tests, exploration);
-    - csv defaults: header on, quoted-newline support (multiLine) off
-      unless requested — multiLine csv files are NOT splittable, a
-      10 GB multiLine file becomes one task; prefer escaped newlines;
-    - json means json-lines (the splittable layout); multiLine json
-      (one document per file) is for small config payloads only.
-    """
-    if fmt not in INGEST_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {INGEST_FORMATS}")
-    paths = path if isinstance(path, list) else [path]
-    reader = spark.read
-    if fmt in ("csv", "json"):
-        if schema is not None:
-            reader = reader.schema(schema)
-        elif not options.pop("allow_infer", False):
-            raise ValueError(
-                f"{fmt} at scale requires an explicit schema "
-                "(pass allow_infer=True to sample-infer in tests)"
-            )
-        else:
-            reader = reader.option("inferSchema", "true")
-    if fmt == "csv":
-        reader = reader.option("header", options.pop("header", "true"))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return getattr(reader, fmt)(*paths)

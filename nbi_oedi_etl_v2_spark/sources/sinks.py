@@ -11,7 +11,6 @@ metadata root.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .fs import copy_file, normalize_uri
 from ..config import JobConfig
@@ -101,75 +100,3 @@ def write_query_result(
         writer.parquet(out)
     return out
 
-
-def upsert_partitions(
-    df: DataFrame, path: str, partition_cols: list[str]
-) -> None:
-    """Partition-level upsert: overwrite ONLY the partitions present in
-    ``df``, leaving every other partition untouched — the re-run story
-    (one state's job failed; rewrite that state without clobbering the
-    lake).
-
-    Uses dynamic partition overwrite (scoped to this write via the
-    writer option, not a session-level conf flip): Spark deletes and
-    rewrites exactly the partition directories the incoming data maps
-    to. No read-modify-write of the whole table, no global lock —
-    partitions are the transaction unit, which is the only transaction
-    unit that scales to a 100 TB lake without a table format's log.
-    Row-level merge semantics need Delta/Iceberg; this is deliberately
-    the format-free subset.
-    """
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
-
-
-def compact_partitions(
-    spark, path: str, partition_cols: list[str], target_records_per_file: int
-) -> int:
-    """Small-file compaction: rewrite each partition's many small files
-    into files of ~``target_records_per_file`` rows. Returns the number
-    of rows compacted.
-
-    Small files are the classic lake degradation (per-file open cost,
-    tiny row groups, listing pressure). The rewrite shuffles once,
-    hash-partitioned on the partition columns so each output partition
-    is written by tasks that hold only that partition's rows, and
-    ``maxRecordsPerFile`` caps file size.
-
-    Executed as a **staged swap**: compact into a sibling staging
-    directory while the source stays untouched, then
-    source → backup, staging → source, drop backup. A crash at any
-    point leaves at least one complete copy on disk — unlike an
-    in-place dynamic overwrite, where losing an executor (and its
-    localCheckpoint blocks) mid-write after partition dirs were
-    cleared would lose data, not just the compaction.
-    """
-    from . import fs
-
-    staging = path.rstrip("/") + ".compact-staging"
-    backup = path.rstrip("/") + ".compact-old"
-    fs.delete(staging)
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    (
-        df.repartition(*[F.col(f"`{c}`") for c in partition_cols])
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(staging)
-    )
-    fs.delete(backup)
-    # Hadoop rename reports failure by RETURNING false, not raising —
-    # and renaming into a still-existing target nests staging INSIDE
-    # it. Abort loudly instead of silently corrupting the dataset.
-    if not fs.rename(path, backup):
-        raise IOError(f"compact: rename {path} -> {backup} failed; aborting swap")
-    if not fs.rename(staging, path):
-        fs.rename(backup, path)  # roll back; original data untouched
-        raise IOError(f"compact: rename {staging} -> {path} failed; rolled back")
-    fs.delete(backup)
-    return n_rows

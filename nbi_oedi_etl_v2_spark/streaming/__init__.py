@@ -281,43 +281,6 @@ def ewma_batch(df: DataFrame, alpha: float = 0.3, k: float = 0.8) -> DataFrame:
     )
 
 
-def run_etl_stream(
-    df: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    timestamp_col: str = "ts",
-    entity_col: str | None = "user_id",
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Incremental ETL: the hourly downsample as a continuously-running
-    pipeline writing snappy parquet exactly-once.
-
-    Append mode + watermark means each hour is written exactly once,
-    when the watermark passes it — no recomputation of old hours, state
-    bounded to the watermark horizon, and the parquet commit log +
-    checkpoint give end-to-end exactly-once across restarts. Hours
-    still inside the watermark at shutdown are emitted by the next run
-    (a bounded availableNow replay therefore withholds the trailing
-    ``watermark`` of event time — that is the correct streaming
-    semantics, not data loss).
-
-    Returns the StreamingQuery (caller awaits/stops).
-    """
-    hourly = hourly_downsample_stream(
-        df, timestamp_col=timestamp_col, entity_col=entity_col, watermark=watermark
-    )
-    writer = (
-        hourly.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_to_memory(
     stream_df: DataFrame, mode: str = "append", name: str | None = None
 ) -> DataFrame:

@@ -73,9 +73,6 @@ def _ngram_shingles_sql(source: str = "documents", k: int = 3) -> str:
 """
 
 
-_NGRAM_SHINGLES_SQL = _ngram_shingles_sql()
-
-
 # shared CTE chain ending in `pairs` (id_a, id_b, jaccard ≥ 0.8) over a
 # given doc source — reused by the cluster-resolution oracles below
 def _ngram_pairs_ctes(source: str = "documents") -> str:
@@ -2694,9 +2691,7 @@ def q_part_copurchase_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shortest-roundtrip, strings escaped), then aggregated "
         "hourly — the oracle aggregates the original table, so any "
         "encode/decode loss breaks the hash. Map-only until the one "
-        "agg; the same plumbing serves JSONL source/sink files "
-        "(sources/formats.py). pytest-oracled; r4 rotation "
-        "candidate.",
+        "agg. pytest-oracled; r4 rotation candidate.",
     driver=False,
 )
 def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

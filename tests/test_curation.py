@@ -79,17 +79,6 @@ def test_connected_components_self_loop_only_node(spark):
     assert got == {(5, 5), (7, 7), (8, 7)}
 
 
-def test_salted_join_rejects_outer(spark):
-    import pytest
-
-    from nbi_oedi_etl_v2_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame([(1, "a")], ["k", "x"])
-    dim = spark.createDataFrame([(1, "d")], ["k2", "y"])
-    with pytest.raises(ValueError, match="inner.*left"):
-        salted_join(fact, dim, "k", "k2", how="full")
-
-
 def test_resolve_keeps_representatives_and_singletons(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(8)], ["doc_id", "text"]

@@ -41,7 +41,8 @@ def test_zorder_layout_partitions_are_z_contiguous(spark):
 
 def test_minmax_surrogate_constant_column_is_zero(spark):
     df = spark.range(0, 10).select(F.lit(7).alias("c"))
-    out = df.select(layout.minmax_surrogate(df, F.col("c"), 8).alias("s"))
+    (s,) = layout.minmax_surrogates(df, [F.col("c")], 8)
+    out = df.select(s.alias("s"))
     assert {r["s"] for r in out.collect()} == {0}
 
 

@@ -10,7 +10,6 @@ import os
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from nbi_oedi_etl_v2_spark.config import ETLConfig, JobConfig
 from nbi_oedi_etl_v2_spark.pipeline import run_etl
@@ -317,82 +316,6 @@ def test_pipeline_end_to_end_with_file_uris(spark, tmp_path):
     assert discover_counties(meta_root, "AK") == sorted(COUNTY_CODES["AK"])
 
 
-def test_read_any_csv_json_roundtrip(spark, sf_dir, tmp_path):
-    from nbi_oedi_etl_v2_spark.sources.reader import read_any
-    from nbi_oedi_etl_v2_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "n_chars"
-    )
-    # csv: escaped newlines keep files splittable; read back with the
-    # written escape conventions and the ORIGINAL schema (no inference)
-    csv_path = str(tmp_path / "docs_csv")
-    docs.write.mode("overwrite").option("header", "true").option(
-        "escape", '"'
-    ).csv(csv_path)
-    got_csv = read_any(
-        spark, csv_path, fmt="csv", schema=docs.schema, escape='"', multiLine="true"
-    )
-    assert got_csv.exceptAll(docs).count() == 0
-    assert docs.exceptAll(got_csv).count() == 0
-
-    # json-lines roundtrip
-    json_path = str(tmp_path / "docs_json")
-    docs.write.mode("overwrite").json(json_path)
-    got_json = read_any(spark, json_path, fmt="json", schema=docs.schema)
-    assert got_json.exceptAll(docs).count() == 0
-    assert docs.exceptAll(got_json).count() == 0
-
-    # schema-less csv/json at scale is an error, not a silent infer
-    import pytest
-
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_any(spark, csv_path, fmt="csv")
-
-
-def test_upsert_overwrites_only_incoming_partitions(spark, tmp_path):
-    from nbi_oedi_etl_v2_spark.sources.sinks import upsert_partitions
-
-    path = str(tmp_path / "lake")
-    base = spark.createDataFrame(
-        [("AK", 1, 10.0), ("AK", 2, 20.0), ("CA", 1, 30.0), ("CA", 2, 40.0)],
-        ["state", "bldg", "v"],
-    )
-    upsert_partitions(base, path, ["state"])
-    # re-run only AK with corrected values
-    fixed_ak = spark.createDataFrame(
-        [("AK", 1, 11.0), ("AK", 2, 21.0), ("AK", 3, 31.0)], ["state", "bldg", "v"]
-    )
-    upsert_partitions(fixed_ak, path, ["state"])
-    got = spark.read.parquet(path)
-    assert got.count() == 5  # 3 new AK rows + 2 untouched CA rows
-    assert got.filter("state = 'AK'").agg(F.sum("v")).first()[0] == 63.0
-    assert got.filter("state = 'CA'").agg(F.sum("v")).first()[0] == 70.0
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    from nbi_oedi_etl_v2_spark.sources.sinks import compact_partitions
-    import glob
-
-    path = str(tmp_path / "smallfiles")
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 2).cast("string").alias("state"),
-        F.col("id"),
-        (F.col("id") * 0.5).alias("v"),
-    )
-    # fragment: 32 tasks × 2 partitions → many small files
-    df.repartition(32).write.partitionBy("state").parquet(path)
-    before = len(glob.glob(f"{path}/state=*/*.parquet"))
-    assert before >= 32
-    n = compact_partitions(spark, path, ["state"], target_records_per_file=10_000)
-    assert n == 10_000
-    after = len(glob.glob(f"{path}/state=*/*.parquet"))
-    assert after <= 4  # ~1 file per partition
-    got = spark.read.parquet(path)
-    assert got.count() == 10_000
-    assert got.agg(F.sum("v")).first()[0] == sum(i * 0.5 for i in range(10_000))
-
-
 def test_empty_parquet_file_is_not_a_discrepancy(spark, tmp_path):
     # a zero-row part file yields no input_file_name() rows but is NOT
     # corrupt — the accounting probe must clear it, not raise a false
@@ -420,28 +343,6 @@ def test_empty_parquet_file_is_not_a_discrepancy(spark, tmp_path):
     job = summary.jobs[0]
     assert job.data_files_listed == 9  # 8 generated + the empty one
     assert job.missing_data_files == []  # empty ≠ corrupt
-
-
-def test_compact_aborts_on_failed_rename(spark, tmp_path, monkeypatch):
-    import pytest as _pytest
-
-    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
-    from nbi_oedi_etl_v2_spark.sources.sinks import compact_partitions
-
-    path = str(tmp_path / "tbl")
-    spark.range(100).selectExpr("id", "id % 4 AS p").write.partitionBy("p").parquet(path)
-    real_rename = fsmod.rename
-
-    def failing_rename(src, dest):
-        if dest.endswith(".compact-old"):
-            return False  # simulate Hadoop rename returning false
-        return real_rename(src, dest)
-
-    monkeypatch.setattr(fsmod, "rename", failing_rename)
-    with _pytest.raises(IOError, match="aborting swap"):
-        compact_partitions(spark, path, ["p"], 1000)
-    # original data untouched by the aborted swap
-    assert spark.read.parquet(path).count() == 100
 
 
 def _partition_files(info: dict, upgrade: str = "0") -> list[str]:
@@ -666,7 +567,10 @@ def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert [len(j.missing_data_files) for j in summary.jobs] == [1, 0]
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # the status store drops its oldest jobs in batches past
+    # spark.ui.retainedJobs, so earlier ungrouped ids may vanish: only
+    # an id the run added would be an escaped job
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
     assert len(tracker.getJobIdsForGroup(group)) == 10
 
 

@@ -89,8 +89,8 @@ def test_dedup_joins_are_equi_joins(spark, sf_dir, op):
         "ngram_jaccard": lambda: dedup.ngram_jaccard_pairs(
             docs, "doc_id", "text", k=3, threshold=0.8
         ),
-        "simhash": lambda: dedup.simhash_near_pairs(
-            docs, "doc_id", "text", max_hamming=3
+        "simhash": lambda: dedup.hamming_near_pairs(
+            dedup.simhash(docs, "doc_id", "text"), "doc", "simhash", 3
         ),
     }[op]()
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -124,36 +124,6 @@ def test_stream_ewma_state_evicted_after_watermark(spark, tmp_path):
     assert run(2) == 1
 
 
-def test_stream_etl_writes_watermark_passed_hours(spark, sf_dir, tmp_path):
-    # append-mode parquet sink: exactly the hours the watermark passed
-    # are written; the trailing watermark horizon is withheld for the
-    # next run (exactly-once incremental ETL, not data loss)
-    ev = streaming.read_table_stream(spark, sf_dir, "events")
-    q = streaming.run_etl_stream(
-        ev,
-        output_path=str(tmp_path / "out"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        watermark="2 hours",
-    )
-    q.awaitTermination()
-    written = spark.read.parquet(str(tmp_path / "out"))
-    batch = downsample(
-        load_table(spark, sf_dir, "events"), timestamp_col="ts", entity_col="user_id"
-    )
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
-    import datetime
-
-    horizon = max_ts - datetime.timedelta(hours=2)
-    expected = batch.where(
-        F.col("ts") <= F.date_trunc("hour", F.lit(horizon)) - F.expr("INTERVAL 1 HOUR")
-    )
-    got, want = _rows(written), _rows(expected)
-    assert got, "no hours written"
-    assert got <= _rows(batch)
-    # every definitely-finalized hour must be present
-    assert want <= got
-
-
 def test_stream_stateless_operator_composes(spark, sf_dir):
     # map-only operators run unchanged on a streaming DataFrame
     from nbi_oedi_etl_v2_spark.operators import text

@@ -73,20 +73,6 @@ def test_bloom_anti_join_null_keys_kept(spark):
     assert got == [1] and n_null == 1  # NULL never equals → kept
 
 
-def test_bloom_semi_join_exact(spark):
-    probe = spark.range(0, 300).withColumnRenamed("id", "k")
-    seen = (
-        spark.range(0, 300)
-        .where(F.col("id") % 5 == 0)
-        .withColumnRenamed("id", "s")
-    )
-    got = membership.bloom_semi_join(probe, "k", seen, "s")
-    want = probe.join(seen, probe.k == seen.s, "left_semi")
-    assert sorted(r.k for r in got.collect()) == sorted(
-        r.k for r in want.collect()
-    )
-
-
 def test_bloom_fast_path_refutes_most_absent(spark):
     # with 10 bits/key the sketch should refute the vast majority of
     # absent probes — the map-only fast path actually fires

@@ -166,29 +166,6 @@ def test_kmeans_rejects_unknown_strategy(spark):
         cluster.lloyd_kmeans(df, "id", "v", k=1, assign_strategy="bogus")
 
 
-def test_ivf_centroids_kmeans_large_nlist(spark, sf_dir):
-    # the VERDICT item-3 consumer: nlist past LITERAL_ASSIGN_MAX_K
-    # trains through the broadcast-join assign and still emits the
-    # (cid, c_vec, c_norm) contract ivf_assign consumes
-    from nbi_oedi_etl_v2_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    nlist = cluster.LITERAL_ASSIGN_MAX_K + 44  # forces the broadcast path
-    cents = similarity.ivf_centroids_kmeans(
-        emb, "vec_id", "embedding", nlist=nlist, iterations=1
-    )
-    assert cents.count() == nlist
-    assert dict(cents.dtypes) == {
-        "cid": "int", "c_vec": "array<double>", "c_norm": "double",
-    }
-    v = similarity.with_norm(emb, "embedding").select(
-        F.col("vec_id").alias("vid"), "vec", "norm"
-    )
-    assigned = similarity.ivf_assign(v, cents, "vid", nprobe=1)
-    assert assigned.count() == emb.count()
-    assert assigned.where(F.col("cid").isNull()).count() == 0
-
-
 def test_ivf_assign_nprobe1_agg_matches_window(spark, sf_dir):
     # the nprobe=1 aggregate argmax must pick the same (sim, cid)
     # winner as the general window path
@@ -212,44 +189,6 @@ def test_ivf_assign_nprobe1_agg_matches_window(spark, sf_dir):
     assert agg == win
 
 
-def test_arrow_assign_matches_fold_on_separated_data(spark):
-    # on well-separated blobs the BLAS argmin and the sequential fold
-    # must agree exactly; sq_dist agrees to float tolerance
-    cents = [[0.0, 0.0], [10.0, 10.0]]
-    lit = {
-        r.id: (r.cluster_id, r.sq_dist)
-        for r in cluster.assign_clusters(_toy(spark), "v", cents).collect()
-    }
-    arr = {
-        r.id: (r.cluster_id, r.sq_dist)
-        for r in cluster.assign_clusters_arrow(
-            _toy(spark), "id", "v", cents
-        ).collect()
-    }
-    assert set(lit) == set(arr)
-    for i in lit:
-        assert lit[i][0] == arr[i][0]
-        assert abs(lit[i][1] - arr[i][1]) < 1e-9
-
-
-def test_arrow_assign_exact_tie_takes_low_id(spark):
-    df = spark.createDataFrame([(1, [5.0])], "id long, v array<float>")
-    out = cluster.assign_clusters_arrow(
-        df, "id", "v", [[0.0], [10.0]]
-    ).collect()[0]
-    assert out.cluster_id == 0 and abs(out.sq_dist - 25.0) < 1e-12
-
-
-def test_lloyd_arrow_strategy_runs_end_to_end(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents, assigned = cluster.lloyd_kmeans(
-        emb, "vec_id", "embedding", k=4, iters=1, assign_strategy="arrow"
-    )
-    assert len(cents) == 4
-    assert assigned.count() == emb.count()
-    assert assigned.where(F.col("cluster_id").isNull()).count() == 0
-
-
 def test_assign_clusters_expr_matches_column_fallback(spark):
     """r10: assign_clusters builds the literal argmin via one parsed
     SQL expression; the Column-by-Column fallback (taken for
@@ -261,7 +200,9 @@ def test_assign_clusters_expr_matches_column_fallback(spark):
         (4, [5.0, 5.0]), (5, [-1.5, 1e300]),
     ]
     df = spark.createDataFrame(pts, "id long, v array<double>")
-    cents = [[0.0, 0.0], [0.3, 0.7], [5.0, 5.0]]
+    # the -0.0 coordinate sends the SQL-text emitter down its
+    # unary-minus branch
+    cents = [[0.0, -0.0], [0.3, 0.7], [5.0, 5.0]]
     fast = cluster.assign_clusters(df, "v", cents)
     slow = df.withColumn(
         "_best",
@@ -284,6 +225,12 @@ def test_assign_clusters_expr_matches_column_fallback(spark):
     a = fast.select("id", "cluster_id", "sq_dist").orderBy("id").collect()
     b = slow.select("id", "cluster_id", "sq_dist").orderBy("id").collect()
     assert a == b
+    # squared distances cannot show a zero's sign: check the parsed
+    # literal itself
+    (z,) = spark.range(1).select(
+        F.expr(cluster._double_literal_sql(-0.0))
+    ).first()
+    assert math.copysign(1.0, z) == -1.0
     # non-finite centroid takes the fallback path and still answers
     nf = cluster.assign_clusters(df, "v", [[0.0, 0.0], [float("nan"), 1.0]])
     got = {r.id: r.cluster_id for r in nf.collect()}
