@@ -1,19 +1,23 @@
 """Batch ETL orchestrator (SURVEY §2.11 O1, §3 EP1 restated).
 
-Per job (config.sample.json ``job_specific`` entry), one chain:
+Per job (config.sample.json ``job_specific`` entry), two chains that
+share nothing:
 
-1. partition-pruned read of the 15-min time-series (S1/P1),
-2. hourly downsample with the ``{col}_{fn}`` naming (A1/A2/F1/F2),
-3. snappy parquet write partitioned by upgrade/state (S6),
-4. byte-copy metadata bypass (S2/S7),
-5. catalog registration replacing the Glue crawlers (S8),
+- the data chain (``run_job``):
+  1. partition-pruned read of the 15-min time-series (S1/P1),
+  2. hourly downsample with the ``{col}_{fn}`` naming (A1/A2/F1/F2),
+  3. snappy parquet write partitioned by upgrade/state (S6),
+  4. listed-vs-read file accounting,
+  5. the data table and per-state views, replacing a Glue crawler (S8);
+- the metadata chain (``copy_metadata``): resolve the metadata files,
+  byte-copy them (S2/S7) and register the metadata table (S8),
 
 then one run summary in the reference tracker's JSON shape
 (tracker.py:291-392; sample at README.md:467-493).
 
 The reference's worker pool (O2, manager.py) survives only as one
-driver thread per job chain, so one job's driver work (listing, footer
-merge, accounting, catalog DDL) overlaps another job's Spark jobs.
+driver thread per chain, so one chain's driver work (footer reads,
+listing, accounting, catalog DDL) overlaps other chains' Spark jobs.
 Queues, poison pills, crash monitors and back-pressure (O3/O4) are
 absent by design: Spark's scheduler owns task parallelism, retries
 (``spark.task.maxFailures``) and memory. The tracker (O5) survives as
@@ -28,7 +32,7 @@ from __future__ import annotations
 import json
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
 
 from py4j.protocol import Py4JJavaError
@@ -39,7 +43,7 @@ from pyspark.sql import functions as F
 from .config import ETLConfig, JobConfig
 from .operators.downsample import downsample
 from .sources import fs, paths, sinks
-from .sources.catalog import register_etl_output
+from .sources.catalog import register_etl_output, register_metadata_copy
 from .sources.reader import read_timeseries
 
 
@@ -137,11 +141,31 @@ def run_job(
     job: JobConfig,
     output_root: str,
     run_ts: str,
+    db: str | None = None,
 ) -> JobResult:
+    """The data chain of ``job``: read, downsample, write and account
+    for its files, then register its data table and per-state views in
+    ``db`` (none when ``db`` is None). The metadata fields of the
+    result are left empty; ``copy_metadata`` fills them."""
     # S1/P1 — one partitioned read of this job's partitions; Spark's
     # file index for it is the job's input listing (one py4j call).
     ts_df = read_timeseries(spark, config, job)
     listed_files = [f for f in ts_df.inputFiles() if fs.is_data_file(f)]
+    data_path = sinks.data_output_path(output_root, run_ts, job)
+    if set(ts_df.columns) <= set(sinks.PARTITION_COLUMNS):
+        # No listed file has a readable footer, so the scan declares no
+        # data column: nothing can be transformed or written, and every
+        # listed file is reported (the reference reports corrupt files;
+        # it does not die on them).
+        if db is not None:
+            register_etl_output(spark, db, data_path, ts_df.schema, [],
+                                **_catalog_names(job))
+        return JobResult(
+            job_name=job.job_name, data_path=data_path, metadata_files=[],
+            data_files_listed=len(listed_files), data_files_written=0,
+            metadata_files_listed=0, metadata_files_uploaded=0,
+            missing_data_files=sorted(set(map(fs.normalize_uri, listed_files))),
+        )
     # O5 discrepancy accounting (tracker.py:194-289 restated) rides the
     # write: the observed file-path set is the files the scan could
     # actually read, so no second pass over the input runs. The set is
@@ -161,15 +185,13 @@ def run_job(
     # them, so keep them as extra grouping keys: they're constant per
     # input partition and must survive for partitionBy on write.
     hourly = downsample(ts_df, timestamp_col="timestamp", entity_col="bldg_id",
-                        extra_group_cols=["upgrade", "state"])
+                        extra_group_cols=list(sinks.PARTITION_COLUMNS))
     obs_out = Observation(f"{job.job_name}_out")
     hourly = hourly.observe(obs_out, F.count(F.lit(1)).alias("rows_written"))
 
-    data_path = sinks.write_hourly_data(hourly, output_root, run_ts, job)
-
-    # S2/S7 — resolve + byte-copy metadata.
-    meta_srcs = [p for p in paths.resolve_metadata_paths(job) if fs.exists(p)]
-    copied = sinks.bypass_metadata(meta_srcs, output_root, run_ts, job)
+    sinks.write_hourly_data(hourly, output_root, run_ts, job)
+    # listed while the listener bus delivers the Observations below
+    written = fs.list_files_recursive(data_path)
 
     # Listed but never read: corrupt inputs (skipped via
     # ignoreCorruptFiles) — or legitimately empty files.
@@ -199,20 +221,47 @@ def run_job(
                 pass
         if declared != 0:
             missing.append(f)
-    written = len(fs.list_files_recursive(data_path))
+    if db is not None:
+        register_etl_output(spark, db, data_path, hourly.schema, written,
+                            **_catalog_names(job))
     return JobResult(
         job_name=job.job_name,
         data_path=data_path,
-        metadata_files=copied,
+        metadata_files=[],
         data_files_listed=len(listed_files),
-        data_files_written=written,
-        metadata_files_listed=len(meta_srcs),
-        metadata_files_uploaded=len(copied),
+        data_files_written=len(written),
+        metadata_files_listed=0,
+        metadata_files_uploaded=0,
         data_files_read=len(read_files),
         missing_data_files=missing,
         rows_read=int(in_metrics.get("rows_read", 0)),
         rows_written=int(_observed(obs_out).get("rows_written", 0)),
     )
+
+
+def _catalog_names(job: JobConfig) -> dict:
+    return {"data_table_prefix": f"data_{job.job_name}".lower(), "states": [job.state]}
+
+
+def copy_metadata(
+    spark: SparkSession,
+    job: JobConfig,
+    output_root: str,
+    run_ts: str,
+    db: str | None = None,
+) -> tuple[int, list[str]]:
+    """The metadata chain of ``job``: resolve its metadata files,
+    byte-copy the existing ones (S2/S7) and register them as its
+    metadata table in ``db`` (none when ``db`` is None). Returns (files
+    resolved to an existing source, paths of the copies)."""
+    meta_srcs = [p for p in paths.resolve_metadata_paths(job) if fs.exists(p)]
+    copied = sinks.bypass_metadata(meta_srcs, output_root, run_ts, job)
+    if db is not None:
+        register_metadata_copy(
+            spark, db, sinks.metadata_output_path(output_root, run_ts, job), copied,
+            metadata_table_prefix=f"metadata_{job.job_name}".lower(),
+        )
+    return len(meta_srcs), copied
 
 
 def run_etl(
@@ -222,18 +271,22 @@ def run_etl(
     register_catalog: bool = True,
     db: str = "nbi_analytics",
 ) -> RunSummary:
-    """EP1 end-to-end: each job runs as one chain, ``run_job`` and then
-    its catalog registration (O7 — the reference's on-success crawler
-    trigger), and all chains run concurrently on a thread pool of
-    ``min(jobs, defaultParallelism)`` threads. Output paths and catalog
-    names are disjoint per job, so chains share nothing; job names must
-    therefore be unique (``ValueError`` otherwise, before any work).
+    """EP1 end-to-end: each job runs as two chains, its data chain
+    (``run_job``, then its data table and views) and its metadata chain
+    (``copy_metadata``, then its metadata table) — the reference's
+    on-success crawler trigger (O7) becomes each chain's last step. All
+    chains run concurrently on a thread pool of
+    ``min(2 × jobs, defaultParallelism)`` threads. Output paths and
+    catalog names are disjoint per chain, so chains share nothing; job
+    names must therefore be unique (``ValueError`` otherwise, before
+    any work).
 
     Each chain inherits the caller's local properties (job group,
     scheduler pool), so every Spark job the run submits is attributed
     as if submitted by the caller. Waits for every chain, then raises
-    the first failure in ``job_specific`` order; results come back in
-    that order.
+    the first failure in ``job_specific`` order (a job's data chain
+    before its metadata chain); results come back in that order, each
+    job's two halves merged into one ``JobResult``.
     """
     names = [job.job_name for job in config.job_specific]
     duplicates = sorted({n for n in names if names.count(n) > 1})
@@ -243,31 +296,27 @@ def run_etl(
     t0 = time.perf_counter()
     run_ts = run_timestamp()
     output_root = output_root or config.output_dir
+    catalog_db = db if register_catalog else None
     if register_catalog:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
 
-    def chain(job: JobConfig) -> JobResult:
-        result = run_job(spark, config, job, output_root, run_ts)
-        if register_catalog:
-            register_etl_output(
-                spark,
-                db=db,
-                data_path=result.data_path,
-                metadata_root=sinks.metadata_output_path(output_root, run_ts, job),
-                data_table_prefix=f"data_{job.job_name}".lower(),
-                metadata_table_prefix=f"metadata_{job.job_name}".lower(),
-                states=[job.state],
-            )
-        return result
-
-    workers = max(1, min(len(names), spark.sparkContext.defaultParallelism))
+    workers = max(1, min(2 * len(names), spark.sparkContext.defaultParallelism))
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        # wrapped per chain, so each chain gets its own copy of the
-        # caller's properties: Spark SQL sets its execution id in them
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(chain), job)
-            for job in config.job_specific
-        ]
-    summary = RunSummary(jobs=[f.result() for f in futures])
+
+        def submit(chain, *args):
+            # wrapped per chain, so each chain gets its own copy of the
+            # caller's properties: Spark SQL sets its execution id in them
+            return pool.submit(inheritable_thread_target(spark)(chain),
+                               spark, *args, output_root, run_ts, catalog_db)
+
+        chains = [(submit(run_job, config, job), submit(copy_metadata, job))
+                  for job in config.job_specific]
+    jobs = []
+    for data, meta in chains:
+        result = data.result()
+        listed, copied = meta.result()
+        jobs.append(replace(result, metadata_files=copied, metadata_files_listed=listed,
+                            metadata_files_uploaded=len(copied)))
+    summary = RunSummary(jobs=jobs)
     summary.total_time_seconds = time.perf_counter() - t0
     return summary

@@ -2,8 +2,8 @@
 
 A decade of parquet under one table root never has ONE schema: columns
 appear, ints widen to longs, floats to doubles, dates become
-timestamps. Spark's ``mergeSchema`` handles the additive cases at scan
-time, but cross-SNAPSHOT unions (old exports ∪ new exports, backfill ∪
+timestamps. Spark's Parquet schema merging handles the additive cases
+at scan time, but cross-SNAPSHOT unions (old exports ∪ new exports, backfill ∪
 incremental) still fail on type drift — and implicit engine coercion
 is exactly what a pipeline should not rely on.
 

@@ -11,12 +11,38 @@ directories) doubles as the job's input listing.
 
 from __future__ import annotations
 
+import json
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import fs
 from .paths import data_partition_prefixes, release_root
 from ..config import ETLConfig, JobConfig
+
+
+def _footer_schema(spark: SparkSession, prefixes: list[str]) -> StructType:
+    """The data schema of ``prefixes``: the footer schema of the first
+    file of each prefix whose footer reads, merged across prefixes in
+    path order with Spark's ``StructType.merge`` — the merge, and the
+    order, of Spark's schema-merging inference. Empty when no footer
+    reads."""
+    merged = None
+    for prefix in sorted(prefixes):
+        for path in fs.iter_files(prefix):
+            try:
+                schema = fs.parquet_schema(path)
+            except Py4JJavaError:
+                continue  # unreadable: the scan skips it too
+            if merged is None:
+                merged = schema
+            else:
+                conf = spark._jsparkSession.sessionState().conf()
+                merged = merged.merge(schema, conf.caseSensitiveAnalysis())
+            break
+    return StructType() if merged is None else StructType.fromJson(json.loads(merged.json()))
 
 
 def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> DataFrame:
@@ -29,34 +55,42 @@ def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> D
     input listing), and the ``where`` below still compiles to
     partition pruning (``.explain`` shows the ``PartitionFilters``).
 
+    The data schema is declared, not inferred, so building the scan
+    runs no Spark job: it is the footer schema of the first readable
+    file of each prefix, read on the driver, merged across prefixes.
+    The schema is assumed uniform within one ``upgrade=/state=``
+    prefix (the release writes one schema per upgrade); prefixes may
+    differ, and each one's columns survive the merge. The partition
+    columns' types are still inferred from the directory names.
+
     The scan always skips corrupt files, reproducing the reference's
     corrupt-file story (README.md:465-466: one corrupt input is
     *reported* in the run summary, the job completes): unreadable files
     surface via the pipeline's listed-vs-read accounting instead of
-    failing the job. Scoped as a reader option, not a session conf, so
-    analytical queries still fail loudly on rot.
+    failing the job, and a corrupt first file is passed over when the
+    schema is taken. Scoped as a reader option, not a session conf, so
+    analytical queries still fail loudly on rot. When no listed file
+    has a readable footer, the scan has no data column, only the two
+    partition columns.
     """
-    # mergeSchema makes schema inference read every footer of this
-    # job's partitions (as a parallel job) instead of just the first
-    # file — necessary so a corrupt FIRST file doesn't kill inference
-    # before ignoreCorruptFiles can skip it. The release schema is
-    # uniform, so merging is semantics-neutral.
-    reader = spark.read.option("ignoreCorruptFiles", "true").option(
-        "mergeSchema", "true"
-    )
+    reader = spark.read.option("ignoreCorruptFiles", "true")
     root = release_root(config, job)
     # Spark raises PATH_NOT_FOUND on a missing path: a configured
     # upgrade without data is read as no files, not as an error
     prefixes = [p for p in data_partition_prefixes(config, job) if fs.exists(p)]
     if prefixes:
-        df = reader.option("basePath", root).parquet(*prefixes)
+        schema = _footer_schema(spark, prefixes)
+        df = reader.schema(schema).option("basePath", root).parquet(*prefixes)
     else:
         # no partition of this job exists: an empty scan with the
-        # release's schema, so the job still writes a typed, empty output
-        df = reader.schema(reader.parquet(root).schema).parquet()
+        # release's schema (every upgrade's columns, and the partition
+        # columns typed as Spark infers them from the release), so the
+        # job still writes a typed, empty output
+        upgrades = [f"{root}/{d}" for d in fs.list_dirs(root) if d.startswith("upgrade=")]
+        release = reader.schema(_footer_schema(spark, upgrades)).parquet(root).schema
+        df = reader.schema(release).parquet()
     pred = F.col("state") == job.state
     # partition values parse as strings or ints depending on layout;
     # compare as strings for both (Catalyst still prunes on the cast).
     pred &= F.col("upgrade").cast("string").isin([str(u) for u in job.upgrades])
     return df.where(pred)
-

@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame
 from .fs import copy_file, normalize_uri
 from ..config import JobConfig
 
+# the Hive partition columns of the transformed data, outermost first
+PARTITION_COLUMNS = ("upgrade", "state")
+
 
 def data_output_path(output_root: str, run_ts: str, job: JobConfig) -> str:
     return f"{output_root.rstrip('/')}/{run_ts}/{job.job_name}/data"
@@ -41,7 +44,7 @@ def write_hourly_data(
     """
     out = data_output_path(output_root, run_ts, job)
     writer = df.write.mode("overwrite").option("compression", "snappy")
-    writer.partitionBy("upgrade", "state").parquet(out)
+    writer.partitionBy(*PARTITION_COLUMNS).parquet(out)
     return out
 
 

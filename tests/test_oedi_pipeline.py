@@ -345,11 +345,11 @@ def test_empty_parquet_file_is_not_a_discrepancy(spark, tmp_path):
     assert job.missing_data_files == []  # empty ≠ corrupt
 
 
-def _partition_files(info: dict, upgrade: str = "0") -> list[str]:
+def _partition_files(info: dict, upgrade: str = "0", state: str = "AK") -> list[str]:
     import glob
 
     return sorted(glob.glob(os.path.join(
-        info["data_root"], f"upgrade={upgrade}", "state=AK", "*.parquet")))
+        info["data_root"], f"upgrade={upgrade}", f"state={state}", "*.parquet")))
 
 
 def _zero_rows(path: str) -> None:
@@ -421,13 +421,72 @@ def test_stray_non_parquet_file_leaves_counts_unchanged(spark, tmp_path):
     assert job.missing_data_files == []
 
 
+def _inferred_read_schema(spark, config, job):
+    """The read's schema as Spark infers it: every footer of the job's
+    existing partitions merged (``mergeSchema``), or of the whole
+    release when the job has none."""
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+    from nbi_oedi_etl_v2_spark.sources.paths import data_partition_prefixes, release_root
+
+    reader = spark.read.option("ignoreCorruptFiles", "true").option("mergeSchema", "true")
+    root = release_root(config, job)
+    prefixes = [p for p in data_partition_prefixes(config, job) if fsmod.exists(p)]
+    if prefixes:
+        return reader.option("basePath", root).parquet(*prefixes).schema
+    return reader.parquet(root).schema
+
+
+def _extra_column(path: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(path)
+    pq.write_table(table.append_column("out.extra", pa.array([1.5] * table.num_rows)), path)
+
+
+@pytest.mark.parametrize("lake_kind", [
+    "plain", "corrupt-first", "zero-row", "page-corrupt", "missing-upgrade",
+    "no-partition", "extra-column", "no-partition-extra-column",
+])
+def test_declared_read_schema_matches_inference(spark, tmp_path, lake_kind):
+    # The read declares the footer schema of each partition's first
+    # readable file; it must be the schema Spark's mergeSchema
+    # inference gave, partition columns included.
+    from dataclasses import replace
+
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+    from nbi_oedi_etl_v2_spark.sources.reader import read_timeseries
+
+    info = generate_oedi_lake(str(tmp_path), upgrades=(
+        ("0",) if lake_kind == "missing-upgrade" else ("0", "1")))
+    # the first file in the listing order the read meets them in
+    first = next(fsmod.iter_files(os.path.dirname(_partition_files(info)[0])))
+    damage = {"corrupt-first": _corrupt, "zero-row": _zero_rows,
+              "page-corrupt": _corrupt_pages}.get(lake_kind)
+    if damage:
+        damage(first)
+    if lake_kind.endswith("extra-column"):
+        for state in ("AK", "CA"):
+            for f in _partition_files(info, "1", state):
+                _extra_column(f)
+    config = _make_config(str(tmp_path))
+    job = config.job_specific[0]
+    if lake_kind.startswith("no-partition"):
+        job = replace(job, state="NY")
+
+    declared = read_timeseries(spark, config, job).schema
+    assert declared == _inferred_read_schema(spark, config, job)
+    assert declared.fieldNames()[-2:] == ["upgrade", "state"]
+    assert ("out.extra" in declared.fieldNames()) == lake_kind.endswith("extra-column")
+
+
 def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
     # The listed-vs-read accounting rides the write (an Observation),
-    # the input listing is the read's own file index and the corrupt
-    # candidate's footer is read on the driver, so a run is 5 jobs: the
-    # mergeSchema footer job, 2 for the write and 2 for the catalog
-    # registration. A probe scan or Spark re-check creeping back shows
-    # up here.
+    # the input listing is the read's own file index, and every schema
+    # is declared (the read's and both tables' from footers read on the
+    # driver, or from the written DataFrame), so a run is the write's 2
+    # jobs and nothing else. A probe scan, a Spark re-check or a
+    # schema-inference job creeping back shows up here.
     info = generate_oedi_lake(str(tmp_path))
     victim = _partition_files(info)[0]
     blob = open(victim, "rb").read()
@@ -443,7 +502,7 @@ def test_corrupt_run_job_count_is_pinned(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(summary.jobs[0].missing_data_files) == 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
 def _corrupt(path: str) -> None:
@@ -545,9 +604,12 @@ def test_footer_read_retried_once(spark, tmp_path, monkeypatch, failures, report
 def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
     # The chains run on pool threads: each must carry the caller's job
     # group, or the run's jobs escape it. Each job, the corrupt-file one
-    # as above and the healthy one alike, is the footer job, 2 write
-    # jobs and 2 catalog jobs: 10, the same on every run.
+    # as above and the healthy one alike, is its data chain's 2 write
+    # jobs: 4, the same on every run. Its metadata chain (copy and
+    # declared table) runs none.
     from dataclasses import replace
+
+    from nbi_oedi_etl_v2_spark.pipeline import copy_metadata
 
     info = generate_oedi_lake(str(tmp_path))
     _corrupt(_partition_files(info)[0])
@@ -571,37 +633,138 @@ def test_two_job_run_jobs_stay_in_callers_group(spark, tmp_path):
     # spark.ui.retainedJobs, so earlier ungrouped ids may vanish: only
     # an id the run added would be an escaped job
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    assert len(tracker.getJobIdsForGroup(group)) == 10
+    assert len(tracker.getJobIdsForGroup(group)) == 4
+
+    # the metadata chain alone, catalog on: no job in its caller's
+    # group and none outside it
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    meta_group = f"{group}-metadata"
+    sc.setJobGroup(meta_group, "metadata chain")
+    try:
+        listed, copied = copy_metadata(spark, config.job_specific[0], str(tmp_path / "meta"),
+                                       "20240101T000000Z", "two_job_pin")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert listed == len(copied) == 2
+    assert tracker.getJobIdsForGroup(meta_group) == []
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
-def test_failing_job_raises_after_healthy_chain_finishes(spark, tmp_path):
-    # the first job's every input is corrupt, so its read fails in
-    # schema inference; the second job is healthy and must still run
-    # to its last catalog step before run_etl raises
+def test_failing_job_raises_after_healthy_chain_finishes(spark, tmp_path, monkeypatch):
+    # the first job's write fails; the second job is healthy and must
+    # still run to its last catalog step before run_etl raises
     import threading
     from dataclasses import replace
 
-    from pyspark.errors import AnalysisException
+    from nbi_oedi_etl_v2_spark.sources import sinks
+
+    generate_oedi_lake(str(tmp_path))
+    config = _make_config(str(tmp_path))
+    bad = config.job_specific[0]
+    good = replace(bad, state="CA")
+    config = replace(config, job_specific=[bad, good])
+    real = sinks.write_hourly_data
+
+    def write_fails_for_bad(df, output_root, run_ts, job):
+        if job.job_name == bad.job_name:
+            raise OSError("injected write failure")
+        return real(df, output_root, run_ts, job)
+
+    monkeypatch.setattr(sinks, "write_hourly_data", write_fails_for_bad)
+    db = "failing_job"
+    before = set(threading.enumerate())
+    with pytest.raises(OSError, match="injected write failure"):
+        run_etl(spark, config, output_root=str(tmp_path / "out"), db=db)
+    assert not [t for t in threading.enumerate() if t not in before and t.is_alive()]
+    data, meta = f"data_{good.job_name}".lower(), f"metadata_{good.job_name}_parquet".lower()
+    bad_meta = f"metadata_{bad.job_name}_parquet".lower()
+    # the failing job's own metadata chain ran to its end too
+    assert {t.name for t in spark.catalog.listTables(db)} == {
+        data, f"{data}_state_ca", meta, bad_meta}
+    assert spark.table(f"{db}.{data}_state_ca").count() > 0
+    assert spark.table(f"{db}.{meta}").count() > 0
+
+
+def test_all_corrupt_job_is_reported_not_fatal(spark, tmp_path, caplog):
+    # Every input of the first job is corrupt, so no footer gives the
+    # read a schema: the job reports every listed file, writes nothing
+    # and registers no data table or view, while its metadata chain and
+    # the healthy job run as usual.
+    import json
+    import logging
+    from dataclasses import replace
 
     info = generate_oedi_lake(str(tmp_path))
-    for upgrade in ("0", "1"):
-        for f in _partition_files(info, upgrade):
-            _corrupt(f)
+    victims = _partition_files(info, "0") + _partition_files(info, "1")
+    for f in victims:
+        _corrupt(f)
     config = _make_config(str(tmp_path))
     bad = config.job_specific[0]
     good = replace(bad, state="CA")
     config = replace(config, job_specific=[bad, good])
 
-    db = "failing_job"
-    before = set(threading.enumerate())
-    with pytest.raises(AnalysisException) as err:
-        run_etl(spark, config, output_root=str(tmp_path / "out"), db=db)
-    assert err.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
-    assert not [t for t in threading.enumerate() if t not in before and t.is_alive()]
-    data, meta = f"data_{good.job_name}".lower(), f"metadata_{good.job_name}_parquet".lower()
-    assert {t.name for t in spark.catalog.listTables(db)} == {data, f"{data}_state_ca", meta}
-    assert spark.table(f"{db}.{data}_state_ca").count() > 0
-    assert spark.table(f"{db}.{meta}").count() > 0
+    db = "all_corrupt"
+    with caplog.at_level(logging.WARNING):
+        summary = run_etl(spark, config, output_root=str(tmp_path / "out"), db=db)
+    broken, healthy = summary.jobs
+    assert broken.data_files_listed == 8
+    assert [f.split("/by_state/")[1] for f in broken.missing_data_files] == [
+        f.split("/by_state/")[1] for f in victims]
+    assert broken.data_files_read == broken.data_files_written == 0
+    assert broken.rows_read == broken.rows_written == 0
+    assert not os.path.exists(broken.data_path)
+    assert broken.metadata_files_listed == broken.metadata_files_uploaded == 2
+    assert healthy.missing_data_files == [] and healthy.rows_written > 0
+    stats = json.loads(summary.to_reference_json())["data_files_stats"]
+    assert stats["missing_data_transforms_count"] == 8
+    data, meta = f"data_{bad.job_name}".lower(), f"metadata_{bad.job_name}_parquet".lower()
+    good_data = f"data_{good.job_name}".lower()
+    assert {t.name for t in spark.catalog.listTables(db)} == {
+        meta, good_data, f"{good_data}_state_ca", f"metadata_{good.job_name}_parquet".lower()}
+    assert spark.table(f"{db}.{meta}").count() == 2 * 580
+    assert any("no data file" in r.getMessage() and data in r.getMessage()
+               for r in caplog.records)
+
+
+def test_declared_tables_match_inferred_tables(spark, tmp_path):
+    # Both tables are declared (data from the written schema plus the
+    # written partitions, metadata from one copied footer); tables
+    # Spark infers over the same files must describe, partition and
+    # count the same. The metadata files differ in columns across
+    # upgrades, and one input file is corrupt.
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    info = generate_oedi_lake(str(tmp_path))
+    _corrupt(_partition_files(info)[0])
+    for f in glob.glob(os.path.join(info["metadata_root"], "**", "*upgrade01*.parquet"),
+                       recursive=True):
+        table = pq.read_table(f)
+        pq.write_table(table.append_column("in.extra", pa.array(["x"] * table.num_rows)), f)
+    config = _make_config(str(tmp_path))
+    job = run_etl(spark, config, output_root=str(tmp_path / "out"), db="declared").jobs[0]
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS inferred")
+    spark.sql("DROP TABLE IF EXISTS inferred.d")
+    spark.sql("DROP TABLE IF EXISTS inferred.m")
+    spark.sql(f"CREATE TABLE inferred.d USING PARQUET LOCATION '{job.data_path}'")
+    spark.sql("ALTER TABLE inferred.d RECOVER PARTITIONS")
+    meta_root = job.metadata_files[0].split("/by_state/")[0]
+    spark.sql(f"CREATE TABLE inferred.m USING PARQUET "
+              f"OPTIONS (path '{meta_root}', recursiveFileLookup 'true')")
+    data = f"declared.data_{job.job_name}".lower()
+    meta = f"declared.metadata_{job.job_name}_parquet".lower()
+    for declared, inferred in ((data, "inferred.d"), (meta, "inferred.m")):
+        assert (spark.sql(f"DESCRIBE TABLE {declared}").collect()
+                == spark.sql(f"DESCRIBE TABLE {inferred}").collect())
+        assert spark.table(declared).schema == spark.table(inferred).schema
+        assert spark.table(declared).count() == spark.table(inferred).count() > 0
+    assert (spark.sql(f"SHOW PARTITIONS {data}").collect()
+            == spark.sql("SHOW PARTITIONS inferred.d").collect())
+    assert "in.extra" not in spark.table(meta).columns  # the baseline file's schema
 
 
 def test_job_without_any_partition_registers_no_data_table(spark, tmp_path, caplog):
@@ -665,23 +828,25 @@ def test_bypass_keys_skip_hidden_ancestors(spark, tmp_path):
 def test_register_without_metadata_file_skips_metadata_table(spark, tmp_path, caplog):
     import logging
 
-    from nbi_oedi_etl_v2_spark.sources.catalog import register_etl_output
+    from nbi_oedi_etl_v2_spark.sources.catalog import (
+        register_etl_output, register_metadata_copy)
+    from nbi_oedi_etl_v2_spark.sources.fs import list_files_recursive
 
     db = "no_meta"
     data_path = str(tmp_path / "data")
-    spark.createDataFrame([(1, "AK"), (2, "AK")], ["bldg_id", "state"]).write.partitionBy(
-        "state").parquet(data_path)
+    df = spark.createDataFrame([(1, "0", "AK"), (2, "0", "AK")], ["bldg_id", "upgrade", "state"])
+    df.write.partitionBy("upgrade", "state").parquet(data_path)
     stale = str(tmp_path / "stale_meta")
     spark.range(3).write.parquet(stale)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     spark.sql(f"CREATE TABLE {db}.m_parquet USING PARQUET LOCATION '{stale}'")
 
     with caplog.at_level(logging.WARNING):
-        registered = register_etl_output(
-            spark, db=db, data_path=data_path,
-            metadata_root=str(tmp_path / "no_metadata_here"),
-            data_table_prefix="d", metadata_table_prefix="m", states=["AK"],
-        )
+        registered = register_metadata_copy(
+            spark, db, str(tmp_path / "no_metadata_here"), [], metadata_table_prefix="m")
+        registered.update(register_etl_output(
+            spark, db, data_path, df.schema, list_files_recursive(data_path),
+            data_table_prefix="d", states=["AK"]))
     assert "metadata" not in registered
     assert registered["data"] == f"{db}.d"
     assert spark.table(registered["data_state_ak"]).count() == 2
@@ -711,37 +876,38 @@ def test_write_query_result_roundtrip(spark, tmp_path, fmt):
     assert sorted(int(r["id"]) for r in got.collect()) == list(range(100))
 
 
-class _RecoverFails:
-    """A session whose ``RECOVER PARTITIONS`` statement fails."""
+class _AddPartitionFails:
+    """A session whose ``ALTER TABLE … ADD PARTITION`` statement fails."""
 
     def __init__(self, spark):
         self._spark = spark
+        self._jsparkSession = spark._jsparkSession
 
     def sql(self, query, *args, **kwargs):
         from pyspark.errors import AnalysisException
 
-        if "RECOVER PARTITIONS" in query:
-            raise AnalysisException("partition recovery failed")
+        if "ADD PARTITION" in query:
+            raise AnalysisException("adding partitions failed")
         return self._spark.sql(query, *args, **kwargs)
 
 
-def test_partition_recovery_failure_propagates(spark, tmp_path):
+def test_add_partition_failure_propagates(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
     from nbi_oedi_etl_v2_spark.sources.catalog import register_etl_output
+    from nbi_oedi_etl_v2_spark.sources.fs import list_files_recursive
 
-    db = "recover_fails"
+    db = "add_partition_fails"
     data_path = str(tmp_path / "data")
-    spark.createDataFrame([(1, "0", "AK")], ["bldg_id", "upgrade", "state"]).write.partitionBy(
-        "upgrade", "state").parquet(data_path)
+    df = spark.createDataFrame([(1, "0", "AK")], ["bldg_id", "upgrade", "state"])
+    df.write.partitionBy("upgrade", "state").parquet(data_path)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     # a table left without its partitions would answer every saved
     # query with no rows, so the failure must not be swallowed
-    with pytest.raises(AnalysisException, match="partition recovery failed"):
+    with pytest.raises(AnalysisException, match="adding partitions failed"):
         register_etl_output(
-            _RecoverFails(spark), db=db, data_path=data_path,
-            metadata_root=str(tmp_path / "metadata"),
-            data_table_prefix="d", metadata_table_prefix="m", states=["AK"],
+            _AddPartitionFails(spark), db, data_path, df.schema,
+            list_files_recursive(data_path), data_table_prefix="d", states=["AK"],
         )
 
 
