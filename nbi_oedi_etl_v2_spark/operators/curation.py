@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ._iterate import checkpoint
+
 
 def _md5_byte0(col: Column) -> Column:
     """First byte of ``md5(col)`` as an integer 0..255 — the uniform
@@ -80,9 +82,9 @@ def connected_components(
     disqualifying at 100 TB); the same graph converges in 9
     large/small-star rounds, and a shuffled-id 800-chain in 9 vs
     ~800. Each round is two grouped mins + two edge-sized equi-joins
-    + distincts; ``localCheckpoint`` bounds lineage, and the
-    convergence probe is an exact two-sided ``exceptAll`` emptiness
-    check on the edge set.
+    + distincts; a checkpoint per round bounds lineage and observes
+    the edge set's size, and the convergence test is an exact
+    ``exceptAll`` emptiness check on the edge set.
 
     Raises if ``max_iterations`` rounds don't reach the fixpoint:
     unconverged labels silently flowing into a curated corpus would
@@ -97,13 +99,12 @@ def connected_components(
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
     )
-    e = (
+    e, seen = checkpoint(
         raw.select(
             F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
         )
         .where(F.col("hi") != F.col("lo"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iterations):
         # large-star: m(u) = min(N(u) ∪ {u}) over symmetric
@@ -123,21 +124,19 @@ def connected_components(
         # small-star on the (hi, lo) orientation: every smaller
         # neighbor (and hi itself) hooks onto min(Γ(hi))
         mins2 = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        ss = (
+        n_prev = seen["n"]
+        ss, seen = checkpoint(
             ls.join(mins2, "hi")
             .where(F.col("lo") != F.col("m"))
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
             .union(mins2.select("hi", F.col("m").alias("lo")))
             .where(F.col("hi") != F.col("lo"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # both sides are DISTINCT edge sets, so equal counts plus a
-        # one-sided emptiness check prove set equality (saves one
-        # exceptAll job per round vs the two-sided form)
+        # both sides are DISTINCT edge sets, so equal sizes plus a
+        # one-sided emptiness check prove set equality
         converged = (
-            ss.count() == e.count()
-            and ss.exceptAll(e).limit(1).count() == 0
+            seen["n"] == n_prev and ss.exceptAll(e).limit(1).count() == 0
         )
         e = ss
         if converged:

@@ -13,18 +13,19 @@ relative precision per step for exact reproducibility (and
 
 Scale shape per iteration: one equi-join (ranks→edges on src), one
 hash aggregate (contributions by dst), one left join back to the node
-set — all keyed shuffles, nothing driver-side, lineage truncated per
-round the same way connected_components does NOT need here because
-the iteration count is fixed and small (a 5-deep plan is fine; pass
-``checkpoint_every`` for long runs).
+set — all keyed shuffles, nothing driver-side. PageRank runs as one
+lazy plan; the other loops here run an action per round and end each
+round with ``_iterate.checkpoint``.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ._iterate import checkpoint
 
 SCALE = 10**12
 
@@ -86,24 +87,13 @@ def node_broadcast_limit(spark: SparkSession) -> int:
     )
 
 
-def _should_broadcast(
-    spark: SparkSession,
-    flag: bool | str,
-    n_rows: int,
-    op: str,
-) -> bool:
-    """Resolve a bool|'auto' broadcast lever against the memory-aware
-    limit. The accounting is a LOG, not a result column (join strategy
-    never changes results, so the oracle schema must not move): auto
-    decisions are logged at INFO, and the fallback to shuffled joins —
-    the silently-degrading case the sf30 soak caught — is a WARNING
-    with the numbers and the override spelled out."""
-    if flag is True:
-        return True
-    if flag is not True and flag is not False and flag != "auto":
-        raise ValueError(f"broadcast lever must be bool or 'auto': {flag!r}")
-    if flag is False:
-        return False
+def _should_broadcast(spark: SparkSession, n_rows: int, op: str) -> bool:
+    """Whether ``n_rows`` rows of node state fit the memory-aware
+    broadcast limit. The accounting is a LOG, not a result column (join
+    strategy never changes results, so the oracle schema must not
+    move): a broadcast is logged at INFO, and the fallback to shuffled
+    joins — the silently-degrading case the sf30 soak caught — is a
+    WARNING with the numbers."""
     limit = node_broadcast_limit(spark)
     use = n_rows <= limit
     if use:
@@ -116,9 +106,8 @@ def _should_broadcast(
             "%s: node state (%d rows) exceeds the memory-aware "
             "broadcast limit (%d rows from spark.driver.memory); "
             "falling back to SHUFFLED node joins — every round now "
-            "exchanges the full edge table. Raise driver/executor "
-            "memory or pass the broadcast flag explicitly if the "
-            "state fits.", op, n_rows, limit
+            "exchanges the full edge table. Raise spark.driver.memory "
+            "for the state to be broadcast.", op, n_rows, limit
         )
     return use
 
@@ -130,7 +119,6 @@ def pagerank_fixed(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = SCALE,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Synchronous power-iteration PageRank with integer fixed-point
     ranks: R⁰(v) = scale div N, and
@@ -165,20 +153,12 @@ def pagerank_fixed(
             ).alias("base"),
         )
     )
-    # NOTE (measured, round 5): the static (src, dst, deg) subtree is
-    # textually replayed in every iteration's lineage (the pre-AQE plan
-    # shows 68 FileScans and zero ReusedExchange), which looks like the
-    # BFS edge-recompute bug — but it is NOT: PageRank is a SINGLE
-    # final action, and AQE's runtime exchange reuse deduplicates the
-    # identical shuffle stages during execution. Eagerly
-    # localCheckpoint-ing ed/init was A/B'd at sf0.1 and measured 2×
-    # WORSE (10.1 s vs 5.0 s median-of-3) — it pays materialization and
-    # storage-memory for stages AQE already shares — so the lazy form
-    # stays. The BFS/CC loops differ because they run per-round ACTIONS
-    # (isEmpty / convergence probes), where lineage genuinely re-executes.
+    # lazy on purpose: one final action, and AQE reuses the replayed
+    # static subtree's exchanges (eager checkpoints measured 2× worse;
+    # SCALE.md, "Iterative operators")
     ranks = init
     ed = e.join(deg, "src")  # (src, dst, deg) — static across rounds
-    for i in range(iterations):
+    for _ in range(iterations):
         contrib = (
             ed.join(ranks.select(F.col("node").alias("src"), "r"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -197,8 +177,6 @@ def pagerank_fixed(
                 "base",
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
@@ -357,43 +335,31 @@ def bfs_levels(
     Scale shape per round: one equi-join frontier→edges on src, one
     distinct, one left-anti join against the accumulated result — all
     keyed shuffles; the frontier is the only growing driver of cost
-    and it never exceeds the reachable set. The loop stops early when
-    a frontier comes back empty (the convergence probe is a boolean
-    ``isEmpty``, not data).
-
-    Two materialization decisions carry the iteration (A/B'd at sf0.1
-    on the co-purchase graph, 22 s → 3.4 s combined): every frontier
-    is ``localCheckpoint``ed, so the ``isEmpty`` probe and the next
-    round share one computation instead of the probe recomputing the
-    whole lineage, and plan depth stays flat in graph diameter; and
-    the edge table is persisted for the duration of the loop — an
-    expensive edge derivation (the co-purchase self-join) would
-    otherwise re-run in EVERY round's action. The returned DataFrame
-    depends only on checkpointed frontiers, so the edge cache is
-    dropped before returning.
+    and it never exceeds the reachable set. Each frontier is
+    checkpointed, and the loop stops at the first one whose checkpoint
+    observed no row. The edge table is persisted for the loop and
+    dropped before returning: the result depends only on checkpointed
+    frontiers.
     """
     dist = sources.select(F.col("node").cast("long").alias("node")).distinct()
     dist = dist.withColumn("dist", F.lit(0).cast("int"))
     frontier = dist.select("node")
-    # NOTE (r10): like weighted_sssp (see its measured note), this
-    # single-source traversal must NOT pre-partition the edge cache
-    # by dst — the frontier expansion touches a fraction of the graph
-    # per round, so the up-front full-edge shuffle never pays.
+    # not pre-partitioned by dst: a frontier touches a fraction of the
+    # graph per round (SCALE.md, "Iterative operators")
     e = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
     ).persist()
     try:
         for depth in range(1, max_depth + 1):
-            nxt = (
+            nxt, m = checkpoint(
                 frontier.join(e, frontier["node"] == e["src"])
                 .select(F.col("dst").alias("node"))
                 .distinct()
                 .join(dist.select("node"), "node", "left_anti")
                 .withColumn("dist", F.lit(depth).cast("int"))
-                .localCheckpoint()
             )
-            if nxt.isEmpty():
+            if not m["n"]:
                 break
             dist = dist.unionByName(nxt)
             frontier = nxt.select("node")
@@ -407,7 +373,6 @@ def weighted_sssp(
     sources: DataFrame,
     rounds: int = 4,
     early_exit: bool = True,
-    broadcast_dist: bool | str = "auto",
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths by synchronous Bellman-Ford
     relaxation: ``dist₀(source) = 0``; each round
@@ -429,35 +394,21 @@ def weighted_sssp(
     keyed-shuffle profile as a PageRank round, which is what
     distributes at 100 TB.
 
-    ``broadcast_dist`` (VERDICT r8 item 1 — SSSP previously had NO
-    broadcast lever and default-lever sf30 died on shuffle disk,
-    SCALE.md round 8): the reached set is node-sized state exactly
-    like kcore's survivors; ``"auto"`` broadcasts it into the relax
-    join whenever the CURRENT round's count (a cached-scan read of
-    the checkpoint) fits :func:`node_broadcast_limit` (~10% of
-    ``spark.driver.memory`` at ~48 B/node), making the relax join
-    MAP-SIDE over the persisted edges — the only per-round shuffle
-    left is the map-side-combined min aggregate (node-bounded
-    partials, never edge-sized). The decision is per round (the
-    reached set grows monotonically, so it can flip off late on a
-    huge expanding frontier — logged when it does); ``False`` forces
-    the shuffled join. Join strategy never changes results.
+    The reached set is node-sized state like kcore's survivors: it is
+    broadcast into the relax join whenever its size, observed by the
+    previous round's checkpoint, fits :func:`node_broadcast_limit`,
+    which makes the join map-side over the persisted edges. The
+    decision is per round, as the reached set grows. Join strategy
+    never changes results.
 
-    Each round's dist is ``localCheckpoint``ed
-    (the BFS lesson: flat plan depth, and the early-exit probe shares
-    the materialization) and the edge table is persisted for the
-    loop. ``early_exit`` stops when a round changes nothing — a
-    fixed point of the relaxation, so the remaining rounds are
-    provably no-ops (bit-identical to running all of them).
+    ``early_exit`` stops when a round changes nothing — a fixed point
+    of the relaxation, so the remaining rounds are provably no-ops
+    (bit-identical to running all of them). The min-aggregate itself
+    counts the changed nodes: it carries each node's previous distance
+    beside the new one.
     """
-    # NOTE (r10, measured): do NOT pre-partition this edge cache by
-    # dst the way label_propagation does. SSSP is a single-source
-    # traversal — the reached set (and so the relax output) covers a
-    # FRACTION of the graph per round, while the up-front
-    # repartition shuffles EVERY edge; the A/B on the co-purchase
-    # graph measured the dst-partitioned form 4.23 → 5.97 s at sf1
-    # (worse on every rep). The labelprop win applies only when each
-    # round's aggregate consumes the whole edge table.
+    # not pre-partitioned by dst: the reached set covers a fraction of
+    # the graph per round (SCALE.md, "Iterative operators")
     e = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
@@ -465,53 +416,39 @@ def weighted_sssp(
     ).persist()
     try:
         spark = edges.sparkSession
-        dist = (
+        dist, m = checkpoint(
             sources.select(F.col("node").cast("long").alias("node"))
             .distinct()
             .withColumn("dist", F.lit(0).cast("long"))
-            .localCheckpoint()
         )
         for _ in range(rounds):
-            # the checkpoint above/below materialized dist, so the
-            # count feeding the per-round auto decision is cheap
-            # the count feeding the auto decision reads the checkpoint
-            # (materialized), and is skipped entirely on a fixed lever
-            n_reached = dist.count() if broadcast_dist == "auto" else 0
             d_b = (
                 F.broadcast(dist)
-                if _should_broadcast(
-                    spark, broadcast_dist, n_reached, "weighted_sssp"
-                )
+                if _should_broadcast(spark, m["n"], "weighted_sssp")
                 else dist
             )
             relaxed = e.join(d_b, e["src"] == d_b["node"]).select(
                 F.col("dst").alias("node"),
                 (d_b["dist"] + F.col("w")).alias("dist"),
             )
-            new = (
-                dist.unionByName(relaxed)
+            # a node changed when it is new or its distance improved
+            new, m = checkpoint(
+                dist.withColumn("_old", F.col("dist"))
+                .unionByName(relaxed, allowMissingColumns=True)
                 .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-                .localCheckpoint()
+                .agg(F.min("dist").alias("dist"), F.max("_old").alias("_old"))
+                .select(
+                    "node",
+                    "dist",
+                    (F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
+                    .cast("int")
+                    .alias("_chg"),
+                ),
+                F.sum("_chg").alias("chg"),
             )
-            if early_exit:
-                # a relaxation fixed point (no new node, no per-node
-                # improvement) → every further round is a no-op; the
-                # rename sidesteps the checkpoint-lineage self-join
-                # ambiguity
-                old = dist.select("node", F.col("dist").alias("_old"))
-                at_fixed_point = (
-                    new.join(old, "node", "left")
-                    .where(
-                        F.col("_old").isNull()
-                        | (F.col("dist") < F.col("_old"))
-                    )
-                    .isEmpty()
-                )
-                if at_fixed_point:
-                    dist = new
-                    break
-            dist = new
+            dist = new.drop("_chg")
+            if early_exit and not m.get("chg"):
+                break
         return dist
     finally:
         e.unpersist()
@@ -558,9 +495,7 @@ def label_propagation(
     edges: DataFrame,
     rounds: int = 5,
     early_exit: bool = True,
-    max_degree: int | None = None,
     round_counter: list | None = None,
-    broadcast_labels: bool | str = "auto",
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, the deterministic synchronous variant): every node
@@ -571,112 +506,50 @@ def label_propagation(
     deterministic — hash-matchable by an engine replaying the same
     rounds, where the textbook random-order variant would not be.
 
-    ``early_exit`` (VERDICT r6 missing #3) stops the loop as soon as
-    NO label changed in a round: the synchronous update is a pure
-    function of the previous labels, so a round that changes nothing
-    proves a fixed point and every further round is a no-op — the
-    result is bit-identical to running all ``rounds``, which is why
-    it is safe to keep on even under the fixed-round oracle. The
-    check costs one sum over the labels the round already
-    ``localCheckpoint``-materialized (no extra scan of data-sized
-    state). LPA typically converges in 3–5 rounds; at sf10 this is
-    the lever that cuts the fixed-round tail.
-
-    ``max_degree`` (same VERDICT item, power-law graphs): when set,
-    each dst keeps only its ``max_degree`` smallest-src in-edges —
-    deterministic neighbor sampling via one row_number window over
-    (dst ORDER BY src), paid ONCE before the loop. A celebrity node
-    with 10⁸ in-edges otherwise re-shuffles its entire neighborhood
-    every round for a vote a 1000-edge sample already decides.
-    Changes semantics (votes are a sample) — default off; the
-    hash-matched driver spec runs uncapped.
+    ``early_exit`` stops the loop as soon as NO label changed in a
+    round: the synchronous update is a pure function of the previous
+    labels, so a round that changes nothing proves a fixed point and
+    every further round is a no-op — the result is bit-identical to
+    running all ``rounds``, which is why it is safe to keep on even
+    under the fixed-round oracle. The changed count is observed by the
+    round's checkpoint job.
 
     ``round_counter``: pass a list to receive one appended entry per
     EXECUTED round — the observable the early-exit pytest asserts on
     (the loop runs fewer rounds than asked once converged).
 
-    ``broadcast_labels`` (the measured sf10 lever, round 7): graphs
-    routinely have a MODEST node set under a huge edge set — the sf10
-    co-purchase graph is 2M nodes carrying 239M edges — and then
-    re-shuffling the edge table by src every round is the whole cost.
-    Broadcasting the (node, lbl) side instead makes the per-round
-    join MAP-SIDE over the persisted edges: zero edge exchanges in
-    the loop; the only per-round shuffle left is the
-    map-side-combined (dst, label) aggregate. ``"auto"`` broadcasts
-    when the node count (already materialized by the checkpoint) fits
-    the MEMORY-AWARE limit (:func:`node_broadcast_limit` — ~10% of
-    ``spark.driver.memory`` at ~48 B/node; the former constant 5M
-    cutoff was the measured sf30 cliff, SCALE.md round 8: a 6M-node
-    graph silently fell back to per-round full-edge shuffles and died
-    on disk); ``False`` forces the shuffled join for graphs whose
-    node state genuinely exceeds memory. Falling back is WARNING-
-    logged with the numbers. Join strategy never changes results.
-    Measured at sf10: 530 s shuffled → 304 s broadcast, same session
-    (SCALE.md round-7 labelprop row).
+    The (node, lbl) side is broadcast into each round's join when the
+    node count, observed by the initial checkpoint, fits the
+    memory-aware :func:`node_broadcast_limit`: graphs routinely carry
+    a modest node set under a huge edge set, and the broadcast makes
+    the per-round join map-side over the persisted edges. The shuffled
+    fallback is WARNING-logged. Join strategy never changes results.
 
     Scale shape per round: one keyed equi-join (edges ⋈ labels on
     src), one (dst, label) hash aggregate, one single-agg argmax via
     max(struct) — all shuffles keyed by node id, same profile as a
-    PageRank round. Labels are ``localCheckpoint``ed per round (flat
-    plan depth in rounds — the BFS lesson) and the edge table is
-    persisted for the loop's duration, dropped before returning.
+    PageRank round. Labels are checkpointed per round (flat plan
+    depth in rounds) and the edge table is persisted for the loop's
+    duration, dropped before returning.
     """
-    e = edges.select(
+    cache = edges.select(
         F.col("src").cast("long").alias("src"),
         F.col("dst").cast("long").alias("dst"),
-    )
-    if max_degree is not None:
-        w = Window.partitionBy("dst").orderBy("src")
-        e = (
-            e.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_degree)
-            .drop("_rn")
-        )
-    cache = e.persist()
+    ).persist()
     repart = None
     try:
-        labels = (
+        labels, m = checkpoint(
             cache.select(F.col("src").alias("node"))
             .union(cache.select("dst"))
             .distinct()
             .withColumn("lbl", F.col("node"))
-            .localCheckpoint()
         )
-        # the checkpoint above already materialized the node set, so
-        # this count is a cached-scan metadata read; the auto decision
-        # is memory-aware (node_broadcast_limit), not a constant —
-        # the 5M cutoff was the measured sf30 cliff (SCALE.md r8)
-        use_bc = _should_broadcast(
-            edges.sparkSession, broadcast_labels, labels.count(),
-            "label_propagation",
-        )
+        use_bc = _should_broadcast(edges.sparkSession, m["n"], "label_propagation")
         e = cache
-        if use_bc and max_degree is None:
-            # r10/r11: on the BROADCAST-labels path, re-cache the
-            # edges PARTITIONED BY dst (the max_degree window above
-            # already leaves hash(dst) partitioning, hence the
-            # guard). hash(dst) satisfies the clustered distribution
-            # of BOTH per-round aggregates — groupBy(dst, lbl) and
-            # the groupBy(node=dst) argmax — so every round's vote
-            # pipeline runs exchange-free over the cache (guide
-            # §2.4: operations keyed the same way share one
-            # exchange). The per-round partial (dst, lbl) exchange
-            # this removes is up to EDGE-scale on a dense graph, so
-            # one up-front edge shuffle buys its removal from every
-            # round. Results are partitioning-invariant (proven
-            # equal in the r10 A/B); measured warm medians:
-            # 9.73 → 7.07 s at sf0.1, 22.29 → 13.35 s at sf1 (all
-            # reps pairwise faster). ADVICE r10: the SHUFFLED-labels
-            # fallback re-exchanges by src per round regardless, so
-            # it now skips this shuffle entirely (and a power-law
-            # celebrity dst no longer concentrates a partition on
-            # the path that gains nothing from it); the decision is
-            # made first, off the unpartitioned cache the node scan
-            # already materialized. The count() materializes the
-            # dst-partitioned copy FROM that cache (one cached scan,
-            # no recompute of the edge construction), after which
-            # the unpartitioned copy is dropped — the loop never
-            # holds both.
+        if use_bc:
+            # hash(dst) serves both per-round aggregates, so the rounds
+            # run exchange-free over this copy (SCALE.md, "Iterative
+            # operators"); count() fills it from the first cache
             repart = cache.repartition("dst").persist()
             repart.count()
             cache.unpersist()
@@ -690,22 +563,9 @@ def label_propagation(
                 .groupBy(F.col("dst").alias("node"), "lbl")
                 .agg(F.count(F.lit(1)).alias("c"))
             )
-            # (count DESC, label ASC) argmax as ONE hash aggregate:
-            # max of (c, -lbl) picks the highest count, then the
-            # smallest label — no per-node sort window (the window
-            # formulation paid an extra sort-exchange per round).
-            # r11 decomposition ABA (plans/r11/AB_labelprop_decompose.json;
-            # script: git log --diff-filter=D -- tools/ab_labelprop_decompose.py)
-            # measured and REJECTED two further round fusions here:
-            # a decimal-packed HashAggregate argmax (neutral at
-            # sf0.1, slightly worse at sf1 — the 128-bit arithmetic
-            # per pair costs what the dropped partition-local sort
-            # saved) and broadcasting `best` into the label-update
-            # join (−0.4 s at sf0.1 but +1-2 s at sf1 and worse with
-            # node count: the per-round BroadcastExchange serializes
-            # the whole vote pipeline behind a driver collect that
-            # grows with nodes, while the SortMergeJoin it replaced
-            # only exchanges node-scale rows peer-to-peer).
+            # (count DESC, label ASC) argmax as ONE hash aggregate: max
+            # of (c, -lbl) picks the highest count, then the smallest
+            # label (two further fusions were rejected, SCALE.md)
             best = neigh.groupBy("node").agg(
                 (-F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("n")))[
                     "n"
@@ -718,23 +578,10 @@ def label_propagation(
                 .cast("int")
                 .alias("_chg"),
             )
-            # r11 (the one fusion that SURVIVED both scales): the
-            # early-exit changed-count rides the checkpoint
-            # materialization as an Observation metric instead of a
-            # separate per-round job — one job less per round, zero
-            # semantics (same sum over the same rows, collected by
-            # the same execution). Decomposition ABA: 5.41 -> 4.72 s
-            # med at sf0.1, neutral at sf1 (13.96 vs 13.93).
-            if early_exit:
-                obs = Observation()
-                labels = upd.observe(
-                    obs, F.sum("_chg").alias("chg")
-                ).localCheckpoint()
-                if (obs.get["chg"] or 0) == 0:
-                    break
-            else:
-                labels = upd.localCheckpoint()
+            labels, m = checkpoint(upd, F.sum("_chg").alias("chg"))
             labels = labels.drop("_chg")
+            if early_exit and not m.get("chg"):
+                break
         return labels.select("node", F.col("lbl").alias("community"))
     finally:
         cache.unpersist()
@@ -790,7 +637,6 @@ def kcore(
     k: int,
     max_rounds: int = 30,
     round_counter: list | None = None,
-    broadcast_nodes: bool | str = "auto",
     plan_probe: list | None = None,
 ) -> DataFrame:
     """k-core decomposition (fixed k): iteratively peel nodes of
@@ -800,32 +646,22 @@ def kcore(
     present, as ``copurchase_edges`` emits) so out-degree equals
     undirected degree.
 
-    State discipline (the labelprop lesson, learned here the hard
-    way: a first formulation ``localCheckpoint``ed the FILTERED EDGE
-    TABLE every round and OOMed at sf10 — 8 materialized copies of a
-    239M-edge table): the only per-round state is the NODE-sized
-    survivor set. The edge table is persisted ONCE; each round counts
-    degrees over ``edges ⋉ survivors ⋉ survivors`` (two semi-joins +
-    one hash agg), and survivors_{t+1} = {degree ≥ k} is
-    ``localCheckpoint``ed. Because survivors shrink monotonically,
-    filtering the ORIGINAL edges against the CURRENT survivor set is
-    identical to iterated edge deletion — bit-for-bit, with zero
-    edge-table materializations.
+    The only per-round state is the NODE-sized survivor set (a
+    checkpointed edge table OOMed at sf10, SCALE.md). The edge table
+    is persisted ONCE; each round counts degrees over
+    ``edges ⋉ survivors ⋉ survivors`` (two semi-joins + one hash agg),
+    and survivors_{t+1} = {degree ≥ k} is checkpointed. Because
+    survivors shrink monotonically, filtering the ORIGINAL edges
+    against the CURRENT survivor set is identical to iterated edge
+    deletion — bit-for-bit, with zero edge-table materializations.
 
-    ``broadcast_nodes`` (labelprop's measured sf10 lever): "auto"
-    broadcasts the survivor set into the semi-joins when it fits the
-    MEMORY-AWARE limit (:func:`node_broadcast_limit`, ~10% of
-    ``spark.driver.memory`` at ~48 B/node — the former constant 5M
-    cutoff was the measured sf30 cliff, SCALE.md round 8: default
-    kcore died on shuffle disk just past it), making every round
-    MAP-ONLY over the persisted edges — the per-round shuffle is just
-    the (src) degree aggregate; ``False`` forces shuffled semi-joins
-    for graphs whose survivor state genuinely exceeds memory (the
-    fallback is WARNING-logged with the numbers). The decision is
-    re-taken per round from the CURRENT survivor count, so a peel
-    that starts too big to broadcast flips to map-only joins as soon
-    as the survivor set shrinks under the limit. Join strategy never
-    changes results.
+    The survivor set is broadcast into the semi-joins when its size,
+    observed by the previous round's checkpoint, fits the memory-aware
+    :func:`node_broadcast_limit`, making every round map-only over the
+    persisted edges; the shuffled fallback is WARNING-logged. The
+    decision is re-taken per round, so a peel that starts too big to
+    broadcast flips to map-only joins once the survivors shrink under
+    the limit. Join strategy never changes results.
 
     Early exit is result-invariant: survivors(round) is monotone
     non-increasing and bounded, so the first round that removes no
@@ -857,48 +693,33 @@ def kcore(
             else:
                 s_b = (
                     F.broadcast(surv)
-                    if _should_broadcast(
-                        spark, broadcast_nodes, prev_nodes, "kcore"
-                    )
+                    if _should_broadcast(spark, prev_nodes, "kcore")
                     else surv
                 )
                 alive = e.join(
                     s_b, e["src"] == s_b["node"], "left_semi"
                 ).join(s_b, F.col("dst") == s_b["node"], "left_semi")
             deg = alive.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
-            # the checkpointed per-round state carries the degree
-            # alongside the node id (same node-sized class): at the
-            # fixed point it IS the answer — see below — so no final
-            # edge pass re-derives it.
+            # the state carries each survivor's degree: at the fixed
+            # point it is the answer, so no final edge pass runs
             pre = deg.where(F.col("degree") >= k).select(
                 F.col("src").alias("node"), "degree"
             )
             if plan_probe is not None:
-                # test observable (round_counter's sibling): the
-                # checkpoint erases the round's plan, so the in-loop
-                # join shape is only visible pre-checkpoint
+                # test observable: the checkpoint erases the round's
+                # plan, so the in-loop join shape is only visible here
                 plan_probe.append(
                     pre._jdf.queryExecution().executedPlan().toString()
                 )
-            nxt = pre.localCheckpoint()
-            n_keep = nxt.count()
+            surv, m = checkpoint(pre)
+            n_keep = m["n"]
             if round_counter is not None:
                 round_counter.append(n_keep)
             if n_keep == prev_nodes:
-                # survivors(t) ⊆ survivors(t−1) (deg's src only ranges
-                # over edges pre-filtered by the previous survivor
-                # set), so equal COUNTS imply the equal SET — and then
-                # the degrees in `nxt`, counted over edges filtered by
-                # survivors(t−1) = survivors(t), are exactly the
-                # within-core degrees the final pass used to recount
-                # (r10 optimization: that pass re-joined the full edge
-                # table — and, the edge cache being dropped on return,
-                # every downstream action re-derived the edges from
-                # scratch; the fixed-point state makes both free).
-                surv = nxt
+                # survivors(t) ⊆ survivors(t−1), so equal counts mean
+                # the equal set, and its degrees are the within-core ones
                 converged = True
                 break
-            surv = nxt
             prev_nodes = n_keep
         if converged:
             return surv
@@ -909,7 +730,7 @@ def kcore(
         s_nodes = surv.select("node")
         s_b = (
             F.broadcast(s_nodes)
-            if _should_broadcast(spark, broadcast_nodes, prev_nodes, "kcore")
+            if _should_broadcast(spark, prev_nodes, "kcore")
             else s_nodes
         )
         final = e.join(s_b, e["src"] == s_b["node"], "left_semi").join(

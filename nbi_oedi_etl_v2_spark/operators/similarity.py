@@ -409,7 +409,6 @@ def normalize_embeddings_arrow(
     memory; no shuffle — the UDF is a map.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     # no type hints: postponed-annotation strings defeat Spark's hint

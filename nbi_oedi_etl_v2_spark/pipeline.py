@@ -41,6 +41,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ETLConfig, JobConfig
+from .operators._iterate import _observed
 from .operators.downsample import downsample
 from .sources import fs, paths, sinks
 from .sources.catalog import register_etl_output, register_metadata_copy
@@ -128,13 +129,6 @@ class RunSummary:
         )
 
 
-def _observed(obs: Observation) -> dict:
-    """``obs``'s metrics, or ``{}`` when its plan saw no row: adaptive
-    execution drops an empty stage together with the observation in
-    it, and Spark then reports an empty row for it."""
-    return obs.get if obs._jo.getRow().length() else {}
-
-
 def run_job(
     spark: SparkSession,
     config: ETLConfig,
@@ -148,15 +142,18 @@ def run_job(
     ``db`` (none when ``db`` is None). The metadata fields of the
     result are left empty; ``copy_metadata`` fills them."""
     # S1/P1 — one partitioned read of this job's partitions; Spark's
-    # file index for it is the job's input listing (one py4j call).
+    # file index for it is the job's input listing. ``inputFiles()``
+    # runs no Spark job, but pyspark converts the returned array one
+    # element at a time: two py4j round trips per listed file.
     ts_df = read_timeseries(spark, config, job)
     listed_files = [f for f in ts_df.inputFiles() if fs.is_data_file(f)]
     data_path = sinks.data_output_path(output_root, run_ts, job)
     if set(ts_df.columns) <= set(sinks.PARTITION_COLUMNS):
-        # No listed file has a readable footer, so the scan declares no
-        # data column: nothing can be transformed or written, and every
-        # listed file is reported (the reference reports corrupt files;
-        # it does not die on them).
+        # No partition of the job exists, or no listed file has a
+        # readable footer, so the scan declares no data column: nothing
+        # can be transformed or written, and every listed file is
+        # reported (the reference reports corrupt files; it does not die
+        # on them).
         if db is not None:
             register_etl_output(spark, db, data_path, ts_df.schema, [],
                                 **_catalog_names(job))

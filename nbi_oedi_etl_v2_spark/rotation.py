@@ -1,4 +1,4 @@
-"""Driver-slot rotation policy (round 11).
+"""Driver-slot rotation policy (round 12).
 
 The verification driver records at most ``DRIVER_QUERY_CAP`` (50)
 correctness rows per round, while the registry holds 215 specs
@@ -55,24 +55,33 @@ the -0.0 literal emitter in _pq_cent_literal) was deliberately
 deferred/resolved-by-documentation because its spec's TOUCH row
 would not fit - see the TOUCH comment below.
 
-ROUND-12 NOTE (computed at the end of round 11, don't rediscover
-it): merge CORRECTNESS_r11 greens first; the oldest cohort then
-becomes the 37-spec r7 set at age 5 (41 specs read 8 at r11 -> wait
-for the merge, the exact cohort is whatever reads 7 after it). PIN +
-that cohort leaves ~9 slots for new TOUCH + fill. The deferred
-simhash batching (operators/dedup.py in-code note) is pre-measured
-and should take one of them if any code round happens. Bound 5
-stays feasible while R <= 250 (R = 215); the prospective capacity
-assert in tests/test_workload_oracle.py fails the round a spec
-lands past that ceiling.
+ROUND-12 STATE: CORRECTNESS_r11 was 50/50 green and is merged below
+(every key in that file reads 11, including the four wave-31 first
+rows, so no spec is never-verified). The budget is tighter than the
+round-11 note predicted: after the merge 43 specs read 7, and that
+whole cohort is at age 5, so it MUST export this round. PIN(3) + the
+cohort leaves 4 slots, not ~9. This round's operator changes (one
+observed-checkpoint step for the iterative loops) take 3 of them as
+TOUCH rows; the fourth TOUCH spec sits inside the cohort, and the
+last slot is fill. The deferred simhash batching (operators/dedup.py
+in-code note) still has no slot.
+
+ROUND-13 NOTE (computed at the end of round 12): merge CORRECTNESS_r12
+greens first; the oldest cohort then becomes the specs reading 8 (38
+of them if every r12 row is green: the 40 that read 8 now, minus
+corpus_incremental_dedup and the one fill slot), so PIN + that cohort
+leaves ~9 slots for TOUCH + fill. Bound 5 stays feasible while
+R <= 250 (R = 215); the prospective capacity assert in
+tests/test_workload_oracle.py fails the round a spec lands past that
+ceiling.
 """
 
 from __future__ import annotations
 
-CURRENT_ROUND = 11
+CURRENT_ROUND = 12
 STALENESS_BOUND_ROUNDS = 5
 
-# Latest round with a green driver row, from CORRECTNESS_r{1..7}.json.
+# Latest round with a green driver row, from CORRECTNESS_r{1..11}.json.
 VERIFIED_ROUNDS: dict[str, int] = {
     "approx_distinct_users": 9,
     "asof_last_order_per_event": 9,
@@ -94,24 +103,24 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "corpus_source_stats": 8,
     "corpus_stratified_sample": 7,
     "corpus_weighted_reservoir": 9,
-    "custkeys_1995_and_1996": 6,
-    "custkeys_1995_not_1996": 6,
-    "customer_bloom_inactive": 6,
-    "customer_entity_resolution": 6,
+    "custkeys_1995_and_1996": 11,
+    "custkeys_1995_not_1996": 11,
+    "customer_bloom_inactive": 11,
+    "customer_entity_resolution": 11,
     "customer_fuzzy_name_pairs": 9,
-    "customers_per_segment": 10,
+    "customers_per_segment": 11,
     "customers_with_open_orders": 7,
-    "customers_without_orders": 6,
+    "customers_without_orders": 11,
     "dedup_components": 7,
     "dedup_duplicate_spans": 8,
     "dedup_embedding_cosine": 7,
     "dedup_exact": 7,
-    "dedup_minhash_lsh": 9,
+    "dedup_minhash_lsh": 11,
     "dedup_ngram_jaccard": 7,
     "dedup_simhash": 9,
     "distinct_flags": 7,
-    "documents_bpe_merges": 6,
-    "documents_bpe_token_counts": 6,
+    "documents_bpe_merges": 11,
+    "documents_bpe_token_counts": 11,
     "documents_hashed_features": 10,
     "documents_nb_token_logodds": 8,
     "documents_sliding_chunks": 8,
@@ -119,23 +128,23 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "embedding_normalize": 7,
     "embedding_quantize": 8,
     "embedding_semantic_dedup": 10,
-    "embeddings_kmeans_lloyd": 7,
+    "embeddings_kmeans_lloyd": 11,
     "embeddings_random_projection": 8,
     "embeddings_triplet_mining": 8,
     "etl_gapfill_hours": 8,
-    "etl_gapfill_interp": 6,
+    "etl_gapfill_interp": 11,
     "etl_hourly_downsample": 10,
-    "etl_incremental_agg_merge": 6,
+    "etl_incremental_agg_merge": 11,
     "etl_write_pipeline": 7,
     "events_ab_proportion_test": 10,
     "events_anomaly_zscore": 9,
     "events_audience_overlap": 10,
-    "events_cm_frequency_rollup": 6,
+    "events_cm_frequency_rollup": 11,
     "events_cohort_retention": 9,
     "events_cuped_adjustment": 9,
     "events_cusum_changepoints": 8,
     "events_funnel": 9,
-    "events_heavy_hitters": 6,
+    "events_heavy_hitters": 11,
     "events_hll_daily_rollup": 10,
     "events_hourly_anomalies": 7,
     "events_in_prior_hour": 7,
@@ -143,55 +152,58 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "events_json_props_rollup": 8,
     "events_json_roundtrip": 10,
     "events_kaplan_meier_churn": 8,
+    "events_logrank_arms": 11,
     "events_markov_attribution": 8,
     "events_markov_transitions": 8,
     "events_ndcg_backtest": 8,
     "events_orc_roundtrip": 9,
-    "events_pattern_users": 6,
-    "events_pit_priority_lookup": 6,
+    "events_pattern_users": 11,
+    "events_pit_priority_lookup": 11,
     "events_quantile_sketch_rollup": 10,
     "events_seasonal_naive_backtest": 8,
-    "events_seasonal_profile": 6,
+    "events_seasonal_profile": 11,
     "events_welch_value_ttest": 10,
-    "ewma_alerts_batch": 6,
-    "lineitem_association_rules": 7,
+    "ewma_alerts_batch": 11,
+    "lineitem_association_rules": 11,
     "lineitem_benford_audit": 8,
     "lineitem_bootstrap_mean_ci": 10,
     "lineitem_bootstrap_mean_ci_blb": 10,
     "lineitem_conformal_interval": 8,
-    "lineitem_correlation_matrix": 6,
-    "lineitem_double_price_quantiles": 6,
+    "lineitem_correlation_matrix": 11,
+    "lineitem_double_price_quantiles": 11,
     "lineitem_equidepth_deciles": 7,
     "lineitem_equidepth_double": 7,
-    "lineitem_exact_price_quantiles": 6,
+    "lineitem_exact_price_quantiles": 11,
     "lineitem_logreg_auc": 8,
     "lineitem_logreg_calibration": 8,
     "lineitem_logreg_cv_auc": 8,
     "lineitem_logreg_pr_curve": 8,
     "lineitem_logreg_return_model": 7,
     "lineitem_mad_outliers": 8,
-    "lineitem_ols2_price_model": 6,
-    "lineitem_ols_price_model": 6,
+    "lineitem_ols2_price_model": 11,
+    "lineitem_ols_price_model": 11,
     "lineitem_pca_top_component": 8,
     "lineitem_percentile_ranks": 7,
-    "lineitem_price_trend": 6,
+    "lineitem_price_trend": 11,
     "lineitem_spearman_qty_price": 10,
     "lineitem_stump_splits": 7,
-    "lineitem_weighted_price_quantiles": 6,
+    "lineitem_weighted_price_quantiles": 11,
     "lineitem_winsorized_prices": 7,
-    "monthly_active_customers": 6,
+    "monthly_active_customers": 11,
     "multimodal_audio_decimate": 10,
     "multimodal_decode": 9,
     "multimodal_decode_jpeg": 10,
     "multimodal_decode_png": 9,
     "multimodal_decode_wav": 9,
     "multimodal_image_near_dups": 10,
-    "multimodal_jpeg_headers": 6,
+    "multimodal_jpeg_headers": 11,
     "multimodal_mp4_headers": 10,
-    "multimodal_png_headers": 6,
-    "multimodal_wav_headers": 6,
+    "multimodal_png_headers": 11,
+    "multimodal_wav_headers": 11,
     "nation_customer_rollup": 7,
-    "orders_aqp_revenue_estimate": 6,
+    "orders_anova_priority": 11,
+    "orders_aqp_revenue_estimate": 11,
+    "orders_bh_fdr_customers": 11,
     "orders_cdc_merge": 10,
     "orders_chi2_priority_status": 9,
     "orders_cube": 8,
@@ -201,9 +213,10 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "orders_gini_by_priority": 10,
     "orders_grouping_sets": 7,
     "orders_ivm_join_delta": 10,
-    "orders_k_anonymity_audit": 6,
+    "orders_k_anonymity_audit": 11,
     "orders_kruskal_priority": 10,
     "orders_ks_price_drift": 10,
+    "orders_levene_priority": 11,
     "orders_lineitem_join_size_agms": 7,
     "orders_mannwhitney_price_drift": 10,
     "orders_mi_feature_cells": 8,
@@ -211,26 +224,26 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "orders_neyman_sample": 8,
     "orders_pivot_status": 7,
     "orders_psi_price_drift": 7,
-    "orders_rollup": 6,
+    "orders_rollup": 11,
     "orders_scd2_priority": 10,
-    "orders_schema_evolution_union": 6,
-    "orders_skipping_bloom_scan": 6,
-    "orders_skipping_scan": 6,
+    "orders_schema_evolution_union": 11,
+    "orders_skipping_bloom_scan": 11,
+    "orders_skipping_scan": 11,
     "orders_skyline": 10,
     "orders_snapshot_diff": 10,
     "orders_table_fingerprint": 8,
-    "orders_table_profile": 8,
+    "orders_table_profile": 11,
     "orders_target_encode_priority": 8,
-    "orders_window_suite": 6,
+    "orders_window_suite": 11,
     "orders_woe_iv_priority": 8,
     "orders_zorder_key": 8,
     "part_copurchase_bfs": 10,
     "part_copurchase_kcore": 10,
-    "part_copurchase_labelprop": 10,
+    "part_copurchase_labelprop": 11,
     "part_copurchase_pagerank": 10,
     "part_copurchase_sssp": 10,
     "part_copurchase_triangles": 10,
-    "part_item_similarity": 6,
+    "part_item_similarity": 11,
     "price_percentiles_by_priority": 7,
     "q10_returned_items": 8,
     "q11_important_parts": 8,
@@ -254,7 +267,7 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "q7_volume_shipping": 9,
     "q8_market_share": 9,
     "q9_product_profit": 9,
-    "segment_active_customers": 10,
+    "segment_active_customers": 11,
     "sessionize_events": 7,
     "similarity_topk": 10,
     "similarity_topk_ivf": 7,
@@ -262,7 +275,7 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "similarity_topk_lsh": 10,
     "similarity_topk_pq": 10,
     "streaming_attribution_join": 7,
-    "streaming_cm_sketch": 6,
+    "streaming_cm_sketch": 11,
     "streaming_cusum_alerts": 9,
     "streaming_dedup_events": 7,
     "streaming_dim_enrich": 9,
@@ -273,17 +286,17 @@ VERIFIED_ROUNDS: dict[str, int] = {
     "text_compressibility": 10,
     "text_fingerprint": 7,
     "text_hybrid_rrf_topk": 7,
-    "text_inverted_index": 6,
+    "text_inverted_index": 11,
     "text_language_id": 7,
     "text_lm_scores": 9,
     "text_pii_redaction": 9,
     "text_quality_scores": 7,
     "text_repetition_scores": 9,
-    "text_token_pmi": 6,
+    "text_token_pmi": 11,
     "text_token_stats": 7,
     "text_vocabulary": 10,
-    "top10_orders_by_price": 6,
-    "topk_per_segment": 10,
+    "top10_orders_by_price": 11,
+    "topk_per_segment": 11,
     "user_running_value": 7,
 }
 
@@ -296,53 +309,30 @@ PIN: frozenset[str] = frozenset({
 })
 
 # TOUCH - specs whose operator code changed and must re-earn a
-# driver row (round 11). Six are the ROUND-10 BACKLOG (VERDICT r10
-# wrong #3 - code-changed late in r10, after that round's TOUCH set
-# was computed): embeddings_kmeans_lloyd (persist across Lloyd
-# rounds + argmin expr, f5ee118; also carries the r11 -0.0
-# sign-preserving literal emitter in cluster._sqdist_sql),
-# customer_bloom_inactive (bitset literal + distinct seen side,
-# b15ff27/5fcef98), lineitem_association_rules (in-plan denominator,
-# 9e21ca1), orders_table_profile (widen, 9e21ca1), documents_bpe_*
-# (triple-count batching bound, f84652b). Two are r11 code changes:
-# part_copurchase_labelprop (early-exit count rides the checkpoint
-# as an Observation metric) and dedup_minhash_lsh (the 64
-# min-aggregates as ONE parsed expression, 386 -> 138 ms driver
-# construction). NOT in TOUCH, with reasons: embedding_semantic_dedup
-# - its r11 change REVERTS the r10 widen, restoring code verified
-# AST-identical to the 510534a (r9) form that earned a green r9 row
-# (and its r10 row, with the widen, was also green; the oracle pin
-# in tests/test_workload_oracle.py covers it every round);
-# similarity_topk_pq / similarity_topk_ivfpq - untouched in r11 (the
-# -0.0 literal question in _pq_cent_literal is resolved by
-# documentation, ADVICE r10 option 2: the flip is provably benign in
-# squared-difference/ADC consumers, code byte-identical to r10);
-# dedup_simhash - the minhash-style expression batching was measured
-# (saves ~250 ms construction) and DEFERRED, not applied, exactly
-# because no TOUCH slot remains for an off-bench spec (see the
-# in-code note in operators/dedup.py). The budget: PIN(3) + these
-# 8 TOUCH (3 inside the age-5 cohort, so 5 extra) + 4 wave-31 first
-# rows + the 38-spec forced age-5 cohort = exactly 50.
+# driver row (round 12). The iterative loops now read their
+# convergence signals from the checkpoint job (operators/_iterate.py):
+# part_copurchase_kcore, part_copurchase_labelprop, and
+# corpus_incremental_dedup, which reaches curation.connected_components
+# through incremental_near_dedup. embedding_normalize lost a dead
+# import; it reads 7, so it exports with the age-5 cohort anyway and
+# its row costs no slot. The other specs on the changed loops have no
+# slot left this round and keep their pytest DuckDB oracles:
+# part_copurchase_bfs / _sssp and corpus_curate read 10,
+# customer_entity_resolution reads 11; dedup_components and
+# corpus_near_dedup read 7 and export with the cohort. The budget:
+# PIN(3) + 3 TOUCH outside the cohort + the 43-spec age-5 cohort + 1
+# fill = 50.
 TOUCH: frozenset[str] = frozenset({
-    "embeddings_kmeans_lloyd",
-    "customer_bloom_inactive",
-    "lineitem_association_rules",
-    "orders_table_profile",
-    "documents_bpe_merges",
-    "documents_bpe_token_counts",
+    "part_copurchase_kcore",
     "part_copurchase_labelprop",
-    "dedup_minhash_lsh",
+    "corpus_incremental_dedup",
+    "embedding_normalize",
 })
 
-# ADVISED - explicit re-verification asks from VERDICT r10: none
-# beyond the TOUCH backlog above (the verdict's remaining items -
-# pagerank ABA, widen re-ABA - resolved to measurements without code
-# changes to their specs, or to TOUCH rows).
+# ADVISED - explicit re-verification asks: none this round.
 ADVISED: frozenset[str] = frozenset()
 
-# DEFER_FIRST_ROW - EMPTY at r11: the four wave-31 inference specs
-# deferred from round 10 (anova, levene, logrank, bh_fdr) take their
-# first driver rows this round via the never-verified rule.
+# DEFER_FIRST_ROW - EMPTY: every registered spec has a green row.
 DEFER_FIRST_ROW: frozenset[str] = frozenset()
 
 

@@ -9,10 +9,12 @@ worker.py:34). Without a session they raise ``RuntimeError``.
 
 Scale note: ``list_files_recursive`` crosses the Py4J bridge once per
 file, so the ETL keeps it off the input side: the job's input listing
-is the file index Spark builds for the read itself (one
-``DataFrame.inputFiles()`` call), only the job's few output files
-are counted here, and the read's schema takes the first readable file
-of each input partition through the lazy ``iter_files``. Input-side listing at lake scale belongs to Spark's
+is the file index Spark builds for the read itself
+(``DataFrame.inputFiles()``: no Spark job, but still two py4j round
+trips per file, as pyspark converts the returned array one element at
+a time), only the job's few output files are counted here, and the
+read's schema takes the first readable file of each input partition
+through the lazy ``iter_files``. Input-side listing at lake scale belongs to Spark's
 parallel partition discovery (or an object inventory), not to any
 single-process walker — including the reference's own paginator.
 """

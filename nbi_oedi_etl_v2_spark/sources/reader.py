@@ -70,8 +70,8 @@ def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> D
     failing the job, and a corrupt first file is passed over when the
     schema is taken. Scoped as a reader option, not a session conf, so
     analytical queries still fail loudly on rot. When no listed file
-    has a readable footer, the scan has no data column, only the two
-    partition columns.
+    has a readable footer, or none of the job's partitions exists, the
+    scan has no data column, only the two partition columns.
     """
     reader = spark.read.option("ignoreCorruptFiles", "true")
     root = release_root(config, job)
@@ -82,13 +82,9 @@ def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> D
         schema = _footer_schema(spark, prefixes)
         df = reader.schema(schema).option("basePath", root).parquet(*prefixes)
     else:
-        # no partition of this job exists: an empty scan with the
-        # release's schema (every upgrade's columns, and the partition
-        # columns typed as Spark infers them from the release), so the
-        # job still writes a typed, empty output
-        upgrades = [f"{root}/{d}" for d in fs.list_dirs(root) if d.startswith("upgrade=")]
-        release = reader.schema(_footer_schema(spark, upgrades)).parquet(root).schema
-        df = reader.schema(release).parquet()
+        # no partition of this job exists: a scan of no file with no
+        # data column, so nothing of the release is listed or read
+        df = reader.schema("upgrade INT, state STRING").parquet()
     pred = F.col("state") == job.state
     # partition values parse as strings or ints depending on layout;
     # compare as strings for both (Catalyst still prunes on the cast).

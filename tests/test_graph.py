@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from nbi_oedi_etl_v2_spark.operators import graph
 
@@ -155,46 +156,72 @@ def test_should_broadcast_resolution_and_accounting(spark, caplog):
     )
 
     lim = node_broadcast_limit(spark)
-    assert _should_broadcast(spark, True, 10**12, "t") is True
-    assert _should_broadcast(spark, False, 1, "t") is False
-    assert _should_broadcast(spark, "auto", lim, "t") is True
-    # past the limit: auto falls back AND says so (the accounting —
-    # the sf30 degradation was silent, which was the bug)
+    assert _should_broadcast(spark, lim, "t") is True
+    # past the limit: the decision falls back AND says so (the
+    # accounting — the sf30 degradation was silent, which was the bug)
     with caplog.at_level(
         logging.WARNING, logger="nbi_oedi_etl_v2_spark.operators.graph"
     ):
-        assert _should_broadcast(spark, "auto", lim + 1, "t") is False
+        assert _should_broadcast(spark, lim + 1, "t") is False
     assert any(
         "exceeds the memory-aware broadcast limit" in r.message
         for r in caplog.records
     )
-    with pytest.raises(ValueError):
-        _should_broadcast(spark, "always", 1, "t")
 
 
-def test_sssp_broadcast_lever_result_invariant(spark):
-    e = spark.createDataFrame(
-        [(1, 2, 5), (2, 3, 1), (1, 3, 9), (3, 4, 2), (4, 1, 1)],
-        "src long, dst long, w long",
-    )
+_SSSP_EDGES = [(1, 2, 5), (2, 3, 1), (1, 3, 9), (3, 4, 2), (4, 1, 1)]
+_TWO_TRIANGLES = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
+_TRIANGLE_AND_TAIL = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
+
+
+def _sym(pairs):
+    return [e for a, b in pairs for e in ((a, b), (b, a))]
+
+
+def _sssp(spark):
+    e = spark.createDataFrame(_SSSP_EDGES, "src long, dst long, w long")
     src = spark.createDataFrame([(1,)], "node long")
-    base = sorted(
-        (r["node"], r["dist"])
-        for r in graph.weighted_sssp(
-            e, src, rounds=4, broadcast_dist=False
-        ).collect()
+    return graph.weighted_sssp(e, src, rounds=4)
+
+
+def _labelprop(spark):
+    return graph.label_propagation(_edges_df(spark, _TWO_TRIANGLES), rounds=8)
+
+
+def _kcore(spark):
+    return graph.kcore(_edges_df(spark, _sym(_TRIANGLE_AND_TAIL)), k=2)
+
+
+@pytest.mark.parametrize("limit", [0, 10**9], ids=["shuffled", "broadcast"])
+@pytest.mark.parametrize(
+    "op, run, expect",
+    [
+        ("weighted_sssp", _sssp, {(1, 0), (2, 5), (3, 6), (4, 8)}),
+        (
+            "label_propagation",
+            _labelprop,
+            {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)},
+        ),
+        ("kcore", _kcore, {(1, 2), (2, 2), (3, 2)}),
+    ],
+    ids=["sssp", "labelprop", "kcore"],
+)
+def test_broadcast_decision_both_ways(spark, monkeypatch, caplog, limit, op, run, expect):
+    # each node-state broadcast decision forced both ways through the
+    # limit it reads: both branches return the hand answer, and the
+    # log says which branch ran
+    import logging
+
+    monkeypatch.setattr(graph, "node_broadcast_limit", lambda spark: limit)
+    with caplog.at_level(
+        logging.INFO, logger="nbi_oedi_etl_v2_spark.operators.graph"
+    ):
+        got = {tuple(r) for r in run(spark).collect()}
+    assert got == expect
+    said = "broadcasting node state" if limit else "exceeds the memory-aware"
+    assert any(
+        r.message.startswith(op) and said in r.message for r in caplog.records
     )
-    bc = sorted(
-        (r["node"], r["dist"])
-        for r in graph.weighted_sssp(
-            e, src, rounds=4, broadcast_dist=True
-        ).collect()
-    )
-    auto = sorted(
-        (r["node"], r["dist"])
-        for r in graph.weighted_sssp(e, src, rounds=4).collect()
-    )
-    assert base == bc == auto
 
 
 def test_sssp_auto_broadcasts_dist_state(spark, caplog):
@@ -214,3 +241,79 @@ def test_sssp_auto_broadcasts_dist_state(spark, caplog):
         r.message.startswith("weighted_sssp: broadcasting node state")
         for r in caplog.records
     )
+
+
+# ---------------------------------------------------------------------------
+# The iterative loops read their convergence signals from the
+# checkpoint job (operators/_iterate.py): no count/isEmpty probe job.
+# ---------------------------------------------------------------------------
+
+
+def _cc(spark):
+    from nbi_oedi_etl_v2_spark.operators import curation
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
+        "id_a long, id_b long",
+    )
+    return curation.connected_components(pairs)
+
+
+def _bfs_chain(spark):
+    chain = _edges_df(spark, [(i, i + 1) for i in range(1, 8)])
+    src = spark.createDataFrame([(1,)], "node long")
+    return graph.bfs_levels(chain, src, max_depth=4)
+
+
+@pytest.mark.parametrize(
+    "run, jobs",
+    [(_kcore, 10), (_bfs_chain, 26), (_sssp, 16), (_cc, 36), (_labelprop, 15)],
+    ids=["kcore", "bfs", "sssp", "connected_components", "labelprop"],
+)
+def test_iterative_operator_job_count(spark, run, jobs):
+    # Spark jobs per call, the final collect included, on the hand
+    # graphs above; each was stable over repeated runs at local[4]
+    # (bfs on a graph whose last frontier is empty is not: SCALE.md)
+    import os
+
+    sc = spark.sparkContext
+    group = f"iterative-pin-{os.getpid()}-{run.__name__}"
+    sc.setJobGroup(group, "iterative operator job-count pin")
+    try:
+        run(spark).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+def test_checkpoint_observes_its_own_rows(spark):
+    from nbi_oedi_etl_v2_spark.operators._iterate import checkpoint
+
+    out, m = checkpoint(spark.range(5), F.sum("id").alias("total"))
+    assert m == {"n": 5, "total": 10}
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
+    out, m = checkpoint(spark.range(0), F.sum("id").alias("total"))
+    assert m == {"n": 0, "total": None}
+    assert out.collect() == []
+
+
+def test_bfs_stops_at_the_first_empty_frontier(spark, monkeypatch):
+    # the chain ends at node 4: depth 4's frontier is empty, its
+    # checkpoint observes no row, and no later round runs
+    from nbi_oedi_etl_v2_spark.operators import _iterate
+
+    sizes = []
+
+    def spy(df, *metrics):
+        out, m = _iterate.checkpoint(df, *metrics)
+        sizes.append(m["n"])
+        return out, m
+
+    monkeypatch.setattr(graph, "checkpoint", spy)
+    chain = _edges_df(spark, [(1, 2), (2, 3), (3, 4)])
+    src = spark.createDataFrame([(1,)], "node long")
+    got = {r["node"]: r["dist"] for r in
+           graph.bfs_levels(chain, src, max_depth=10).collect()}
+    assert got == {1: 0, 2: 1, 3: 2, 4: 3}
+    assert sizes == [1, 1, 1, 0]

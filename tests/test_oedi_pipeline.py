@@ -423,17 +423,14 @@ def test_stray_non_parquet_file_leaves_counts_unchanged(spark, tmp_path):
 
 def _inferred_read_schema(spark, config, job):
     """The read's schema as Spark infers it: every footer of the job's
-    existing partitions merged (``mergeSchema``), or of the whole
-    release when the job has none."""
+    existing partitions merged (``mergeSchema``)."""
     from nbi_oedi_etl_v2_spark.sources import fs as fsmod
     from nbi_oedi_etl_v2_spark.sources.paths import data_partition_prefixes, release_root
 
     reader = spark.read.option("ignoreCorruptFiles", "true").option("mergeSchema", "true")
     root = release_root(config, job)
     prefixes = [p for p in data_partition_prefixes(config, job) if fsmod.exists(p)]
-    if prefixes:
-        return reader.option("basePath", root).parquet(*prefixes).schema
-    return reader.parquet(root).schema
+    return reader.option("basePath", root).parquet(*prefixes).schema
 
 
 def _extra_column(path: str) -> None:
@@ -475,9 +472,44 @@ def test_declared_read_schema_matches_inference(spark, tmp_path, lake_kind):
         job = replace(job, state="NY")
 
     declared = read_timeseries(spark, config, job).schema
+    if lake_kind.startswith("no-partition"):
+        # none of the job's partitions exists, so there is nothing to
+        # infer from: the scan declares no data column
+        assert declared.fieldNames() == ["upgrade", "state"]
+        return
     assert declared == _inferred_read_schema(spark, config, job)
     assert declared.fieldNames()[-2:] == ["upgrade", "state"]
     assert ("out.extra" in declared.fieldNames()) == lake_kind.endswith("extra-column")
+
+
+def test_job_without_any_partition_reads_nothing_of_the_release(spark, tmp_path, monkeypatch):
+    # A job none of whose partitions exists only needs a scan of no
+    # file: it lists no directory, reads no footer and runs no Spark
+    # job, however large the release around it.
+    from dataclasses import replace
+
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+    from nbi_oedi_etl_v2_spark.sources.reader import read_timeseries
+
+    generate_oedi_lake(str(tmp_path))
+    config = _make_config(str(tmp_path))
+    job = replace(config.job_specific[0], state="NY")
+    calls = []
+    for name in ("list_dirs", "iter_files", "parquet_schema"):
+        real = getattr(fsmod, name)
+        monkeypatch.setattr(fsmod, name, lambda *a, _n=name, _f=real: calls.append(_n) or _f(*a))
+
+    sc = spark.sparkContext
+    group = f"no-partition-read-{os.getpid()}"
+    sc.setJobGroup(group, "no-partition read")
+    try:
+        df = read_timeseries(spark, config, job)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert calls == []
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert df.columns == ["upgrade", "state"]
 
 
 def test_corrupt_run_job_count_is_pinned(spark, tmp_path):

@@ -177,7 +177,9 @@ def test_kcore_whole_graph_and_empty(spark):
         _sym([(1, 2), (2, 3), (1, 3)]), "src long, dst long"
     )
     assert kcore(tri, k=2).count() == 3       # fixed point immediately
-    assert kcore(tri, k=3).count() == 0       # everything peels
+    rc = []
+    assert kcore(tri, k=3, round_counter=rc).count() == 0  # everything peels
+    assert rc == [0, 0]  # an empty survivor set reads as 0 rows
 
     with pytest.raises(ValueError):
         kcore(tri, k=0)
