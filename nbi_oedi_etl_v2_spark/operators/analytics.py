@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 def funnel(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Ordered-funnel progression: a user reaches step i when an event
     of type ``steps[i]`` occurs strictly AFTER their step-i−1 time
@@ -42,7 +39,7 @@ def funnel(
     """
     if not steps:
         raise ValueError("steps must be non-empty")
-    u, t, ty = (F.col(f"`{c}`") for c in (user_col, ts_col, type_col))
+    u, t, ty = F.col("user_id"), F.col("ts"), F.col("event_type")
     reached = (
         events.where(ty == steps[0])
         .groupBy(u.alias("user"))
@@ -82,16 +79,12 @@ def funnel(
     )
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly cohort retention matrix: users grouped by
     first-activity week, counted in each subsequent activity week.
     Returns (cohort_week, week_offset, active_users).
     """
-    u, t = F.col(f"`{user_col}`"), F.col(f"`{ts_col}`")
+    u, t = F.col("user_id"), F.col("ts")
     weeks = events.select(
         u.alias("user"), F.date_trunc("week", t).alias("week")
     ).distinct()
@@ -111,9 +104,6 @@ def cohort_retention(
 def sequence_pattern_users(
     events: DataFrame,
     pattern: str,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, str] = ("ts", "event_id"),
 ) -> DataFrame:
     """Users whose time-ordered event-type sequence matches a regex —
     the poor man's MATCH_RECOGNIZE, as one aggregation.
@@ -126,18 +116,17 @@ def sequence_pattern_users(
     string is bounded by that user's event count — the same bound any
     sequence-pattern engine needs in state.
     """
-    o1, o2 = order_cols
     seq = (
-        events.groupBy(F.col(f"`{user_col}`").alias("user_id"))
+        events.groupBy(F.col("user_id").alias("user_id"))
         .agg(
             F.array_join(
                 F.transform(
                     F.array_sort(
                         F.collect_list(
                             F.struct(
-                                F.col(f"`{o1}`").alias("o1"),
-                                F.col(f"`{o2}`").alias("o2"),
-                                F.col(f"`{type_col}`").alias("t"),
+                                F.col("ts").alias("o1"),
+                                F.col("event_id").alias("o2"),
+                                F.col("event_type").alias("t"),
                             )
                         )
                     ),
@@ -156,7 +145,6 @@ def skyline_2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    num_buckets: int = 32,
 ) -> DataFrame:
     """2-D skyline (Pareto front, maximizing both columns): rows not
     strictly dominated by any other row.
@@ -181,7 +169,7 @@ def skyline_2d(
 
     x, y = F.col(f"`{x_col}`"), F.col(f"`{y_col}`")
     per_x = df.groupBy(x.alias("_x")).agg(F.max(y).alias("_maxy_same"))
-    bkt = curation.order_bucket(per_x, F.col("_x"), num_buckets)
+    bkt = curation.order_bucket(per_x, F.col("_x"), 32)
     b = per_x.withColumn("_bkt", bkt)
     w = (
         Window.partitionBy("_bkt")
@@ -859,10 +847,6 @@ def markov_removal_oracle_sql(
     states: list[str],
     conv_state: str,
     steps: int = 8,
-    key: str = "user_id",
-    order_cols: list[str] = ("ts", "event_id"),
-    state_col: str = "event_type",
-    source: str = "events",
 ) -> str:
     """DuckDB twin of :func:`markov_removal_attribution` — same start
     distribution, same MLE transitions, and every chain step unrolled
@@ -872,7 +856,7 @@ def markov_removal_oracle_sql(
     idx = {s: i for i, s in enumerate(states)}
     nc = [s for s in states if s != conv_state]
     in_list = ", ".join(f"'{s}'" for s in states)
-    ords = ", ".join(order_cols)
+    ords = "ts, event_id"
     start_cols = ", ".join(
         f"CAST(COALESCE(SUM(CASE WHEN s = '{s}' THEN n END), 0) AS DOUBLE)"
         f" / CAST(SUM(n) AS DOUBLE) AS st_{idx[s]}"
@@ -891,8 +875,8 @@ def markov_removal_oracle_sql(
     ci = idx[conv_state]
     ctes = [
         f"""scoped AS (
-      SELECT {key} AS k, {ords}, {state_col} AS s FROM {source}
-      WHERE {state_col} IN ({in_list})
+      SELECT user_id AS k, {ords}, event_type AS s FROM events
+      WHERE event_type IN ({in_list})
     )""",
         f"""fr AS (
       SELECT s, COUNT(*) AS n FROM (

@@ -29,8 +29,8 @@ directions are emitted (a→b and b→a differ in confidence).
 At 100 TB: the item-support aggregate is map-side combinable; the
 basket group-by is the one data-sized shuffle; pair counts are
 bounded by distinct-frequent-pair cardinality (power-law bounded).
-Skewed mega-baskets are capped by ``max_basket`` — pair generation
-sees only each basket's first ``max_basket`` surviving items (sorted,
+Skewed mega-baskets are capped by ``MAX_BASKET`` — pair generation
+sees only each basket's first ``MAX_BASKET`` surviving items (sorted,
 so the kept subset is deterministic). The cap is never silent:
 :func:`basket_truncation_accounting` reports, from the same pruned
 grouped sets the pair pass uses, how many baskets it fired on and the
@@ -44,12 +44,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+MAX_BASKET = 1000
+
+
 def frequent_pairs(
     baskets: DataFrame,
     basket_col: str,
     item_col: str,
     min_support: int = 2,
-    max_basket: int = 1000,
 ) -> DataFrame:
     """(item_a, item_b, pair_cnt) for item_a < item_b, counting each
     basket once per distinct pair, pairs of ``min_support``-frequent
@@ -66,7 +68,7 @@ def frequent_pairs(
     pruned = items.join(F.broadcast(freq.select("i")), "i", "left_semi")
     sets = pruned.groupBy("b").agg(
         F.slice(
-            F.array_sort(F.collect_set("i")), 1, max_basket
+            F.array_sort(F.collect_set("i")), 1, MAX_BASKET
         ).alias("s")
     )
     pairs = sets.select(
@@ -93,10 +95,8 @@ def basket_truncation_accounting(
     baskets: DataFrame,
     basket_col: str,
     item_col: str,
-    min_support: int = 2,
-    max_basket: int = 1000,
 ) -> DataFrame:
-    """One-row accounting for the ``max_basket`` cap, computed over the
+    """One-row accounting for the ``MAX_BASKET`` cap, computed over the
     SAME pruned per-basket item sets :func:`frequent_pairs` pairs over:
     (n_baskets, n_truncated, max_pruned_size). ``n_truncated > 0``
     means pair counts under-count some mega-basket's co-occurrences —
@@ -109,7 +109,7 @@ def basket_truncation_accounting(
         items.distinct()
         .groupBy("i")
         .agg(F.count(F.lit(1)).alias("item_cnt"))
-        .where(F.col("item_cnt") >= min_support)
+        .where(F.col("item_cnt") >= 2)
     )
     pruned = items.join(F.broadcast(freq.select("i")), "i", "left_semi")
     sizes = pruned.groupBy("b").agg(
@@ -118,7 +118,7 @@ def basket_truncation_accounting(
     return sizes.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_baskets"),
         F.sum(
-            F.when(F.col("n_items") > max_basket, 1).otherwise(0)
+            F.when(F.col("n_items") > MAX_BASKET, 1).otherwise(0)
         ).cast("bigint").alias("n_truncated"),
         F.coalesce(F.max("n_items"), F.lit(0))
         .cast("bigint")
@@ -131,7 +131,6 @@ def association_rules(
     basket_col: str,
     item_col: str,
     min_support: int = 2,
-    max_basket: int = 1000,
 ) -> DataFrame:
     """(antecedent, consequent, pair_cnt, ant_cnt, confidence, lift)
     for every frequent ordered pair, both directions.
@@ -169,9 +168,7 @@ def association_rules(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .where(F.col("cnt") >= min_support)
     )
-    pairs = frequent_pairs(
-        baskets, basket_col, item_col, min_support, max_basket
-    )
+    pairs = frequent_pairs(baskets, basket_col, item_col, min_support)
     both = pairs.unionByName(
         pairs.select(
             F.col("item_b").alias("item_a"),
@@ -213,7 +210,6 @@ def item_similarity_topn(
     item_col: str,
     n: int = 5,
     min_support: int = 2,
-    max_basket: int = 1000,
 ) -> DataFrame:
     """Item-item collaborative-filtering similarity: cosine over
     binary basket vectors, sim(a, b) = cooc(a,b) / √(cnt_a · cnt_b),
@@ -228,9 +224,7 @@ def item_similarity_topn(
     id, making the top-n deterministic. At 100 TB the pair table is
     the bounded object (frequent pairs only), and the per-item top-n
     is a window over it — never over the baskets."""
-    pairs = frequent_pairs(
-        baskets, basket_col, item_col, min_support, max_basket
-    )
+    pairs = frequent_pairs(baskets, basket_col, item_col, min_support)
     both = pairs.unionByName(
         pairs.select(
             F.col("item_b").alias("item_a"),

@@ -217,14 +217,13 @@ def learn_bpe(
     df: DataFrame,
     text_col: str,
     num_merges: int = 8,
-    batch_size: int = 16,
     exact: bool = True,
 ) -> DataFrame:
-    """Learn the top-``num_merges`` BPE merges, up to ``batch_size``
-    of them per Spark round. ``exact=True`` (default) uses the
+    """Learn the top-``num_merges`` BPE merges, up to 16 of them per
+    Spark round. ``exact=True`` (default) uses the
     provably-sequential-equivalent prefix batch (module doc) — the
-    result is identical to ``batch_size=1`` always; ``exact=False``
-    skips conflicting candidates to keep rounds ≈ merges/batch_size
+    result is identical to one merge per round always; ``exact=False``
+    skips conflicting candidates to keep rounds ≈ merges/16
     on chaining text, at the documented cost of possible order
     deviation. Returns (step, left, right, merged, pair_count) —
     step is 1-indexed in learned order. Stops early if no adjacency
@@ -250,7 +249,7 @@ def learn_bpe(
                 )
             ).alias("p"),
         )
-        room = min(batch_size, num_merges - len(learned))
+        room = min(16, num_merges - len(learned))
         # exact mode needs one extra candidate as the trim bound; fast
         # mode wants a deeper horizon to skip past conflict clusters
         horizon = room + 1 if exact else max(4 * room, 64)
@@ -318,7 +317,7 @@ def _disjoint_batches(
 
 
 def apply_merges(
-    words: DataFrame, merges: list[tuple[str, str]], syms_col: str = "syms"
+    words: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """ENCODE side of BPE: rewrite each row's symbol array by the
     learned merge list, in learned order, greedy left-to-right with
@@ -330,10 +329,10 @@ def apply_merges(
     WORD table (vocabulary-sized), never the raw corpus — tokenize
     once, encode the vocabulary, join the per-word token counts back
     (`encode_token_counts`)."""
-    col = F.col(syms_col)
+    col = F.col("syms")
     for batch in _disjoint_batches(merges):
         col = _merge_fold(batch)(col)
-    return words.withColumn(syms_col, col)
+    return words.withColumn("syms", col)
 
 
 def encode_token_counts(
@@ -383,9 +382,6 @@ def encode_token_counts(
 
 def encode_oracle_sql(
     merges: list[tuple[str, str]],
-    source: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of `encode_token_counts`: the same delimiter-
     padded chained replace the training oracle uses (see
@@ -405,10 +401,10 @@ def encode_oracle_sql(
         )
     return f"""
     WITH dw AS (
-      SELECT {id_col}, unnest(list_filter(
-               string_split_regex(lower({text_col}), '[^a-z0-9]+'),
+      SELECT doc_id, unnest(list_filter(
+               string_split_regex(lower(text), '[^a-z0-9]+'),
                x -> x <> '')) AS w
-      FROM {source}
+      FROM documents
     ),
     v AS (
       SELECT w, ' ' || array_to_string(
@@ -422,18 +418,17 @@ def encode_oracle_sql(
              length(w) AS w_chars
       FROM v
     )
-    SELECT dw.{id_col},
+    SELECT dw.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,
            CAST(SUM(e.w_tokens) AS BIGINT) AS n_tokens,
            CAST(SUM(e.w_chars) AS BIGINT) AS n_chars_tok
     FROM dw JOIN e USING (w)
-    GROUP BY dw.{id_col}
-    ORDER BY dw.{id_col}
+    GROUP BY dw.doc_id
+    ORDER BY dw.doc_id
     """
 
 
-def bpe_oracle_sql(num_merges: int = 8, source: str = "documents",
-                   text_col: str = "text") -> str:
+def bpe_oracle_sql(num_merges: int = 8) -> str:
     """DuckDB twin: the same trainer unrolled ``num_merges`` steps.
     Words are kept as delimiter-padded strings (leading/trailing
     single space, DOUBLE space between symbols) so the greedy
@@ -442,16 +437,16 @@ def bpe_oracle_sql(num_merges: int = 8, source: str = "documents",
     symbol boundaries unambiguous, and consumed-delimiter semantics
     match the Spark fold on adjacent repeats (module doc)."""
     ctes = [
-        f"""w0 AS (
+        """w0 AS (
       SELECT ' ' || array_to_string(
                list_transform(generate_series(1, length(w)),
                               i -> substr(w, i, 1)), '  ') || ' ' AS s,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM (
         SELECT unnest(list_filter(
-                 string_split_regex(lower({text_col}), '[^a-z0-9]+'),
+                 string_split_regex(lower(text), '[^a-z0-9]+'),
                  x -> x <> '')) AS w
-        FROM {source}
+        FROM documents
       ) GROUP BY 1
     )"""
     ]

@@ -296,14 +296,11 @@ def kmeans_summary(
     vec_col: str,
     k: int = 4,
     iters: int = 3,
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """Long-form hash-matchable result: one row per (cluster, dim)
     with the final centroid coordinate, member count, and the
     cluster's exact-decimal inertia under the FINAL centroids."""
-    cents, assigned = lloyd_kmeans(
-        df, id_col, vec_col, k, iters, assign_strategy
-    )
+    cents, assigned = lloyd_kmeans(df, id_col, vec_col, k, iters)
     sizes = assigned.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         dsum(F.col("sq_dist")).alias("inertia"),
@@ -333,9 +330,6 @@ def kmeans_oracle_sql(
     k: int = 4,
     iters: int = 3,
     dim: int = 64,
-    source: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> str:
     """DuckDB twin of :func:`kmeans_summary`, the trainer unrolled
     ``iters`` rounds. Bit-parity choices mirror the Spark side
@@ -347,8 +341,8 @@ def kmeans_oracle_sql(
     clusters inherit the previous round's centroid."""
     sqdist = (
         f"list_reduce(list_transform(generate_series(1, {dim}), i ->"
-        f" (CAST(e.{vec_col}[i] AS DOUBLE) - c.cv[i])"
-        f" * (CAST(e.{vec_col}[i] AS DOUBLE) - c.cv[i])),"
+        f" (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])"
+        f" * (CAST(e.embedding[i] AS DOUBLE) - c.cv[i])),"
         " (x, y) -> x + y)"
     )
     dsum_x = (
@@ -357,22 +351,22 @@ def kmeans_oracle_sql(
     )
     ctes = [
         f"""e AS (
-      SELECT {id_col} AS vid, {vec_col} FROM {source}
+      SELECT vec_id AS vid, embedding FROM embeddings
     ),
     c0 AS (
       SELECT CAST(row_number() OVER (ORDER BY vid) - 1 AS INT) AS cid,
-             list_transform({vec_col}, v -> CAST(v AS DOUBLE)) AS cv
-      FROM (SELECT vid, {vec_col} FROM e ORDER BY vid LIMIT {k})
+             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS cv
+      FROM (SELECT vid, embedding FROM e ORDER BY vid LIMIT {k})
     )"""
     ]
     for t in range(1, iters + 1):
         prev = f"c{t - 1}"
         ctes.append(f"""a{t} AS (
-      SELECT vid, {vec_col}, cid, d FROM (
-        SELECT vid, {vec_col}, cid, d,
+      SELECT vid, embedding, cid, d FROM (
+        SELECT vid, embedding, cid, d,
                row_number() OVER (PARTITION BY vid ORDER BY d, cid) AS rn
         FROM (
-          SELECT e.vid, e.{vec_col}, c.cid, {sqdist} AS d
+          SELECT e.vid, e.embedding, c.cid, {sqdist} AS d
           FROM e, {prev} c
         )
       ) WHERE rn = 1
@@ -382,7 +376,7 @@ def kmeans_oracle_sql(
         SELECT a.cid AS cid, g.i AS dim,
                {dsum_x} / COUNT(*) AS v
         FROM a{t} a, generate_series(1, {dim}) AS g(i),
-             LATERAL (SELECT a.{vec_col}[g.i] AS x) s
+             LATERAL (SELECT a.embedding[g.i] AS x) s
         GROUP BY a.cid, g.i
       ) GROUP BY cid
       UNION ALL

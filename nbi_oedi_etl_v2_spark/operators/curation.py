@@ -91,8 +91,10 @@ def connected_components(
     keep wrong representatives with no signal (32 ≫ log₂ of any
     conceivable node count).
     """
-    raw = pairs.select(
-        F.col(f"`{src}`").alias("a"), F.col(f"`{dst}`").alias("b")
+    # the pairs are checkpointed once, so the node set read at return
+    # does not re-run the caller's pair generation
+    raw, _ = checkpoint(
+        pairs.select(F.col(f"`{src}`").alias("a"), F.col(f"`{dst}`").alias("b"))
     )
     nodes = (
         raw.select(F.col("a").alias("node"))
@@ -222,7 +224,6 @@ def hash_split(
     id_col: str,
     train: float = 0.8,
     val: float = 0.1,
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment from ``md5(id)``.
 
@@ -244,7 +245,7 @@ def hash_split(
         .when(byte0 < F.lit(t2), "val")
         .otherwise("test")
     )
-    return df.withColumn(split_col, split)
+    return df.withColumn("split", split)
 
 
 def order_bucket(
@@ -323,7 +324,6 @@ def global_row_number(
     df: DataFrame,
     order_cols: list[Column | str],
     rn_col: str = "rn",
-    num_partitions: int | None = None,
     bucket_key: Column | None = None,
 ) -> DataFrame:
     """1-based global row number under a total order, without the
@@ -342,7 +342,7 @@ def global_row_number(
     (include a unique tiebreaker) or ranks are nondeterministic.
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     key = bucket_key if bucket_key is not None else _default_bucket_key(df, order_cols)
     bucketed = df.withColumn("_bucket", order_bucket(df, key, parts))
     counts = sorted(
@@ -376,7 +376,6 @@ def balanced_shards(
     weight_col: str,
     tiebreak_col: str,
     num_shards: int,
-    shard_col: str = "shard",
 ) -> DataFrame:
     """Deal rows into ``num_shards`` shards balanced on ``weight_col``
     (e.g. token count): order by weight descending and assign
@@ -385,7 +384,7 @@ def balanced_shards(
 
     Deterministic given the (weight, tiebreak) total order, so the
     same corpus always produces the same shards; downstream write is
-    ``partitionBy(shard_col)``.
+    ``partitionBy("shard")``.
     """
     ranked = global_row_number(
         df,
@@ -396,7 +395,7 @@ def balanced_shards(
         bucket_key=-F.col(f"`{weight_col}`"),
     )
     return ranked.withColumn(
-        shard_col, ((F.col("rn") - 1) % num_shards).cast("long")
+        "shard", ((F.col("rn") - 1) % num_shards).cast("long")
     ).drop("rn")
 
 
@@ -480,14 +479,11 @@ def curate(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    min_quality: float = 0.5,
-    jaccard_threshold: float = 0.8,
-    train: float = 0.8,
-    val: float = 0.1,
 ) -> DataFrame:
     """The end-to-end curation pipeline: quality gate → exact dedup
     (min-id representative) → near-dup cluster resolution → hash
-    split. Returns (id, split) for the surviving corpus.
+    split. Quality gate 0.5, Jaccard threshold 0.8, the default
+    80/10/10 split. Returns (id, split) for the surviving corpus.
 
     Every stage is individually oracled; the composition is oracled
     too (workload ``corpus_curate``) — which is the point: a curation
@@ -500,15 +496,15 @@ def curate(
     from . import dedup, text
 
     scored = text.quality_scores(docs, id_col, text_col)
-    keep_ids = scored.where(F.col("quality_score") >= min_quality).select("doc_id")
+    keep_ids = scored.where(F.col("quality_score") >= 0.5).select("doc_id")
     gated = docs.join(keep_ids, docs[id_col] == keep_ids["doc_id"], "left_semi")
     reps = dedup.exact_dedup(gated, [text_col], id_col).select(id_col)
     deduped = gated.join(reps, id_col, "left_semi")
     pairs = dedup.ngram_jaccard_pairs(
-        deduped, id_col, text_col, k=3, threshold=jaccard_threshold
+        deduped, id_col, text_col, k=3, threshold=0.8
     )
     resolved = resolve_near_duplicates(deduped, id_col, pairs)
-    return hash_split(resolved, id_col, train=train, val=val).select(
+    return hash_split(resolved, id_col).select(
         F.col(f"`{id_col}`"), "split"
     )
 
@@ -548,7 +544,6 @@ def quality_weighted_sample(
     df: DataFrame,
     id_col: str,
     quality_col: str,
-    salt: str = "q",
 ) -> DataFrame:
     """Deterministic importance sampling: each row's keep probability
     IS its quality score in [0, 1] — high-quality documents survive,
@@ -562,7 +557,7 @@ def quality_weighted_sample(
     stay engine-portable in the ``byte < 256·p`` comparison.
     """
     byte0 = _md5_byte0(
-        F.concat_ws(":", F.lit(salt), F.col(f"`{id_col}`").cast("string"))
+        F.concat_ws(":", F.lit("q"), F.col(f"`{id_col}`").cast("string"))
     )
     return df.where(byte0 < F.lit(256.0) * F.col(f"`{quality_col}`"))
 
@@ -642,7 +637,6 @@ def neyman_stratified_sample(
     value_col: str,
     id_col: str,
     total_n: int,
-    salt: str = "neyman",
 ) -> DataFrame:
     """Neyman-allocated stratified sample: budget ``total_n`` rows,
     allocated across strata proportionally to N_h·σ_h — the
@@ -658,7 +652,7 @@ def neyman_stratified_sample(
     BROADCAST of the strata table (strata are catalog-sized), and
     membership is the deterministic md5 52-bit uniform compared to
     the stratum's sampling fraction f_h = min(1, n_h/N_h) — a pure
-    function of (id, salt), so the sample is stable under
+    function of (id, the salt "neyman"), so the sample is stable under
     recomputation and corpus growth. One aggregate + one broadcast
     join + one map-only filter; no shuffle carries data rows.
 
@@ -719,7 +713,7 @@ def neyman_stratified_sample(
             F.substring(
                 F.md5(
                     F.concat_ws(
-                        "\x1f", F.lit(salt), F.col(f"`{id_col}`").cast("string")
+                        "\x1f", F.lit("neyman"), F.col(f"`{id_col}`").cast("string")
                     )
                 ),
                 1,

@@ -318,24 +318,20 @@ def hot_shingle_accounting(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    max_doc_freq: int | None = None,
     hot_shingle_limit: int = 1000,
 ) -> DataFrame:
     """One-row accounting for ``hot_shingle_limit`` (the no-silent-caps
     convention, mirroring ``basket_truncation_accounting``): over the
-    SAME prefix-shingle table :func:`ngram_jaccard_pairs` joins on,
+    SAME prefix-shingle table :func:`ngram_jaccard_pairs` joins on at
+    its defaults (k=3, threshold 0.8, no document-frequency cap),
     how many distinct prefix shingles exceeded the limit
     (``n_hot_shingles`` — these routed via star instead of
     all-pairs), how many (doc, shingle) prefix occurrences they carry
     (``n_hot_occurrences`` — an upper bound on star-pair count), and
     the hottest shingle's document frequency (``max_df`` — if ≤ the
     limit, the cap changed nothing). Grid-sized output."""
-    ex = shingle_rows(df, id_col, text_col, k)
-    prefix = _prefix_shingles(
-        ex, threshold, max_doc_freq, _pinned_partitions(df)
-    )
+    ex = shingle_rows(df, id_col, text_col, 3)
+    prefix = _prefix_shingles(ex, 0.8, None, _pinned_partitions(df))
     return prefix.agg(
         F.count_distinct("h").cast("bigint").alias("n_prefix_shingles"),
         F.count_distinct(
@@ -409,7 +405,7 @@ def cross_jaccard_pairs(
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 64
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """(doc, sig: array<bigint>) — sig[i] = min over shingles of
     xxhash64(shingle, i); the extra xxhash64 argument acts as the
@@ -417,11 +413,11 @@ def minhash_signatures(
 
     Plan shape (the 100 TB path): explode shingles → one codegen'd
     xxhash64 per shingle occurrence → ONE hash aggregate with
-    ``num_hashes`` `min(xxhash64(h, i))` expressions. Everything stays
+    64 `min(xxhash64(h, i))` expressions. Everything stays
     inside whole-stage codegen (no higher-order-function lambdas, which
     Spark evaluates interpreted per element — the naive
     transform-over-seeds formulation is ~50× slower). Map-side partial
-    aggregation shrinks the shuffle to ``num_hashes`` longs per doc per
+    aggregation shrinks the shuffle to 64 longs per doc per
     input partition.
     """
     # duplicate shingle occurrences don't change a min — skip the
@@ -429,14 +425,14 @@ def minhash_signatures(
     ex = shingle_occurrences(df, id_col, text_col, k).select(
         "doc", F.xxhash64("shingle").alias("h")
     )
-    # the num_hashes min-aggregates as ONE parsed expression (r11,
+    # the 64 min-aggregates as ONE parsed expression (r11,
     # guide §5 driver-time batching — the kmeans/bloom/PQ pattern):
     # the Column-by-Column loop paid ~3 py4j round trips per hash
     # (~190 calls); the text form parses to the identical aggregate
     # list (integer literal seeds, same xxhash64 tree), with array
     # assembly in the aggregate's result projection instead of a
     # separate Project.
-    arr = ",".join(f"min(xxhash64(h, {i}))" for i in range(num_hashes))
+    arr = ",".join(f"min(xxhash64(h, {i}))" for i in range(64))
     return ex.groupBy("doc").agg(F.expr(f"array({arr})").alias("sig"))
 
 
@@ -445,10 +441,8 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
     threshold: float = 0.8,
-    hot_band_limit: int | None = 10_000,
+    hot_band_limit: int = 10_000,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup pairs, verified with exact
     Jaccard on the shingle sets of candidate pairs only.
@@ -468,14 +462,10 @@ def minhash_lsh_pairs(
     against the representative rather than every other member —
     the right trade when the bucket IS one boilerplate cluster,
     which is what a full-band collision at r=4 rows means).
-    ``hot_band_limit=None`` disables the guard (and its per-bucket
-    window sort — worth ~20% of the operator's wall time, the
-    attributed r2→r3 bench delta) for corpora known to be skew-free;
-    the default keeps it, because a single boilerplate band at 100 TB
-    is quadratic without it.
     """
-    rows = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, k, num_hashes)
+    bands = 16
+    rows = 64 // bands
+    sigs = minhash_signatures(df, id_col, text_col, k)
 
     # The banded rows carry ONLY (doc, band, bhash) — never the
     # shingle arrays. Exploding ×bands with the array attached would
@@ -492,21 +482,6 @@ def minhash_lsh_pairs(
             )
         ).alias("band"),
     ).select("doc", "band.band", "band.bhash")
-
-    if hot_band_limit is None:
-        # skew-free fast path: straight banded self-join, no bucket
-        # stats window (the r2-era plan)
-        a = banded.select(F.col("doc").alias("id_a"), "band", "bhash")
-        b = banded.select(F.col("doc").alias("id_b"), "band", "bhash")
-        candidates = (
-            a.join(b, ["band", "bhash"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        return exact_jaccard_for_pairs(
-            df, candidates, id_col, text_col, k, threshold
-        )
 
     # bucket stats (count + representative) via unbounded window over
     # the SAME (band, bhash) key the candidate join needs: one shuffle

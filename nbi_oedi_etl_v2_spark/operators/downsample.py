@@ -131,7 +131,6 @@ def gapfill_hourly(
     timestamp_col: str,
     entity_col: str,
     value_col: str,
-    decimal_places: int = DECIMAL_PLACES,
 ) -> DataFrame:
     """Dense hourly series per entity with forward fill: floor to the
     hour and take the (exact-decimal, rounded) hourly mean, generate
@@ -150,8 +149,7 @@ def gapfill_hourly(
     (entity, hour), one entity-partitioned window — all keyed on the
     entity, no global stage.
     """
-    joined = _hourly_spine_join(df, timestamp_col, entity_col, value_col,
-                                decimal_places)
+    joined = _hourly_spine_join(df, timestamp_col, entity_col, value_col)
     from pyspark.sql import Window
 
     w = (
@@ -172,7 +170,6 @@ def _hourly_spine_join(
     timestamp_col: str,
     entity_col: str,
     value_col: str,
-    decimal_places: int,
 ) -> DataFrame:
     """Shared gap-fill front end: hourly exact-decimal means, per-entity
     bounds, dense hour spine (sequence+explode — spine rows are born
@@ -185,7 +182,7 @@ def _hourly_spine_join(
         df.select(ent.alias("entity"), F.date_trunc("hour", ts).alias("hr"),
                   F.col(f"`{value_col}`").alias("_v"))
         .groupBy("entity", "hr")
-        .agg(F.round(davg(F.col("_v")), decimal_places).alias("_vmean"))
+        .agg(F.round(davg(F.col("_v")), DECIMAL_PLACES).alias("_vmean"))
     )
     bounds = hourly.groupBy("entity").agg(
         F.min("hr").alias("_mn"), F.max("hr").alias("_mx")
@@ -202,7 +199,6 @@ def gapfill_hourly_interp(
     timestamp_col: str,
     entity_col: str,
     value_col: str,
-    decimal_places: int = DECIMAL_PLACES,
 ) -> DataFrame:
     """Dense hourly series per entity with LINEAR interpolation across
     gaps — the companion to :func:`gapfill_hourly`'s step-function LOCF
@@ -226,8 +222,7 @@ def gapfill_hourly_interp(
     """
     from pyspark.sql import Window
 
-    joined = _hourly_spine_join(df, timestamp_col, entity_col, value_col,
-                                decimal_places)
+    joined = _hourly_spine_join(df, timestamp_col, entity_col, value_col)
     back = (
         Window.partitionBy("entity")
         .orderBy("hr")

@@ -162,6 +162,10 @@ def heavy_hitters(
 # ---------------------------------------------------------------------------
 
 
+# the sketch's shape: CM_DEPTH rows of CM_WIDTH counters each
+CM_DEPTH, CM_WIDTH = 4, 2048
+
+
 def _cm_bucket(key: Column, d: int, width: int) -> Column:
     """Row ``d``'s bucket for ``key``: xxhash64 seeded by hashing the
     depth literal alongside the key (PySpark's xxhash64 has no seed
@@ -173,19 +177,17 @@ def cm_build(
     df: DataFrame,
     key_col: str,
     group_cols: list[str],
-    depth: int = 4,
-    width: int = 2048,
 ) -> DataFrame:
     """One Count-Min sketch of ``key_col`` occurrences per group, in
-    long form: (group…, depth, bucket, cnt) with ≤ ``depth·width``
+    long form: (group…, depth, bucket, cnt) with ≤ CM_DEPTH·CM_WIDTH
     rows per group. Each input row contributes one increment per
     depth (``posexplode`` over the per-depth bucket array), then one
     hash aggregate — map-side combine collapses each partition to at
-    most ``depth·width`` partial rows per group before the shuffle,
+    most CM_DEPTH·CM_WIDTH partial rows per group before the shuffle,
     so the shuffle is sketch-sized, never data-sized. NULL keys are
     excluded (they carry no identity to count)."""
     buckets = F.array(
-        *[_cm_bucket(F.col("`%s`" % key_col), d, width) for d in range(depth)]
+        *[_cm_bucket(F.col("`%s`" % key_col), d, CM_WIDTH) for d in range(CM_DEPTH)]
     )
     return (
         df.where(F.col(f"`{key_col}`").isNotNull())
@@ -211,12 +213,10 @@ def cm_lookup(
     probes: DataFrame,
     key_col: str,
     group_cols: list[str],
-    depth: int = 4,
-    width: int = 2048,
 ) -> DataFrame:
     """Estimated count for each probe key against each sketch group:
-    min over depths of the addressed cells. ``depth``/``width`` must
-    match the build. The probe side expands to ``depth`` rows per key
+    min over depths of the addressed cells. The probe side expands to
+    CM_DEPTH rows per key
     and is **broadcast** (probe sets are human-sized; the sketch table
     is the big side at #groups·depth·width rows), one equi-join on
     (depth, bucket) + a min-aggregate. A key whose cell is absent from
@@ -228,7 +228,7 @@ def cm_lookup(
         "key",
         F.posexplode(
             F.array(
-                *[_cm_bucket(F.col("key"), d, width) for d in range(depth)]
+                *[_cm_bucket(F.col("key"), d, CM_WIDTH) for d in range(CM_DEPTH)]
             )
         ).alias("depth", "bucket"),
     )
@@ -257,7 +257,7 @@ def cm_lookup(
         F.col("key").alias(key_col),
         F.when(
             F.col("_depths_hit").isNull()
-            | (F.col("_depths_hit") < depth),
+            | (F.col("_depths_hit") < CM_DEPTH),
             F.lit(0),
         )
         .otherwise(F.col("_min_cnt"))

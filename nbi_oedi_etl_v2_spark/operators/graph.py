@@ -2,14 +2,14 @@
 PageRank. Complements ``curation.connected_components`` (min-label +
 pointer jumping) as the engine's iterative-computation surface.
 
-Determinism design: ranks are INTEGER fixed-point (×``scale``) and
+Determinism design: ranks are INTEGER fixed-point (×``SCALE``) and
 every per-step operation is integer floor arithmetic (`div`), so an
 iteration is a pure function of the previous one — bit-identical
 across engines, partitionings, and AQE re-plans. Double-based
 PageRank sums contributions in partition order and cannot be
 hash-compared across engines; integer fixed-point gives up ~1e-12
 relative precision per step for exact reproducibility (and
-``scale=10¹²`` keeps ~7 significant digits even on a 10⁵-node graph).
+``SCALE=10¹²`` keeps ~7 significant digits even on a 10⁵-node graph).
 
 Scale shape per iteration: one equi-join (ranks→edges on src), one
 hash aggregate (contributions by dst), one left join back to the node
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ._iterate import checkpoint
 
 SCALE = 10**12
+DAMPING_PCT = 85
 
 _LOG = logging.getLogger(__name__)
 
@@ -112,19 +113,12 @@ def _should_broadcast(spark: SparkSession, n_rows: int, op: str) -> bool:
     return use
 
 
-def pagerank_fixed(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 5,
-    damping_pct: int = 85,
-    scale: int = SCALE,
-) -> DataFrame:
+def pagerank_fixed(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """Synchronous power-iteration PageRank with integer fixed-point
-    ranks: R⁰(v) = scale div N, and
+    ranks: R⁰(v) = SCALE div N, and
 
-        Rⁱ⁺¹(v) = base + Σ_{u→v} (damping_pct · (Rⁱ(u) div deg(u))) div 100
-        base    = ((100 − damping_pct) · (scale div N)) div 100
+        Rⁱ⁺¹(v) = base + Σ_{u→v} (DAMPING_PCT · (Rⁱ(u) div deg(u))) div 100
+        base    = ((100 − DAMPING_PCT) · (SCALE div N)) div 100
 
     Dangling nodes (no out-edges) keep only the teleport term — their
     mass is dropped, the simplest standard convention. Returns
@@ -132,7 +126,7 @@ def pagerank_fixed(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(f"`{src}`").alias("src"), F.col(f"`{dst}`").alias("dst"))
+    e = edges.select(F.col("src").alias("src"), F.col("dst").alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -146,10 +140,10 @@ def pagerank_fixed(
         nodes.join(F.broadcast(n_nodes))
         .select(
             "node",
-            F.expr(f"CAST({scale} AS BIGINT) div _n").alias("r"),
+            F.expr(f"CAST({SCALE} AS BIGINT) div _n").alias("r"),
             F.expr(
-                f"(CAST({100 - damping_pct} AS BIGINT)"
-                f" * (CAST({scale} AS BIGINT) div _n)) div 100"
+                f"(CAST({100 - DAMPING_PCT} AS BIGINT)"
+                f" * (CAST({SCALE} AS BIGINT) div _n)) div 100"
             ).alias("base"),
         )
     )
@@ -164,7 +158,7 @@ def pagerank_fixed(
             .groupBy(F.col("dst").alias("node"))
             .agg(
                 F.sum(
-                    F.expr(f"(CAST({damping_pct} AS BIGINT) * (r div deg)) div 100")
+                    F.expr(f"(CAST({DAMPING_PCT} AS BIGINT) * (r div deg)) div 100")
                 ).alias("_c")
             )
         )
@@ -228,9 +222,7 @@ def copurchase_edges(
     )
 
 
-def pagerank_oracle_sql(
-    iterations: int = 5, damping_pct: int = 85, scale: int = SCALE
-) -> str:
+def pagerank_oracle_sql(iterations: int = 5) -> str:
     """DuckDB mirror of ``pagerank_fixed`` over the lineitem
     co-purchase graph — the iteration unrolled as a generated CTE
     chain with the same integer floor arithmetic."""
@@ -245,9 +237,9 @@ def pagerank_oracle_sql(
     ),
     deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
     consts AS (
-      SELECT CAST({scale} AS BIGINT) // count(*) AS r0,
-             (CAST({100 - damping_pct} AS BIGINT)
-              * (CAST({scale} AS BIGINT) // count(*))) // 100 AS base
+      SELECT CAST({SCALE} AS BIGINT) // count(*) AS r0,
+             (CAST({100 - DAMPING_PCT} AS BIGINT)
+              * (CAST({SCALE} AS BIGINT) // count(*))) // 100 AS base
       FROM nodes
     ),
     r0 AS (SELECT node, (SELECT r0 FROM consts) AS r FROM nodes)"""
@@ -259,7 +251,7 @@ def pagerank_oracle_sql(
              (SELECT base FROM consts) + COALESCE(c.s, 0) AS r
       FROM nodes n LEFT JOIN (
         SELECT e.dst AS node,
-               sum((CAST({damping_pct} AS BIGINT) * (r.r // d.deg)) // 100) AS s
+               sum((CAST({DAMPING_PCT} AS BIGINT) * (r.r // d.deg)) // 100) AS s
         FROM edges e JOIN r{i} r ON e.src = r.node JOIN deg d ON d.src = e.src
         GROUP BY e.dst
       ) c ON n.node = c.node

@@ -71,32 +71,29 @@ def cdc_merge(
     snapshot: DataFrame,
     changes: DataFrame,
     key_cols: list[str],
-    op_col: str = "op",
-    seq_col: str = "seq",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Apply a CDC feed onto a snapshot (MERGE INTO semantics).
 
-    ``changes`` carries the snapshot's columns plus ``op_col``
-    (``delete_op`` = delete, anything else = upsert) and ``seq_col``
+    ``changes`` carries the snapshot's columns plus ``op``
+    (``'D'`` = delete, anything else = upsert) and ``seq``
     (a monotone version; the highest per key wins — ties broken by
-    ``op_col`` so the outcome is deterministic even on seq ties).
+    ``op`` so the outcome is deterministic even on seq ties).
     Result = snapshot rows untouched by the feed + upserted payloads,
     minus deleted keys.
     """
     payload_cols = [c for c in snapshot.columns]
     w = Window.partitionBy(*key_cols).orderBy(
-        F.col(seq_col).desc(), F.col(op_col).desc()
+        F.col("seq").desc(), F.col("op").desc()
     )
     latest = (
         changes.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .drop("_rn", seq_col)
+        .drop("_rn", "seq")
     )
     joined = snapshot.alias("s").join(
         latest.alias("c"), on=key_cols, how="full_outer"
     )
-    op: Column = F.col(f"c.{op_col}")
+    op: Column = F.col("c.op")
     out_cols = []
     for c in payload_cols:
         if c in key_cols:
@@ -109,7 +106,7 @@ def cdc_merge(
                 .otherwise(F.col(f"c.{c}"))
                 .alias(c)
             )
-    return joined.where(op.isNull() | (op != delete_op)).select(*out_cols)
+    return joined.where(op.isNull() | (op != "D")).select(*out_cols)
 
 
 def incremental_join_partials(
@@ -162,12 +159,11 @@ def pit_join(
     fact_key: str,
     dim_key: str,
     ts_col: str,
-    eff_from: str = "effective_from",
-    eff_to: str = "effective_to",
 ) -> DataFrame:
     """Point-in-time (feature-store) lookup: each fact row joined to
     the dimension version effective at its timestamp —
-    ``eff_from <= ts < eff_to`` (half-open, NULL eff_to = current),
+    ``effective_from <= ts < effective_to`` (half-open, NULL
+    ``effective_to`` = current),
     left semantics (no effective version ⇒ NULL attributes).
 
     NOT a range theta join: the union trick (the as-of join
@@ -175,7 +171,8 @@ def pit_join(
     version-starts and fact probes interleave in (key, time) order,
     each probe takes the last dim payload at-or-before it
     (``last(ignorenulls)`` over the running window; version rows sort
-    before probes at equal timestamps so ``eff_from == ts`` matches),
+    before probes at equal timestamps so ``effective_from == ts``
+    matches),
     and the half-open upper bound is validated after the fact — it
     only bites for probes before the key's first version or after a
     closed final interval. No per-row probe, no interval explosion,
@@ -183,29 +180,30 @@ def pit_join(
     100 TB fact × SCD2-dimension lookup wants.
     """
     attr_cols = [
-        c for c in dim.columns if c not in (dim_key, eff_from, eff_to)
+        c for c in dim.columns
+        if c not in (dim_key, "effective_from", "effective_to")
     ]
     payload = F.struct(
         *[F.col(f"`{c}`").alias(c) for c in attr_cols],
-        F.col(f"`{eff_from}`").alias("_from"),
-        F.col(f"`{eff_to}`").alias("_to"),
+        F.col("effective_from").alias("_from"),
+        F.col("effective_to").alias("_to"),
     )
     # Two dim versions can legally share (key, effective_from) — e.g.
     # scd2_from_history emits an empty [t, t) interval when two runs
     # start on the same date. Empty intervals can never match a probe
     # (half-open), so drop them up front; for any remaining same-_t
-    # version tie, _tie = eff_to (nulls last) makes the version
+    # version tie, _tie = effective_to (nulls last) makes the version
     # effective going FORWARD sort last, so last() deterministically
     # carries it instead of whichever row the shuffle happened to
     # order last.
     d = dim.where(
-        F.col(f"`{eff_to}`").isNull()
-        | (F.col(f"`{eff_from}`") != F.col(f"`{eff_to}`"))
+        F.col("effective_to").isNull()
+        | (F.col("effective_from") != F.col("effective_to"))
     ).select(
         F.col(f"`{dim_key}`").alias("_k"),
-        F.col(f"`{eff_from}`").alias("_t"),
+        F.col("effective_from").alias("_t"),
         F.lit(0).alias("_probe"),
-        F.col(f"`{eff_to}`").alias("_tie"),
+        F.col("effective_to").alias("_tie"),
         payload.alias("_dim"),
         *[F.lit(None).cast(fact.schema[c].dataType).alias(c) for c in fact.columns],
     )
@@ -213,7 +211,7 @@ def pit_join(
         F.col(f"`{fact_key}`").alias("_k"),
         F.col(f"`{ts_col}`").alias("_t"),
         F.lit(1).alias("_probe"),
-        F.lit(None).cast(dim.schema[eff_to].dataType).alias("_tie"),
+        F.lit(None).cast(dim.schema["effective_to"].dataType).alias("_tie"),
         F.lit(None).cast(d.schema["_dim"].dataType).alias("_dim"),
         *fact.columns,
     )
@@ -236,8 +234,8 @@ def pit_join(
         .select(
             *fact.columns,
             *[matched[c].alias(c) for c in attr_cols],
-            matched["_from"].alias(eff_from),
-            matched["_to"].alias(eff_to),
+            matched["_from"].alias("effective_from"),
+            matched["_to"].alias("effective_to"),
         )
     )
 

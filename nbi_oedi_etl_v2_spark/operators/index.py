@@ -13,9 +13,7 @@ expression on the DuckDB oracle side (operators/text.py convention).
 Scale shape:
 - ``inverted_index``: two hash aggregates — (token, doc) term
   frequencies, then per-token posting assembly. Per-group state is one
-  token's posting list; a stopword-grade token's postings are bounded
-  by ``max_doc_freq`` stop-listing (same rationale as stop-shingling
-  in dedup). Postings serialize as a sorted "doc:tf" string so the
+  token's posting list. Postings serialize as a sorted "doc:tf" string so the
   result is one scalar column per token — engine-comparable and
   columnar-friendly.
 - ``bm25_topk``: the query term list is a literal (broadcast by
@@ -46,16 +44,10 @@ def inverted_index(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """(token, doc_freq, total_tf, postings) — postings is the
     df-sorted posting list serialized as ``"doc:tf doc:tf ..."``.
-
-    ``max_doc_freq`` drops stopword-grade tokens (document frequency
-    above the cap) AFTER counting — the returned doc_freq is still
-    corpus-true for every surviving token. At 100 TB the cap bounds
-    the widest posting row; everything else is two map-side-combined
-    hash aggregates.
+    Two map-side-combined hash aggregates.
     """
     tf = (
         _token_rows(df, id_col, text_col)
@@ -75,8 +67,6 @@ def inverted_index(
             " ",
         ).alias("postings"),
     )
-    if max_doc_freq is not None:
-        idx = idx.where(F.col("doc_freq") <= max_doc_freq)
     return idx.select("tok", "doc_freq", "total_tf", "postings")
 
 
@@ -157,8 +147,6 @@ def bm25_oracle_sql(
     text_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> str:
     """DuckDB mirror of ``bm25_topk`` (same tokenizer, same
     arithmetic tree, same 5-decimal rounding)."""
@@ -177,7 +165,7 @@ def bm25_oracle_sql(
     dft AS (SELECT tok, count(*) AS df_t FROM tf GROUP BY tok)
     SELECT doc AS {id_col}, round(sum(
       ln(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-      * (tf * ({k1} + 1)) / (tf + {k1} * (1 - {b} + {b} * dl / (CAST(total_len AS DOUBLE) / n_docs)))
+      * (tf * (1.2 + 1)) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / (CAST(total_len AS DOUBLE) / n_docs)))
     ), 5) AS bm25
     FROM tf JOIN dft USING (tok) JOIN doclen USING (doc) CROSS JOIN stats
     GROUP BY doc

@@ -32,14 +32,13 @@ def interval_join(
     probe_ts: str,
     build_ts: str,
     lookback_s: int,
-    bucket_s: int | None = None,
 ) -> DataFrame:
     """Pairs (probe row, build row) with the same ``key_col`` and
     ``build_ts ∈ [probe_ts − lookback_s, probe_ts)`` — e.g. "events
     preceding each conversion within an hour". Columns of both inputs
     survive (probe's, then build's); callers project/aggregate on top.
 
-    ``bucket_s`` defaults to ``lookback_s`` (≤2 probe copies). The
+    Buckets are ``lookback_s`` wide (≤2 probe copies). The
     probe side explodes into ``sequence(bucket(ts−lookback),
     bucket(ts))``; the build side computes one home bucket; the join
     is an equi-join on (key, bucket) with the half-open range as a
@@ -47,10 +46,9 @@ def interval_join(
     """
     if lookback_s <= 0:
         raise ValueError("lookback_s must be positive")
-    bucket_s = bucket_s or lookback_s
 
     def bucket_of(ts_col: Column) -> Column:
-        return F.floor(ts_col.cast("long") / F.lit(bucket_s))
+        return F.floor(ts_col.cast("long") / F.lit(lookback_s))
 
     p_ts = F.col(f"`{probe_ts}`")
     b_ts = F.col(f"`{build_ts}`")

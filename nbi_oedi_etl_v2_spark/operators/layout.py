@@ -85,16 +85,15 @@ def zorder_layout(
     cols: list[str],
     bits: int = 8,
     num_partitions: int | None = None,
-    z_col: str = "zvalue",
 ) -> DataFrame:
     """Re-cluster a DataFrame along the Z-curve of ``cols``: compute
     surrogates + Z-value, range-partition on it, and sort within
     partitions — ready for a parquet write whose row-group min/max
-    stats then prune filters on ANY of the dimensions. Keep ``z_col``
+    stats then prune filters on ANY of the dimensions. Keep ``zvalue``
     in the written table (or drop it post-write) as the clustering
     witness.
     """
     surs = minmax_surrogates(df, [F.col(f"`{c}`") for c in cols], bits)
-    out = df.withColumn(z_col, zorder_key(surs, bits))
+    out = df.withColumn("zvalue", zorder_key(surs, bits))
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return out.repartitionByRange(parts, F.col(z_col)).sortWithinPartitions(z_col)
+    return out.repartitionByRange(parts, F.col("zvalue")).sortWithinPartitions("zvalue")

@@ -9,10 +9,10 @@ runtime `bloom_filter_agg` injects into shuffle joins, built here as
 an explicit reusable operator so the sketch can be persisted between
 runs):
 
-- BUILD: the seen keys fold into a ``bits``-wide bitset with k seeded
+- BUILD: the seen keys fold into a ``BLOOM_BITS``-wide bitset with k seeded
   ``xxhash64`` positions per key, OR-merged by plain ``bit_or``
   aggregates — a map-side-combinable aggregation, one shuffle of
-  ≤ bits/64 rows. The sketch is KB-sized (65,536 bits = 8 KB) no
+  ≤ BLOOM_BITS/64 rows. The sketch is KB-sized (65,536 bits = 8 KB) no
   matter how many keys went in, and two sketches union by OR — so
   each ingest run can maintain it incrementally.
 - PROBE: a pure-JVM expression over the literal bitset tests all k
@@ -47,37 +47,32 @@ BLOOM_BITS = 1 << 16  # 8 KB sketch
 _SEEDS = (0, 1, 2)  # k=3 hash functions: xxhash64(cast-to-string, seed)
 
 
-def _positions(col: Column, bits: int) -> list[Column]:
+def _positions(col: Column) -> list[Column]:
     """Per-seed bit positions. The value is string-normalized before
     hashing — xxhash64 is type-sensitive, and build/probe sides may
     carry different numeric widths for the same key (same rationale
     as sources/skipping.py)."""
     s = col.cast("string")
     return [
-        F.pmod(F.xxhash64(s, F.lit(seed)), F.lit(bits))
+        F.pmod(F.xxhash64(s, F.lit(seed)), F.lit(BLOOM_BITS))
         for seed in _SEEDS
     ]
 
 
-def build_bloom(
-    keys: DataFrame, key_col: str, bits: int = BLOOM_BITS
-) -> list[int]:
+def build_bloom(keys: DataFrame, key_col: str) -> list[int]:
     """Fold a key column into a Bloom bitset, returned as a dense
-    ``ceil(bits / 64)``-long word list (index = position // 64); a
-    ``bits`` that is not a multiple of 64 leaves the final word
-    partially used (ADVICE r6 — the ``bits // 64`` sizing crashed on
-    e.g. bits=100 when a bit landed in the trailing partial word).
+    ``BLOOM_BITS / 64``-long word list (index = position // 64).
 
     The aggregation is (word → bit_or of one-hot longs): map-side
-    combine collapses each partition to ≤ bits/64 rows before the
+    combine collapses each partition to ≤ BLOOM_BITS/64 rows before the
     single KB-sized shuffle. The driver-side materialization is
-    BOUNDED at bits/64 entries (1,024 longs for the default 8 KB
+    BOUNDED at BLOOM_BITS/64 entries (1,024 longs for the 8 KB
     sketch) — sketch-sized, never data-sized. Two sketches over
     disjoint batches merge by element-wise OR.
     """
     from ._scale import widen_narrow_input
 
-    pos = F.explode(F.array(*_positions(F.col(key_col), bits))).alias(
+    pos = F.explode(F.array(*_positions(F.col(key_col)))).alias(
         "pos"
     )
     # widen a narrow scan before the k-hash explode (the narrow-scan
@@ -105,15 +100,13 @@ def build_bloom(
         )
         .collect()
     )
-    dense = [0] * ((bits + 63) // 64)
+    dense = [0] * (BLOOM_BITS // 64)
     for row in words:
         dense[row["word"]] = row["bits"]
     return dense
 
 
-def might_contain(
-    col: Column, bloom: list[int], bits: int = BLOOM_BITS
-) -> Column:
+def might_contain(col: Column, bloom: list[int]) -> Column:
     """Pure-JVM membership test against the literal bitset: true iff
     every seeded position's bit is set. False ⇒ PROVABLY never seen.
 
@@ -139,7 +132,7 @@ def might_contain(
             )
         )
         != 0
-        for p in _positions(col, bits)
+        for p in _positions(col)
     ]
     out = checks[0]
     for c in checks[1:]:
@@ -152,7 +145,6 @@ def bloom_anti_join(
     probe_key: str,
     seen: DataFrame,
     seen_key: str,
-    bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """EXACT ``probe LEFT ANTI JOIN seen`` with a Bloom fast path.
 
@@ -163,9 +155,9 @@ def bloom_anti_join(
     semantics (NULL never equals a seen key ⇒ kept), short-circuited
     on the fast path.
     """
-    bloom = build_bloom(seen.select(seen_key), seen_key, bits)
+    bloom = build_bloom(seen.select(seen_key), seen_key)
     c = F.col(probe_key)
-    candidate = c.isNotNull() & might_contain(c, bloom, bits)
+    candidate = c.isNotNull() & might_contain(c, bloom)
     definite = probe.where(~candidate)
     # DISTINCT the seen side before the verify join (r10): anti-join
     # semantics are duplicate-invariant on the right, and a seen table

@@ -214,7 +214,7 @@ _JPEG_SOF_MARKERS = frozenset(
 _JPEG_COMPONENTS = {1: 1, 3: 3, 4: 4}
 
 
-def _jpeg_sof(b: bytes, max_segments: int = 64) -> tuple[int, int, int, int, int]:
+def _jpeg_sof(b: bytes) -> tuple[int, int, int, int, int]:
     """Walk JPEG markers from SOI to the first SOFn segment and return
     (sof_marker, precision, height, width, n_components). Pure stdlib
     marker scan — segment lengths are honored, standalone markers
@@ -225,7 +225,7 @@ def _jpeg_sof(b: bytes, max_segments: int = 64) -> tuple[int, int, int, int, int
     if len(b) < 4 or b[0] != 0xFF or b[1] != 0xD8:
         raise ValueError("not a JPEG (no SOI)")
     pos = 2
-    for _ in range(max_segments):
+    for _ in range(64):
         if pos + 4 > len(b) or b[pos] != 0xFF:
             raise ValueError("marker walk fell off the segment chain")
         marker = b[pos + 1]
@@ -699,15 +699,13 @@ def _fingerprint_payload(payload: bytes) -> tuple[int, int, float]:
     return w, h, checksum
 
 
-def attach_binary_payload(
-    df: DataFrame, id_col: str, text_col: str, media_type: str = "image"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Build a media table from any table (test harness: documents →
     fake payloads). Real pipelines read payload parquet directly."""
     return df.select(
         F.col(f"`{id_col}`").cast("long").alias("media_id"),
         F.encode(F.col(f"`{text_col}`"), "UTF-8").alias("payload"),
-        F.lit(media_type).alias("media_type"),
+        F.lit("image").alias("media_type"),
         F.concat(F.lit("synthetic://"), F.col(f"`{id_col}`").cast("string")).alias(
             "source_uri"
         ),
@@ -923,9 +921,7 @@ def decode_media(df: DataFrame) -> DataFrame:
     return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
 
 
-def frame_sample_plan(
-    df: DataFrame, every_n: int = 10, default_frames: int | None = 101
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame) -> DataFrame:
     """Frame-sampling *plan* for video payloads: emits (media_id,
     frame_index) rows without decoding frames — the downstream decode
     then touches only sampled frames (the partition-preserving explode
@@ -933,16 +929,13 @@ def frame_sample_plan(
 
     The frame count is REAL where the payload allows: ISO-BMFF
     payloads run the ``parse_mp4_header`` box walk inline (same rows,
-    no join, still map-only) and sample ``0, every_n, … < n_frames``
-    from the track's ``stts`` sample-count sum. Payloads that don't
-    parse fall back to ``default_frames`` total frames
-    (``None`` → excluded from the plan entirely)."""
+    no join, still map-only) and sample every 10th frame,
+    ``0, 10, … < n_frames``, from the track's ``stts`` sample-count
+    sum. Payloads that don't parse fall back to 101 total frames."""
     staged = _with_mp4_meta(
         df.where(F.col("media_type") == "video"), "payload", 32, 64
     )
-    n = F.col("_mp4_frames")
-    if default_frames is not None:
-        n = F.coalesce(n, F.lit(default_frames).cast("long"))
+    n = F.coalesce(F.col("_mp4_frames"), F.lit(101).cast("long"))
     # no Filter on the derived count: a predicate would be pushed down
     # through the staged projections and PushDownPredicate re-inlines
     # the box-walk folds without a cost guard (the exponential-tree
@@ -954,7 +947,7 @@ def frame_sample_plan(
             F.when(
                 F.col("_n") > 0,
                 F.sequence(
-                    F.lit(0), (F.col("_n") - 1).cast("int"), F.lit(every_n)
+                    F.lit(0), (F.col("_n") - 1).cast("int"), F.lit(10)
                 ),
             )
         ).alias("frame_index"),
@@ -1060,7 +1053,7 @@ def synth_jpeg_payload(seed: int) -> bytes:
 
 
 def parse_jpeg_header(
-    df: DataFrame, id_col: str, payload_col: str, max_segments: int = 32
+    df: DataFrame, id_col: str, payload_col: str
 ) -> DataFrame:
     """REAL JPEG SOF header parsing with a JVM-side marker WALK — the
     third member of the route-before-decode family (PNG/WAV parse at
@@ -1068,7 +1061,7 @@ def parse_jpeg_header(
     arbitrary length precede the frame header).
 
     The walk is a single codegen-free but JVM-evaluated ``aggregate``
-    fold over ``sequence(1, max_segments)``: the accumulator carries
+    fold over ``sequence(1, 32)`` (32 segments): the accumulator carries
     (pos, sof) over the hex image of the payload; each step either
     stops (non-marker byte, EOI, truncation), records the first SOFn
     marker position (C0-CF minus C4/C8/CC), hops a standalone marker
@@ -1130,7 +1123,7 @@ def parse_jpeg_header(
         F.lit(3).cast("long").alias("pos"), F.lit(0).cast("long").alias("sof")
     )
     walked = F.aggregate(
-        F.sequence(F.lit(1), F.lit(max_segments)), init, step
+        F.sequence(F.lit(1), F.lit(32)), init, step
     )["sof"]
     sof = F.when(walked > 0, walked)
     is_jpeg = (
@@ -1316,8 +1309,6 @@ def parse_mp4_header(
     df: DataFrame,
     id_col: str,
     payload_col: str,
-    max_boxes: int = 32,
-    max_stts_entries: int = 64,
 ) -> DataFrame:
     """REAL MP4/ISO-BMFF header parsing with a JVM-side box WALK — the
     video member of the route-before-decode family. Boxes are a
@@ -1333,10 +1324,10 @@ def parse_mp4_header(
 
     Emits (media_id, is_mp4, major_brand, timescale, duration,
     n_frames). Non-BMFF payloads parse as ``is_mp4 = false``;
-    version-1 ``mvhd`` (64-bit times) and ``stts`` tables above
-    ``max_stts_entries`` yield NULL fields rather than wrong numbers.
+    version-1 ``mvhd`` (64-bit times), ``stts`` tables above 64
+    entries and box chains above 32 siblings yield NULL fields rather than wrong numbers.
     Codec (``mdat``) decode is out of scope, matching JPEG."""
-    staged = _with_mp4_meta(df, payload_col, max_boxes, max_stts_entries)
+    staged = _with_mp4_meta(df, payload_col, 32, 64)
     return staged.select(
         F.col(f"`{id_col}`").alias("media_id"),
         F.col("_mp4_is").alias("is_mp4"),
@@ -1413,7 +1404,6 @@ def ahash_media(df: DataFrame) -> DataFrame:
 def image_near_dup_pairs(
     df: DataFrame,
     max_hamming: int = 6,
-    exact_star_limit: int | None = 64,
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual aHash: decode →
     8×8 average-hash (``ahash_media``) → the generic pigeonhole
@@ -1424,10 +1414,9 @@ def image_near_dup_pairs(
     Image corpora are pathologically duplicate-heavy at the aHash
     level (blank thumbnails, template frames: a 50k-doc corpus can
     hold 11k copies of one hash → 86M identical pairs), so
-    ``exact_star_limit`` defaults ON: identical-hash groups above the
-    limit emit a representative star instead of the quadratic clique
-    (see :func:`dedup.hamming_near_pairs` for the losslessness
-    argument). ``None`` restores the full pair list."""
+    identical-hash groups above 64 members emit a representative star
+    instead of the quadratic clique (see :func:`dedup.hamming_near_pairs`
+    for the losslessness argument)."""
     from . import dedup
 
     return dedup.hamming_near_pairs(
@@ -1435,7 +1424,7 @@ def image_near_dup_pairs(
         "media_id",
         "ahash",
         max_hamming,
-        exact_star_limit=exact_star_limit,
+        exact_star_limit=64,
     )
 
 

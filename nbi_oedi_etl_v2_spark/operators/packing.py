@@ -265,8 +265,6 @@ def shuffle_rank(
     df: DataFrame,
     id_col: str,
     seed: str = "42",
-    rank_col: str = "shuffle_pos",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic pseudorandom permutation of the corpus: 1-based
     position under ``md5(seed || ':' || id)`` order — the reproducible
@@ -286,11 +284,10 @@ def shuffle_rank(
     ranked = global_row_number(
         df,
         [key, F.col(f"`{id_col}`")],
-        rn_col=rank_col,
-        num_partitions=num_partitions,
+        rn_col="shuffle_pos",
         bucket_key=numeric_prefix,
     )
-    return ranked.withColumn(rank_col, F.col(rank_col).cast("long"))
+    return ranked.withColumn("shuffle_pos", F.col("shuffle_pos").cast("long"))
 
 
 def pack_first_fit_decreasing(
@@ -299,7 +296,6 @@ def pack_first_fit_decreasing(
     tokens_col: str,
     seq_len: int,
     shard_col: str,
-    bin_col: str = "bin",
 ) -> DataFrame:
     """First-fit-decreasing bin packing without splitting: within each
     shard, documents are placed largest-first into the lowest-index
@@ -319,7 +315,7 @@ def pack_first_fit_decreasing(
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}"
          for f in df.select(shard_col, id_col, tokens_col).schema.fields]
-        + [f"`{bin_col}` long"]
+        + ["`bin` long"]
     )
 
     def pack(pdf):
@@ -338,8 +334,8 @@ def pack_first_fit_decreasing(
                 remaining.append(seq_len - t)
                 placed = len(remaining) - 1
             assign.append(placed)
-        pdf[bin_col] = assign
-        return pdf[[shard_col, id_col, tokens_col, bin_col]]
+        pdf["bin"] = assign
+        return pdf[[shard_col, id_col, tokens_col, "bin"]]
 
     return (
         df.select(shard_col, id_col, tokens_col)

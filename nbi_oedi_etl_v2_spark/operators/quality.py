@@ -337,7 +337,7 @@ def table_profile(df: DataFrame, exact_ndv: bool = True) -> DataFrame:
     return one.select(F.explode(structs).alias("p")).select("p.*")
 
 
-def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+def table_fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive table content fingerprint — the recon
     primitive behind "did the migration/backfill/engine-swap produce
     the same table?": every row canonicalizes to one string, hashes
@@ -359,8 +359,8 @@ def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFrame
     ties). NULL renders as a chr(0) sentinel distinct from any cast.
     Unsupported families (arrays, maps, structs, binary) raise —
     canonicalize them explicitly rather than trusting engine-specific
-    rendering. Columns fold in the DECLARED order (pass ``cols`` to
-    pin a cross-engine column order).
+    rendering. Columns fold in the DECLARED order (select them first
+    to pin a cross-engine column order).
 
     One map pass + one 2-number aggregate; nothing else moves.
     Returns (n_rows, fingerprint) — the fingerprint as a STRING of
@@ -381,7 +381,7 @@ def table_fingerprint(df: DataFrame, cols: list[str] | None = None) -> DataFrame
         TimestampType,
     )
 
-    names = cols if cols is not None else [f.name for f in df.schema.fields]
+    names = [f.name for f in df.schema.fields]
     parts = []
     for name in names:
         t = df.schema[name].dataType

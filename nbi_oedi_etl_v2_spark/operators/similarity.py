@@ -124,27 +124,26 @@ def lsh_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    planes: int = 10,
-    tables: int = 12,
-    multiprobe: int = 2,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors in any bucket the
-    query PROBES across ``tables`` independent hyperplane tables (seeds
-    differ per table); exact cosine re-rank on the candidate union.
+    query PROBES across L = 12 independent 10-plane hyperplane tables
+    (seeds differ per table); exact cosine re-rank on the candidate
+    union.
 
     Multiprobe: besides its home bucket, each query probes every bucket
-    within Hamming distance ``multiprobe`` of its signature (sign-bit
+    within Hamming distance r = 2 of its signature (sign-bit
     flips are exactly the near-miss buckets a borderline projection
     falls into). Probing is QUERY-side only — the corpus still
     materializes one bucket per table, so corpus replication stays ×L
-    and recall is bought with C(planes, ≤r) extra probe keys on the
+    and recall is bought with C(10, ≤r) extra probe keys on the
     small broadcast side, not with corpus copies.
 
     Parameter intuition: a pair at angle θ agrees with one hyperplane
     w.p. 1-θ/π; with radius-r multiprobe a table matches w.p.
-    P[Binom(planes, θ/π) ≤ r], and ≥1 of L tables w.p. 1-(1-p_tbl)^L.
-    The defaults (10, 12, 2) measure recall ≈0.9 at ~half the corpus
-    as candidates even for ~60° "neighbors" (the hardest regime —
+    P[Binom(10, θ/π) ≤ r], and ≥1 of L tables w.p. 1-(1-p_tbl)^L.
+    These settings (10 planes, 12 tables, r = 2) measure recall ≈0.9
+    at ~half the corpus as candidates even for ~60° "neighbors" (the
+    hardest regime —
     uniform corpora where exact top-k targets are barely closer than
     random pairs); near-dup neighbors (cos ≥ 0.9) collide w.p. ~1 and
     candidate fractions shrink to the per-table bucket mass.
@@ -164,9 +163,9 @@ def lsh_cosine_topk(
         )
         # per-table seed expression (references the outer lambda var t)
         # keeps the L tables independent
-        sig = hyperplane_signature(vec_alias, planes, seed="7 + t * 1299709")
+        sig = hyperplane_signature(vec_alias, 10, seed="7 + t * 1299709")
         buckets = F.expr(
-            f"transform(sequence(0, {tables} - 1), "
+            "transform(sequence(0, 12 - 1), "
             f"t -> struct(t AS tbl, {sig} AS bucket))"
         )
         return base.select(
@@ -175,8 +174,8 @@ def lsh_cosine_topk(
 
     c = with_buckets(corpus, "neighbor_id", "c_vec", "c_norm")
     # query side probes: signature computed once per (row, table), then
-    # one XOR per probe mask — C(planes, ≤r) keys on the broadcast side
-    masks = _probe_masks(planes, multiprobe)
+    # one XOR per probe mask — C(10, ≤2) keys on the broadcast side
+    masks = _probe_masks(10, 2)
     q = (
         with_buckets(queries, "query_id", "q_vec", "q_norm")
         .select(
@@ -492,7 +491,6 @@ def semantic_dedup(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
     nlist: int = 8,
     threshold: float = 0.92,
 ) -> DataFrame:
@@ -510,11 +508,9 @@ def semantic_dedup(
     is order-insensitive and engine-portable — no iterative
     keep-set dependence.
 
-    Default centroids are :func:`first_k_centroids` (oracle-able);
-    pass :func:`ivf_centroids` output for density-adapted clusters.
+    The centroids are :func:`first_k_centroids` (oracle-able).
     """
-    if centroids is None:
-        centroids = first_k_centroids(df, id_col, vec_col, nlist)
+    centroids = first_k_centroids(df, id_col, vec_col, nlist)
     # NO widen here (r11 revert of the r10 `widen_narrow_input`,
     # VERDICT r10 item 2): unlike cosine_topk/pq_topk — whose scoring
     # fan-out feeds a broadcast join with no downstream exchange —
@@ -588,25 +584,23 @@ def pq_train_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 8,
-    ksub: int = 16,
-    iterations: int = 5,
-    n_train: int = 2048,
 ) -> list[list[list[float]]]:
-    """(m × ksub × dsub) centroid tensor from a deterministic
-    hash-sampled training set (bounded collect ≤ ``n_train`` rows).
-    Lloyd init = first ``ksub`` sample vectors per subspace in hash
-    order; empty cells keep their previous centroid."""
+    """(m × ksub × dsub) centroid tensor, m = 8 subspaces of ksub = 16
+    centroids each, from a deterministic hash-sampled training set
+    (bounded collect ≤ 2048 rows). Lloyd (5 rounds) init = first ksub
+    sample vectors per subspace in hash order; empty cells keep their
+    previous centroid."""
     import numpy as np
 
     rows = (
         with_norm(corpus, vec_col)
         .select(F.col(f"`{id_col}`").alias("vid"), "vec")
         .orderBy(F.xxhash64(F.col("vid")), F.col("vid"))
-        .limit(n_train)
+        .limit(2048)
         .collect()
     )
     sample = np.asarray([r["vec"] for r in rows], dtype="float64")
+    m, ksub = 8, 16
     d = sample.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -615,7 +609,7 @@ def pq_train_centroids(
     for s in range(m):
         sub = sample[:, s * dsub : (s + 1) * dsub]
         cents = sub[:ksub].copy()
-        for _ in range(iterations):
+        for _ in range(5):
             d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for j in range(ksub):
@@ -708,14 +702,11 @@ def pq_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    rerank: int = 48,
 ) -> DataFrame:
-    """PQ-ADC approximate top-k by cosine: encode the corpus to m
+    """PQ-ADC approximate top-k by cosine: encode the corpus to m = 8
     codes, estimate each (query, vector) dot product from the
     query's per-subspace inner-product lookup table (computed
-    in-plan on the broadcast query side), keep the top-``rerank``
+    in-plan on the broadcast query side), keep the top-48
     ADC candidates per query, exact-cosine re-rank, emit top-k.
     Everything after training is whole-stage-codegen JVM.
 
@@ -729,11 +720,11 @@ def pq_cosine_topk(
     from ._scale import widen_narrow_input
 
     corpus = widen_narrow_input(corpus)
-    cents = pq_train_centroids(corpus, id_col, vec_col, m=m, ksub=ksub)
-    # a training sample smaller than ksub yields fewer centroids; the
+    cents = pq_train_centroids(corpus, id_col, vec_col)
+    # a training sample smaller than 16 yields fewer centroids; the
     # encode/ADC expressions must index the ACTUAL codebook size or
     # element_at walks off the end and estimates go NULL
-    ksub = len(cents[0])
+    m, ksub = len(cents), len(cents[0])
     dsub = len(cents[0][0])
     lit_cents = _pq_cent_literal(cents)
     c = (
@@ -781,7 +772,7 @@ def pq_cosine_topk(
         F.col("est_cos").desc(), F.col("neighbor_id")
     )
     cand = scored.withColumn("_r", F.row_number().over(w_adc)).where(
-        F.col("_r") <= rerank
+        F.col("_r") <= 48
     )
     sim = F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm"))
     w = Window.partitionBy("query_id").orderBy(
@@ -806,21 +797,17 @@ def ivfpq_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    nlist: int = 16,
-    nprobe: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    rerank: int = 64,
 ) -> DataFrame:
     """IVF-PQ — the two scale levers composed (the FAISS default at
     billion scale): IVF cells prune WHICH codes are scanned
-    (~nprobe/nlist of the corpus per query), PQ compresses WHAT a
+    (~nprobe/nlist of the corpus per query, nprobe = 10 of nlist = 16
+    cells), PQ compresses WHAT a
     scan reads (m bytes/vector). The decomposition
     ``dot(q,v) = dot(q, c_cell) + dot(q, v − c_cell)`` is exact; the
     residual term is ADC-estimated from a PQ codebook trained on
     residuals, so the lookup table depends only on the query — ONE
     table per query serves every probed cell. Candidates ranked by
-    estimated cosine, top-``rerank`` re-ranked exactly. Everything
+    estimated cosine, top-64 re-ranked exactly. Everything
     after the bounded driver k-means is pure-JVM folds + one
     equi-join on cid.
 
@@ -829,7 +816,7 @@ def ivfpq_cosine_topk(
     top-5 while reading 10/16 of the CODES — which at m=8 bytes per
     vector is ~2% of the raw-vector bytes an uncompressed scan pays.
     Real clustered embeddings fare better at smaller nprobe."""
-    cents = ivf_centroids(corpus, id_col, vec_col, nlist, iterations=1)
+    cents = ivf_centroids(corpus, id_col, vec_col, 16, iterations=1)
     c = with_norm(corpus, vec_col).select(
         F.col(f"`{id_col}`").alias("nid"), "vec", "norm"
     )
@@ -840,13 +827,10 @@ def ivfpq_cosine_topk(
         .select("nid", "vec", "norm", "cid", "res")
     )
     pq_cents = pq_train_centroids(
-        enc.withColumnRenamed("res", "res_vec"),
-        "nid",
-        "res_vec",
-        m=m,
-        ksub=ksub,
+        enc.withColumnRenamed("res", "res_vec"), "nid", "res_vec"
     )
-    ksub = len(pq_cents[0])  # actual codebook size (tiny-corpus guard)
+    # actual codebook size (tiny-corpus guard)
+    m, ksub = len(pq_cents), len(pq_cents[0])
     dsub = len(pq_cents[0][0])
     enc = (
         enc.withColumn("_cents", _pq_cent_literal(pq_cents))
@@ -876,7 +860,7 @@ def ivfpq_cosine_topk(
     )
     q_probe = (
         scored_cells.withColumn("_pr", F.row_number().over(wq))
-        .where(F.col("_pr") <= nprobe)
+        .where(F.col("_pr") <= 10)
         .withColumn("_cents", _pq_cent_literal(pq_cents))
         .withColumn("tbl", F.expr(tbl))
         .select("query_id", "q_vec", "q_norm", "cid", "dot_qc", "tbl")
@@ -898,7 +882,7 @@ def ivfpq_cosine_topk(
         F.col("est_cos").desc(), F.col("nid")
     )
     top = cand.withColumn("_r", F.row_number().over(w_adc)).where(
-        F.col("_r") <= rerank
+        F.col("_r") <= 64
     )
     sim = F.expr(_dot("q_vec", "vec")) / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
@@ -940,11 +924,10 @@ def random_projection(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     signs: list[list[int]] | None = None,
-    out_dims: int = 16,
-    seed: int = 7,
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection of an embedding column
-    onto ``out_dims`` ±1 Achlioptas directions — the cheap
+    onto the ±1 Achlioptas directions ``signs`` (16 of them, seed 7,
+    by default) — the cheap
     dimensionality-reduction pass before LSH banding or a coarse ANN
     index when d is large.
 
@@ -958,7 +941,7 @@ def random_projection(
     left-to-right sum associate identically in IEEE double).
     """
     if signs is None:
-        signs = achlioptas_signs(64, out_dims, seed)
+        signs = achlioptas_signs(64, 16, 7)
     cols = [F.col(f"`{id_col}`")]
     for j, row in enumerate(signs):
         lits = ", ".join(f"{s}D" for s in row)

@@ -32,13 +32,12 @@ def build_sketches(
     df: DataFrame,
     key_col: str,
     group_cols: list[Column | str],
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """One HLL sketch of ``key_col`` per group — the materialization
     step. One map-side-combined hash aggregate; the shuffle carries
-    partial sketches (≤ 2^lgK bytes each), never keys."""
+    partial sketches (≤ 2^lgK bytes each, lgK = 12), never keys."""
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(f"`{key_col}`"), lg_config_k).alias("sketch"),
+        F.hll_sketch_agg(F.col(f"`{key_col}`"), 12).alias("sketch"),
         F.count("*").alias("n_rows"),
     )
 
@@ -95,7 +94,10 @@ QUANTILE_CENTROID = T.ArrayType(
 )
 
 
-def _compress(means, weights, max_centroids):
+MAX_CENTROIDS = 128
+
+
+def _compress(means, weights):
     """Weighted equi-weight re-compression: centroids sorted by mean
     are greedily accumulated into ~equal-weight chunks."""
     import numpy as np
@@ -103,9 +105,9 @@ def _compress(means, weights, max_centroids):
     order = np.argsort(means, kind="stable")
     means, weights = np.asarray(means)[order], np.asarray(weights)[order]
     total = int(weights.sum())
-    if len(means) <= max_centroids:
+    if len(means) <= MAX_CENTROIDS:
         return list(zip(means.tolist(), weights.tolist()))
-    target = total / max_centroids
+    target = total / MAX_CENTROIDS
     out, cm, cw = [], 0.0, 0
     for m, w in zip(means.tolist(), weights.tolist()):
         cm += m * w
@@ -122,10 +124,9 @@ def quantile_sketch_build(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    max_centroids: int = 128,
 ) -> DataFrame:
     """One quantile summary of ``value_col`` per group: values sorted
-    and cut into ``max_centroids`` equal-count chunks, each emitted as
+    and cut into ``MAX_CENTROIDS`` equal-count chunks, each emitted as
     (mean, count). Arrow-batched ``applyInPandas`` per group; the
     output is #groups rows of a KB-sized array column that parquets /
     shuffles / broadcasts like any column. NULL values are excluded
@@ -149,7 +150,7 @@ def quantile_sketch_build(
         if n == 0:
             sketch = []
         else:
-            chunks = np.array_split(vals, min(max_centroids, n))
+            chunks = np.array_split(vals, min(MAX_CENTROIDS, n))
             sketch = [
                 {"m": float(c.mean()), "w": int(len(c))}
                 for c in chunks
@@ -165,7 +166,6 @@ def quantile_sketch_build(
 def quantile_sketch_merge(
     sketches: DataFrame,
     group_cols: list[str],
-    max_centroids: int = 128,
 ) -> DataFrame:
     """Re-aggregate materialized summaries to a coarser grouping:
     concatenate centroid lists, sort by mean, re-compress to
@@ -191,7 +191,7 @@ def quantile_sketch_merge(
                 means.append(cent["m"])
                 weights.append(cent["w"])
         merged = (
-            _compress(means, weights, max_centroids) if means else []
+            _compress(means, weights) if means else []
         )
         return pd.DataFrame(
             [[
@@ -262,6 +262,7 @@ def quantile_sketch_value(sketch: Column, q: float) -> Column:
 # estimates at 100 TB.
 # ---------------------------------------------------------------------------
 
+KMV_K = 512  # hashes kept per sketch
 _KMV_SPAN = 2.0**64  # xxhash64 values are uniform over [-2^63, 2^63)
 
 
@@ -269,10 +270,9 @@ def kmv_build(
     df: DataFrame,
     key_col: str,
     group_cols: list[str],
-    k: int = 512,
 ) -> DataFrame:
     """One KMV sketch of ``key_col`` per group: a sorted array of the
-    k smallest distinct xxhash64 values (fewer ⇒ the group's whole
+    KMV_K smallest distinct xxhash64 values (fewer ⇒ the group's whole
     distinct hash set). NULL keys carry no identity and are excluded."""
     import pandas as pd
 
@@ -287,7 +287,7 @@ def kmv_build(
                 continue
             out = pdf.groupby(
                 [c for c in pdf.columns if c != "h"], dropna=False, sort=False
-            )["h"].apply(lambda s: pd.Series(s.unique()).nsmallest(k))
+            )["h"].apply(lambda s: pd.Series(s.unique()).nsmallest(KMV_K))
             yield out.reset_index()[pdf.columns]
 
     if group_cols:
@@ -299,61 +299,61 @@ def kmv_build(
                 if not len(pdf):
                     continue
                 yield pd.DataFrame(
-                    {"h": pd.Series(pdf["h"].unique()).nsmallest(k)}
+                    {"h": pd.Series(pdf["h"].unique()).nsmallest(KMV_K)}
                 )
 
         cand = hashed.mapInPandas(partial_flat, schema=hashed.schema)
     return cand.groupBy(*group_cols).agg(
-        F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("kmv")
+        F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("kmv")
     )
 
 
-def kmv_merge_arrays(a: Column, b: Column, k: int = 512) -> Column:
+def kmv_merge_arrays(a: Column, b: Column) -> Column:
     """Sketch of the UNION of two key sets from their sketches alone:
-    the k smallest of the merged distinct hash arrays. Lossless in the
-    KMV sense (the k smallest of A ∪ B all appear in A's or B's k
+    the KMV_K smallest of the merged distinct hash arrays. Lossless in the
+    KMV sense (the KMV_K smallest of A ∪ B all appear in A's or B's KMV_K
     smallest). Pure JVM array expression."""
-    return F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, k)
+    return F.slice(F.array_sort(F.array_distinct(F.concat(a, b))), 1, KMV_K)
 
 
 def kmv_rollup(
-    sketches: DataFrame, group_cols: list[Column | str], k: int = 512
+    sketches: DataFrame, group_cols: list[Column | str]
 ) -> DataFrame:
     """Re-aggregate sketches to a coarser grouping (the day→month
-    pattern): distinct-merge the hash arrays, keep the k smallest.
+    pattern): distinct-merge the hash arrays, keep the KMV_K smallest.
     Input is the #groups-sized sketch table; raw data is never
     touched."""
     return sketches.groupBy(*group_cols).agg(
         F.slice(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("kmv")))),
             1,
-            k,
+            KMV_K,
         ).alias("kmv")
     )
 
 
-def kmv_distinct_estimate(sketch: Column, k: int = 512) -> Column:
+def kmv_distinct_estimate(sketch: Column) -> Column:
     """Distinct-count estimate from a sketch: exact size when the
-    sketch is unsaturated (< k hashes ⇒ it IS the distinct hash set),
-    else the order-statistic estimator (k−1)/u_k where u_k is the
-    k-th smallest hash mapped to (0, 1]."""
+    sketch is unsaturated (< KMV_K hashes ⇒ it IS the distinct hash set),
+    else the order-statistic estimator (KMV_K−1)/u_k where u_k is the
+    KMV_K-th smallest hash mapped to (0, 1]."""
     n = F.size(sketch)
     u_k = (
-        F.element_at(sketch, k).cast("double") / F.lit(_KMV_SPAN) + F.lit(0.5)
+        F.element_at(sketch, KMV_K).cast("double") / F.lit(_KMV_SPAN) + F.lit(0.5)
     )
-    return F.when(n < k, n.cast("double")).otherwise(
-        F.lit(float(k - 1)) / u_k
+    return F.when(n < KMV_K, n.cast("double")).otherwise(
+        F.lit(float(KMV_K - 1)) / u_k
     )
 
 
-def kmv_intersection_estimate(a: Column, b: Column, k: int = 512) -> Column:
-    """|A ∩ B| estimate from two sketches: among the union's k
+def kmv_intersection_estimate(a: Column, b: Column) -> Column:
+    """|A ∩ B| estimate from two sketches: among the union's KMV_K
     smallest hashes, the fraction present in BOTH sketches, scaled by
     the union's distinct estimate. Exact when both sketches are
     unsaturated. Pure JVM array algebra — no rescan, no shuffle."""
-    union = kmv_merge_arrays(a, b, k)
+    union = kmv_merge_arrays(a, b)
     in_both = F.size(F.array_intersect(union, F.array_intersect(a, b)))
     rho = in_both.cast("double") / F.size(union).cast("double")
     return F.when(F.size(union) == 0, F.lit(0.0)).otherwise(
-        rho * kmv_distinct_estimate(union, k)
+        rho * kmv_distinct_estimate(union)
     )

@@ -415,7 +415,7 @@ def token_pmi(
 
 
 def compressibility_scores(
-    df: DataFrame, id_col: str, text_col: str, level: int = 6
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Per-document zlib compressibility — the classic cheap junk
     detector for LLM corpora (used by CCNet/RefinedWeb-style
@@ -424,7 +424,7 @@ def compressibility_scores(
     between. Emits (id, n_bytes, n_compressed, compress_ratio).
 
     Arrow-batched pandas UDF (zlib is stdlib — DEFLATE is
-    deterministic for a fixed level, so results are reproducible
+    deterministic for a fixed level, 6 here, so results are reproducible
     across runs and partitionings); map-only, zero shuffle. No DuckDB
     oracle (no SQL zlib) → rows-only driver check, with an exact
     bit-for-bit pytest against direct ``zlib.compress`` instead.
@@ -436,7 +436,7 @@ def compressibility_scores(
     @pandas_udf("long")
     def _clen(s: pd.Series) -> pd.Series:
         return s.map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), level))
+            lambda t: len(zlib.compress(t.encode("utf-8"), 6))
             if t is not None
             else None
         ).astype("Int64")
@@ -456,7 +456,7 @@ def compressibility_scores(
 
 
 def compressibility_invariants(
-    df: DataFrame, id_col: str, text_col: str, level: int = 6
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Driver-verifiable form of :func:`compressibility_scores`: DEFLATE
     output bytes have no SQL twin, so emit per-document invariants a
@@ -481,7 +481,7 @@ def compressibility_invariants(
             if t is None:
                 return (None, None)
             b = t.encode("utf-8")
-            z = zlib.compress(b, level)
+            z = zlib.compress(b, 6)
             return (len(z), zlib.decompress(z) == b)
 
         pairs = s.map(one)

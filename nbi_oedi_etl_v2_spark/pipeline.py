@@ -135,12 +135,12 @@ def run_job(
     job: JobConfig,
     output_root: str,
     run_ts: str,
-    db: str | None = None,
+    db: str,
 ) -> JobResult:
     """The data chain of ``job``: read, downsample, write and account
     for its files, then register its data table and per-state views in
-    ``db`` (none when ``db`` is None). The metadata fields of the
-    result are left empty; ``copy_metadata`` fills them."""
+    ``db``. The metadata fields of the result are left empty;
+    ``copy_metadata`` fills them."""
     # S1/P1 — one partitioned read of this job's partitions; Spark's
     # file index for it is the job's input listing. ``inputFiles()``
     # runs no Spark job, but pyspark converts the returned array one
@@ -154,9 +154,8 @@ def run_job(
         # can be transformed or written, and every listed file is
         # reported (the reference reports corrupt files; it does not die
         # on them).
-        if db is not None:
-            register_etl_output(spark, db, data_path, ts_df.schema, [],
-                                **_catalog_names(job))
+        register_etl_output(spark, db, data_path, ts_df.schema, [],
+                            **_catalog_names(job))
         return JobResult(
             job_name=job.job_name, data_path=data_path, metadata_files=[],
             data_files_listed=len(listed_files), data_files_written=0,
@@ -218,9 +217,8 @@ def run_job(
                 pass
         if declared != 0:
             missing.append(f)
-    if db is not None:
-        register_etl_output(spark, db, data_path, hourly.schema, written,
-                            **_catalog_names(job))
+    register_etl_output(spark, db, data_path, hourly.schema, written,
+                        **_catalog_names(job))
     return JobResult(
         job_name=job.job_name,
         data_path=data_path,
@@ -245,19 +243,18 @@ def copy_metadata(
     job: JobConfig,
     output_root: str,
     run_ts: str,
-    db: str | None = None,
+    db: str,
 ) -> tuple[int, list[str]]:
     """The metadata chain of ``job``: resolve its metadata files,
     byte-copy the existing ones (S2/S7) and register them as its
-    metadata table in ``db`` (none when ``db`` is None). Returns (files
-    resolved to an existing source, paths of the copies)."""
+    metadata table in ``db``. Returns (files resolved to an existing
+    source, paths of the copies)."""
     meta_srcs = [p for p in paths.resolve_metadata_paths(job) if fs.exists(p)]
     copied = sinks.bypass_metadata(meta_srcs, output_root, run_ts, job)
-    if db is not None:
-        register_metadata_copy(
-            spark, db, sinks.metadata_output_path(output_root, run_ts, job), copied,
-            metadata_table_prefix=f"metadata_{job.job_name}".lower(),
-        )
+    register_metadata_copy(
+        spark, db, sinks.metadata_output_path(output_root, run_ts, job), copied,
+        metadata_table_prefix=f"metadata_{job.job_name}".lower(),
+    )
     return len(meta_srcs), copied
 
 
@@ -265,13 +262,13 @@ def run_etl(
     spark: SparkSession,
     config: ETLConfig,
     output_root: str | None = None,
-    register_catalog: bool = True,
     db: str = "nbi_analytics",
 ) -> RunSummary:
     """EP1 end-to-end: each job runs as two chains, its data chain
     (``run_job``, then its data table and views) and its metadata chain
-    (``copy_metadata``, then its metadata table) — the reference's
-    on-success crawler trigger (O7) becomes each chain's last step. All
+    (``copy_metadata``, then its metadata table), all registered in the
+    database ``db`` (created if missing) — the reference's on-success
+    crawler trigger (O7) becomes each chain's last step. All
     chains run concurrently on a thread pool of
     ``min(2 × jobs, defaultParallelism)`` threads. Output paths and
     catalog names are disjoint per chain, so chains share nothing; job
@@ -293,9 +290,7 @@ def run_etl(
     t0 = time.perf_counter()
     run_ts = run_timestamp()
     output_root = output_root or config.output_dir
-    catalog_db = db if register_catalog else None
-    if register_catalog:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
 
     workers = max(1, min(2 * len(names), spark.sparkContext.defaultParallelism))
     with ThreadPoolExecutor(max_workers=workers) as pool:
@@ -304,7 +299,7 @@ def run_etl(
             # wrapped per chain, so each chain gets its own copy of the
             # caller's properties: Spark SQL sets its execution id in them
             return pool.submit(inheritable_thread_target(spark)(chain),
-                               spark, *args, output_root, run_ts, catalog_db)
+                               spark, *args, output_root, run_ts, db)
 
         chains = [(submit(run_job, config, job), submit(copy_metadata, job))
                   for job in config.job_specific]

@@ -319,7 +319,13 @@ PIN: frozenset[str] = frozenset({
 # slot left this round and keep their pytest DuckDB oracles:
 # part_copurchase_bfs / _sssp and corpus_curate read 10,
 # customer_entity_resolution reads 11; dedup_components and
-# corpus_near_dedup read 7 and export with the cohort. The budget:
+# corpus_near_dedup read 7 and export with the cohort.
+# connected_components also checkpoints its projected pairs once, so
+# its returned node set no longer re-runs the caller's pair generation;
+# the three specs on it (dedup_components, corpus_near_dedup,
+# corpus_incremental_dedup) already export this round, so the change
+# costs no slot; customer_entity_resolution (reads 11) keeps its pytest
+# DuckDB oracle. The budget:
 # PIN(3) + 3 TOUCH outside the cohort + the 43-spec age-5 cohort + 1
 # fill = 50.
 TOUCH: frozenset[str] = frozenset({

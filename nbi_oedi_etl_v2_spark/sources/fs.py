@@ -79,15 +79,15 @@ def list_dirs(path: str) -> list[str]:
     )
 
 
-def is_data_file(path: str, suffix: str = ".parquet") -> bool:
-    """Whether ``path`` names a data file: it ends with ``suffix`` and
+def is_data_file(path: str) -> bool:
+    """Whether ``path`` names a data file: it ends with ``.parquet`` and
     its name is not a hidden/commit file (``_SUCCESS``, dotfiles),
     which Spark's own listing skips too."""
     name = path.rstrip("/").rsplit("/", 1)[-1]
-    return name.endswith(suffix) and not name.startswith(("_", "."))
+    return name.endswith(".parquet") and not name.startswith(("_", "."))
 
 
-def iter_files(path: str, suffix: str = ".parquet"):
+def iter_files(path: str):
     """The data files under ``path`` (see ``is_data_file``), in the file
     system's listing order (lexicographic on S3 and HDFS), listed as
     they are consumed: a caller that stops at the first file lists one
@@ -98,14 +98,14 @@ def iter_files(path: str, suffix: str = ".parquet"):
     it = fs.listFiles(jpath, True)
     while it.hasNext():
         p = it.next().getPath()
-        if is_data_file(p.getName(), suffix):
+        if is_data_file(p.getName()):
             yield normalize_uri(p.toString())
 
 
-def list_files_recursive(path: str, suffix: str = ".parquet") -> list[str]:
+def list_files_recursive(path: str) -> list[str]:
     """All data files under ``path``, sorted — the analogue of the
     reference's paginated list_objects_v2 (indexer.py:8-45)."""
-    return sorted(iter_files(path, suffix))
+    return sorted(iter_files(path))
 
 
 def _footer(path: str, row_groups: bool):

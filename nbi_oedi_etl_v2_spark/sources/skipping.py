@@ -107,7 +107,6 @@ def build_skipping_index(
     path: str,
     cols: list[str],
     bloom_cols: list[str] | None = None,
-    bloom_bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """One (file, n_rows, {col}_min, {col}_max …) row per data file,
     plus — for each ``bloom_cols`` entry — a per-file Bloom bitset
@@ -116,15 +115,14 @@ def build_skipping_index(
     Zone maps prune RANGE predicates but are useless for equality on
     high-cardinality unsorted columns (every file's [min, max] spans
     the whole domain). The Bloom columns close that gap: k=2 seeded
-    ``xxhash64`` positions per value, OR-folded into ``bloom_bits``
+    ``xxhash64`` positions per value, OR-folded into ``BLOOM_BITS``
     bits per file with plain ``bit_or`` aggregates — the same
     manifest-level filter Delta/Iceberg attach to data files, built
     from Spark aggregates. False positives only cost an unpruned
     file; false negatives are impossible for non-null values (NULL
     hashes to a constant-seed bit — harmless, and an equality
-    predicate never matches NULL anyway). At the default 4096 bits a
-    file with 1k distinct values has ~2% FPR; size ``bloom_bits`` to
-    the expected per-file cardinality.
+    predicate never matches NULL anyway). At 4096 bits a file with 1k
+    distinct values has ~2% FPR.
 
     Uses the ``_metadata.file_path`` hidden column (constant per
     split, so the aggregate is map-side trivial) and reads ONLY the
@@ -133,17 +131,15 @@ def build_skipping_index(
     """
     if not cols and not bloom_cols:
         raise ValueError("need at least one column to index")
-    if bloom_bits % 64:
-        raise ValueError("bloom_bits must be a multiple of 64")
     bloom_cols = bloom_cols or []
     df = spark.read.parquet(path)
     aggs = [F.count("*").alias("n_rows")]
     for c in cols:
         aggs.append(F.min(F.col(f"`{c}`")).alias(f"{c}_min"))
         aggs.append(F.max(F.col(f"`{c}`")).alias(f"{c}_max"))
-    n_longs = bloom_bits // 64
+    n_longs = BLOOM_BITS // 64
     for c in bloom_cols:
-        for pos_i, pos in enumerate(_bloom_positions(F.col(f"`{c}`"), bloom_bits)):
+        for pos_i, pos in enumerate(_bloom_positions(F.col(f"`{c}`"), BLOOM_BITS)):
             word, bit = (pos / 64).cast("int"), pos % 64
             for j in range(n_longs):
                 contrib = F.when(

@@ -10,7 +10,7 @@ Design:
   are source-agnostic. Only the stateful ones need streaming twins.
 - **Hourly downsample** (``hourly_downsample_stream``): the batch
   operator's exact ``{col}_{fn}`` schema (shared agg builder,
-  operators/downsample.py), grouped by ``window(ts, granularity)``
+  operators/downsample.py), grouped by ``window(ts, "1 hour")``
   instead of ``date_trunc`` so watermark-based state eviction works in
   append mode. The timestamp is floored *before* windowing, making
   ``ts_min`` equal the window start — bit-identical to the batch path.
@@ -67,29 +67,25 @@ def hourly_downsample_stream(
     df: DataFrame,
     timestamp_col: str = "ts",
     entity_col: str | None = "user_id",
-    granularity: str = "hour",
-    watermark: str = "2 hours",
-    decimal_places: int = DECIMAL_PLACES,
 ) -> DataFrame:
     """Streaming twin of ``operators.downsample.downsample``: same
     ``{col}_{fn}`` output schema, windowed + watermarked grouping.
 
-    Late data within ``watermark`` is merged into its hour; anything
+    Late data within the 2-hour watermark is merged into its hour; anything
     later is dropped and the hour's state evicted (append mode emits
     each hour exactly once, after the watermark passes it).
     """
-    window_len = {"hour": "1 hour", "day": "1 day", "minute": "1 minute"}[granularity]
     floored = df.withColumn(
-        timestamp_col, F.date_trunc(granularity, F.col(f"`{timestamp_col}`"))
-    ).withWatermark(timestamp_col, watermark)
+        timestamp_col, F.date_trunc("hour", F.col(f"`{timestamp_col}`"))
+    ).withWatermark(timestamp_col, "2 hours")
 
     keys = [timestamp_col]
     if entity_col is not None and entity_col in df.columns:
         keys.append(entity_col)
-    aggs, ordered = classify_aggregates(df, keys, [], decimal_places)
+    aggs, ordered = classify_aggregates(df, keys, [], DECIMAL_PLACES)
 
     out = floored.groupBy(
-        F.window(F.col(f"`{timestamp_col}`"), window_len),
+        F.window(F.col(f"`{timestamp_col}`"), "1 hour"),
         *[F.col(f"`{k}`") for k in keys if k != timestamp_col],
     ).agg(*aggs)
     # the floored ts is constant within its window → window.start
@@ -266,12 +262,13 @@ def ewma_stream(
     )
 
 
-def ewma_batch(df: DataFrame, alpha: float = 0.3, k: float = 0.8) -> DataFrame:
-    """Batch twin of :func:`ewma_stream` (applyInPandas, fresh state
-    per key) — the equality oracle for the stateful streaming path."""
+def ewma_batch(df: DataFrame) -> DataFrame:
+    """Batch twin of :func:`ewma_stream` at its defaults (alpha 0.3,
+    k 0.8; applyInPandas, fresh state per key) — the equality oracle
+    for the stateful streaming path."""
 
     def fold(pdf):
-        out, _, _ = _ewma_fold(pdf, alpha, k, None, 0)
+        out, _, _ = _ewma_fold(pdf, 0.3, 0.8, None, 0)
         return out
 
     return (
@@ -432,19 +429,17 @@ def _cusum_output_schema(df: DataFrame, key_cols: list[str]) -> str:
     )
 
 
-def _cusum_fold(pdf, target, drift, threshold, s_hi, s_lo,
-                key_cols=("event_type",)):
+def _cusum_fold(pdf, s_hi, s_lo, key_cols=("event_type",)):
     """Shared sequential fold (event-time order): the Page recurrence
     on DECIMAL(38,10)-quantized values — the bit-exact twin of the
-    batch closed form. Returns (out_pdf, s_hi, s_lo)."""
+    batch closed form (target 50, drift 5, threshold 500). Returns
+    (out_pdf, s_hi, s_lo)."""
     from decimal import Decimal
 
     import pandas as pd
 
     q = Decimal("1e-10")
-    t_plus = Decimal(target) + Decimal(drift)
-    t_minus = Decimal(target) - Decimal(drift)
-    thr = Decimal(threshold)
+    t_plus, t_minus, thr = Decimal(55), Decimal(45), Decimal(500)
     pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
     hi_out, lo_out, al_out = [], [], []
     for v in pdf["value"]:
@@ -468,14 +463,7 @@ def _cusum_fold(pdf, target, drift, threshold, s_hi, s_lo,
     return out, s_hi, s_lo
 
 
-def cusum_stream(
-    df: DataFrame,
-    target: str = "50",
-    drift: str = "5",
-    threshold: str = "500",
-    watermark: str = "2 hours",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
+def cusum_stream(df: DataFrame) -> DataFrame:
     """Streaming two-sided CUSUM change-point alerts per key —
     the monitoring deployment of the batch detector: S carried across
     micro-batches in a per-key GroupState (two exact decimals — the
@@ -484,21 +472,16 @@ def cusum_stream(
     :func:`ewma_stream` (a series silent past the horizon restarts
     cold — the right semantics for a drift monitor). The alert flag
     compares EXACT decimals (emitting doubles first would round a
-    500.0000000001 across the threshold).
-
-    ``key_cols`` (default ``["event_type"]``) accepts a COMPOSITE key
-    (VERDICT r7 item 6): state parallelism is the key cardinality, so
-    a deployment monitoring k metrics across s series keys on
-    (series, metric) for s·k-way parallelism — same contract as the
-    batch operator (analytics.cusum_scores).
+    500.0000000001 across the threshold). Keyed on ``event_type``,
+    target 50, drift 5, threshold 500, a 2-hour watermark.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from decimal import Decimal
 
-    keys = list(key_cols or ["event_type"])
+    keys = ["event_type"]
     schema = _cusum_output_schema(df, keys)
-    ttl_ms = _duration_ms(watermark)
+    ttl_ms = _duration_ms("2 hours")
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -518,9 +501,7 @@ def cusum_stream(
             s_hi = s_lo = Decimal(0)
             prev_last = 0
         batch = pd.concat(list(pdfs), ignore_index=True)
-        out, s_hi, s_lo = _cusum_fold(
-            batch, target, drift, threshold, s_hi, s_lo, key_cols=keys
-        )
+        out, s_hi, s_lo = _cusum_fold(batch, s_hi, s_lo, key_cols=keys)
         last_ms = max(
             int(prev_last), int(batch["ts"].max().value // 1_000_000)
         )
@@ -530,7 +511,7 @@ def cusum_stream(
         )
         yield out
 
-    wm = df.withWatermark("ts", watermark)
+    wm = df.withWatermark("ts", "2 hours")
     return (
         wm.select(*keys, "ts", "event_id", "value")
         .groupBy(*keys)
@@ -544,27 +525,19 @@ def cusum_stream(
     )
 
 
-def cusum_batch(
-    df: DataFrame,
-    target: str = "50",
-    drift: str = "5",
-    threshold: str = "500",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
+def cusum_batch(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
     """Batch twin of :func:`cusum_stream` (applyInPandas, fresh state
-    per key) — the equality bridge to the closed-form batch operator
-    and the streaming path's oracle. Takes the same composite
-    ``key_cols`` as the stream."""
+    per key; target 50, drift 5, threshold 500) — the equality bridge
+    to the closed-form batch operator and the streaming path's oracle.
+    ``key_cols`` (default ``["event_type"]``, the stream's key) takes
+    a composite key, as the closed form (analytics.cusum_scores) does."""
     from decimal import Decimal
 
     keys = list(key_cols or ["event_type"])
     schema = _cusum_output_schema(df, keys)
 
     def fold(pdf):
-        out, _, _ = _cusum_fold(
-            pdf, target, drift, threshold, Decimal(0), Decimal(0),
-            key_cols=keys,
-        )
+        out, _, _ = _cusum_fold(pdf, Decimal(0), Decimal(0), key_cols=keys)
         return out
 
     return (

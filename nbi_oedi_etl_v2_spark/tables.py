@@ -43,10 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in _nano_timestamp_cols(path):
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view so ``spark.sql`` queries run
-    against the same names the DuckDB oracle uses."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .functions import SUM_DECIMAL, davg, davg_sql, dsum, dsum_sql
 from .operators.downsample import downsample
-from .tables import load_table, register_views
+from .tables import load_table
 
 
 @dataclass

@@ -6970,12 +6970,13 @@ def q_corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ndcg_oracle_sql(cutoff: str, k: int = 3) -> str:
-    """DuckDB twin of stats.ndcg_backtest on events: same pivoted
-    integer relevances, same literal discounts, same fixed fold
-    order (0.0 + r1*d1 + r2*d2 + ...)."""
+def _ndcg_oracle_sql(cutoff: str) -> str:
+    """DuckDB twin of stats.ndcg_backtest on events at k = 3: same
+    pivoted integer relevances, same literal discounts, same fixed
+    fold order (0.0 + r1*d1 + r2*d2 + ...)."""
     from .operators.stats import ndcg_discounts
 
+    k = 3
     disc = ndcg_discounts(k)
     r_cols = ", ".join(
         f"CAST(SUM(CASE WHEN rank = {i + 1} THEN rel ELSE 0 END) AS BIGINT)"

@@ -12,7 +12,8 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="nbi-oedi-etl-v2-spark-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="nbi-oedi-etl-v2-spark-tests",
+                      extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
     spark.stop()
 

@@ -29,14 +29,6 @@ def test_inverted_index_postings(spark):
     assert rows["gamma"]["postings"] == "2:1"
 
 
-def test_inverted_index_stoplist_cap(spark):
-    docs = _docs(spark, [(1, "the a"), (2, "the b"), (3, "the c")])
-    out = idx.inverted_index(docs, "doc_id", "text", max_doc_freq=2)
-    toks = {r["tok"] for r in out.collect()}
-    assert "the" not in toks  # df=3 > cap
-    assert {"a", "b", "c"} <= toks
-
-
 def test_bm25_ranks_term_rich_doc_first(spark):
     docs = _docs(
         spark,
@@ -169,7 +161,7 @@ def test_skyline_strict_dominance_ties_survive(spark):
         (7, 5.0, 7),    # front (highest y)
     ]
     df = spark.createDataFrame(rows, "id int, x double, y int")
-    out = analytics.skyline_2d(df, "x", "y", num_buckets=2)
+    out = analytics.skyline_2d(df, "x", "y")
     assert sorted(r.id for r in out.collect()) == [2, 3, 4, 5, 7]
 
 

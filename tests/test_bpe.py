@@ -119,7 +119,7 @@ def test_bpe_exact_batched_identical_on_chaining_text(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = [
         tuple(r)
-        for r in bpe.learn_bpe(spark, df, "text", 24, batch_size=16)
+        for r in bpe.learn_bpe(spark, df, "text", 24)
         .collect()
     ]
     assert got == _ref_bpe(texts, 24)
@@ -148,9 +148,7 @@ def test_bpe_batched_64_merges_in_8_rounds_identical(spark):
         "_accept_batch",
         lambda: [
             tuple(r)
-            for r in bpe.learn_bpe(
-                spark, df, "text", 54, batch_size=16
-            ).collect()
+            for r in bpe.learn_bpe(spark, df, "text", 54).collect()
         ],
     )
     assert got == _ref_bpe(texts, 54)
@@ -158,9 +156,7 @@ def test_bpe_batched_64_merges_in_8_rounds_identical(spark):
     # fast mode coincides where the distribution is conflict-free
     fast = [
         tuple(r)
-        for r in bpe.learn_bpe(
-            spark, df, "text", 54, batch_size=16, exact=False
-        ).collect()
+        for r in bpe.learn_bpe(spark, df, "text", 54, exact=False).collect()
     ]
     assert fast == got
 
@@ -186,9 +182,7 @@ def test_bpe_fast_mode_round_bound_on_chaining_text(spark):
         "_accept_batch_fast",
         lambda: [
             tuple(r)
-            for r in bpe.learn_bpe(
-                spark, df, "text", 32, batch_size=8, exact=False
-            ).collect()
+            for r in bpe.learn_bpe(spark, df, "text", 32, exact=False).collect()
         ],
     )
     assert len(got) == 32
@@ -197,9 +191,7 @@ def test_bpe_fast_mode_round_bound_on_chaining_text(spark):
     # deterministic across runs
     again = [
         tuple(r)
-        for r in bpe.learn_bpe(
-            spark, df, "text", 32, batch_size=8, exact=False
-        ).collect()
+        for r in bpe.learn_bpe(spark, df, "text", 32, exact=False).collect()
     ]
     assert again == got
 

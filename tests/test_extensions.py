@@ -107,7 +107,7 @@ def test_pii_redaction_on_planted_pii(spark):
 
 
 def test_minhash_signature_shape(docs):
-    sig = dedup.minhash_signatures(docs, "doc_id", "text", 3, 64).first()
+    sig = dedup.minhash_signatures(docs, "doc_id", "text", 3).first()
     assert len(sig["sig"]) == 64
 
 
@@ -280,8 +280,10 @@ def test_multimodal_metadata_only_scan_prunes_payload(docs):
 
 def test_frame_sample_plan(spark, docs):
     # non-BMFF payloads fall back to default_frames (old contract)
-    media = multimodal.attach_binary_payload(docs, "doc_id", "text", media_type="video")
-    plan_df = multimodal.frame_sample_plan(media, every_n=10)
+    media = multimodal.attach_binary_payload(docs, "doc_id", "text").withColumn(
+        "media_type", F.lit("video")
+    )
+    plan_df = multimodal.frame_sample_plan(media)
     first = plan_df.where(F.col("media_id") == plan_df.select(F.min("media_id")).first()[0])
     idxs = sorted(r["frame_index"] for r in first.collect())
     assert idxs == list(range(0, 101, 10))
@@ -300,10 +302,9 @@ def test_quantile_sketch_rank_bound_and_merge(spark):
         (i % 8, rng.gauss(100 * (1 + i % 3), 25)) for i in range(20000)
     ]
     df = spark.createDataFrame(rows, "g int, v double")
-    sk = sketches.quantile_sketch_build(df, ["g"], "v", max_centroids=64)
-    merged = sketches.quantile_sketch_merge(
-        sk.withColumn("all", F.lit(1)), ["all"], max_centroids=64
-    )
+    sk = sketches.quantile_sketch_build(df, ["g"], "v")
+    merged = sketches.quantile_sketch_merge(sk.withColumn("all", F.lit(1)), ["all"])
+    c = sketches.MAX_CENTROIDS
     for q in (0.1, 0.5, 0.9):
         est_rows = sk.select(
             "g", sketches.quantile_sketch_value(F.col("sketch"), q).alias("e")
@@ -314,13 +315,13 @@ def test_quantile_sketch_rank_bound_and_merge(spark):
         for r in est_rows:
             vals = sorted(per_g[r["g"]])
             rank = sum(1 for v in vals if v <= r["e"]) / len(vals)
-            assert abs(rank - q) <= 2 / 64 + 0.01, (r["g"], q, rank)
+            assert abs(rank - q) <= 2 / c + 0.01, (r["g"], q, rank)
         m = merged.select(
             sketches.quantile_sketch_value(F.col("sketch"), q).alias("e")
         ).first()["e"]
         allv = sorted(v for _, v in rows)
         rank = sum(1 for v in allv if v <= m) / len(allv)
-        assert abs(rank - q) <= 3 / 64 + 0.01, (q, rank)
+        assert abs(rank - q) <= 3 / c + 0.01, (q, rank)
     # all-null group → empty sketch, NULL estimate
     nulls = spark.createDataFrame(
         [(1, None), (1, None)], "g int, v double"
@@ -477,14 +478,14 @@ def test_mp4_box_walk_roundtrip(spark):
 
 def test_frame_sample_plan_real_counts(spark):
     """MP4 payloads drive the sampling plan from the track's real
-    stts sample-count sum, not a hardcoded frame count; non-parsing
-    payloads are excluded when default_frames=None."""
+    stts sample-count sum, not a hardcoded frame count; a non-parsing
+    payload falls back to 101 frames."""
     rows = [
         (s, bytearray(multimodal.synth_mp4_payload(s)), "video", f"s://{s}")
         for s in range(8)
     ] + [(100, bytearray(b"not mp4"), "video", "x")]
     df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    plan = multimodal.frame_sample_plan(df, every_n=10, default_frames=None)
+    plan = multimodal.frame_sample_plan(df)
     got = {
         r["media_id"]: r["n"]
         for r in plan.groupBy("media_id").agg(F.count("*").alias("n")).collect()
@@ -492,7 +493,7 @@ def test_frame_sample_plan_real_counts(spark):
     for s in range(8):
         exp_frames = sum(10 + (s + i * 7) % 90 for i in range(1 + s % 3))
         assert got[s] == (exp_frames + 9) // 10
-    assert 100 not in got
+    assert got[100] == 11  # frames 0, 10, …, 100 of the 101-frame fallback
 
 
 def test_approx_distinct_within_rsd_bound(spark, sf_dir):
@@ -1085,9 +1086,9 @@ def test_cm_lookup_absent_key_is_exact_zero(spark):
     from nbi_oedi_etl_v2_spark.operators import frequency
 
     df = spark.range(100).select(F.col("id").alias("k"))
-    sk = frequency.cm_build(df, "k", [], depth=4, width=2048)
+    sk = frequency.cm_build(df, "k", [])
     probes = spark.createDataFrame([(10**12 + 7,)], "k long")
-    out = frequency.cm_lookup(sk, probes, "k", [], depth=4, width=2048)
+    out = frequency.cm_lookup(sk, probes, "k", [])
     rows = out.collect()
     # every probe emits exactly one row per sketch group — even one
     # hitting zero populated cells (ADVICE r5: the inner join used to
@@ -1097,8 +1098,8 @@ def test_cm_lookup_absent_key_is_exact_zero(spark):
     # overwhelmingly unpopulated in at least one depth; if all four
     # collide the estimate is still a valid upper bound
     assert rows[0]["est_cnt"] >= 0
-    sparse = frequency.cm_build(df.limit(3), "k", [], depth=4, width=2048)
-    out2 = frequency.cm_lookup(sparse, probes, "k", [], depth=4, width=2048)
+    sparse = frequency.cm_build(df.limit(3), "k", [])
+    out2 = frequency.cm_lookup(sparse, probes, "k", [])
     r2 = out2.collect()
     assert len(r2) == 1 and r2[0]["est_cnt"] == 0
 
@@ -1117,19 +1118,22 @@ def test_cm_null_keys_excluded(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_kmv_merge_is_bit_identical_to_oneshot_build(spark, sf_dir):
+def test_kmv_merge_is_bit_identical_to_oneshot_build(spark):
     # the k smallest distinct hashes of a union are exactly the k
     # smallest of the parts' k-smallest -> rollup is LOSSLESS and
-    # deterministic, saturated or not
+    # deterministic; here every (type, day) part and every type holds
+    # more than KMV_K distinct users, so every sketch is saturated
     from nbi_oedi_etl_v2_spark.operators import sketches
 
-    ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    merged = sketches.kmv_rollup(
-        sketches.kmv_build(ev, "user_id", ["event_type", "day"], k=16),
-        ["event_type"],
-        k=16,
+    ev = spark.range(20_000).select(
+        (F.col("id") % 3).alias("event_type"),
+        (F.col("id") % 7).alias("day"),
+        F.col("id").alias("user_id"),
     )
-    oneshot = sketches.kmv_build(ev, "user_id", ["event_type"], k=16)
+    merged = sketches.kmv_rollup(
+        sketches.kmv_build(ev, "user_id", ["event_type", "day"]), ["event_type"]
+    )
+    oneshot = sketches.kmv_build(ev, "user_id", ["event_type"])
     j = merged.join(
         oneshot.withColumnRenamed("kmv", "kmv2"), "event_type"
     ).select((F.col("kmv") == F.col("kmv2")).alias("same"))
@@ -1148,7 +1152,7 @@ def test_kmv_estimates_saturated_regime(spark):
     b = spark.range(n - overlap, 2 * n - overlap).select(
         F.lit("b").alias("g"), F.col("id").alias("u")
     )
-    sk = sketches.kmv_build(a.unionByName(b), "u", ["g"], k=512)
+    sk = sketches.kmv_build(a.unionByName(b), "u", ["g"])
     wide = (
         sk.where(F.col("g") == "a")
         .select(F.col("kmv").alias("ka"))
@@ -1170,7 +1174,7 @@ def test_kmv_unsaturated_is_exact(spark):
 
     a = spark.range(100).select(F.lit("a").alias("g"), F.col("id").alias("u"))
     b = spark.range(60, 160).select(F.lit("b").alias("g"), F.col("id").alias("u"))
-    sk = sketches.kmv_build(a.unionByName(b), "u", ["g"], k=512)
+    sk = sketches.kmv_build(a.unionByName(b), "u", ["g"])
     r = (
         sk.where(F.col("g") == "a")
         .select(F.col("kmv").alias("ka"))
@@ -1381,15 +1385,10 @@ def test_pq_tiny_corpus_smaller_than_codebook(spark):
 
     rows = [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(6)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = similarity.pq_cosine_topk(
-        emb, emb, "vec_id", "embedding", k=2, m=4, ksub=16, rerank=6
-    ).collect()
+    got = similarity.pq_cosine_topk(emb, emb, "vec_id", "embedding", k=2).collect()
     assert len(got) == 12  # 6 queries x top-2
     assert all(r["cosine"] is not None for r in got)
-    got2 = similarity.ivfpq_cosine_topk(
-        emb, emb, "vec_id", "embedding", k=2, nlist=2, nprobe=2,
-        m=4, ksub=16, rerank=6,
-    ).collect()
+    got2 = similarity.ivfpq_cosine_topk(emb, emb, "vec_id", "embedding", k=2).collect()
     assert got2 and all(r["cosine"] is not None for r in got2)
 
 
@@ -1444,12 +1443,12 @@ def test_hot_shingle_guard_stars_the_mega_cluster(spark):
 def test_hot_shingle_accounting_counts_the_cap(spark):
     corpus = _boilerplate_corpus(spark)
     acct = dedup.hot_shingle_accounting(
-        corpus, "doc_id", "text", 3, 0.6, hot_shingle_limit=3
+        corpus, "doc_id", "text", hot_shingle_limit=3
     ).first()
     assert acct.max_df == 6           # the boilerplate cluster
     assert acct.n_hot_shingles >= 1   # its prefix shingles fired
     assert acct.n_hot_occurrences >= 6
     clean = dedup.hot_shingle_accounting(
-        corpus, "doc_id", "text", 3, 0.6, hot_shingle_limit=1000
+        corpus, "doc_id", "text", hot_shingle_limit=1000
     ).first()
     assert clean.n_hot_shingles == 0 and clean.n_hot_occurrences == 0

@@ -259,6 +259,20 @@ def _cc(spark):
     return curation.connected_components(pairs)
 
 
+def _cc_shuffled(spark):
+    # the same graph, its pairs out of two aggregates and a join: the
+    # pairs are generated once, not again for the returned node set
+    from nbi_oedi_etl_v2_spark.operators import curation
+
+    raw = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
+        "id_a long, id_b long",
+    )
+    deg = raw.groupBy("id_a").agg(F.count(F.lit(1)).alias("deg"))
+    pairs = raw.groupBy("id_a", "id_b").count().join(deg, "id_a")
+    return curation.connected_components(pairs.select("id_a", "id_b"))
+
+
 def _bfs_chain(spark):
     chain = _edges_df(spark, [(i, i + 1) for i in range(1, 8)])
     src = spark.createDataFrame([(1,)], "node long")
@@ -267,8 +281,10 @@ def _bfs_chain(spark):
 
 @pytest.mark.parametrize(
     "run, jobs",
-    [(_kcore, 10), (_bfs_chain, 26), (_sssp, 16), (_cc, 36), (_labelprop, 15)],
-    ids=["kcore", "bfs", "sssp", "connected_components", "labelprop"],
+    [(_kcore, 10), (_bfs_chain, 26), (_sssp, 16), (_cc, 37), (_cc_shuffled, 40),
+     (_labelprop, 15)],
+    ids=["kcore", "bfs", "sssp", "connected_components",
+         "connected_components_shuffled_pairs", "labelprop"],
 )
 def test_iterative_operator_job_count(spark, run, jobs):
     # Spark jobs per call, the final collect included, on the hand

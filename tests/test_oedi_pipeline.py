@@ -209,11 +209,11 @@ def test_concurrent_jobs_match_sequential(spark, etl_config, lake, tmp_path):
     jobs = [etl_config.job_specific[0], replace(etl_config.job_specific[0], state="CA")]
     together = run_etl(
         spark, replace(etl_config, job_specific=jobs),
-        output_root=str(tmp_path / "concurrent"), register_catalog=False,
+        output_root=str(tmp_path / "concurrent"), db="concurrent_together",
     ).jobs
     alone = [
         run_etl(spark, replace(etl_config, job_specific=[job]),
-                output_root=str(tmp_path / job.state), register_catalog=False).jobs[0]
+                output_root=str(tmp_path / job.state), db=f"concurrent_{job.state}").jobs[0]
         for job in jobs
     ]
     assert [j.job_name for j in together] == [j.job_name for j in jobs]
@@ -281,7 +281,7 @@ def test_corrupt_file_reported_not_fatal(spark, tmp_path):
     with open(victim, "wb") as f:
         f.write(blob[: len(blob) // 3])  # destroys the footer
 
-    summary = run_etl(spark, config, register_catalog=False)
+    summary = run_etl(spark, config, db="corrupt_reported")
     job = summary.jobs[0]
     assert job.data_files_listed == 8
     assert job.data_files_read == 7
@@ -302,7 +302,7 @@ def test_pipeline_end_to_end_with_file_uris(spark, tmp_path):
     config = _make_config(str(tmp_path), scheme="file:")
     assert config.src_bucket.startswith("file:/")
 
-    summary = run_etl(spark, config, register_catalog=False)
+    summary = run_etl(spark, config, db="file_uris")
     job = summary.jobs[0]
     assert job.data_files_listed == 8
     assert job.data_files_read == 8
@@ -339,7 +339,7 @@ def test_empty_parquet_file_is_not_a_discrepancy(spark, tmp_path):
     empty = os.path.join(os.path.dirname(files[0]), "part-empty.parquet")
     pq.write_table(pa.table({f.name: pa.array([], f.type) for f in schema}), empty)
 
-    summary = run_etl(spark, config, register_catalog=False)
+    summary = run_etl(spark, config, db="empty_parquet")
     job = summary.jobs[0]
     assert job.data_files_listed == 9  # 8 generated + the empty one
     assert job.missing_data_files == []  # empty ≠ corrupt
@@ -368,7 +368,7 @@ def test_missing_upgrade_partition_is_not_an_error(spark, tmp_path):
     config = _make_config(str(tmp_path))
     assert config.job_specific[0].upgrades == ["0", "1"]
 
-    job = run_etl(spark, config, register_catalog=False).jobs[0]
+    job = run_etl(spark, config, db="missing_upgrade").jobs[0]
     assert job.data_files_listed == 4
     assert job.data_files_read == 4
     assert job.missing_data_files == []
@@ -387,7 +387,7 @@ def test_job_without_any_partition_lists_nothing(spark, tmp_path):
     config = _make_config(str(tmp_path))
     config = replace(config, job_specific=[replace(config.job_specific[0], state="NY")])
 
-    job = run_etl(spark, config, register_catalog=False).jobs[0]
+    job = run_etl(spark, config, db="no_partition").jobs[0]
     assert job.data_files_listed == 0
     assert job.data_files_read == 0
     assert job.missing_data_files == []
@@ -402,7 +402,7 @@ def test_job_of_empty_files_reports_zero_rows(spark, tmp_path):
     for f in _partition_files(info):
         _zero_rows(f)
 
-    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    job = run_etl(spark, _make_config(str(tmp_path)), db="empty_files").jobs[0]
     assert job.data_files_listed == 4
     assert job.data_files_read == 0
     assert job.missing_data_files == []  # empty ≠ corrupt
@@ -415,7 +415,7 @@ def test_stray_non_parquet_file_leaves_counts_unchanged(spark, tmp_path):
     with open(os.path.join(part_dir, "notes.txt"), "w") as fh:
         fh.write("not a data file")
 
-    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    job = run_etl(spark, _make_config(str(tmp_path)), db="stray_file").jobs[0]
     assert job.data_files_listed == 8
     assert job.data_files_read == 8
     assert job.missing_data_files == []
@@ -557,7 +557,7 @@ def test_page_corrupt_file_is_reported(spark, tmp_path):
     victim = _partition_files(info)[0]
     _corrupt_pages(victim)
 
-    job = run_etl(spark, _make_config(str(tmp_path)), register_catalog=False).jobs[0]
+    job = run_etl(spark, _make_config(str(tmp_path)), db="page_corrupt").jobs[0]
     assert job.data_files_listed == 8
     assert job.data_files_read == 7
     assert [os.path.basename(f) for f in job.missing_data_files] == [
@@ -569,12 +569,13 @@ def _zero_bytes(path: str) -> None:
     open(path, "wb").close()
 
 
-def _run_one_job(spark, root: str):
+def _run_one_job(spark, root: str, db: str):
     from nbi_oedi_etl_v2_spark.pipeline import run_job
 
     config = _make_config(root)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
     return run_job(spark, config, config.job_specific[0], os.path.join(root, "out"),
-                   "20240101T000000Z")
+                   "20240101T000000Z", db)
 
 
 @pytest.mark.parametrize("damage, declared, reported", [
@@ -600,7 +601,7 @@ def test_unread_file_verdict(spark, tmp_path, damage, declared, reported):
     else:
         assert fsmod.parquet_row_count(victim) == declared
 
-    job = _run_one_job(spark, str(tmp_path))
+    job = _run_one_job(spark, str(tmp_path), "unread_verdict")
     assert job.data_files_listed == 4
     assert job.data_files_read == 3
     missing = [os.path.basename(f) for f in job.missing_data_files]
@@ -627,7 +628,7 @@ def test_footer_read_retried_once(spark, tmp_path, monkeypatch, failures, report
         return real(path)
 
     monkeypatch.setattr(fsmod, "parquet_row_count", flaky)
-    job = _run_one_job(spark, str(tmp_path))
+    job = _run_one_job(spark, str(tmp_path), "footer_retry")
     assert len(calls) == 2
     assert [os.path.basename(f) for f in job.missing_data_files] == (
         ["part-000.parquet"] if reported else [])

@@ -198,9 +198,9 @@ def test_bloom_never_false_negative(spark, keys):
 
     typed = [(str(k),) for k in keys]
     df = spark.createDataFrame(typed, ["k"])
-    bloom = membership.build_bloom(df, "k", bits=1 << 10)
+    bloom = membership.build_bloom(df, "k")
     misses = (
-        df.select(membership.might_contain(F.col("k"), bloom, 1 << 10).alias("h"))
+        df.select(membership.might_contain(F.col("k"), bloom).alias("h"))
         .where(~F.col("h"))
         .count()
     )

@@ -66,7 +66,7 @@ def test_projection_of_one_hot_recovers_sign_column(spark):
         rows.append((i, v))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = {r.vec_id: [r.p00, r.p01, r.p02] for r in
-           random_projection(df, signs=signs, out_dims=3).collect()}
+           random_projection(df, signs=signs).collect()}
     for i in range(4):
         assert out[i] == [float(signs[j][i]) for j in range(3)]
 
@@ -82,7 +82,7 @@ def test_projection_linearity(spark):
         [(0, a), (1, b), (2, ab)], "vec_id long, embedding array<float>"
     )
     out = {r.vec_id: [r[f"p{j:02d}"] for j in range(4)] for r in
-           random_projection(df, signs=signs, out_dims=4).collect()}
+           random_projection(df, signs=signs).collect()}
     assert out[2] == [x + y for x, y in zip(out[0], out[1])]
 
 

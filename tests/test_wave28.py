@@ -11,7 +11,7 @@ def test_two_level_prefix_matches_python_reference(spark):
         ("b", v, (v * 3) % 4 + 1) for v in range(40)
     ]
     df = spark.createDataFrame(rows, "g string, v long, c long")
-    out = two_level_prefix(df, ["g"], "v", ["c"], range_partitions=8)
+    out = two_level_prefix(df, ["g"], "v", ["c"])
     got = {(r.g, r.v): r.p_c for r in out.collect()}
     for g, n in (("a", 60), ("b", 40)):
         acc = 0
@@ -26,7 +26,7 @@ def test_two_level_prefix_ungrouped_multi_cols(spark):
 
     rows = [(v, v % 3, 1) for v in range(50)]
     df = spark.createDataFrame(rows, "v long, ca long, cb long")
-    out = two_level_prefix(df, [], "v", ["ca", "cb"], range_partitions=8)
+    out = two_level_prefix(df, [], "v", ["ca", "cb"])
     got = sorted((r.v, r.p_ca, r.p_cb) for r in out.collect())
     acc_a = acc_b = 0
     for v in range(50):

@@ -12,32 +12,16 @@ from nbi_oedi_etl_v2_spark.operators import basket, bpe, membership
 
 def test_bloom_no_false_negatives(spark):
     seen = spark.range(0, 500).withColumnRenamed("id", "k")
-    bloom = membership.build_bloom(seen, "k", bits=1 << 12)
-    assert len(bloom) == (1 << 12) // 64
+    bloom = membership.build_bloom(seen, "k")
+    assert len(bloom) == membership.BLOOM_BITS // 64
     hits = (
         seen.select(
-            membership.might_contain(F.col("k"), bloom, 1 << 12).alias("h")
+            membership.might_contain(F.col("k"), bloom).alias("h")
         )
         .where(~F.col("h"))
         .count()
     )
     assert hits == 0  # Bloom filters never miss an inserted key
-
-
-def test_bloom_odd_bits_partial_word(spark):
-    # ADVICE r6: bits not a multiple of 64 must size the trailing
-    # partial word instead of crashing when a bit lands in it
-    seen = spark.range(0, 200).withColumnRenamed("id", "k")
-    bloom = membership.build_bloom(seen, "k", bits=100)
-    assert len(bloom) == 2  # ceil(100 / 64)
-    misses = (
-        seen.select(
-            membership.might_contain(F.col("k"), bloom, 100).alias("h")
-        )
-        .where(~F.col("h"))
-        .count()
-    )
-    assert misses == 0
 
 
 def test_bloom_anti_join_exact(spark):
@@ -74,14 +58,14 @@ def test_bloom_anti_join_null_keys_kept(spark):
 
 
 def test_bloom_fast_path_refutes_most_absent(spark):
-    # with 10 bits/key the sketch should refute the vast majority of
+    # with ≥10 bits/key the sketch should refute the vast majority of
     # absent probes — the map-only fast path actually fires
     seen = spark.range(0, 800).withColumnRenamed("id", "k")
-    bloom = membership.build_bloom(seen, "k", bits=1 << 13)
+    bloom = membership.build_bloom(seen, "k")
     absent = spark.range(10_000, 12_000).withColumnRenamed("id", "k")
     fp = (
         absent.select(
-            membership.might_contain(F.col("k"), bloom, 1 << 13).alias("h")
+            membership.might_contain(F.col("k"), bloom).alias("h")
         )
         .where(F.col("h"))
         .count()
@@ -142,27 +126,28 @@ def test_frequent_pairs_prunes_infrequent(spark):
 
 
 def test_max_basket_caps_pairs(spark):
-    rows = [(1, f"i{j:02d}") for j in range(10)]
+    n = basket.MAX_BASKET + 2
+    rows = [(1, f"i{j:04d}") for j in range(n)]
     df = spark.createDataFrame(rows, "b int, i string")
-    got = basket.frequent_pairs(df, "b", "i", min_support=1, max_basket=3)
-    # sorted-set slice keeps i00..i02 → 3 pairs, not 45
-    assert got.count() == 3
+    got = basket.frequent_pairs(df, "b", "i", min_support=1)
+    # the sorted-set slice keeps the first MAX_BASKET items → C(MAX_BASKET, 2)
+    # pairs, not C(n, 2)
+    assert got.count() == basket.MAX_BASKET * (basket.MAX_BASKET - 1) // 2
 
 
 def test_basket_truncation_accounting(spark):
-    # basket 1 has 10 surviving items (> max_basket=3), basket 2 has 2
-    rows = [(1, f"i{j:02d}") for j in range(10)] + [(2, "i00"), (2, "i01")]
+    # baskets 1 and 2 hold MAX_BASKET + 1 items that all reach support 2;
+    # basket 3 holds 2 of them
+    n = basket.MAX_BASKET + 1
+    rows = [(b, f"i{j:04d}") for b in (1, 2) for j in range(n)]
+    rows += [(3, "i0000"), (3, "i0001")]
     df = spark.createDataFrame(rows, "b int, i string")
-    acct = basket.basket_truncation_accounting(
-        df, "b", "i", min_support=1, max_basket=3
-    ).first()
-    assert acct.n_baskets == 2
-    assert acct.n_truncated == 1
-    assert acct.max_pruned_size == 10
-    # with the cap above every basket, nothing is truncated
-    clean = basket.basket_truncation_accounting(
-        df, "b", "i", min_support=1, max_basket=100
-    ).first()
+    acct = basket.basket_truncation_accounting(df, "b", "i").first()
+    assert acct.n_baskets == 3
+    assert acct.n_truncated == 2
+    assert acct.max_pruned_size == n
+    # with every basket under the cap, nothing is truncated
+    clean = basket.basket_truncation_accounting(_baskets(spark), "b", "i").first()
     assert clean.n_truncated == 0
 
 

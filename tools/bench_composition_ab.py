@@ -50,6 +50,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from bench import _force, warm_up  # noqa: E402
 from nbi_oedi_etl_v2_spark import workload  # noqa: E402
 from nbi_oedi_etl_v2_spark import workload_ext  # noqa: E402,F401
 from nbi_oedi_etl_v2_spark import workload_tpch  # noqa: E402,F401
@@ -97,10 +98,6 @@ R5_REFERENCE: dict[str, float] = {
 }
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _median(run, label: str) -> float:
     out = []
     for _ in range(REPS):
@@ -117,10 +114,7 @@ def main() -> None:
     spark = get_spark(app_name="nbi-oedi-etl-v2-spark-bench-ab")
     spark.sparkContext.setLogLevel("WARN")
     specs = workload.all_specs()
-
-    # identical warm-up to bench.py: q1 + one streaming micro-batch
-    _force(specs["q1_pricing_summary"].fn(spark, SF_DIR))
-    _force(specs["streaming_hourly_downsample"].fn(spark, SF_DIR))
+    warm_up(spark)
 
     timings: dict[str, float] = {}
     for name in R5_REFERENCE:

@@ -20,6 +20,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from bench import _force, warm_up  # noqa: E402
 from nbi_oedi_etl_v2_spark import workload  # noqa: E402
 from nbi_oedi_etl_v2_spark.session import get_spark  # noqa: E402
 
@@ -40,13 +41,7 @@ def main() -> None:
     spark = get_spark(app_name="nbi-oedi-etl-v2-spark-bench-focus")
     spark.sparkContext.setLogLevel("WARN")
     specs = workload.all_specs()
-
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # same warm-up as bench.py
-    force(specs["q1_pricing_summary"].fn(spark, SF_DIR))
-    force(specs["streaming_hourly_downsample"].fn(spark, SF_DIR))
+    warm_up(spark)
 
     out = {}
     for name in keys:
@@ -55,7 +50,7 @@ def main() -> None:
         samples = []
         for _ in range(reps):
             t0 = time.perf_counter()
-            force(fn(spark, SF_DIR))
+            _force(fn(spark, SF_DIR))
             samples.append(time.perf_counter() - t0)
         out[name] = {
             "med": round(statistics.median(samples), 4),
