@@ -305,7 +305,6 @@ def dp_noised_counts(
     df: DataFrame,
     group_cols: list[str],
     epsilon: float = 1.0,
-    salt: str = "dp",
 ) -> DataFrame:
     """Differentially-private count release: per-group counts with
     Laplace(1/ε) noise — the ε-DP mechanism for counting queries
@@ -314,7 +313,7 @@ def dp_noised_counts(
 
     The noise is DETERMINISTIC-BY-HASH, the repo's no-RNG-state
     convention made cross-engine exact: u = the first 13 hex digits
-    of ``md5(salt ⟂ group)`` read as an integer over 2⁵², mapped
+    of ``md5('dp' ⟂ group)`` read as an integer over 2⁵², mapped
     through the Laplace inverse CDF
     ``−b·sign(u−½)·ln(1−2|u−½|)``. Both engines compute the SAME
     md5 (byte-identical hex), the same ≤2⁵² integer (exact in a
@@ -329,7 +328,7 @@ def dp_noised_counts(
         raise ValueError("epsilon must be positive")
     b = 1.0 / epsilon
     key = F.concat_ws(
-        "\x1f", F.lit(salt), *[F.col(f"`{c}`").cast("string") for c in group_cols]
+        "\x1f", F.lit("dp"), *[F.col(f"`{c}`").cast("string") for c in group_cols]
     )
     u = (
         F.conv(F.substring(F.md5(key), 1, 13), 16, 10).cast("long")
@@ -356,7 +355,6 @@ def dp_noised_counts_oracle_sql(
     source: str,
     group_cols: list[str],
     epsilon: float = 1.0,
-    salt: str = "dp",
 ) -> str:
     """DuckDB twin of :func:`dp_noised_counts` — same md5-derived
     uniform (hex prefix parsed via the 0x cast), same inverse-CDF
@@ -364,7 +362,7 @@ def dp_noised_counts_oracle_sql(
     b = 1.0 / epsilon
     cols = ", ".join(group_cols)
     key = " || chr(31) || ".join(
-        [f"'{salt}'"] + [f"CAST({c} AS VARCHAR)" for c in group_cols]
+        ["'dp'"] + [f"CAST({c} AS VARCHAR)" for c in group_cols]
     )
     return f"""
     WITH g AS (
@@ -452,7 +450,6 @@ def psi_drift(
     cur: DataFrame,
     value_col: str,
     n_bins: int = 10,
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Population Stability Index between a reference snapshot and a
     current one — the standard "did my feature distribution move"
@@ -462,7 +459,7 @@ def psi_drift(
     sort), both sides are labeled by the same strict-less-than
     counting rule as :func:`~..order_stats.equidepth_buckets`, and
     the per-bin term is ``(p_cur − p_ref)·ln(p_cur/p_ref)`` with both
-    shares clamped to ``eps`` (the standard zero-bin guard — an empty
+    shares clamped to 1e-6 (the standard zero-bin guard — an empty
     bin is strong drift evidence, not a division error). Returns one
     row per bin (bin, ref_share, cur_share, psi_term, all rounded to
     7 dp); ``SUM(psi_term)`` is the headline PSI. Cost at 100 TB:
@@ -520,8 +517,8 @@ def psi_drift(
         .join(shares(cur, "cur_share"), "bin", "left")
         .select(
             "bin",
-            F.greatest(F.coalesce("ref_share", F.lit(0.0)), F.lit(eps)).alias("r"),
-            F.greatest(F.coalesce("cur_share", F.lit(0.0)), F.lit(eps)).alias("c"),
+            F.greatest(F.coalesce("ref_share", F.lit(0.0)), F.lit(1e-6)).alias("r"),
+            F.greatest(F.coalesce("cur_share", F.lit(0.0)), F.lit(1e-6)).alias("c"),
         )
     )
     return both.select(

@@ -189,7 +189,6 @@ def incremental_near_dedup(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Continuous-ingest dedup: admit only the rows of a new ``batch``
     that are near-duplicates of neither the existing ``corpus`` nor an
@@ -209,12 +208,12 @@ def incremental_near_dedup(
     from . import dedup  # local import: dedup does not import curation
 
     cross = dedup.cross_jaccard_pairs(
-        batch, corpus, id_col, text_col, k, threshold, max_doc_freq
+        batch, corpus, id_col, text_col, k, threshold
     )
     contaminated = cross.select(F.col("id_a").alias(id_col)).distinct()
     survivors = batch.join(contaminated, id_col, "left_anti")
     within = dedup.ngram_jaccard_pairs(
-        survivors, id_col, text_col, k, threshold, max_doc_freq
+        survivors, id_col, text_col, k, threshold
     )
     return resolve_near_duplicates(survivors, id_col, within)
 

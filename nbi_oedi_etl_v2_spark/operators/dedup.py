@@ -351,7 +351,6 @@ def cross_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Bipartite exact Jaccard pairs: (id_a ∈ left, id_b ∈ right) with
     jaccard ≥ t — the new-batch-vs-existing-corpus shape of
@@ -369,7 +368,7 @@ def cross_jaccard_pairs(
     r_cols = right.select(F.col(f"`{id_col}`"), F.col(f"`{text_col}`"))
     union = l_cols.unionByName(r_cols)
     ex = shingle_rows(union, id_col, text_col, k)
-    prefix = _prefix_shingles(ex, threshold, max_doc_freq, _pinned_partitions(left))
+    prefix = _prefix_shingles(ex, threshold, None, _pinned_partitions(left))
     ids_l = l_cols.select(F.col(f"`{id_col}`").alias("doc")).distinct()
     ids_r = r_cols.select(F.col(f"`{id_col}`").alias("doc")).distinct()
     a = (

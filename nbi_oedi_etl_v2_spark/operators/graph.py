@@ -486,8 +486,6 @@ def weighted_sssp_oracle_sql(rounds: int = 4) -> str:
 def label_propagation(
     edges: DataFrame,
     rounds: int = 5,
-    early_exit: bool = True,
-    round_counter: list | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, the deterministic synchronous variant): every node
@@ -498,17 +496,13 @@ def label_propagation(
     deterministic — hash-matchable by an engine replaying the same
     rounds, where the textbook random-order variant would not be.
 
-    ``early_exit`` stops the loop as soon as NO label changed in a
-    round: the synchronous update is a pure function of the previous
-    labels, so a round that changes nothing proves a fixed point and
-    every further round is a no-op — the result is bit-identical to
-    running all ``rounds``, which is why it is safe to keep on even
-    under the fixed-round oracle. The changed count is observed by the
-    round's checkpoint job.
-
-    ``round_counter``: pass a list to receive one appended entry per
-    EXECUTED round — the observable the early-exit pytest asserts on
-    (the loop runs fewer rounds than asked once converged).
+    The loop stops as soon as NO label changed in a round: the
+    synchronous update is a pure function of the previous labels, so
+    a round that changes nothing proves a fixed point and every
+    further round is a no-op — the result is bit-identical to running
+    all ``rounds``, which is why the early exit holds even under the
+    fixed-round oracle. The changed count is observed by the round's
+    checkpoint job.
 
     The (node, lbl) side is broadcast into each round's join when the
     node count, observed by the initial checkpoint, fits the
@@ -546,9 +540,7 @@ def label_propagation(
             repart.count()
             cache.unpersist()
             e = repart
-        for rnd in range(rounds):
-            if round_counter is not None:
-                round_counter.append(rnd)
+        for _ in range(rounds):
             lab_side = F.broadcast(labels) if use_bc else labels
             neigh = (
                 e.join(lab_side, e["src"] == lab_side["node"])
@@ -572,7 +564,7 @@ def label_propagation(
             )
             labels, m = checkpoint(upd, F.sum("_chg").alias("chg"))
             labels = labels.drop("_chg")
-            if early_exit and not m.get("chg"):
+            if not m.get("chg"):
                 break
         return labels.select("node", F.col("lbl").alias("community"))
     finally:
@@ -628,8 +620,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     max_rounds: int = 30,
-    round_counter: list | None = None,
-    plan_probe: list | None = None,
 ) -> DataFrame:
     """k-core decomposition (fixed k): iteratively peel nodes of
     degree < k until the survivor set is stable — the densest-region
@@ -658,10 +648,8 @@ def kcore(
     Early exit is result-invariant: survivors(round) is monotone
     non-increasing and bounded, so the first round that removes no
     node proves the fixed point — a fixed-round oracle unrolled PAST
-    convergence matches bit-for-bit. ``round_counter`` receives one
-    survivor count per executed round (the early-exit pytest
-    observable); ``max_rounds`` bounds the pathological
-    one-layer-per-round worst case (a path graph).
+    convergence matches bit-for-bit. ``max_rounds`` bounds the
+    pathological one-layer-per-round worst case (a path graph).
 
     Returns (node, degree) for the k-core members with their
     within-core degree.
@@ -697,16 +685,8 @@ def kcore(
             pre = deg.where(F.col("degree") >= k).select(
                 F.col("src").alias("node"), "degree"
             )
-            if plan_probe is not None:
-                # test observable: the checkpoint erases the round's
-                # plan, so the in-loop join shape is only visible here
-                plan_probe.append(
-                    pre._jdf.queryExecution().executedPlan().toString()
-                )
             surv, m = checkpoint(pre)
             n_keep = m["n"]
-            if round_counter is not None:
-                round_counter.append(n_keep)
             if n_keep == prev_nodes:
                 # survivors(t) ⊆ survivors(t−1), so equal counts mean
                 # the equal set, and its degrees are the within-core ones

@@ -1,8 +1,8 @@
 """Multimodal column plumbing (north-star extension).
 
 Treats image/audio/video payloads as opaque ``binary`` columns with a
-typed metadata struct, and implements decode / feature-extract /
-frame-sample as Arrow-batched ``mapInPandas`` operators.
+typed metadata struct, and implements decode and feature-extract as
+Arrow-batched ``mapInPandas`` operators.
 
 The decode step is REAL for the two formats the standard library can
 handle without codec packages:
@@ -919,39 +919,6 @@ def decode_media(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame) -> DataFrame:
-    """Frame-sampling *plan* for video payloads: emits (media_id,
-    frame_index) rows without decoding frames — the downstream decode
-    then touches only sampled frames (the partition-preserving explode
-    pattern used for real codecs).
-
-    The frame count is REAL where the payload allows: ISO-BMFF
-    payloads run the ``parse_mp4_header`` box walk inline (same rows,
-    no join, still map-only) and sample every 10th frame,
-    ``0, 10, … < n_frames``, from the track's ``stts`` sample-count
-    sum. Payloads that don't parse fall back to 101 total frames."""
-    staged = _with_mp4_meta(
-        df.where(F.col("media_type") == "video"), "payload", 32, 64
-    )
-    n = F.coalesce(F.col("_mp4_frames"), F.lit(101).cast("long"))
-    # no Filter on the derived count: a predicate would be pushed down
-    # through the staged projections and PushDownPredicate re-inlines
-    # the box-walk folds without a cost guard (the exponential-tree
-    # trap _with_mp4_meta exists to avoid). explode() of a NULL
-    # sequence emits zero rows, which is the same semantics for free.
-    return staged.select("media_id", n.alias("_n")).select(
-        "media_id",
-        F.explode(
-            F.when(
-                F.col("_n") > 0,
-                F.sequence(
-                    F.lit(0), (F.col("_n") - 1).cast("int"), F.lit(10)
-                ),
-            )
-        ).alias("frame_index"),
-    )
 
 
 def parse_png_header(

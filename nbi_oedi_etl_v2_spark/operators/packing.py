@@ -60,7 +60,6 @@ def global_running_total(
     order_cols: list[Column | str],
     value_col: str,
     out_col: str = "running_offset",
-    num_partitions: int | None = None,
     bucket_key: Column | None = None,
 ) -> DataFrame:
     """Exclusive global prefix sum of ``value_col`` under a total
@@ -77,7 +76,7 @@ def global_running_total(
     unique tiebreaker) or offsets are nondeterministic.
     """
     cols = _as_cols(order_cols)
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    parts = df.sparkSession.sparkContext.defaultParallelism
     key = bucket_key if bucket_key is not None else _default_bucket_key(df, order_cols)
     bucketed = df.withColumn("_bucket", order_bucket(df, key, parts))
     totals = sorted(
@@ -121,12 +120,9 @@ def pack_chunks(
     id_col: str,
     tokens_col: str,
     seq_len: int,
-    order_cols: list[Column | str] | None = None,
-    num_partitions: int | None = None,
-    bucket_key: Column | None = None,
 ) -> DataFrame:
     """Concatenate-and-chunk sequence packing: documents are laid end
-    to end in ``order_cols`` order and the token stream is cut into
+    to end in ``id_col`` order and the token stream is cut into
     fixed ``seq_len`` windows; each document reports the chunk range
     it lands in (documents may span chunks — the standard LLM
     pretraining packing, zero padding waste).
@@ -137,15 +133,7 @@ def pack_chunks(
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    order = order_cols if order_cols is not None else [id_col]
-    out = global_running_total(
-        df,
-        order,
-        tokens_col,
-        out_col="token_offset",
-        num_partitions=num_partitions,
-        bucket_key=bucket_key,
-    )
+    out = global_running_total(df, [id_col], tokens_col, out_col="token_offset")
     tokens = F.col(f"`{tokens_col}`")
     # integer DIV keeps the arithmetic exact on longs (double division
     # would round past 2^53 token streams — real at 100 TB)
@@ -167,11 +155,9 @@ def pack_next_fit(
     tokens_col: str,
     seq_len: int,
     shard_col: str,
-    order_cols: list[str] | None = None,
-    bin_col: str = "bin",
 ) -> DataFrame:
     """Next-fit bin packing *without* document splitting: within each
-    shard, documents are taken in ``order_cols`` order and appended to
+    shard, documents are taken in ``id_col`` order and appended to
     the current bin until the next one would overflow ``seq_len``,
     which starts a new bin (the SFT/finetuning packing, where examples
     must stay whole).
@@ -187,15 +173,14 @@ def pack_next_fit(
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    order = order_cols if order_cols is not None else [id_col]
     fields = df.select(shard_col, id_col, tokens_col).schema.fields
     out_schema = ", ".join(
         [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
-        + [f"`{bin_col}` long"]
+        + ["`bin` long"]
     )
 
     def pack(pdf):
-        pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
+        pdf = pdf.sort_values([id_col], kind="mergesort").reset_index(drop=True)
         bins: list[int] = []
         cur, used = 0, 0
         for t in pdf[tokens_col]:
@@ -205,11 +190,11 @@ def pack_next_fit(
                 used = 0
             bins.append(cur)
             used += t
-        pdf[bin_col] = bins
-        return pdf[[shard_col, id_col, tokens_col, bin_col]]
+        pdf["bin"] = bins
+        return pdf[[shard_col, id_col, tokens_col, "bin"]]
 
     return (
-        df.select(shard_col, id_col, tokens_col, *[c for c in order if c not in (shard_col, id_col, tokens_col)])
+        df.select(shard_col, id_col, tokens_col)
         .groupBy(shard_col)
         .applyInPandas(pack, out_schema)
     )
@@ -350,7 +335,6 @@ def budget_select(
     tokens_col: str,
     quality_col: str,
     budget: int,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Greedy budget fill: take documents best-quality-first until the
     token ``budget`` is reached — the "give me the best N-token subset
@@ -372,7 +356,6 @@ def budget_select(
         order,
         tokens_col,
         out_col="budget_offset",
-        num_partitions=num_partitions,
         bucket_key=-F.col(f"`{quality_col}`"),
     )
     return out.where(F.col("budget_offset") < budget)

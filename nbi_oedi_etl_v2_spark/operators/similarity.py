@@ -314,30 +314,27 @@ def ivf_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    nlist: int = 32,
-    nprobe: int = 12,
-    iterations: int = 2,
 ) -> DataFrame:
-    """IVF-flat approximate top-k: partition the corpus into ``nlist``
-    Voronoi cells, probe each query's ``nprobe`` nearest cells
+    """IVF-flat approximate top-k: partition the corpus into 32
+    Voronoi cells, probe each query's 12 nearest cells
     (multiprobe by centroid distance), exact cosine re-rank inside
     them.
 
     The scale shape: cell assignment is one broadcast pass; the search
-    join is an equi-join on cid touching ~``nprobe/nlist`` of the
+    join is an equi-join on cid touching ~12/32 of the
     corpus per query instead of all of it. Complements hyperplane LSH:
     IVF adapts to the data distribution (cells follow density), LSH is
     oblivious but needs no training pass.
 
-    Default calibration (measured on the uniform synthetic embeddings
-    — the hardest regime, no planted clusters): nlist=32 / nprobe=12 /
+    Calibration (measured on the uniform synthetic embeddings
+    — the hardest regime, no planted clusters): 32 cells / 12 probes /
     2 Lloyd iterations ⇒ recall ≥0.8 of exact top-5 while scanning
     ~3/8 of the corpus per query; the pytest floor is 0.7 under a
     ≤0.55 measured candidate-fraction budget
     (tests/test_extensions.py::test_ivf_topk_recall). Real clustered
-    embeddings fare better at smaller nprobe/nlist.
+    embeddings keep that recall at a smaller probed fraction.
     """
-    cents = ivf_centroids(corpus, id_col, vec_col, nlist, iterations)
+    cents = ivf_centroids(corpus, id_col, vec_col, 32, 2)
     c = with_norm(corpus, vec_col).select(
         F.col(f"`{id_col}`").alias("neighbor_id"), "vec", "norm"
     )
@@ -347,7 +344,7 @@ def ivf_cosine_topk(
     q = with_norm(queries, vec_col).select(
         F.col(f"`{id_col}`").alias("query_id"), "vec", "norm"
     )
-    q_assign = ivf_assign(q, cents, "query_id", nprobe=nprobe).select(
+    q_assign = ivf_assign(q, cents, "query_id", nprobe=12).select(
         "query_id", F.col("vec").alias("q_vec"), F.col("norm").alias("q_norm"), "cid"
     )
     sim = F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm"))

@@ -135,7 +135,6 @@ def agms_join_size(
     b: DataFrame,
     b_key: str,
     m: int = 64,
-    sigmas: float = 5.0,
 ) -> DataFrame:
     """Join-cardinality estimation by AGMS/tug-of-war sketches
     (Alon–Gilbert–Matias–Szegedy): estimate ``|A ⋈ B|`` — the
@@ -151,7 +150,7 @@ def agms_join_size(
     within_interval) — the exact twin ``Σ f_A·f_B`` is computed in
     the same plan (two key-grouped counts + one equi-join over
     DISTINCT keys, far smaller than the join output it predicts) and
-    the invariant pins ``|est − exact| ≤ sigmas·se`` so DuckDB can
+    the invariant pins ``|est − exact| ≤ 5·se`` so DuckDB can
     hash-match (exact + TRUE) without implementing xxhash64. All
     sketch state is 2·m longs; the per-side pass is map-only with a
     single 1-row exchange — at 100 TB you read each side once and
@@ -212,7 +211,7 @@ def agms_join_size(
         F.round("se", 4).alias("se"),
         (
             F.abs(F.col("est") - F.col("exact_join_size"))
-            <= F.lit(sigmas) * F.col("se")
+            <= F.lit(5.0) * F.col("se")
         ).alias("within_interval"),
     )
 
@@ -317,9 +316,9 @@ def grouped_ols2(
     a fixed operation order that the SQL twin mirrors token-for-token,
     so the doubles agree exactly. A numeric solver (LU/QR) would be
     numerically nicer but engine-specific — for p=2 the explicit
-    formula is well-conditioned enough and buys exact verification;
-    the general-p path is :func:`ols_fit`. Singular groups (collinear
-    or constant features) emit NULL coefficients (det == 0 guarded)."""
+    formula is well-conditioned enough and buys exact verification.
+    Singular groups (collinear or constant features) emit NULL
+    coefficients (det == 0 guarded)."""
     x1 = F.col(f"`{x1_col}`").cast("double")
     x2 = F.col(f"`{x2_col}`").cast("double")
     y = F.col(f"`{y_col}`").cast("double")
@@ -417,41 +416,6 @@ def grouped_ols2_oracle_sql(
            CASE WHEN {det} <> 0 THEN {det2} / {det} END AS b2
     FROM m ORDER BY {g}
     """
-
-
-def ols_fit(
-    df: DataFrame,
-    y_col: str,
-    x_cols: list[str],
-) -> list[float]:
-    """General-p OLS via the normal equations: ONE aggregation pass
-    accumulates the (p+1)×(p+1) Gram matrix and (p+1) moment vector
-    as exact-decimal sums (p(p+3)/2 + 1 numbers per partition —
-    bounded driver state, the correlation-matrix shape), then a
-    driver-side ``numpy.linalg.lstsq`` solve. Returns
-    [intercept, coef_1, …, coef_p]. The verification story lives in
-    :func:`grouped_ols`/:func:`grouped_ols2` (bit-matched closed
-    forms); this is the production entry point for wider designs."""
-    import numpy as np
-
-    xs = [F.col(f"`{c}`").cast("double") for c in x_cols]
-    terms = [F.lit(1.0)] + xs
-    y = F.col(f"`{y_col}`").cast("double")
-    aggs = []
-    for i, a in enumerate(terms):
-        for j, b in enumerate(terms[i:], start=i):
-            aggs.append(dsum(a * b).alias(f"g_{i}_{j}"))
-        aggs.append(dsum(a * y).alias(f"v_{i}"))
-    row = df.agg(*aggs).collect()[0]
-    p = len(terms)
-    gram = np.empty((p, p))
-    vec = np.empty(p)
-    for i in range(p):
-        vec[i] = row[f"v_{i}"]
-        for j in range(i, p):
-            gram[i, j] = gram[j, i] = row[f"g_{i}_{j}"]
-    sol, *_ = np.linalg.lstsq(gram, vec, rcond=None)
-    return [float(c) for c in sol]
 
 
 def histogram_split_finder(

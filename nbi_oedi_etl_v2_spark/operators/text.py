@@ -414,54 +414,14 @@ def token_pmi(
     ).limit(top_n)
 
 
-def compressibility_scores(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Per-document zlib compressibility — the classic cheap junk
-    detector for LLM corpora (used by CCNet/RefinedWeb-style
-    pipelines): highly repetitive or templated text compresses far
-    below ~0.4×, high-entropy noise sits near 1.0×, natural prose in
-    between. Emits (id, n_bytes, n_compressed, compress_ratio).
-
-    Arrow-batched pandas UDF (zlib is stdlib — DEFLATE is
-    deterministic for a fixed level, 6 here, so results are reproducible
-    across runs and partitionings); map-only, zero shuffle. No DuckDB
-    oracle (no SQL zlib) → rows-only driver check, with an exact
-    bit-for-bit pytest against direct ``zlib.compress`` instead.
-    """
-    import zlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _clen(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), 6))
-            if t is not None
-            else None
-        ).astype("Int64")
-
-    raw_len = F.length(F.encode(F.col(f"`{text_col}`"), "UTF-8")).cast("long")
-    return df.select(
-        F.col(f"`{id_col}`").alias("id"),
-        raw_len.alias("n_bytes"),
-        _clen(F.col(f"`{text_col}`")).alias("n_compressed"),
-    ).withColumn(
-        "compress_ratio",
-        F.when(
-            F.col("n_bytes") > 0,
-            F.round(F.col("n_compressed") / F.col("n_bytes"), 7),
-        ),
-    )
-
-
 def compressibility_invariants(
     df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Driver-verifiable form of :func:`compressibility_scores`: DEFLATE
-    output bytes have no SQL twin, so emit per-document invariants a
-    SQL oracle CAN hash-match — (id, n_bytes, roundtrip_ok,
-    bounded_ok) where
+    """Per-document zlib compressibility, the cheap junk detector of
+    CCNet/RefinedWeb-style LLM corpus pipelines, in a driver-verifiable
+    form: DEFLATE output bytes have no SQL twin, so emit per-document
+    invariants a SQL oracle CAN hash-match — (id, n_bytes,
+    roundtrip_ok, bounded_ok) where
 
     - ``roundtrip_ok``: ``zlib.decompress(zlib.compress(b)) == b``
       (losslessness — proves the UDF really compressed the text);
@@ -469,7 +429,7 @@ def compressibility_invariants(
       (``n + n/4096 + n/16384 + n/33554432 + 13`` — a hard DEFLATE
       format guarantee at any level).
 
-    Same Arrow-batched map-only shape as the scored variant.
+    Arrow-batched pandas UDF (zlib is stdlib); map-only, zero shuffle.
     """
     import zlib
 

@@ -142,11 +142,10 @@ def run_job(
     ``db``. The metadata fields of the result are left empty;
     ``copy_metadata`` fills them."""
     # S1/P1 — one partitioned read of this job's partitions; Spark's
-    # file index for it is the job's input listing. ``inputFiles()``
-    # runs no Spark job, but pyspark converts the returned array one
-    # element at a time: two py4j round trips per listed file.
+    # file index for it is the job's input listing, fetched with no
+    # Spark job in a fixed number of py4j round trips.
     ts_df = read_timeseries(spark, config, job)
-    listed_files = [f for f in ts_df.inputFiles() if fs.is_data_file(f)]
+    listed_files = [f for f in fs.input_files(ts_df) if fs.is_data_file(f)]
     data_path = sinks.data_output_path(output_root, run_ts, job)
     if set(ts_df.columns) <= set(sinks.PARTITION_COLUMNS):
         # No partition of the job exists, or no listed file has a

@@ -63,8 +63,13 @@ whole cohort is at age 5, so it MUST export this round. PIN(3) + the
 cohort leaves 4 slots, not ~9. This round's operator changes (one
 observed-checkpoint step for the iterative loops) take 3 of them as
 TOUCH rows; the fourth TOUCH spec sits inside the cohort, and the
-last slot is fill. The deferred simhash batching (operators/dedup.py
-in-code note) still has no slot.
+last slot is fill. Deleting the settable values that no caller set
+changed the operators of 11 more cohort specs, so they hold TOUCH
+rows too (15 in all) and the export stays the same 50 specs. The
+values left in functions that a spec outside this export reaches
+wait for that spec's slot (``PENDING`` in
+tests/test_package_surface.py). The deferred simhash batching
+(operators/dedup.py in-code note) still has no slot.
 
 ROUND-13 NOTE (computed at the end of round 12): merge CORRECTNESS_r12
 greens first; the oldest cohort then becomes the specs reading 8 (38
@@ -325,14 +330,27 @@ PIN: frozenset[str] = frozenset({
 # the three specs on it (dedup_components, corpus_near_dedup,
 # corpus_incremental_dedup) already export this round, so the change
 # costs no slot; customer_entity_resolution (reads 11) keeps its pytest
-# DuckDB oracle. The budget:
-# PIN(3) + 3 TOUCH outside the cohort + the 43-spec age-5 cohort + 1
-# fill = 50.
+# DuckDB oracle. The settable values that no caller set are deleted,
+# with their defaults inlined, from the operators of 11 more specs;
+# each reads 7, so it exports with the age-5 cohort and its row costs
+# no slot. The budget: PIN(3) + 3 TOUCH outside the cohort + the
+# 43-spec age-5 cohort + 1 fill = 50.
 TOUCH: frozenset[str] = frozenset({
     "part_copurchase_kcore",
     "part_copurchase_labelprop",
     "corpus_incremental_dedup",
     "embedding_normalize",
+    "orders_dp_noised_counts",
+    "orders_psi_price_drift",
+    "corpus_budget_select",
+    "corpus_pack_chunks",
+    "corpus_pack_next_fit",
+    "similarity_topk_ivf",
+    "orders_lineitem_join_size_agms",
+    "streaming_attribution_join",
+    "streaming_dedup_events",
+    "streaming_ewma_alerts",
+    "streaming_sessionize",
 })
 
 # ADVISED - explicit re-verification asks: none this round.

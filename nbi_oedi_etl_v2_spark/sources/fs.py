@@ -9,10 +9,9 @@ worker.py:34). Without a session they raise ``RuntimeError``.
 
 Scale note: ``list_files_recursive`` crosses the Py4J bridge once per
 file, so the ETL keeps it off the input side: the job's input listing
-is the file index Spark builds for the read itself
-(``DataFrame.inputFiles()``: no Spark job, but still two py4j round
-trips per file, as pyspark converts the returned array one element at
-a time), only the job's few output files are counted here, and the
+is the file index Spark builds for the read itself (``input_files``:
+no Spark job, and a fixed number of py4j round trips whatever the
+file count), only the job's few output files are counted here, and the
 read's schema takes the first readable file of each input partition
 through the lazy ``iter_files``. Input-side listing at lake scale belongs to Spark's
 parallel partition discovery (or an object inventory), not to any
@@ -24,7 +23,7 @@ from __future__ import annotations
 from urllib.parse import unquote
 
 from py4j.java_gateway import JavaClass
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
 
@@ -85,6 +84,18 @@ def is_data_file(path: str) -> bool:
     which Spark's own listing skips too."""
     name = path.rstrip("/").rsplit("/", 1)[-1]
     return name.endswith(".parquet") and not name.startswith(("_", "."))
+
+
+def input_files(df: DataFrame) -> list[str]:
+    """The files Spark's file index lists for ``df``, as
+    ``df.inputFiles()`` returns them, in 3 py4j round trips whatever
+    their number: Hadoop's ``StringUtils.join`` joins the JVM array
+    into one string, where pyspark converts it one element at a time,
+    two round trips per file. URIs hold no raw newline."""
+    joined = _jclass(df.sparkSession, "org.apache.hadoop.util.StringUtils").join(
+        "\n", df._jdf.inputFiles()
+    )
+    return joined.split("\n") if joined else []
 
 
 def iter_files(path: str):

@@ -51,7 +51,7 @@ def read_timeseries(spark: SparkSession, config: ETLConfig, job: JobConfig) -> D
     Only the job's existing ``upgrade=/state=`` directories are read,
     with ``basePath`` at the release root so ``upgrade`` / ``state``
     stay Hive partition columns. Spark's file index therefore lists
-    exactly this job's files (``DataFrame.inputFiles()`` is the job's
+    exactly this job's files (``fs.input_files`` of the scan is the job's
     input listing), and the ``where`` below still compiles to
     partition pruning (``.explain`` shows the ``PartitionFilters``).
 

@@ -93,30 +93,25 @@ def hourly_downsample_stream(
     return out.select(*ordered)
 
 
-def sessionize_stream(
-    df: DataFrame,
-    timestamp_col: str = "ts",
-    entity_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Gap-based sessionization via ``session_window`` — merges events
-    closer than ``gap`` into one session per entity; a session closes
-    (and its state is evicted) once the watermark passes its end.
+def sessionize_stream(df: DataFrame) -> DataFrame:
+    """Gap-based sessionization via ``session_window`` — merges a
+    user's events closer than 30 minutes into one session; a session
+    closes (and its state is evicted) once the 2-hour watermark passes
+    its end.
 
     Returns (user_id, session_start, session_end, n_events) —
     ``session_end`` is the window end, i.e. last event + gap, the
     session_window convention.
     """
-    wm = df.withWatermark(timestamp_col, watermark)
+    wm = df.withWatermark("ts", "2 hours")
     return (
         wm.groupBy(
-            F.col(f"`{entity_col}`"),
-            F.session_window(F.col(f"`{timestamp_col}`"), gap),
+            F.col("user_id"),
+            F.session_window(F.col("ts"), "30 minutes"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            f"`{entity_col}`",
+            "user_id",
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             "n_events",
@@ -124,19 +119,14 @@ def sessionize_stream(
     )
 
 
-def dedup_stream(
-    df: DataFrame,
-    key_cols: list[str],
-    timestamp_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_stream(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Exactly-once projection of an at-least-once stream: drop replays
-    of ``key_cols`` seen within the watermark horizon.
+    of ``key_cols`` seen within the 2-hour watermark horizon on ``ts``.
     ``dropDuplicatesWithinWatermark`` keeps one state entry per key and
     evicts it when the watermark passes — bounded state, unlike plain
     ``dropDuplicates`` on a stream, whose state grows forever unless
     the event-time column is part of the key."""
-    return df.withWatermark(timestamp_col, watermark).dropDuplicatesWithinWatermark(
+    return df.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         key_cols
     )
 
@@ -192,16 +182,10 @@ def _ewma_fold(pdf, alpha: float, k: float, state_ewma, state_n):
     return out, ewma, n
 
 
-def ewma_stream(
-    df: DataFrame,
-    alpha: float = 0.3,
-    k: float = 0.8,
-    watermark: str = "2 hours",
-    timestamp_col: str = "ts",
-) -> DataFrame:
+def ewma_stream(df: DataFrame) -> DataFrame:
     """Custom stateful streaming operator via applyInPandasWithState:
-    per-user exponentially-weighted moving average with deviation
-    alerts.
+    per-user exponentially-weighted moving average (alpha 0.3) with
+    alerts on a deviation above 0.8 × the average.
 
     EWMA is order-dependent and recursive — not expressible with
     built-in streaming aggregates — so per-key state (current ewma +
@@ -210,15 +194,16 @@ def ewma_stream(
 
     State is one row per active user AND watermark-evicted
     (EventTimeTimeout): each update arms a timeout at the key's last
-    event time + the watermark horizon; once the watermark passes it
-    the key's state is removed. On an unbounded stream, state is
-    O(users active within the horizon) — not O(every user ever seen).
+    event time + the 2-hour watermark horizon; once the watermark
+    passes it the key's state is removed. On an unbounded stream,
+    state is O(users active within the horizon) — not O(every user
+    ever seen).
     A user returning after eviction restarts its EWMA cold, which is
     the meaningful semantics for a horizon-scoped deviation alert.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    ttl_ms = _duration_ms(watermark)
+    ttl_ms = _duration_ms("2 hours")
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -232,7 +217,7 @@ def ewma_stream(
             return
         ewma, n, prev_last_ms = state.get if state.exists else (None, 0, 0)
         batch = pd.concat(list(pdfs), ignore_index=True)
-        out, ewma, n = _ewma_fold(batch, alpha, k, ewma, n)
+        out, ewma, n = _ewma_fold(batch, 0.3, 0.8, ewma, n)
         # carry the max event time in state: a late-but-within-watermark
         # batch must never REGRESS the eviction deadline below
         # last-ever-event + horizon (arming from only this batch's max
@@ -248,9 +233,9 @@ def ewma_stream(
         )
         yield out
 
-    wm = df.withWatermark(timestamp_col, watermark)
+    wm = df.withWatermark("ts", "2 hours")
     return (
-        wm.select("user_id", timestamp_col, "value")
+        wm.select("user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -263,8 +248,8 @@ def ewma_stream(
 
 
 def ewma_batch(df: DataFrame) -> DataFrame:
-    """Batch twin of :func:`ewma_stream` at its defaults (alpha 0.3,
-    k 0.8; applyInPandas, fresh state per key) — the equality oracle
+    """Batch twin of :func:`ewma_stream` (alpha 0.3, k 0.8;
+    applyInPandas, fresh state per key) — the equality oracle
     for the stateful streaming path."""
 
     def fold(pdf):
@@ -333,48 +318,41 @@ def dim_enrich_stream(
     ).drop(right[dim_key])
 
 
-def attribution_join_stream(
-    events: DataFrame,
-    timestamp_col: str = "ts",
-    user_col: str = "user_id",
-    lookback: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def attribution_join_stream(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase matched to the same
-    user's clicks in the preceding ``lookback`` window.
+    user's clicks in the preceding hour.
 
     The canonical attribution query, and the surface that exercises
     Spark's symmetric-hash stream-stream join: BOTH sides carry a
-    watermark, and the join predicate bounds click_ts to
-    [purchase_ts - lookback, purchase_ts) — together they let the
+    2-hour watermark, and the join predicate bounds click_ts to
+    [purchase_ts - 1 hour, purchase_ts) — together they let the
     engine evict buffered rows once the watermark passes the interval,
     so join state is O(events in lookback + watermark), not O(stream).
     Inner join in append mode emits matches immediately (no
     watermark-withholding, unlike outer stream joins).
     """
-    ts = f"`{timestamp_col}`"
     clicks = (
         events.where(F.col("event_type") == "click")
         .select(
-            F.col(f"`{user_col}`").alias("user_id"),
+            "user_id",
             F.col("event_id").alias("click_id"),
-            F.col(ts).alias("click_ts"),
+            F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "2 hours")
     )
     purchases = (
         events.where(F.col("event_type") == "purchase")
         .select(
-            F.col(f"`{user_col}`").alias("p_user_id"),
+            F.col("user_id").alias("p_user_id"),
             F.col("event_id").alias("purchase_id"),
-            F.col(ts).alias("purchase_ts"),
+            F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", "2 hours")
     )
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("click_ts") < F.col("purchase_ts")),
         "inner",
     )
@@ -392,10 +370,6 @@ def attribution_join_stream(
 # the closed form.
 # ---------------------------------------------------------------------------
 
-CUSUM_OUTPUT_SCHEMA = (
-    "event_type string, ts timestamp, event_id bigint, "
-    "s_hi double, s_lo double, alert boolean"
-)
 # exact decimal S carried as strings (Arrow state schemas have no
 # decimal type; strings round-trip Python Decimal losslessly)
 _CUSUM_STATE_SCHEMA = "s_hi string, s_lo string, last_ms bigint"
@@ -407,7 +381,7 @@ _CUSUM_RESERVED_COLS = ("ts", "event_id", "s_hi", "s_lo", "alert")
 def _cusum_output_schema(df: DataFrame, key_cols: list[str]) -> str:
     """Output schema for a composite-key CUSUM: key columns typed
     from the input, then the fixed (ts, event_id, s_hi, s_lo, alert)
-    tail. The single-key default reproduces CUSUM_OUTPUT_SCHEMA.
+    tail.
     Key names are backtick-quoted in the DDL (ADVICE r8: a name
     needing quoting — space, dash, reserved word — produced a parse
     error), and a key that collides with a fixed tail column is

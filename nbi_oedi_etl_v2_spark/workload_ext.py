@@ -1774,11 +1774,10 @@ def q_multimodal_jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate fold over the sibling chain (top level finds "
         "ftyp/moov, then moov->mvhd for version-0 timescale/duration "
         "and moov->trak->mdia->minf->stbl->stts, whose sample-count "
-        "entries are summed into the track's real frame count — this "
-        "is what frame_sample_plan now derives its sampling from "
-        "instead of a hardcoded count). The synthesized payloads "
-        "carry seed-length free boxes at two nesting levels so every "
-        "row walks a different offset chain. Every 10th payload is "
+        "entries are summed into the track's real frame count). The "
+        "synthesized payloads carry seed-length free boxes at two "
+        "nesting levels so every row walks a different offset chain. "
+        "Every 10th payload is "
         "text and parses is_mp4=false. mdat codec decode stays out "
         "of scope, matching JPEG.",
 )
@@ -2021,9 +2020,7 @@ def q_events_json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Inverted index build: two hash aggregates (term frequencies, "
         "then per-token posting assembly); postings serialize as the "
         "doc-sorted 'doc:tf' string so the row is scalar-columnar and "
-        "engine-comparable. max_doc_freq stop-listing bounds the "
-        "widest posting row at corpus scale (unset here: the oracle "
-        "covers the full surface).",
+        "engine-comparable.",
 )
 def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import index as idx
@@ -3499,8 +3496,7 @@ def q_orders_moving_range_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invariants it CAN hash-match: UTF-8 byte length (exact), a
     # compress→decompress roundtrip boolean (losslessness — the UDF
     # provably ran DEFLATE on the real text) and the compressBound
-    # format guarantee. Ratio values stay bit-for-bit pytest-checked
-    # against stdlib zlib in tests/test_extensions.py.
+    # format guarantee.
     oracle="""
     SELECT doc_id AS id,
            CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -3508,11 +3504,10 @@ def q_orders_moving_range_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     doc="zlib compressibility quality signal per document "
-        "(operators/text.py compressibility_scores): DEFLATE at a "
+        "(operators/text.py compressibility_invariants): DEFLATE at a "
         "fixed level is deterministic, so the Arrow-batched pandas "
         "UDF is reproducible across partitionings. Driver form: "
-        "per-doc roundtrip + compressBound invariants, hash-matched; "
-        "exact ratios pytest-pinned vs stdlib zlib.",
+        "per-doc roundtrip + compressBound invariants, hash-matched.",
 )
 def q_text_compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -5257,8 +5252,7 @@ _install_labelprop_oracle()
         "one aggregation pass of nine exact-decimal sufficient "
         "statistics, coefficients as fixed-operation-order double "
         "arithmetic the SQL twin mirrors token-for-token "
-        "(operators/stats.py grouped_ols2; general-p path is "
-        "ols_fit's Gram-matrix + driver lstsq). Hash-matched.",
+        "(operators/stats.py grouped_ols2). Hash-matched.",
     driver=True,
 )
 def q_lineitem_ols2_price_model(

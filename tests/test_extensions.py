@@ -278,17 +278,6 @@ def test_multimodal_metadata_only_scan_prunes_payload(docs):
     assert "payload" not in plan  # column pruning keeps bytes unread
 
 
-def test_frame_sample_plan(spark, docs):
-    # non-BMFF payloads fall back to default_frames (old contract)
-    media = multimodal.attach_binary_payload(docs, "doc_id", "text").withColumn(
-        "media_type", F.lit("video")
-    )
-    plan_df = multimodal.frame_sample_plan(media)
-    first = plan_df.where(F.col("media_id") == plan_df.select(F.min("media_id")).first()[0])
-    idxs = sorted(r["frame_index"] for r in first.collect())
-    assert idxs == list(range(0, 101, 10))
-
-
 def test_quantile_sketch_rank_bound_and_merge(spark):
     """Build-level rank error must stay within 1/max_centroids-ish;
     a day→all merge must stay within the 3/max_centroids merge bound;
@@ -474,26 +463,6 @@ def test_mp4_box_walk_roundtrip(spark):
     # truncation cuts inside moov: ftyp still present (is_mp4 true is
     # acceptable) but the stts walk must not invent a frame count
     assert out[102]["n_frames"] is None
-
-
-def test_frame_sample_plan_real_counts(spark):
-    """MP4 payloads drive the sampling plan from the track's real
-    stts sample-count sum, not a hardcoded frame count; a non-parsing
-    payload falls back to 101 frames."""
-    rows = [
-        (s, bytearray(multimodal.synth_mp4_payload(s)), "video", f"s://{s}")
-        for s in range(8)
-    ] + [(100, bytearray(b"not mp4"), "video", "x")]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-    plan = multimodal.frame_sample_plan(df)
-    got = {
-        r["media_id"]: r["n"]
-        for r in plan.groupBy("media_id").agg(F.count("*").alias("n")).collect()
-    }
-    for s in range(8):
-        exp_frames = sum(10 + (s + i * 7) % 90 for i in range(1 + s % 3))
-        assert got[s] == (exp_frames + 9) // 10
-    assert got[100] == 11  # frames 0, 10, …, 100 of the 101-frame fallback
 
 
 def test_approx_distinct_within_rsd_bound(spark, sf_dir):
@@ -813,47 +782,6 @@ def test_decode_media_routes_jpeg_metadata_only(spark):
     assert (out[1]["width"], out[1]["height"], out[1]["channels"]) == (w, h, nc)
     assert out[1]["checksum_feature"] is None
     assert out[2]["codec"] == "error" and out[2]["width"] is None
-
-
-def test_compressibility_matches_stdlib_zlib(docs):
-    """The pandas-UDF compressed length must equal direct
-    zlib.compress bit-for-bit, and the ratio must actually separate
-    repetitive text from prose."""
-    import zlib
-
-    from nbi_oedi_etl_v2_spark.operators import text as text_ops
-
-    got = {
-        r["id"]: (r["n_bytes"], r["n_compressed"], r["compress_ratio"])
-        for r in text_ops.compressibility_scores(docs, "doc_id", "text")
-        .limit(200).collect()
-    }
-    raw = {
-        r["doc_id"]: r["text"]
-        for r in docs.select("doc_id", "text").limit(200).collect()
-    }
-    for did, t in raw.items():
-        b = t.encode("utf-8")
-        nb, nc, ratio = got[did]
-        assert nb == len(b)
-        assert nc == len(zlib.compress(b, 6))
-        if nb > 0:
-            assert ratio == round(nc / nb, 7)
-
-
-def test_compressibility_separates_repetition_from_prose(spark):
-    from nbi_oedi_etl_v2_spark.operators import text as text_ops
-
-    df = spark.createDataFrame(
-        [(1, "spam " * 500),
-         (2, "A quaint village nestled between misty hills hosted a "
-             "curious market where travelers exchanged maps, spices, "
-             "and improbable stories about distant storms.")],
-        ["doc_id", "text"],
-    )
-    got = {r["id"]: r["compress_ratio"] for r in
-           text_ops.compressibility_scores(df, "doc_id", "text").collect()}
-    assert got[1] < 0.05 < got[2] < 1.0
 
 
 def _encode_png_gray(pixels, w, h):

@@ -314,22 +314,12 @@ def test_checkpoint_observes_its_own_rows(spark):
     assert out.collect() == []
 
 
-def test_bfs_stops_at_the_first_empty_frontier(spark, monkeypatch):
+def test_bfs_stops_at_the_first_empty_frontier(spark, graph_rounds):
     # the chain ends at node 4: depth 4's frontier is empty, its
     # checkpoint observes no row, and no later round runs
-    from nbi_oedi_etl_v2_spark.operators import _iterate
-
-    sizes = []
-
-    def spy(df, *metrics):
-        out, m = _iterate.checkpoint(df, *metrics)
-        sizes.append(m["n"])
-        return out, m
-
-    monkeypatch.setattr(graph, "checkpoint", spy)
     chain = _edges_df(spark, [(1, 2), (2, 3), (3, 4)])
     src = spark.createDataFrame([(1,)], "node long")
     got = {r["node"]: r["dist"] for r in
            graph.bfs_levels(chain, src, max_depth=10).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-    assert sizes == [1, 1, 1, 0]
+    assert [n for n, _ in graph_rounds] == [1, 1, 1, 0]

@@ -1017,3 +1017,31 @@ def test_etl_config_from_reference_dict():
     # the reference's operational keys are accepted and ignored
     assert config == ETLConfig.from_dict(shared)
     assert not hasattr(config, "settings") and not hasattr(config, "glue_job_timeout")
+
+
+def test_input_listing_round_trips_do_not_grow_with_files(spark, tmp_path, monkeypatch):
+    # run_job's input listing: the same py4j round trips for a 3-file
+    # and a 12-file scan, and the same files as pyspark's inputFiles()
+    from nbi_oedi_etl_v2_spark.sources import fs as fsmod
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    trips = {}
+    for n in (3, 12):
+        path = str(tmp_path / f"scan{n}")
+        spark.range(0, n, 1, n).write.parquet(path)
+        df = spark.read.parquet(path)
+        monkeypatch.setattr(client, "send_command", counting)
+        sent.clear()
+        listed = fsmod.input_files(df)
+        trips[n] = len(sent)
+        monkeypatch.undo()
+        assert listed == df.inputFiles()
+        assert len([f for f in listed if fsmod.is_data_file(f)]) == n
+    assert trips[3] == trips[12], trips

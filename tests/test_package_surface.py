@@ -1,13 +1,16 @@
 """Regrowth guards over the package's surface, checked against its
 non-test callers: the package, ``bench.py``, ``__spark_entry__.py``,
-``tools/`` and ``perfbench/``. Pure ``ast`` and text, no Spark.
+``tools/`` and ``perfbench/``. Pure ``ast``, no Spark session.
 
 Definitions: every top-level definition of the package must be
 reached by something other than the tests. A definition counts as
-reached when its name appears outside its own body in a caller file.
-``@query``-decorated specs count as registered. Names are matched as
-whole words, so a mention in a comment or a string counts too: the
-check is a heuristic that catches dead code, not a proof of liveness.
+reached when a caller file refers to its name in code outside its own
+body: as a name, an attribute, an import, or the string literal of a
+``getattr``/``hasattr``. Docstrings, comments and other strings do not
+count. ``@query``-decorated specs count as registered. Names are
+matched without their module, so two definitions of one name share
+their references: the check catches dead code, it does not prove
+liveness.
 
 Parameters: every defaulted parameter of every package function must
 be passed, by keyword or by position, by some call in a caller file,
@@ -17,12 +20,16 @@ their callers. ``f(*args)`` passes every positional parameter,
 ``f(**helper(...))`` passes the keys of the dict literal that
 ``helper`` returns (any other ``**`` passes every keyword), and
 ``pool.submit(f, ...)`` counts as a call of ``f``.
+
+Pending values: each ``PENDING`` entry must sit in a function that
+some spec outside the current driver export reaches, by the same
+by-name call matching, through the calls of the spec's function and
+its ``@query`` decorator.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
@@ -42,6 +49,11 @@ KEEP = {
     "operators.frequency.mg_counter_budget",
     # fixture source of the JPEG decode tests
     "operators.multimodal.synth_jpeg_payload",
+    # the report that keeps a lossy cap loud (ADVICE r6)
+    "operators.basket.basket_truncation_accounting",
+    "operators.dedup.hot_shingle_accounting",
+    # the rotation's staleness bound, which test_workload_oracle enforces
+    "rotation.STALENESS_BOUND_ROUNDS",
 }
 
 # defaulted parameters that no caller passes, each kept on purpose
@@ -73,77 +85,39 @@ KEEP_PARAMS = {
 }
 
 # defaulted parameters that no caller passes, in functions that a spec
-# of the current driver export reaches: deleting them changes that
-# spec's code, so they go in a round that gives the spec a TOUCH row
+# outside the current driver export reaches (the specs that reach each
+# function: exported; not exported): deleting them changes that spec's
+# code, so they go in a round that gives the spec a TOUCH row
 PENDING = {
-    # orders_dp_noised_counts
-    "operators.analytics.dp_noised_counts.salt",
-    "operators.analytics.dp_noised_counts_oracle_sql.salt",
-    # orders_psi_price_drift
-    "operators.analytics.psi_drift.eps",
-    # corpus_incremental_dedup, corpus_near_dedup, dedup_components
+    # corpus_incremental_dedup, corpus_near_dedup, dedup_components;
+    # corpus_curate, customer_entity_resolution
     "operators.curation.connected_components.max_iterations",
-    # corpus_incremental_dedup
-    "operators.curation.incremental_near_dedup.max_doc_freq",
-    # corpus_incremental_dedup, corpus_near_dedup
+    # corpus_incremental_dedup, corpus_near_dedup; corpus_curate
     "operators.curation.resolve_near_duplicates.dst",
     "operators.curation.resolve_near_duplicates.src",
-    # corpus_incremental_dedup, corpus_near_dedup, dedup_components, dedup_ngram_jaccard
+    # corpus_incremental_dedup, corpus_near_dedup, dedup_components,
+    # dedup_ngram_jaccard; corpus_curate, dedup_minhash_lsh
     "operators.dedup.ngram_jaccard_pairs.hot_shingle_limit",
-    # etl_write_pipeline
+    "operators.dedup.ngram_jaccard_pairs.max_doc_freq",
+    # etl_write_pipeline; etl_hourly_downsample
     "operators.downsample.downsample.decimal_places",
     "operators.downsample.downsample.granularity",
-    # part_copurchase_kcore, part_copurchase_labelprop
+    # part_copurchase_kcore, part_copurchase_labelprop;
+    # part_copurchase_bfs, part_copurchase_pagerank, part_copurchase_sssp,
+    # part_copurchase_triangles
     "operators.graph.copurchase_edges.item_col",
     "operators.graph.copurchase_edges.order_col",
-    # part_copurchase_kcore
-    "operators.graph.kcore.plan_probe",
-    "operators.graph.kcore.round_counter",
-    # part_copurchase_labelprop
-    "operators.graph.label_propagation.early_exit",
-    "operators.graph.label_propagation.round_counter",
-    # text_hybrid_rrf_topk
+    # text_hybrid_rrf_topk; text_bm25_topk
     "operators.index.bm25_topk.b",
     "operators.index.bm25_topk.k1",
-    # corpus_budget_select
-    "operators.packing.budget_select.num_partitions",
-    # corpus_pack_chunks
-    "operators.packing.pack_chunks.bucket_key",
-    "operators.packing.pack_chunks.num_partitions",
-    "operators.packing.pack_chunks.order_cols",
-    # corpus_pack_next_fit
-    "operators.packing.pack_next_fit.bin_col",
-    "operators.packing.pack_next_fit.order_cols",
-    # similarity_topk_ivf
+    # similarity_topk_ivf; embedding_semantic_dedup, similarity_topk_ivfpq
     "operators.similarity.ivf_assign.norm_alias",
-    "operators.similarity.ivf_cosine_topk.iterations",
-    "operators.similarity.ivf_cosine_topk.nlist",
-    "operators.similarity.ivf_cosine_topk.nprobe",
-    # orders_lineitem_join_size_agms
-    "operators.stats.agms_join_size.sigmas",
-    # streaming_attribution_join
-    "streaming.attribution_join_stream.lookback",
-    "streaming.attribution_join_stream.timestamp_col",
-    "streaming.attribution_join_stream.user_col",
-    "streaming.attribution_join_stream.watermark",
-    # streaming_dedup_events
-    "streaming.dedup_stream.timestamp_col",
-    "streaming.dedup_stream.watermark",
-    # streaming_ewma_alerts
-    "streaming.ewma_stream.alpha",
-    "streaming.ewma_stream.k",
-    "streaming.ewma_stream.timestamp_col",
-    "streaming.ewma_stream.watermark",
-    # streaming_attribution_join, streaming_dedup_events, streaming_ewma_alerts, streaming_sessionize
+    # streaming_attribution_join, streaming_dedup_events,
+    # streaming_ewma_alerts, streaming_sessionize; streaming_cm_sketch,
+    # streaming_cusum_alerts, streaming_dim_enrich,
+    # streaming_hourly_downsample
     "streaming.run_to_memory.name",
-    # streaming_sessionize
-    "streaming.sessionize_stream.entity_col",
-    "streaming.sessionize_stream.gap",
-    "streaming.sessionize_stream.timestamp_col",
-    "streaming.sessionize_stream.watermark",
 }
-
-_WORD = re.compile(r"\w+")
 
 
 def _module(path: Path) -> str:
@@ -167,41 +141,54 @@ def _is_query(node: ast.AST) -> bool:
 
 
 def _definitions(tree: ast.Module):
-    """(name, first line, last line) of each top-level definition."""
+    """(name, node) of each top-level definition."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            if _is_query(node):
-                continue
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            yield node.name, first, node.end_lineno
+            if not _is_query(node):
+                yield node.name, node
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
             for t in targets:
                 if isinstance(t, ast.Name):
-                    yield t.id, node.lineno, node.end_lineno
+                    yield t.id, node
 
 
 def _package_definitions():
-    """(qualified name, name, first line, last line, module lines)."""
+    """(qualified name, name, node) of each top-level definition."""
     for path in sorted(PACKAGE.rglob("*.py")):
-        text = path.read_text()
-        lines = text.splitlines()
-        for name, first, last in _definitions(ast.parse(text)):
+        for name, node in _definitions(ast.parse(path.read_text())):
             if name.startswith("__") and name.endswith("__"):
                 continue
-            yield f"{_module(path)}.{name}", name, first, last, lines
+            yield f"{_module(path)}.{name}", name, node
+
+
+def _references(tree: ast.AST) -> Counter:
+    """Names that ``tree``'s code refers to, once per reference."""
+    refs = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            refs[node.name.rpartition(".")[2]] += 1
+        elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+              and node.func.id in ("getattr", "hasattr") and len(node.args) > 1
+              and isinstance(node.args[1], ast.Constant)
+              and isinstance(node.args[1].value, str)):
+            refs[node.args[1].value] += 1
+    return refs
 
 
 def test_every_package_definition_has_a_non_test_caller():
-    words = Counter()
+    refs = Counter()
     for path in _caller_files():
-        words.update(_WORD.findall(path.read_text()))
+        refs.update(_references(ast.parse(path.read_text())))
     unreached = []
-    for qual, name, first, last, lines in _package_definitions():
+    for qual, name, node in _package_definitions():
         if qual in KEEP:
             continue
-        own = Counter(_WORD.findall("\n".join(lines[first - 1 : last])))
-        if words[name] <= own[name]:
+        if refs[name] <= _references(node)[name]:
             unreached.append(qual)
     assert unreached == [], (
         "reached only from tests (delete them with their tests, or add "
@@ -253,6 +240,19 @@ def _dict_keys(trees) -> dict[str, set[str]]:
     return keys
 
 
+def _callee(call: ast.Call) -> tuple[str | None, list[ast.expr]]:
+    """The name ``call`` calls, and the positionals it passes to it."""
+    func, args = call.func, call.args
+    if (isinstance(func, ast.Attribute) and func.attr == "submit"
+            and args and isinstance(args[0], (ast.Name, ast.Attribute))):
+        func, args = args[0], args[1:]
+    return getattr(func, "id", None) or getattr(func, "attr", None), args
+
+
+def _called(node: ast.AST) -> set[str]:
+    return {_callee(c)[0] for c in ast.walk(node) if isinstance(c, ast.Call)} - {None}
+
+
 def _passed() -> dict[str, tuple[set[str], int]]:
     """Per called name: (keywords passed, most positionals passed)."""
     trees = [ast.parse(path.read_text()) for path in _caller_files()]
@@ -262,11 +262,7 @@ def _passed() -> dict[str, tuple[set[str], int]]:
         for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
                 continue
-            func, args = call.func, call.args
-            if (isinstance(func, ast.Attribute) and func.attr == "submit"
-                    and args and isinstance(args[0], (ast.Name, ast.Attribute))):
-                func, args = args[0], args[1:]
-            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            name, args = _callee(call)
             if name is None:
                 continue
             kws, npos = passed.get(name, (set(), 0))
@@ -304,3 +300,50 @@ def test_every_defaulted_parameter_is_passed_by_a_non_test_caller():
     # the lists only shrink: an entry that is passed again, or gone, leaves
     assert sorted((set(KEEP_PARAMS) | PENDING) - unpassed) == []
     assert sorted(set(KEEP_PARAMS) & PENDING) == []
+
+
+def _spec_reach() -> dict[str, set[str]]:
+    """Per registered spec: the function names its code reaches, by
+    name, through the calls of its function and its ``@query``
+    decorator, and of the module constants those name."""
+    trees = [ast.parse(path.read_text()) for path in sorted(PACKAGE.rglob("*.py"))]
+    calls: dict[str, set[str]] = {}
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                calls.setdefault(node.name, set()).update(_called(node))
+    reach = {}
+    for tree in trees:
+        consts = {t.id: node.value for node in tree.body
+                  if isinstance(node, ast.Assign)
+                  for t in node.targets if isinstance(t, ast.Name)}
+        for node in tree.body:
+            if not _is_query(node):
+                continue
+            deco = next(d for d in node.decorator_list if isinstance(d, ast.Call))
+            todo = _called(node)
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name) and n.id in consts:
+                    todo |= _called(consts[n.id])
+            seen: set[str] = set()
+            while todo:
+                name = todo.pop()
+                if name not in seen:
+                    seen.add(name)
+                    todo |= calls.get(name, set())
+            reach[deco.args[0].value] = seen
+    return reach
+
+
+def test_pending_values_wait_for_a_spec_outside_the_export():
+    from nbi_oedi_etl_v2_spark import rotation, workload
+
+    reach = _spec_reach()
+    assert sorted(reach) == sorted(workload.all_specs())
+    export = rotation.build_driver_export(set(reach), workload.DRIVER_QUERY_CAP)
+    outside = set().union(*(r for spec, r in reach.items() if spec not in export))
+    early = sorted(p for p in PENDING if p.rsplit(".", 2)[1] not in outside)
+    assert early == [], (
+        "only exported specs reach these functions: delete the values "
+        "now and give those specs TOUCH rows"
+    )

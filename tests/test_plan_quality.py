@@ -935,7 +935,7 @@ def test_bootstrap_map_side_combined_replicates(spark, sf_dir):
     assert "Generate explode" in plan or "Generate" in plan
 
 
-def test_kcore_round_broadcast_semi_joins(spark, sf_dir):
+def test_kcore_round_broadcast_semi_joins(spark, sf_dir, graph_rounds):
     # r10: at the fixed point kcore returns the last round's
     # checkpointed (node, degree) state — survivors(t) ⊆
     # survivors(t−1), so equal counts imply the equal set and the
@@ -946,16 +946,17 @@ def test_kcore_round_broadcast_semi_joins(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "part_copurchase_kcore")
     assert "ExistingRDD" in plan
     assert "FileScan" not in plan and "Join" not in plan
-    # the in-loop shape is captured per round by the plan_probe hook
-    # (the checkpoint erases it from the returned plan): survivor
-    # sets broadcast into the semi-joins (auto rule), so the
-    # persisted edge table is never re-shuffled in the loop
+    # the in-loop shape is captured per round where the round ends in
+    # graph.checkpoint (the checkpoint erases it from the returned
+    # plan): survivor sets broadcast into the semi-joins (auto rule),
+    # so the persisted edge table is never re-shuffled in the loop
     from nbi_oedi_etl_v2_spark.operators import graph
     from nbi_oedi_etl_v2_spark.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    probe: list[str] = []
-    graph.kcore(graph.copurchase_edges(li), k=80, plan_probe=probe)
+    graph_rounds.clear()
+    graph.kcore(graph.copurchase_edges(li), k=80)
+    probe = [plan for _, plan in graph_rounds]
     assert len(probe) >= 2  # round 1 is unfiltered; ≥1 filtered round
     for loop_plan in probe[1:]:
         assert "BroadcastHashJoin" in loop_plan and "LeftSemi" in loop_plan

@@ -238,7 +238,7 @@ def test_stream_sessionize_state_bounded_after_watermark(spark, tmp_path):
             "user_id bigint, ts timestamp, value double"
         ).parquet(str(indir))
         q = (
-            streaming.sessionize_stream(src, gap="30 minutes", watermark="2 hours")
+            streaming.sessionize_stream(src)
             .writeStream.format("parquet")
             .option("path", str(tmp_path / "out"))
             .outputMode("append")

@@ -155,7 +155,7 @@ def _sym(pairs):
     return out
 
 
-def test_kcore_hand_graph(spark):
+def test_kcore_hand_graph(spark, graph_rounds):
     from nbi_oedi_etl_v2_spark.operators.graph import kcore
 
     # triangle 1-2-3 plus a pendant chain 3-4-5: the 2-core is the
@@ -163,22 +163,23 @@ def test_kcore_hand_graph(spark):
     edges = spark.createDataFrame(
         _sym([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]), "src long, dst long"
     )
-    rc = []
-    got = {r.node: r.degree for r in kcore(edges, k=2, round_counter=rc).collect()}
+    got = {r.node: r.degree for r in kcore(edges, k=2).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
+    rc = [n for n, _ in graph_rounds]
     # 5 peels in round 1, 4 in round 2, stable by round 4's probe
     assert len(rc) >= 3 and rc[-1] == rc[-2] == 3
 
 
-def test_kcore_whole_graph_and_empty(spark):
+def test_kcore_whole_graph_and_empty(spark, graph_rounds):
     from nbi_oedi_etl_v2_spark.operators.graph import kcore
 
     tri = spark.createDataFrame(
         _sym([(1, 2), (2, 3), (1, 3)]), "src long, dst long"
     )
     assert kcore(tri, k=2).count() == 3       # fixed point immediately
-    rc = []
-    assert kcore(tri, k=3, round_counter=rc).count() == 0  # everything peels
+    graph_rounds.clear()
+    assert kcore(tri, k=3).count() == 0  # everything peels
+    rc = [n for n, _ in graph_rounds]
     assert rc == [0, 0]  # an empty survivor set reads as 0 rows
 
     with pytest.raises(ValueError):
@@ -817,18 +818,16 @@ def test_cusum_output_schema_quoting_and_collisions(spark):
     # columns raise instead of silently shadowing them
     from pyspark.sql import functions as F
 
-    from nbi_oedi_etl_v2_spark.streaming import (
-        CUSUM_OUTPUT_SCHEMA,
-        _cusum_output_schema,
-    )
+    from nbi_oedi_etl_v2_spark.streaming import _cusum_output_schema
 
     df = spark.createDataFrame(
         [("a", 1)], "event_type string, x int"
     ).withColumn("weird name-1", F.lit("k"))
-    # single-key default reproduces the published constant
-    assert _cusum_output_schema(df, ["event_type"]).replace(
-        "`event_type`", "event_type"
-    ) == CUSUM_OUTPUT_SCHEMA
+    # the single-key default's schema
+    assert _cusum_output_schema(df, ["event_type"]) == (
+        "`event_type` string, ts timestamp, event_id bigint, "
+        "s_hi double, s_lo double, alert boolean"
+    )
     ddl = _cusum_output_schema(df, ["weird name-1"])
     assert "`weird name-1` string" in ddl
     # the DDL must be parseable by Spark
