@@ -1,4 +1,13 @@
-"""Benchmark harness: runs the headline workload queries at
+"""Benchmark harness: the one module that holds the operator
+benchmark's measurement decisions (session, scale, bench forms,
+noop forcing, warm-up, repeats, drift and plan normalization).
+
+    python bench.py                                 # the headline run
+    python bench.py focus KEY... [--reps N]         # per-key timing
+    python bench.py plans SUFFIX [--final] [KEY...] # plan dumps
+    python bench.py drift OLD NEW [--bar B]         # compare two runs
+
+With no verb it runs the headline workload queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE COMPACT JSON line:
 
@@ -40,17 +49,20 @@ JVM startup is the main local-mode risk).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-from nbi_oedi_etl_v2_spark import workload  # noqa: E402
+from nbi_oedi_etl_v2_spark import rotation, workload  # noqa: E402
 from nbi_oedi_etl_v2_spark.operators.downsample import downsample  # noqa: E402
 from nbi_oedi_etl_v2_spark.session import get_spark  # noqa: E402
 from nbi_oedi_etl_v2_spark.tables import load_table  # noqa: E402
@@ -63,12 +75,42 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "5")))
 # key (interleaved ABA, fresh sessions, idle machine, median of 7), so
 # a 15% bar under that noise manufactures "regression" verdicts — the
 # r6 re-baseline was caused by exactly this. Per-key regression claims
-# now require an interleaved ABA (tools/bench_focus.py), not one
+# now require an interleaved ABA (``bench.py focus``), not one
 # flagged median.
 DRIFT_BAR = 1.30
-REFERENCE_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_REFERENCE.json"
-)
+REFERENCE_PATH = os.path.join(HERE, "BENCH_REFERENCE.json")
+
+# Run-dependent counters in an ``explain("formatted")`` dump:
+# expression ids (#123), exchange plan ids, the ids of checkpointed
+# RDDs and whole-stage-codegen ids, and the ``Arguments:`` id of each
+# AQE query stage (stages and codegen ids are numbered in completion
+# order, which varies between runs of one plan).
+_PLAN_IDS = re.compile(r"(#|plan_id=|RDD\[|\[codegen id : )\d+")
+_STAGE_IDS = re.compile(r"(QueryStage\nOutput \[\d+\]: .*\nArguments: )\d+")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with its run-dependent ids replaced by a fixed ``N``,
+    so two captures of one plan are byte-identical and a plan check
+    is one ``diff``; a changed operator or join side still shows."""
+    return _STAGE_IDS.sub(r"\1N", _PLAN_IDS.sub(r"\1N", plan))
+
+
+def _session():
+    spark = get_spark(app_name="nbi-oedi-etl-v2-spark-bench")
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _bench_forms(keys: list[str]) -> dict:
+    """Each key's bench form, the one the headline times: the raw
+    operator (``bench_fn``) when the driver form is an
+    invariant-verification wrapper, else the driver fn."""
+    specs = workload.all_specs()
+    unknown = sorted(set(keys) - set(specs))
+    if unknown:
+        sys.exit(f"not registered specs: {unknown}")
+    return {k: specs[k].bench_fn or specs[k].fn for k in keys}
 
 
 def _force(df) -> None:
@@ -90,9 +132,9 @@ def warm_up(spark) -> None:
     _force(workload.all_specs()["streaming_hourly_downsample"].fn(spark, SF_DIR))
 
 
-def _samples(run, label: str) -> list[float]:
+def _samples(run, label: str, reps: int = REPS) -> list[float]:
     out = []
-    for _ in range(REPS):
+    for _ in range(reps):
         t0 = time.perf_counter()
         run()
         out.append(time.perf_counter() - t0)
@@ -100,6 +142,15 @@ def _samples(run, label: str) -> list[float]:
     spread = ", ".join(f"{s:.3f}" for s in out)
     print(f"# {label}: median {med:.3f}s of [{spread}]", file=sys.stderr)
     return out
+
+
+def _spread(samples: list[float]) -> dict[str, float]:
+    return {
+        "min": round(min(samples), 4),
+        "med": round(statistics.median(samples), 4),
+        "max": round(max(samples), 4),
+        "n": len(samples),
+    }
 
 
 def _load_reference(sf: str) -> dict[str, float]:
@@ -116,11 +167,9 @@ def _load_reference(sf: str) -> dict[str, float]:
         return {}
 
 
-def main() -> None:
+def headline() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark(app_name="nbi-oedi-etl-v2-spark-bench")
-    spark.sparkContext.setLogLevel("WARN")
-
+    spark = _session()
     warm_up(spark)
 
     reference = _load_reference(sf)
@@ -129,13 +178,8 @@ def main() -> None:
     drift: dict[str, dict[str, object]] = {}
 
     def record(name: str, samples: list[float]) -> None:
-        timings[name] = round(statistics.median(samples), 4)
-        spread[name] = {
-            "min": round(min(samples), 4),
-            "med": timings[name],
-            "max": round(max(samples), 4),
-            "n": len(samples),
-        }
+        spread[name] = _spread(samples)
+        timings[name] = spread[name]["med"]
 
     headline = workload.headline_queries()
     for name, fn in headline.items():
@@ -227,9 +271,7 @@ def main() -> None:
         "state_store_ab": state_store_ab,
         "sf": sf_val,
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
     try:
         with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -264,5 +306,129 @@ def main() -> None:
     spark.stop()
 
 
+def focus(keys: list[str], reps: int) -> None:
+    """The headline's warm-up and noop-forced loop over each key's
+    bench form, in one fresh session: one flushed JSON line per key.
+    Run it from two checkouts, interleaved, for a per-key ABA without
+    composition effects. As a scale soak (``SPARK_GRAFT_SF_DIR`` at a
+    derived sf1/sf10, SCALE.md "Soak-protocol finding") run ONE key per
+    invocation: keys sharing a session contaminate each other."""
+    fns = _bench_forms(keys)
+    spark = _session()
+    warm_up(spark)
+    for name, fn in fns.items():
+        samples = _samples(lambda: _force(fn(spark, SF_DIR)), name, reps)
+        print(json.dumps({"query": name, "sf_dir": SF_DIR, **_spread(samples)}),
+              flush=True)
+    spark.stop()
+
+
+def plans(suffix: str, final: bool, keys: list[str]) -> None:
+    """Dump ``explain("formatted")`` of each key's bench form (default:
+    the headline keys), normalized, to plans/<round>/<key>_<suffix>.txt;
+    the round directory comes from ``$SPARK_GRAFT_PLANS_DIR`` (default
+    ``r{rotation.CURRENT_ROUND}``). Without ``final`` this is planning
+    only: no job is executed. With ``final`` the query's OWN
+    QueryExecution is executed (its executedPlan's RDD is counted, no
+    rows reach Python) and the FINAL adaptive plan is dumped: AQE
+    runtime exchange reuse, skew splits and join rewrites are only
+    visible there. A noop-sink write would run a SEPARATE
+    QueryExecution and leave this one un-executed, its dump still
+    saying ``isFinalPlan=false``."""
+    fns = _bench_forms(keys or list(workload.headline_queries()))
+    out_dir = os.path.join(HERE, "plans", os.environ.get(
+        "SPARK_GRAFT_PLANS_DIR", f"r{rotation.CURRENT_ROUND}"))
+    os.makedirs(out_dir, exist_ok=True)
+    spark = _session()
+    for name, fn in fns.items():
+        try:
+            df = fn(spark, SF_DIR)
+            if final:
+                df._jdf.queryExecution().executedPlan().execute().count()
+            txt = normalize_plan(df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            ))
+        except Exception as exc:  # noqa: BLE001 — record, keep going
+            txt = f"EXPLAIN FAILED: {exc!r}\n"
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(txt)
+        print(f"wrote {path}", file=sys.stderr)
+    spark.stop()
+
+
+def _load_bench(path: str) -> dict:
+    """A bench JSON: raw ``bench.py`` output or BENCH_DETAIL.json, or
+    the ``BENCH_r{N}.json`` wrapper, which holds it under ``parsed``."""
+    with open(path) as f:
+        d = json.load(f)
+    return d["parsed"] if "parsed" in d else d
+
+
+def drift(old_path: str, new_path: str, bar: float) -> int:
+    """One line per common query with the relative delta, and the
+    common-set total. Queries beyond ``bar`` in either direction are
+    flagged; with ``spread`` data on both sides a flag is downgraded to
+    ``noise?`` when the two runs' min-max envelopes overlap, i.e. the
+    medians differ by less than the runs' own jitter."""
+    old, new = _load_bench(old_path), _load_bench(new_path)
+    oq, nq = old.get("queries", {}), new.get("queries", {})
+    osp, nsp = old.get("spread", {}), new.get("spread", {})
+    common = [k for k in oq if k in nq]
+    if not common:
+        print("no common queries", file=sys.stderr)
+        return 1
+
+    flagged = 0
+    for k in common:
+        rel = nq[k] / oq[k] - 1
+        mark = ""
+        if abs(rel) > bar:
+            mark = "REGRESSED" if rel > 0 else "improved"
+            o_s, n_s = osp.get(k), nsp.get(k)
+            if o_s and n_s and n_s["min"] <= o_s["max"] and o_s["min"] <= n_s["max"]:
+                mark += " noise? (spread envelopes overlap)"
+            if rel > bar:
+                flagged += 1
+        print(f"{k:34s} {oq[k]:8.3f} -> {nq[k]:8.3f}  {rel:+7.1%}  {mark}")
+
+    o_tot = sum(oq[k] for k in common)
+    n_tot = sum(nq[k] for k in common)
+    print(
+        f"\ncommon-set total: {o_tot:.2f} -> {n_tot:.2f} "
+        f"({n_tot / o_tot - 1:+.1%}); {flagged} above the +{bar:.0%} bar"
+    )
+    return 0
+
+
+def main(argv: list[str]) -> int:
+    if not argv:
+        headline()
+        return 0
+    verb, rest = argv[0], argv[1:]
+    ap = argparse.ArgumentParser(prog=f"bench.py {verb}")
+    if verb == "focus":
+        ap.add_argument("keys", nargs="+")
+        ap.add_argument("--reps", type=int, default=REPS)
+        args = ap.parse_intermixed_args(rest)
+        focus(args.keys, args.reps)
+    elif verb == "plans":
+        ap.add_argument("suffix")
+        ap.add_argument("--final", action="store_true")
+        ap.add_argument("keys", nargs="*")
+        args = ap.parse_intermixed_args(rest)
+        plans(args.suffix, args.final, args.keys)
+    elif verb == "drift":
+        ap.add_argument("old")
+        ap.add_argument("new")
+        ap.add_argument("--bar", type=float, default=0.15)
+        args = ap.parse_args(rest)
+        return drift(args.old, args.new, args.bar)
+    else:
+        ap.error(f"unknown verb {verb!r}: focus, plans or drift, or none "
+                 "for the headline run")
+    return 0
+
+
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main(sys.argv[1:]))

@@ -111,8 +111,16 @@ def classify_aggregates(
             # worker.py:117-118 — floats → mean; worker.py:129-135 → round.
             # Mean runs on an exact DECIMAL accumulator so the result is
             # independent of partial-aggregation order (SURVEY §7 risk 1);
-            # cast back to double before the round.
-            mean = F.sum(quoted.cast("decimal(38,10)")).cast("double") / F.count(quoted)
+            # cast back to double before the round. The cast turns NaN and
+            # ±inf into NULL, which the sum skips but the count keeps, so
+            # a group whose plain double sum is not finite takes the IEEE
+            # mean instead: NaN or ±inf, as pyarrow's mean gives.
+            n = F.count(quoted)
+            total = F.sum(quoted)
+            mean = (
+                F.when(F.isnan(total) | (F.abs(total) == float("inf")), total / n)
+                .otherwise(F.sum(quoted.cast("decimal(38,10)")).cast("double") / n)
+            )
             aggs.append(F.round(mean, decimal_places).alias(f"{name}_mean"))
         else:
             # worker.py:119-122 — everything else → min.

@@ -63,9 +63,11 @@ whole cohort is at age 5, so it MUST export this round. PIN(3) + the
 cohort leaves 4 slots, not ~9. This round's operator changes (one
 observed-checkpoint step for the iterative loops) take 3 of them as
 TOUCH rows; the fourth TOUCH spec sits inside the cohort, and the
-last slot is fill. Deleting the settable values that no caller set
-changed the operators of 11 more cohort specs, so they hold TOUCH
-rows too (15 in all) and the export stays the same 50 specs. The
+last slot was left for fill. Deleting the settable values that no caller set
+changed the operators of 11 more specs, so they hold TOUCH rows too
+(15 in all) and the export stays the same 50 specs; one of them,
+corpus_budget_select, reads 8 and takes the fill slot. The IEEE
+hourly mean adds etl_write_pipeline, inside the cohort. The
 values left in functions that a spec outside this export reaches
 wait for that spec's slot (``PENDING`` in
 tests/test_package_surface.py). The deferred simhash batching
@@ -74,7 +76,7 @@ tests/test_package_surface.py). The deferred simhash batching
 ROUND-13 NOTE (computed at the end of round 12): merge CORRECTNESS_r12
 greens first; the oldest cohort then becomes the specs reading 8 (38
 of them if every r12 row is green: the 40 that read 8 now, minus
-corpus_incremental_dedup and the one fill slot), so PIN + that cohort
+corpus_incremental_dedup and corpus_budget_select), so PIN + that cohort
 leaves ~9 slots for TOUCH + fill. Bound 5 stays feasible while
 R <= 250 (R = 215); the prospective capacity assert in
 tests/test_workload_oracle.py fails the round a spec lands past that
@@ -332,9 +334,15 @@ PIN: frozenset[str] = frozenset({
 # costs no slot; customer_entity_resolution (reads 11) keeps its pytest
 # DuckDB oracle. The settable values that no caller set are deleted,
 # with their defaults inlined, from the operators of 11 more specs;
-# each reads 7, so it exports with the age-5 cohort and its row costs
-# no slot. The budget: PIN(3) + 3 TOUCH outside the cohort + the
-# 43-spec age-5 cohort + 1 fill = 50.
+# each but corpus_budget_select (reads 8) reads 7, so it exports with
+# the age-5 cohort and its row costs no slot. The hourly mean now
+# follows IEEE on NaN and ±inf readings (downsample.classify_aggregates):
+# etl_write_pipeline reads 7 and exports with the cohort;
+# etl_hourly_downsample (reads 10) and streaming_hourly_downsample
+# (reads 10) have no slot and keep their pytest DuckDB oracles. The
+# budget: PIN(3) + 4 TOUCH outside the cohort (corpus_budget_select
+# holds what was the fill slot) + the 43-spec age-5 cohort = 50, so a
+# fifth would push an age-5 spec (user_running_value) out.
 TOUCH: frozenset[str] = frozenset({
     "part_copurchase_kcore",
     "part_copurchase_labelprop",
@@ -351,6 +359,7 @@ TOUCH: frozenset[str] = frozenset({
     "streaming_dedup_events",
     "streaming_ewma_alerts",
     "streaming_sessionize",
+    "etl_write_pipeline",
 })
 
 # ADVISED - explicit re-verification asks: none this round.

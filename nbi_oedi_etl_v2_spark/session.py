@@ -94,8 +94,8 @@ def get_spark(
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)
     # SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — ad-hoc conf injection for
-    # tooling that can't reach the extra_conf parameter (tools/soak.py,
-    # bench.py). Found necessary for the sf30+ graph soaks: a 100 GB
+    # tooling that can't reach the extra_conf parameter (bench.py and
+    # its verbs). Found necessary for the sf30+ graph soaks: a 100 GB
     # driver heap never GCs, so the ContextCleaner never deletes a
     # finished rep's shuffle files and the SECOND rep of an iterative
     # graph query dies on disk — spark.cleaner.periodicGC.interval=60s

@@ -4,6 +4,7 @@ substring-span dedup, and event-sequence analytics."""
 from __future__ import annotations
 
 import datetime
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -218,3 +219,23 @@ def test_gapfill_interp_edge_fills(spark):
     got = {(r["user_id"], r["hr"].hour): r["value_interp"] for r in rows}
     assert got == {(1, 0): 7.0, (2, 0): 1.0, (2, 1): 2.0}
     assert all(not r["is_gap"] for r in rows)
+
+
+def test_hourly_mean_of_non_finite_readings(spark):
+    """The hourly mean follows IEEE (pyarrow's ``mean``) on NaN and
+    ±inf readings instead of dropping them from the sum while the
+    count keeps them, and still skips NULLs."""
+    from nbi_oedi_etl_v2_spark.operators.downsample import downsample
+
+    inf, nan = float("inf"), float("nan")
+    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    readings = {1: [1.0, nan], 2: [1.0, inf], 3: [inf, -inf], 4: [-inf, 2.0],
+                5: [1.0, None, 2.0], 6: [None, None], 7: [0.1, 0.2]}
+    df = spark.createDataFrame(
+        [(b, t0 + datetime.timedelta(minutes=15 * i), v)
+         for b, vs in readings.items() for i, v in enumerate(vs)],
+        "bldg_id bigint, timestamp timestamp, v double",
+    )
+    got = {r["bldg_id"]: r["v_mean"] for r in downsample(df).collect()}
+    assert math.isnan(got.pop(1)) and math.isnan(got.pop(3))
+    assert got == {2: inf, 4: -inf, 5: 1.5, 6: None, 7: 0.15}
