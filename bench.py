@@ -7,6 +7,9 @@ noop forcing, warm-up, repeats, drift and plan normalization).
     python bench.py plans SUFFIX [--final] [KEY...] # plan dumps
     python bench.py drift OLD NEW [--bar B]         # compare two runs
 
+``drift``'s bar B defaults to ``DRIFT_BAR - 1`` (0.30), the headline's
+rerun bar.
+
 With no verb it runs the headline workload queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE COMPACT JSON line:
@@ -76,7 +79,7 @@ REPS = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "5")))
 # a 15% bar under that noise manufactures "regression" verdicts — the
 # r6 re-baseline was caused by exactly this. Per-key regression claims
 # now require an interleaved ABA (``bench.py focus``), not one
-# flagged median.
+# flagged median. ``bench.py drift`` flags at the same bar by default.
 DRIFT_BAR = 1.30
 REFERENCE_PATH = os.path.join(HERE, "BENCH_REFERENCE.json")
 
@@ -103,14 +106,12 @@ def _session():
 
 
 def _bench_forms(keys: list[str]) -> dict:
-    """Each key's bench form, the one the headline times: the raw
-    operator (``bench_fn``) when the driver form is an
-    invariant-verification wrapper, else the driver fn."""
+    """Each key's ``bench_fn``, the form the headline times."""
     specs = workload.all_specs()
     unknown = sorted(set(keys) - set(specs))
     if unknown:
         sys.exit(f"not registered specs: {unknown}")
-    return {k: specs[k].bench_fn or specs[k].fn for k in keys}
+    return {k: specs[k].bench_fn for k in keys}
 
 
 def _force(df) -> None:
@@ -421,7 +422,7 @@ def main(argv: list[str]) -> int:
     elif verb == "drift":
         ap.add_argument("old")
         ap.add_argument("new")
-        ap.add_argument("--bar", type=float, default=0.15)
+        ap.add_argument("--bar", type=float, default=round(DRIFT_BAR - 1, 2))
         args = ap.parse_args(rest)
         return drift(args.old, args.new, args.bar)
     else:

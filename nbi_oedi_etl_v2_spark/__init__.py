@@ -17,8 +17,8 @@ Layout
 - ``operators``  : relational + pipeline operators (hourly downsample,
   joins, top-k, dedup family, similarity search, text analysis,
   multimodal plumbing).
-- ``functions``  : scalar/column helpers (hour floor, round-7,
-  cosine similarity expressions).
+- ``functions``  : the exact-decimal sum/mean helpers (``dsum``,
+  ``davg``) and their DuckDB SQL twins (``dsum_sql``, ``davg_sql``).
 - ``plans``      : named-query registry (``-- label:`` headers,
   ``${placeholder}`` substitution) and the saved analytical queries.
 - ``streaming``  : Structured Streaming variants (hourly downsample

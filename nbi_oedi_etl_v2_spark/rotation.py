@@ -26,34 +26,9 @@ This module encodes the bound STRUCTURALLY instead of by hand:
   + oldest-first fill to the cap (ties broken by name, so the export
     is deterministic and reproducible from this file alone).
 
-ROUND-10 STATE (executes the round-9 note verbatim): a registry of R
-specs refreshed at most cap=50 rows/round cannot guarantee a
-staleness bound below ceil(R/cap); with R=209 that floor is 5, so
-``STALENESS_BOUND_ROUNDS = 5``. CORRECTNESS_r09 was 50/50 green
-(rows+schema+hash, zero err) and is merged below - every key in that
-file, including the 6 wave-28/29 first rows, now reads 9. The r10
-export is exactly what the round-9 note predicted: PIN + the new
-TOUCH (this round's code changes: the two-level-prefix full-outer
-boundary guard and its three consumers, the NULL-flag semantics fix
-in the two-sample tests, the graph mem-parse strictness, and the
-explode-funnel widenings) + the 2 never-verified wave-30 specs +
-the 29-spec r5 cohort at age 5 - they MUST all export this round or
-the bound breaks for the first time - with the remaining 5 slots
-from the r6 cohort oldest-first. ``DEFER_FIRST_ROW`` is EMPTY.
-
-ROUND-11 STATE (executes the round-10 note verbatim):
-CORRECTNESS_r10 was 50/50 green and is merged below (every key in
-that file reads 10, including the two wave-30 first rows). The r11
-export is PIN(3) + TOUCH(8: the round-10 backlog the r10 verdict
-flagged plus this round's labelprop/minhash changes; 3 of the 8 sit
-inside the age-5 cohort) + the 4 wave-31 first rows (never-verified;
-DEFER_FIRST_ROW is now EMPTY) + the 38-spec r6 cohort at age 5 -
-they MUST all export this round or the bound breaks for the first
-time. That sums to EXACTLY the 50-row cap, with zero slack: one
-change this round (the simhash expression batching, measured, and
-the -0.0 literal emitter in _pq_cent_literal) was deliberately
-deferred/resolved-by-documentation because its spec's TOUCH row
-would not fit - see the TOUCH comment below.
+A registry of R specs refreshed at most cap rows per round cannot
+bound staleness below ceil(R/cap) rounds, so
+``STALENESS_BOUND_ROUNDS`` is ceil(215/50) = 5.
 
 ROUND-12 STATE: CORRECTNESS_r11 was 50/50 green and is merged below
 (every key in that file reads 11, including the four wave-31 first

@@ -13,43 +13,45 @@ Conventions:
   between engines;
 - ranks/counts are cast to BIGINT on both sides;
 - no query collects to the driver; each returns a lazy DataFrame.
+
+Each spec is declared once, by its ``@query``: name, oracle, headline
+flag, doc and bench form. Nothing edits a spec after registration;
+which specs the driver gets is computed from the registry by
+``rotation.build_driver_export``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import rotation
 from .functions import SUM_DECIMAL, davg, davg_sql, dsum, dsum_sql
 from .operators.downsample import downsample
 from .tables import load_table
 
 
-@dataclass
+@dataclass(frozen=True)
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → non-SQL-expressible, rows-only check
-    headline: bool = False  # included in bench.py
+    # The form bench.py times: ``fn`` unless the spec passes a raw
+    # operator. Some exported forms wrap the operator in a verification
+    # harness (exact twin + in-plan invariant columns) so DuckDB can
+    # hash-match sketch/approx output; the bench keeps timing the raw
+    # operator so BENCH_r{N} keys measure one plan round over round.
+    bench_fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str  # DuckDB SQL whose rows the spec must hash-match
+    headline: bool = False  # timed by bench.py
     doc: str = ""
-    driver: bool = True  # exported to __spark_entry__ (cap below)
-    # Round 5: some driver queries wrap the raw operator in a
-    # verification harness (exact twin + in-plan invariant columns) so
-    # DuckDB can hash-match sketch/approx output. The bench must keep
-    # timing the RAW operator (BENCH_r{N} keys are compared round over
-    # round; swapping the measured plan would corrupt the drift gate),
-    # so a spec may carry a separate bench-only callable.
-    bench_fn: Callable[[SparkSession, str], DataFrame] | None = None
 
 
 # The verification driver records correctness rows for at most this
-# many queries (round 1: 53 registered → exactly the first 50 got
-# rows). Everything past the cap would be silently unverified, so the
-# registry exports exactly the cap to the driver; the overflow
-# (driver=False) queries keep full oracle coverage in pytest
+# many queries, so ``rotation.build_driver_export`` picks at most this
+# many; every spec keeps its oracle check in pytest
 # (tests/test_workload_oracle.py runs ALL specs).
 DRIVER_QUERY_CAP = 50
 
@@ -58,15 +60,14 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def query(
     name: str,
-    oracle: str | None,
+    oracle: str,
     headline: bool = False,
     doc: str = "",
-    driver: bool = True,
     bench_fn: Callable[[SparkSession, str], DataFrame] | None = None,
 ):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(
-            name, fn, oracle, headline, doc, driver, bench_fn
+            name, fn, bench_fn or fn, oracle, headline, doc
         )
         return fn
 
@@ -133,7 +134,6 @@ def q_etl_hourly_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     doc="TPC-H Q1 pricing summary: filter→hash agg with partial "
         "(map-side) combine; the 100 TB shape of worker.py's A1.",
-    driver=False,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -169,7 +169,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.c_mktsegment = 'BUILDING' AND o.o_orderstatus = 'O'
     """,
     doc="Saved query 1 parity shape (sql/saved-queries.sql:10-17): "
-        "broadcast dim join + exact COUNT DISTINCT.",    driver=False,
+        "broadcast dim join + exact COUNT DISTINCT.",
 )
 def q_segment_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -197,7 +197,6 @@ def q_segment_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     doc="Saved query 2 parity shape (sql/saved-queries.sql:20-26): "
         "per-group exact count-distinct.",
-    driver=False,
 )
 def q_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -231,7 +230,6 @@ def q_customers_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
     doc="Saved query 3 parity shape (sql/saved-queries.sql:29-45): "
         "DISTINCT → row_number() per group → rn<=k + group filter.",
-    driver=False,
 )
 def q_topk_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -255,7 +253,7 @@ def q_topk_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "distinct_flags",
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
-    doc="D1 distinct projection; map-side partial dedup before shuffle.",    driver=False,
+    doc="D1 distinct projection; map-side partial dedup before shuffle.",
 )
 def q_distinct_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
@@ -278,7 +276,7 @@ def q_distinct_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     headline=True,
     doc="J1 at scale: two broadcast hash joins (dims ≤25 rows) feeding "
-        "one hash aggregate — zero fact-side shuffles before the agg.",    driver=False,
+        "one hash aggregate — zero fact-side shuffles before the agg.",
 )
 def q_nation_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -309,9 +307,6 @@ def q_nation_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY date_trunc('month', o_orderdate)
     """,
     doc="Count-distinct keyed by a derived time column.",
-    # A4-family coverage already carried by customers_per_segment;
-    # pytest-only so the driver's 50 rows go to distinct operators.
-    driver=False,
 )
 def q_monthly_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -340,7 +335,7 @@ def q_monthly_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     """,
     doc="Cumulative windowed sum per user; exact-decimal accumulator "
-        "so the running values hash-match the oracle.",    driver=False,
+        "so the running values hash-match the oracle.",
 )
 def q_user_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -381,7 +376,7 @@ def q_user_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Sessionization: lag-gap flag + running count → session ids "
         "(guide 'Common OLAP patterns'); batch analogue of "
-        "session_window in streaming.",    driver=False,
+        "session_window in streaming.",
 )
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -427,10 +422,6 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Left anti join (NOT EXISTS): broadcast the order-key set "
         "when it fits, shuffled hash anti join otherwise (AQE picks).",
-    # pytest keeps the hash-check (test_workload_oracle runs every
-    # spec); driver slot ceded to a packing/mixing operator — the anti
-    # join shape stays driver-covered via corpus_near_dedup
-    driver=False,
 )
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -449,7 +440,7 @@ def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
     """,
     doc="Left semi join (EXISTS) with the filter pushed into the "
-        "probe side before the join.",    driver=False,
+        "probe side before the join.",
 )
 def q_customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -467,9 +458,6 @@ def q_customers_with_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
     """,
     doc="EXCEPT (distinct set difference) — planned as left anti join.",
-    # pytest keeps the hash-check (test_workload_oracle runs every
-    # spec); driver slot ceded to a packing/mixing operator
-    driver=False,
 )
 def q_custkeys_1995_not_1996(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -488,9 +476,6 @@ def q_custkeys_1995_not_1996(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
     """,
     doc="INTERSECT (distinct) — planned as left semi join.",
-    # left-semi planning carried by customers_with_open_orders and the
-    # EXCEPT twin above; pytest-only to stay under the driver cap.
-    driver=False,
 )
 def q_custkeys_1995_and_1996(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -510,10 +495,6 @@ def q_custkeys_1995_and_1996(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="ROLLUP hierarchy (status → priority → grand total) in one "
         "pass; Spark expands grouping sets inside a single aggregate.",
-    # pytest keeps the hash-check; driver slot ceded to a packing
-    # operator — grouping-set coverage stays driver-checked via
-    # orders_cube and orders_grouping_sets
-    driver=False,
 )
 def q_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -535,7 +516,6 @@ def q_orders_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="PIVOT on a low-cardinality column with explicit values (an "
         "implicit-values pivot would need a driver-side distinct).",
-    driver=False,
 )
 def q_orders_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -564,10 +544,6 @@ def q_orders_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Global top-k: ORDER BY + LIMIT plans as TakeOrderedAndProject "
         "(per-partition heaps, no global sort); orderkey tie-break "
         "keeps it deterministic.",
-    # pytest keeps the hash-check; driver slot ceded to a packing
-    # operator — top-k coverage stays driver-checked via q3 and
-    # topk_per_segment
-    driver=False,
 )
 def q_top10_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -591,7 +567,6 @@ def q_top10_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Exact interpolated percentiles (sort-based, deterministic — "
         "no summation-order issues). approx_percentile is the sketch "
         "alternative at 100 TB when exactness isn't contractual.",
-    driver=False,
 )
 def q_price_percentiles_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -682,7 +657,6 @@ def q_asof_last_order_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Value-range window frame (events of the same user in the "
         "preceding hour, exclusive): rangeBetween on integer "
         "microseconds — a self range join without the range join.",
-    driver=False,
 )
 def q_events_in_prior_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -837,81 +811,47 @@ def q_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver-slot rotation (round 6).
-#
-# The verification driver records at most DRIVER_QUERY_CAP correctness
-# rows per round, but the registry holds 147+ specs. Rounds 1-5 chose
-# the export by hand; round 6 computes it from the committed
-# verification history so the staleness bound VERDICT r5 demanded is
-# structural: ``rotation.build_driver_export`` takes the permanent PIN
-# trio, every never-driver-verified spec, this round's TOUCH set
-# (operator code changed), the ADVISED re-verifications, then fills
-# oldest-first to the cap. See ``rotation.py`` for the policy and
-# ``tests/test_workload_oracle.py`` for the bound assertion.
-# Computed lazily in ``_ensure_extensions`` (the registry isn't
-# complete until the extension modules import).
+# The driver export. The verification driver records at most
+# DRIVER_QUERY_CAP correctness rows per round, and the registry holds
+# more specs than that: ``rotation.build_driver_export`` picks the
+# export from the committed verification history (the permanent PIN
+# trio, every never-driver-verified spec, this round's TOUCH set, the
+# ADVISED re-verifications, then oldest-first to the cap). See
+# ``rotation.py`` for the policy and ``tests/test_workload_oracle.py``
+# for the staleness-bound assertion.
 # ---------------------------------------------------------------------------
 
-DRIVER_EXPORT: frozenset[str] = frozenset()
+
+def _exported() -> list[QuerySpec]:
+    specs = all_specs()
+    names = rotation.build_driver_export(set(specs), DRIVER_QUERY_CAP)
+    return [spec for name, spec in specs.items() if name in names]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _ensure_extensions()
-    exported = {
-        name: spec.fn for name, spec in REGISTRY.items() if spec.driver
-    }
-    assert len(exported) <= DRIVER_QUERY_CAP, (
-        f"{len(exported)} driver queries exceed the driver's "
-        f"{DRIVER_QUERY_CAP}-row correctness cap; demote one "
-        "(drop from DRIVER_EXPORT) or it will be silently unverified"
-    )
-    return exported
+    return {spec.name: spec.fn for spec in _exported()}
 
 
 def oracle_sql() -> dict[str, str]:
-    _ensure_extensions()
-    return {
-        name: spec.oracle
-        for name, spec in REGISTRY.items()
-        if spec.oracle is not None and spec.driver
-    }
+    return {spec.name: spec.oracle for spec in _exported()}
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Every registered spec, including pytest-only (driver=False) ones."""
-    _ensure_extensions()
+    """Every registered spec, exported to the driver or not."""
+    # The extension workloads import ``query`` from this module, so
+    # they are imported here, not at the top.
+    from . import workload_ext, workload_tpch  # noqa: F401
+
     return dict(REGISTRY)
 
 
 def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Bench surface: the raw operator (``bench_fn``) when the driver
-    form is an invariant-verification wrapper, else the driver fn —
-    keeps BENCH keys measuring the same plan every round."""
-    _ensure_extensions()
+    """Bench surface: each headline spec's ``bench_fn``."""
     return {
-        name: (spec.bench_fn or spec.fn)
-        for name, spec in REGISTRY.items()
+        name: spec.bench_fn
+        for name, spec in all_specs().items()
         if spec.headline
     }
-
-
-def _ensure_extensions() -> None:
-    """Late-import the extension workload (it imports ``query`` from
-    this module, so a top-level import would be circular), then apply
-    the central driver rotation: DRIVER_EXPORT is the single source of
-    truth, overriding every per-spec ``driver=`` kwarg (which records
-    only the historical pre-rotation default)."""
-    global DRIVER_EXPORT
-    from . import workload_ext  # noqa: F401
-    from . import workload_tpch  # noqa: F401
-    from . import rotation
-
-    if not DRIVER_EXPORT:
-        DRIVER_EXPORT = rotation.build_driver_export(
-            set(REGISTRY), DRIVER_QUERY_CAP
-        )
-    for name, spec in REGISTRY.items():
-        spec.driver = name in DRIVER_EXPORT
 
 
 @query(
@@ -935,7 +875,7 @@ def _ensure_extensions() -> None:
         "SF-proportional (~20% of customers), so its join strategy "
         "is AQE's call — broadcast at bench SF, shuffle at 100 TB. "
         "Predicate pushdown on both date filters, exact-decimal "
-        "revenue sum, top-10 via per-partition heaps.",    driver=False,
+        "revenue sum, top-10 via per-partition heaps.",
 )
 def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = "1998-06-01"
@@ -982,7 +922,7 @@ def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "they shuffle on their keys). Only the constant-size nation/"
         "region dims are forced broadcasts. The same-nation customer⋈"
         "supplier condition rides the supplier join as a residual; the "
-        "region/date filters prune before any shuffle.",    driver=False,
+        "region/date filters prune before any shuffle.",
 )
 def q_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -1042,7 +982,6 @@ def q_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shape re-joined FULL lineitem through a semi-join and "
         "re-aggregated it post-join — 2 fact scans and a "
         "fact-sized 3-way join for nothing.",
-    driver=False,
 )
 def q_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -1098,7 +1037,7 @@ def q_orders_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Explicit GROUPING SETS (per-status and per-priority margins "
         "only, no cross or grand total) via Spark SQL — the general "
-        "form behind rollup/cube.",    driver=False,
+        "form behind rollup/cube.",
 )
 def q_orders_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")

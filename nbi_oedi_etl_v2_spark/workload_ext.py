@@ -6,21 +6,57 @@ engine-portable arithmetic (sequential folds, regexes, exact joins) the
 DuckDB SQL mirrors the Spark expression tree operation-for-operation —
 that's what makes bit-exact hash matching possible. Sketch-based
 variants (MinHash, SimHash, hyperplane LSH) depend on xxhash64, which
-DuckDB doesn't implement → rows-only driver check, with recall-vs-exact
-assertions in the pytest suite instead (tests/test_extensions.py).
+DuckDB doesn't implement → the registered form runs an exact twin in
+the same plan and emits invariant columns the oracle can hash-match
+(a spec whose twin would dominate the timing gives the bench the raw
+operator as ``bench_fn``); recall-vs-exact assertions live in the
+pytest suite (tests/test_extensions.py).
 """
 
 from __future__ import annotations
+
+import datetime
+import hashlib
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import streaming
-from .functions import davg_sql, dsum_sql
-from .operators import curation, dedup, multimodal, packing, similarity, text
+from .functions import SUM_DECIMAL, davg_sql, dsum, dsum_sql
+from .operators import (
+    analytics,
+    basket,
+    bpe,
+    cluster,
+    curation,
+    dedup,
+    frequency,
+    fuzzy,
+    graph,
+    history,
+    index,
+    intervals,
+    layout,
+    membership,
+    multimodal,
+    order_stats,
+    packing,
+    quality,
+    similarity,
+    sketches,
+    stats,
+    text,
+)
 from .operators._scale import widen_narrow_input
+from .operators.downsample import downsample, gapfill_hourly, gapfill_hourly_interp
+from .operators.quality import BENFORD_EXPECTED, Suite, fd_violations
+from .operators.stats import POISSON1_CDF
+from .sources import formats, skipping
+from .sources.evolution import align_schemas
 from .tables import load_table
-from .workload import HOURLY_DOWNSAMPLE_ORACLE, REGISTRY, query
+from .workload import HOURLY_DOWNSAMPLE_ORACLE, query
 
 
 def _scratch_dir(name: str, sf_dir: str) -> str:
@@ -30,10 +66,6 @@ def _scratch_dir(name: str, sf_dir: str) -> str:
     the previous copy instead of leaking a fresh mkdtemp dir each run
     (ADVICE r3).  The sf_dir hash keeps different scale factors from
     clobbering each other within one process sweep."""
-    import hashlib
-    import os
-    import tempfile
-
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(
         tempfile.gettempdir(), f"spark_graft_scratch_{name}_{tag}"
@@ -53,7 +85,6 @@ def _scratch_dir(name: str, sf_dir: str) -> str:
     GROUP BY text
     """,
     doc="Exact dedup: stable (min-id) representative per distinct text.",
-    driver=False,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -178,7 +209,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "block join; driver form hash-matches a blocked==brute-force "
         "equivalence invariant (the brute-force twin exists only for "
         "verification at test scale — production uses the block join).",
-    driver=False,
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -231,7 +261,7 @@ def _duck_norms() -> str:
     SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.45
     """,
     doc="Embedding-cosine near-dup pairs (exact all-pairs oracle twin "
-        "of the hyperplane-LSH path).",    driver=False,
+        "of the hyperplane-LSH path).",
 )
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -311,7 +341,6 @@ def _ann_recall_invariant(
         "density-adaptive complement to the hyperplane-LSH path. "
         "Driver form: recall ≥ 0.7 vs the in-plan exact twin, "
         "hash-matched.",
-    driver=False,
 )
 def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_invariant(
@@ -331,7 +360,6 @@ def q_similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multiprobe — the scale path. Driver form: recall ≥ 0.7 vs "
         "the in-plan exact twin, hash-matched; candidate budget "
         "stays pinned in pytest.",
-    driver=False,
 )
 def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_invariant(
@@ -359,7 +387,6 @@ def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     doc="Token counting: whitespace, BPE-ish regex, word tokens.",
-    driver=False,
 )
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -402,7 +429,7 @@ def _duck_quality_sql() -> str:
     "text_quality_scores",
     oracle=_duck_quality_sql(),
     headline=True,
-    doc="Per-document quality features + blended score; map-only scan.",    driver=False,
+    doc="Per-document quality features + blended score; map-only scan.",
 )
 def q_text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -430,7 +457,6 @@ def _duck_langid_sql() -> str:
     "text_language_id",
     oracle=_duck_langid_sql(),
     doc="Stopword-hit language ID with deterministic tie-break.",
-    driver=False,
 )
 def q_text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -451,7 +477,7 @@ def q_text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     doc="Polynomial rolling-hash document fingerprint (mod 1e9+7), "
-        "portable across engines.",    driver=False,
+        "portable across engines.",
 )
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -505,7 +531,6 @@ def _duck_dup_frac(arr: str) -> str:
                (acc, x) -> greatest(acc, x)) END AS BIGINT) AS max_token_run
     FROM e
     """,
-    # driver cap is full — oracle-checked by pytest instead
     doc="Gopher-style within-doc repetition features (duplicate-line "
         "fraction, duplicate-bigram fraction, longest token run) — "
         "map-only HOF expressions, the standard boilerplate/spam gate.",
@@ -559,13 +584,8 @@ def q_text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value rounding, column naming all survive parquet. The bench "
         "times this same shape separately (bench.py etl_write_pipeline "
         "key, headline=False here to keep that timing uncontaminated).",
-    driver=False,
 )
 def q_etl_write_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from .operators.downsample import downsample
-
     hourly = downsample(
         load_table(spark, sf_dir, "events"),
         timestamp_col="ts",
@@ -601,7 +621,7 @@ def q_streaming_hourly_downsample(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle="SELECT event_id, ts, user_id, event_type, value, props FROM events",
     doc="dropDuplicatesWithinWatermark replay-dedup; event_id is "
         "unique in the fixture so the exactly-once projection is the "
-        "stream itself.",    driver=False,
+        "stream itself.",
 )
 def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -640,7 +660,6 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="session_window stateful sessionization with watermark "
         "eviction; oracled against the lag-gap batch formulation "
         "with session_window's half-open boundary convention.",
-    driver=False,
 )
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -680,10 +699,7 @@ _EWMA_ORACLE = """
     doc="Per-user recursive EWMA + deviation alerts via applyInPandas "
         "(order-dependent fold — the Arrow-grouped custom-aggregate "
         "surface); oracle folds prefixes with list_reduce.",
-    # oracle twin of streaming_ewma_alerts (identical SQL) — pytest
-    # keeps the batch path hash-checked; driver slot goes to an
-    # operator without a green row yet.
-    driver=False,
+    # oracle twin of streaming_ewma_alerts (identical SQL)
 )
 def q_ewma_alerts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -696,7 +712,6 @@ def q_ewma_alerts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Same EWMA as a custom stateful streaming operator "
         "(applyInPandasWithState, per-key GroupState carried across "
         "micro-batches); held to the identical oracle.",
-    driver=False,
 )
 def q_streaming_ewma_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -750,7 +765,6 @@ def _blob_byte(i: str) -> str:
     doc="Binary media column → Arrow-batched mapInPandas decode → typed "
         "feature rows; unknown formats take the deterministic byte-"
         "fingerprint path (codec='raw'), oracled over DuckDB blobs.",
-    driver=False,
 )
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT widened: the byte-fingerprint path is too cheap to amortize
@@ -932,7 +946,6 @@ _COMPONENTS_CTES = f"""
         "Jaccard pair graph via iterative min-label propagation "
         "(localCheckpoint per round); oracle is a recursive "
         "transitive-closure CTE.",
-    driver=False,
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -951,7 +964,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The curated corpus: drop every near-dup cluster member except "
         "the min-id representative (anti-join against the component "
         "losers) — the step that turns pair lists into a dataset.",
-    driver=False,
 )
 def q_corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -974,7 +986,6 @@ def q_corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Deterministic 80/10/10 train/val/test membership from "
         "md5(doc_id) — engine-portable, shuffle-free, stable under "
         "recomputation and corpus growth (unlike randomSplit).",
-    driver=False,
 )
 def q_corpus_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -997,7 +1008,6 @@ def q_corpus_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="8 training shards balanced on document size: scalable global "
         "row_number (range partition + per-partition rank + broadcast "
         "offsets — no single-task window) dealt round-robin.",
-    driver=False,
 )
 def q_corpus_balanced_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1021,7 +1031,7 @@ _SAMPLE_FRACTIONS = {"en": 0.5, "zh": 0.25}
     """,
     doc="Deterministic per-language downsampling (50% en, 25% zh, "
         "12.5% rest) from a stratum-salted md5 — the corpus-mixing "
-        "step; row-local predicate, no shuffle, reproducible.",    driver=False,
+        "step; row-local predicate, no shuffle, reproducible.",
 )
 def q_corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1093,7 +1103,6 @@ def q_corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "near-dup cluster resolution → deterministic hash split — "
         "each stage individually oracled, and the composition held to "
         "one end-to-end oracle.",
-    driver=False,
 )
 def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1116,7 +1125,6 @@ def q_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Arrow-vectorized pandas_udf L2 normalization; np.add.accumulate "
         "makes the norm bit-identical to the oracle's sequential fold, "
         "so every element hash-matches with no tolerance.",
-    driver=False,
 )
 def q_embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1140,7 +1148,6 @@ def q_embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the sketch aggregate for 100 TB cardinalities where exact "
         "distinct would shuffle every key; rsd=0.01. Driver form: "
         "exact count + in-plan ±5% invariant, hash-matched.",
-    driver=False,
 )
 def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -1168,7 +1175,6 @@ def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Stream-stream interval join (symmetric hash, watermark-bounded "
         "state): purchases attributed to same-user clicks in the prior "
         "hour; held to the batch-join oracle.",
-    driver=False,
 )
 def q_streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -1215,7 +1221,6 @@ def _md5_byte0_sql(x: str) -> str:
     doc="Concatenate-and-chunk sequence packing (pretraining style, "
         "docs may span chunks): global exclusive prefix sum via the "
         "two-pass range-partition formulation — no single-task window.",
-    driver=False,
 )
 def q_corpus_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -1254,7 +1259,7 @@ def q_corpus_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Next-fit bin packing without splitting (SFT style, examples "
         "stay whole): sequential within a hash shard via Arrow-batched "
         "applyInPandas, parallel across shards; oracle replays the "
-        "fold with a struct-accumulator list_reduce.",    driver=False,
+        "fold with a struct-accumulator list_reduce.",
 )
 def q_corpus_pack_next_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -1294,7 +1299,6 @@ _MIXTURE_WEIGHTS = {"src0": 0.5, "src1": 0.3, "src2": 0.2}
         "#sources-row aggregate joined back broadcast; keep decision "
         "is the salted md5-byte row-local predicate — corpus never "
         "shuffles, nothing collects.",
-    driver=False,
 )
 def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1315,7 +1319,7 @@ def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Deterministic pseudorandom corpus permutation: global rank "
         "under md5(seed:id) via the range-partitioned two-pass row "
         "number — reproducible orderBy(rand()) replacement, no "
-        "single-task sort.",    driver=False,
+        "single-task sort.",
 )
 def q_corpus_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1478,8 +1482,6 @@ def q_corpus_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ETL.",
 )
 def q_etl_gapfill_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.downsample import gapfill_hourly
-
     ev = load_table(spark, sf_dir, "events")
     return gapfill_hourly(ev, "ts", "user_id", "value")
 
@@ -1543,8 +1545,6 @@ _Z_INTERLEAVE_SQL = " | ".join(
         "(operators/layout.py zorder_layout does the re-cluster).",
 )
 def q_orders_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import layout
-
     o = load_table(spark, sf_dir, "orders")
     s1, s2 = layout.minmax_surrogates(
         o, [F.col("o_custkey"), F.col("o_totalprice")], 8
@@ -2023,15 +2023,18 @@ def q_events_json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engine-comparable.",
 )
 def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import index as idx
-
     docs = load_table(spark, sf_dir, "documents")
-    return idx.inverted_index(docs, "doc_id", "text")
+    return index.inverted_index(docs, "doc_id", "text")
+
+
+_BM25_TERMS = ["vector", "spark", "merge"]
 
 
 @query(
     "text_bm25_topk",
-    oracle=None,  # assembled in module scope below (term-list literal)
+    oracle=index.bm25_oracle_sql(
+        "documents", "doc_id", "text", _BM25_TERMS, k=10
+    ),
     doc="Okapi BM25 top-10 for a bag-of-terms query: one corpus scan, "
         "broadcast idf/doclen stats, TakeOrdered top-k. Score rounded "
         "to 5 decimals (ln() is the one transcendental; glibc vs JVM "
@@ -2039,24 +2042,8 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import index as idx
-
     docs = load_table(spark, sf_dir, "documents")
-    return idx.bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=10)
-
-
-_BM25_TERMS = ["vector", "spark", "merge"]
-
-
-def _install_bm25_oracle() -> None:
-    from .operators import index as idx
-
-    REGISTRY["text_bm25_topk"].oracle = idx.bm25_oracle_sql(
-        "documents", "doc_id", "text", _BM25_TERMS, k=10
-    )
-
-
-_install_bm25_oracle()
+    return index.bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=10)
 
 
 # ---------------------------------------------------------------------------
@@ -2138,8 +2125,6 @@ def q_dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "step-1-relative conversion.",
 )
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     return analytics.funnel(ev, ["view", "click", "purchase"])
 
@@ -2164,8 +2149,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user-week activity grid, exact integer week offsets.",
 )
 def q_events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     return analytics.cohort_retention(ev)
 
@@ -2176,7 +2159,7 @@ def q_events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "part_copurchase_pagerank",
-    oracle=None,  # generated below (unrolled 5-iteration CTE chain)
+    oracle=graph.pagerank_oracle_sql(iterations=5),
     doc="Fixed-point integer PageRank (5 synchronous power steps, "
         "d=0.85) over the part co-purchase graph: ranks are integer "
         "fixed-point with floor division at every step, so the "
@@ -2185,21 +2168,8 @@ def q_events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     headline=True,
 )
 def q_part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import graph
-
     li = load_table(spark, sf_dir, "lineitem")
     return graph.pagerank_fixed(graph.copurchase_edges(li), iterations=5)
-
-
-def _install_pagerank_oracle() -> None:
-    from .operators import graph
-
-    REGISTRY["part_copurchase_pagerank"].oracle = graph.pagerank_oracle_sql(
-        iterations=5
-    )
-
-
-_install_pagerank_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -2224,7 +2194,6 @@ _DUCK_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
         "agg (shuffle is vocabulary-sized, not corpus-sized), top-n "
         "via per-partition heaps. Deterministic (tf desc, token) "
         "truncation order. pytest-oracled; r4 rotation candidate.",
-    driver=False,
     headline=True,
 )
 def q_text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2269,7 +2238,6 @@ def q_text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quadratic); aggregates are vocabulary-bounded; ln on exact "
         "integer counts rounded to 5. pytest-oracled; r4 rotation "
         "candidate.",
-    driver=False,
 )
 def q_text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2308,11 +2276,8 @@ def q_text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "half-open effective-dated intervals + current flag. Two "
         "window passes over ONE (key, order) exchange (Catalyst "
         "reuses it). pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_orders_scd2_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import history
-
     o = load_table(spark, sf_dir, "orders")
     return history.scd2_from_history(
         o,
@@ -2342,12 +2307,9 @@ def q_orders_scd2_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The oracle derives the expected table arithmetically — a "
         "fully independent check of the merge plan. pytest-oracled; "
         "r4 rotation candidate.",
-    driver=False,
     headline=True,
 )
 def q_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import history
-
     o = load_table(spark, sf_dir, "orders")
     feed = (
         o.where(F.col("o_orderkey") % 5 < 2)
@@ -2396,7 +2358,6 @@ def q_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "windows share the o_custkey hash exchange; only the "
         "in-partition sort differs. pytest-oracled; r4 rotation "
         "candidate.",
-    driver=False,
 )
 def q_orders_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -2449,7 +2410,6 @@ def q_orders_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "identical double arithmetic downstream). Flags |z| > 2.5 "
         "with ≥5-event history. One (user) exchange + one sorted "
         "window pass. pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -2549,7 +2509,6 @@ _SEM_DOT_AB = _DOT_FOLD.format(a="na.vec", b="nb.vec")
         "cosine ≥ 0.92. The O(n²) prune becomes 8 independent "
         "intra-cluster equi-joins; only the 8×64 centroid table is "
         "broadcast. pytest-oracled; r4 rotation candidate.",
-    driver=False,
     headline=True,
 )
 def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2588,11 +2547,8 @@ def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the power-law-safe bound). Oracle enumerates naively by id "
         "order — independent derivation, identical result. "
         "pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import graph
-
     li = load_table(spark, sf_dir, "lineitem")
     return graph.triangle_counts(graph.copurchase_edges(li))
 
@@ -2626,23 +2582,17 @@ def q_part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "data), localCheckpoint lineage truncation. Oracle: bounded "
         "recursive CTE + MIN(dist) — independently derived, identical "
         "labels. pytest-oracled; r6 rotation candidate.",
-    driver=False,
 )
 def q_part_copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import graph
-
     li = load_table(spark, sf_dir, "lineitem")
     edges = graph.copurchase_edges(li)
     src = li.agg(F.min("l_partkey").alias("node"))
     return graph.bfs_levels(edges, src, max_depth=4)
 
 
-from .operators import graph as _graph  # noqa: E402
-
-
 @query(
     "part_copurchase_sssp",
-    oracle=_graph.weighted_sssp_oracle_sql(rounds=4),
+    oracle=graph.weighted_sssp_oracle_sql(rounds=4),
     doc="Multi-source WEIGHTED shortest paths (synchronous "
         "Bellman-Ford, 4 relaxation rounds = exact min weight over "
         "≤4-edge paths) on the co-purchase graph with the "
@@ -2655,11 +2605,8 @@ from .operators import graph as _graph  # noqa: E402
         "Integral weights keep distances exact integer sums — no "
         "float summation order in the hash (operators/graph.py "
         "weighted_sssp). Oracle: the rounds unrolled in DuckDB.",
-    driver=False,
 )
 def q_part_copurchase_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import graph
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -2689,11 +2636,8 @@ def q_part_copurchase_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hourly — the oracle aggregates the original table, so any "
         "encode/decode loss breaks the hash. Map-only until the one "
         "agg. pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import dsum
-
     e = load_table(spark, sf_dir, "events")
     js = e.select(
         F.to_json(
@@ -2735,11 +2679,8 @@ def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on candidates only. The oracle is the O(n²) cross join — "
         "independent derivation. pytest-oracled; r4 rotation "
         "candidate.",
-    driver=False,
 )
 def q_customer_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import fuzzy
-
     c = load_table(spark, sf_dir, "customer")
     return fuzzy.edit_distance_pairs(
         c, "c_custkey", "c_name", max_dist=1, q=3
@@ -2771,7 +2712,6 @@ def q_customer_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fully deterministic (md5-derived uniforms, no rand()), one "
         "group exchange + per-partition top-k heaps. pytest-oracled; "
         "r4 rotation candidate.",
-    driver=False,
 )
 def q_corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2805,11 +2745,8 @@ def q_corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "view→…→click→…→purchase. ONE user-keyed aggregate "
         "(map-side partial collect), row-local regex — no self-join, "
         "no window. pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_events_pattern_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     return analytics.sequence_pattern_users(ev, "view.*click.*purchase")
 
@@ -2835,11 +2772,8 @@ def q_events_pattern_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "algebra every incremental rollup view depends on; "
         "exact-decimal sums make the merge bit-identical to the "
         "single-pass oracle. pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import dsum
-
     e = load_table(spark, sf_dir, "events")
     split = "2024-01-15 00:00:00"
 
@@ -2904,7 +2838,6 @@ def q_etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expressions), plus referential integrity via a left-anti "
         "join against the customer dimension. pytest-oracled; r4 "
         "rotation candidate.",
-    driver=False,
 )
 def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -2965,11 +2898,8 @@ def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "distinct x + join back — instead of the quadratic NOT "
         "EXISTS self-join the oracle runs. pytest-oracled; r4 "
         "rotation candidate.",
-    driver=False,
 )
 def q_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     o = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= "1995-03-01")
         & (F.col("o_orderdate") < "1995-04-01")
@@ -3034,11 +2964,8 @@ def q_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "IEEE arithmetic. Leading/trailing gaps back-/forward-fill. "
         "One entity exchange serves all four bracketing windows. "
         "pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_etl_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.downsample import gapfill_hourly_interp
-
     ev = load_table(spark, sf_dir, "events")
     return gapfill_hourly_interp(ev, "ts", "user_id", "value")
 
@@ -3075,11 +3002,8 @@ def q_etl_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "able. ONE map-side-combined hash aggregate over the fact "
         "table; moments shuffle, never rows. pytest-oracled; r4 "
         "rotation candidate.",
-    driver=False,
 )
 def q_lineitem_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import dsum
-
     li = load_table(spark, sf_dir, "lineitem")
     qty, price = F.col("l_quantity"), F.col("l_extendedprice")
     m = li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -3133,11 +3057,8 @@ def q_lineitem_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(week, month, all-time) re-aggregates that table instead of "
         "the raw store. Driver form: exact count + in-plan ±5% "
         "invariant on the sketch-union estimate, hash-matched.",
-    driver=False,
 )
 def q_events_hll_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sketches
-
     ev = load_table(spark, sf_dir, "events")
     daily = sketches.build_sketches(
         ev.withColumn("day", F.to_date("ts")),
@@ -3190,13 +3111,10 @@ def q_events_hll_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "raw month values, hash-matched. At 100 TB the daily sketch "
         "table is thousands of KB-sized rows; any later percentile "
         "question at any grouping merges summaries.",
-    driver=False,
 )
 def q_events_quantile_sketch_rollup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import sketches
-
     ev = load_table(spark, sf_dir, "events").select(
         F.date_trunc("month", F.col("ts")).alias("month"),
         F.date_trunc("day", F.col("ts")).alias("day"),
@@ -3252,14 +3170,8 @@ def q_events_quantile_sketch_rollup(
         "efficacy (files skipped on EITHER z-dimension) is pinned in "
         "tests/test_skipping.py. pytest-oracled; r4 rotation "
         "candidate.",
-    driver=False,
 )
 def q_orders_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime
-
-    from .operators import layout
-    from .sources import skipping
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -3304,11 +3216,8 @@ def q_orders_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "16/16 (efficacy pinned in tests/test_skipping.py). "
         "Conservative-superset + residual row filter, so the result "
         "hash-matches the plain filtered scan the oracle runs.",
-    driver=False,
 )
 def q_orders_skipping_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources import skipping
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
@@ -3336,11 +3245,8 @@ def q_orders_skipping_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pinned schema, hash-match the unserialized parquet table — "
         "codec losslessness proven in-plan, same pattern as the JSONL "
         "roundtrip. pytest-oracled; r4 rotation candidate.",
-    driver=False,
 )
 def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources import formats
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -3387,8 +3293,6 @@ def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "candidate keys, not the key space (operators/frequency.py).",
 )
 def q_events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import frequency
-
     ev = load_table(spark, sf_dir, "events")
     return frequency.heavy_hitters(ev, "user_id", phi=0.005)
 
@@ -3423,8 +3327,6 @@ def q_events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tests/test_plan_quality.py).",
 )
 def q_events_interval_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import intervals
-
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"), "user_id", F.col("ts").alias("p_ts")
@@ -3476,7 +3378,6 @@ def q_orders_moving_range_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("o_orderdate").cast("long"))
         .rangeBetween(-90 * 86400, 0)
     )
-    from .functions import SUM_DECIMAL
 
     return o.select(
         "o_orderkey", "o_custkey", "o_orderdate",
@@ -3644,7 +3545,6 @@ def q_multimodal_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bench_cm_frequency_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch path only — what bench.py times (the driver form adds
     the exact per-key twin, which would dominate the measured plan)."""
-    from .operators import frequency
 
     ev = load_table(spark, sf_dir, "events")
     daily = frequency.cm_build(
@@ -3687,11 +3587,8 @@ def _bench_cm_frequency_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "form: exact top-20 counts + in-plan est>=exact and "
         "collision-bound invariants, hash-matched "
         "(operators/frequency.py cm_build/cm_merge/cm_lookup).",
-    driver=False,
 )
 def q_events_cm_frequency_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import frequency
-
     ev = load_table(spark, sf_dir, "events")
     daily = frequency.cm_build(
         ev.withColumn("day", F.to_date("ts")), "user_id", ["day"]
@@ -3760,11 +3657,8 @@ def q_events_cm_frequency_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "At 100 TB any cohort-overlap matrix is answered from the "
         "sketch table, never rescanning events "
         "(operators/sketches.py kmv_*).",
-    driver=False,
 )
 def q_events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import sketches
-
     ev = load_table(spark, sf_dir, "events")
     daily = sketches.kmv_build(
         ev.withColumn("day", F.to_date("ts")), "user_id",
@@ -3852,13 +3746,10 @@ def q_events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shape; approx_percentile gives up exactness; radix-select "
         "keeps both at any N. Hash-matched against the DuckDB "
         "window-rank order statistic (operators/order_stats.py).",
-    driver=False,
 )
 def q_lineitem_exact_price_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem")
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
@@ -3924,13 +3815,10 @@ def q_lineitem_exact_price_quantiles(
         "min custkey, which makes the group labels provably equal "
         "to the row-level oracle's min-custkey labels. Hash-matched "
         "against the brute-force + recursive-CTE DuckDB pipeline.",
-    driver=False,
 )
 def q_customer_entity_resolution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import fuzzy
-
     c = load_table(spark, sf_dir, "customer")
     # GROUP-level resolution (r6 rework — the sf10 soak measured the
     # row-level formulation quadratic in duplicate multiplicity m:
@@ -3984,9 +3872,6 @@ def q_customer_entity_resolution(
     )
 
 
-from .operators import bpe as _bpe  # noqa: E402
-
-
 @query(
     "documents_bpe_merges",
     headline=True,
@@ -3994,7 +3879,7 @@ from .operators import bpe as _bpe  # noqa: E402
     # twin unrolls the same trainer (same tokenization, same greedy
     # left-to-right merge via delimiter-safe string replace, same
     # (count desc, pair asc) tie-break) for the same 8 steps
-    oracle=_bpe.bpe_oracle_sql(8),
+    oracle=bpe.bpe_oracle_sql(8),
     doc="Distributed BPE vocabulary learning — the tokenizer-training "
         "step of an LLM pipeline: top-8 byte-pair merges over the "
         "documents corpus. One corpus-sized shuffle total (word "
@@ -4006,11 +3891,10 @@ from .operators import bpe as _bpe  # noqa: E402
         "plan depth flat in N). No Python workers. Hash-matched "
         "against the step-unrolled DuckDB twin "
         "(operators/bpe.py).",
-    driver=False,
 )
 def q_documents_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return _bpe.learn_bpe(spark, docs, "text", num_merges=8)
+    return bpe.learn_bpe(spark, docs, "text", num_merges=8)
 
 
 @query(
@@ -4035,12 +3919,8 @@ def q_documents_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nightly 100 TB MV refresh runs. Hash-matched against the "
         "single-pass full recompute "
         "(operators/history.py incremental_join_partials).",
-    driver=False,
 )
 def q_orders_ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions import dsum
-    from .operators import history
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -4092,7 +3972,6 @@ def _bench_similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "literal centroid tensor. Driver form: recall >= 0.7 vs the "
         "in-plan exact twin, hash-matched "
         "(operators/similarity.py pq_cosine_topk).",
-    driver=False,
 )
 def q_similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_invariant(
@@ -4148,13 +4027,10 @@ def q_similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "interval theta join the oracle runs — no per-row probe, no "
         "explosion, train/serve-skew-free lookups at 100 TB "
         "(operators/history.py pit_join).",
-    driver=False,
 )
 def q_events_pit_priority_lookup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import history
-
     o = load_table(spark, sf_dir, "orders")
     dim = history.scd2_from_history(
         o,
@@ -4216,11 +4092,8 @@ def q_events_pit_priority_lookup(
         "report is constraint-count rows, nothing collects. "
         "Hash-matched row for row against independent plain-SQL "
         "recomputations (operators/quality.py).",
-    driver=False,
 )
 def q_orders_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.quality import Suite
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     return (
@@ -4258,11 +4131,8 @@ def q_orders_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matches_batch) and emits the oracle-computable per-depth "
         "totals, hash-matched (operators/frequency.py + "
         "streaming/__init__.py).",
-    driver=False,
 )
 def q_streaming_cm_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import frequency
-
     ev_stream = streaming.read_table_stream(spark, sf_dir, "events")
     cells_stream = (
         ev_stream.where(F.col("user_id").isNotNull())
@@ -4330,11 +4200,8 @@ def q_streaming_cm_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(mod-19 deletes, mod-7 price bumps, mod-23 inserts); "
         "hash-matched against the closed-form arithmetic "
         "classification (operators/history.py snapshot_diff).",
-    driver=False,
 )
 def q_orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import history
-
     o = load_table(spark, sf_dir, "orders")
     kept = o.where(F.col("o_orderkey") % 19 != 0)
     bumped = kept.withColumn(
@@ -4363,7 +4230,6 @@ def q_orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "table serves every probed cell. Top-R exact re-rank. Driver "
         "form: recall >= 0.7 vs the in-plan exact twin, hash-matched "
         "(operators/similarity.py ivfpq_cosine_topk).",
-    driver=False,
 )
 def q_similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_invariant(
@@ -4411,13 +4277,10 @@ def q_similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token-weighted length percentiles at any N. Hash-matched "
         "against the DuckDB cumulative-weight window "
         "(operators/order_stats.py exact_weighted_quantiles_radix).",
-    driver=False,
 )
 def q_lineitem_weighted_price_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
@@ -4467,13 +4330,10 @@ def q_lineitem_weighted_price_quantiles(
         "shuffle of data rows, bit-exact vs the DuckDB window-rank "
         "oracle. Property-tested over negatives, +-0.0, subnormals, "
         "infinities and NaN ordering (tests/test_order_stats.py).",
-    driver=False,
 )
 def q_lineitem_double_price_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
     return (
         order_stats.exact_quantiles_radix(
@@ -4483,14 +4343,12 @@ def q_lineitem_double_price_quantiles(
     )
 
 
-from .operators import stats as _stats  # noqa: E402
-
 _CORR_COLS = ["l_discount", "l_extendedprice", "l_quantity", "l_tax"]
 
 
 @query(
     "lineitem_correlation_matrix",
-    oracle=_stats.correlation_matrix_oracle_sql(_CORR_COLS),
+    oracle=stats.correlation_matrix_oracle_sql(_CORR_COLS),
     doc="All-pairs Pearson correlation matrix over four lineitem "
         "measures from ONE map-side-combined aggregate pass: n, four "
         "first moments, four second moments, six cross moments — all "
@@ -4500,13 +4358,12 @@ _CORR_COLS = ["l_discount", "l_extendedprice", "l_quantity", "l_tax"]
         "scans, no driver loop). At 100 TB the scan is one pass and "
         "the shuffle carries 15 numbers per partition "
         "(operators/stats.py correlation_matrix).",
-    driver=False,
 )
 def q_lineitem_correlation_matrix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    return _stats.correlation_matrix(li, _CORR_COLS)
+    return stats.correlation_matrix(li, _CORR_COLS)
 
 
 @query(
@@ -4557,13 +4414,10 @@ def q_lineitem_correlation_matrix(
         "cut-point formulation is the ML feature-bucketizer shape "
         "at 100 TB. Hash-matched per bucket "
         "(operators/order_stats.py equidepth_buckets).",
-    driver=False,
 )
 def q_lineitem_equidepth_deciles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem")
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
@@ -4610,18 +4464,12 @@ _EQUIDEPTH_DOUBLE_CUTS = "\n      UNION ALL\n".join(
         "hash-matched per bucket against the window-rank + "
         "strict-less-than counting oracle. Property-tested over "
         "negatives, ±0.0 and NaN (tests/test_order_stats.py).",
-    driver=False,
 )
 def q_lineitem_equidepth_double(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
     return order_stats.equidepth_buckets(spark, li, "l_extendedprice", 10)
-
-
-from .operators import analytics as _analytics  # noqa: E402
 
 
 @query(
@@ -4653,13 +4501,10 @@ from .operators import analytics as _analytics  # noqa: E402
         "where percentile()-then-clamp collects the column "
         "(operators/order_stats.py winsorize). Hash-matched per row "
         "against the window-rank + CASE oracle.",
-    driver=False,
 )
 def q_lineitem_winsorized_prices(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
@@ -4686,13 +4531,10 @@ def q_lineitem_winsorized_prices(
         "when |distinct| ≪ N (operators/order_stats.py "
         "global_percentile_ranks). Hash-matched per row against the "
         "real window functions.",
-    driver=False,
 )
 def q_lineitem_percentile_ranks(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -4756,7 +4598,6 @@ _PSI_CUTS = "\n      UNION ALL\n".join(
         "in ordered-bits space, zero bins clamp to 1e-6; "
         "SUM(psi_term) is the headline PSI "
         "(operators/analytics.py psi_drift). Hash-matched per bin.",
-    driver=False,
 )
 def q_orders_psi_price_drift(
     spark: SparkSession, sf_dir: str
@@ -4765,7 +4606,7 @@ def q_orders_psi_price_drift(
     yr = F.year(F.col("o_orderdate"))
     ref = orders.where(yr < 1997).select("o_totalprice")
     cur = orders.where(yr >= 1997).select("o_totalprice")
-    return _analytics.psi_drift(ref, cur, "o_totalprice", n_bins=10)
+    return analytics.psi_drift(ref, cur, "o_totalprice", n_bins=10)
 
 
 @query(
@@ -4798,13 +4639,12 @@ def q_orders_psi_price_drift(
         "bounded by the anomaly count, the telemetry paging shape at "
         "100 TB (operators/analytics.py hourly_profile_anomalies). "
         "z rounded to 7 dp for cross-engine hash stability.",
-    driver=False,
 )
 def q_events_hourly_anomalies(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return _analytics.hourly_profile_anomalies(events, "ts", "value", 3.0)
+    return analytics.hourly_profile_anomalies(events, "ts", "value", 3.0)
 
 
 @query(
@@ -4821,18 +4661,15 @@ def q_events_hourly_anomalies(
         "schema discovery for the DQ family). One hash aggregate, "
         "map-side partial distinct, output bounded by violating "
         "group count (operators/quality.py fd_violations).",
-    driver=False,
 )
 def q_orders_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.quality import fd_violations
-
     orders = load_table(spark, sf_dir, "orders")
     return fd_violations(orders, ["o_custkey"], "o_orderpriority")
 
 
 @query(
     "orders_dp_noised_counts",
-    oracle=_analytics.dp_noised_counts_oracle_sql(
+    oracle=analytics.dp_noised_counts_oracle_sql(
         "orders", ["o_orderpriority"], epsilon=0.5
     ),
     doc="Differentially-private count release (Laplace 1/ε mechanism, "
@@ -4845,13 +4682,12 @@ def q_orders_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "full-strength oracle instead of an invariant proxy. One "
         "hash aggregate + map-only noise "
         "(operators/analytics.py dp_noised_counts).",
-    driver=False,
 )
 def q_orders_dp_noised_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    return _analytics.dp_noised_counts(
+    return analytics.dp_noised_counts(
         orders, ["o_orderpriority"], epsilon=0.5
     ).orderBy("o_orderpriority")
 
@@ -4883,14 +4719,13 @@ def q_orders_dp_noised_counts(
         "than the predicted join) + the estimate-inside-its-own-"
         "interval invariant, hash-matched "
         "(operators/stats.py agms_join_size).",
-    driver=False,
 )
 def q_orders_lineitem_join_size_agms(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    return _stats.agms_join_size(
+    return stats.agms_join_size(
         orders, "o_orderkey", li, "l_orderkey", m=64
     ).select("exact_join_size", "within_interval")
 
@@ -4917,14 +4752,10 @@ def q_orders_lineitem_join_size_agms(
         "fact for ±3sigma answers. Driver form: exact sums + the "
         "in-plan estimate-inside-own-interval invariant, hash-matched "
         "(operators/stats.py sampled_sum_estimate).",
-    driver=False,
 )
 def q_orders_aqp_revenue_estimate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .functions import dsum
-    from .operators import stats as stats_ops
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -4933,7 +4764,7 @@ def q_orders_aqp_revenue_estimate(
         F.col("c_mktsegment").alias("segment"),
     )
     joined = o.join(c, "o_custkey")
-    est = stats_ops.sampled_sum_estimate(
+    est = stats.sampled_sum_estimate(
         joined, "o_orderkey", "o_totalprice", ["segment"]
     )
     exact = joined.groupBy("segment").agg(
@@ -4980,13 +4811,10 @@ def q_orders_aqp_revenue_estimate(
         "volume instead of probe volume. ~90% of customers here are "
         "event-inactive, the fast-path shape. Hash-matched against "
         "the plain NOT EXISTS.",
-    driver=True,
 )
 def q_customer_bloom_inactive(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import membership
-
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -5041,13 +4869,10 @@ def q_customer_bloom_inactive(
         "self-join (operators/basket.py). Support/confidence/lift "
         "from exact BIGINT counts. Hash-matched against the "
         "brute-force self-join oracle.",
-    driver=True,
 )
 def q_lineitem_association_rules(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import basket
-
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -5089,7 +4914,7 @@ _BPE_ENCODE_MERGES: list[tuple[str, str]] = [
 @query(
     "documents_bpe_token_counts",
     headline=True,
-    oracle=None,  # replaced below — needs the merge-list helper
+    oracle=bpe.encode_oracle_sql(_BPE_ENCODE_MERGES),
     doc="BPE tokenizer ENCODE + per-document token accounting under "
         "a fixed learned merge list: the corpus tokenizes once, the "
         "greedy left-to-right merge folds run only on the "
@@ -5100,28 +4925,14 @@ _BPE_ENCODE_MERGES: list[tuple[str, str]] = [
         "n_chars_tok is merge-invariant — an in-plan conservation "
         "check. Hash-matched against the delimiter-padded chained "
         "REPLACE oracle.",
-    driver=True,
 )
 def q_documents_bpe_token_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import bpe
-
     docs = load_table(spark, sf_dir, "documents")
     return bpe.encode_token_counts(
         docs, "text", _BPE_ENCODE_MERGES, "doc_id"
     ).orderBy("doc_id")
-
-
-def _install_bpe_encode_oracle() -> None:
-    from .operators import bpe
-
-    REGISTRY["documents_bpe_token_counts"].oracle = (
-        bpe.encode_oracle_sql(_BPE_ENCODE_MERGES)
-    )
-
-
-_install_bpe_encode_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -5131,7 +4942,7 @@ _install_bpe_encode_oracle()
 @query(
     "embeddings_kmeans_lloyd",
     headline=True,
-    oracle=None,  # installed below from the unrolled-oracle generator
+    oracle=cluster.kmeans_oracle_sql(k=4, iters=3, dim=64),
     doc="Distributed Lloyd k-means (k=4, 3 rounds, deterministic "
         "lowest-id seeds): map-only pure-JVM assignment (sequential "
         "zip_with fold per centroid, lexicographic (dist, id) argmin "
@@ -5141,31 +4952,19 @@ _install_bpe_encode_oracle()
         "counts AND inertia — against the step-unrolled DuckDB twin, "
         "not just 'inertia decreased'. The clustering pass ahead of "
         "SemDeDup / mixture balancing / IVF builds.",
-    driver=True,
 )
 def q_embeddings_kmeans_lloyd(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import cluster
-
     emb = load_table(spark, sf_dir, "embeddings")
     return cluster.kmeans_summary(emb, "vec_id", "embedding", k=4, iters=3)
 
 
-def _install_kmeans_oracle() -> None:
-    from .operators import cluster
-
-    REGISTRY["embeddings_kmeans_lloyd"].oracle = (
-        cluster.kmeans_oracle_sql(k=4, iters=3, dim=64)
-    )
-
-
-_install_kmeans_oracle()
-
-
 @query(
     "lineitem_ols_price_model",
-    oracle=None,  # installed below from the formula-twin generator
+    oracle=stats.grouped_ols_oracle_sql(
+        "l_quantity", "l_extendedprice", ["l_returnflag"], "lineitem"
+    ),
     doc="Per-flag simple OLS (extendedprice on quantity) by the "
         "closed form over ONE map-side-combinable aggregation pass: "
         "the five sufficient statistics are exact-decimal sums, so "
@@ -5173,32 +4972,16 @@ _install_kmeans_oracle()
         "arithmetic — the cheapest model-quality probe at 100 TB "
         "(operators/stats.py grouped_ols). Hash-matched against the "
         "operation-for-operation SQL twin.",
-    driver=True,
 )
 def q_lineitem_ols_price_model(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import stats as stats_ops
-
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice"
     )
-    return stats_ops.grouped_ols(
+    return stats.grouped_ols(
         l, "l_quantity", "l_extendedprice", ["l_returnflag"]
     ).orderBy("l_returnflag")
-
-
-def _install_ols_oracle() -> None:
-    from .operators import stats as stats_ops
-
-    REGISTRY["lineitem_ols_price_model"].oracle = (
-        stats_ops.grouped_ols_oracle_sql(
-            "l_quantity", "l_extendedprice", ["l_returnflag"], "lineitem"
-        )
-    )
-
-
-_install_ols_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -5208,7 +4991,7 @@ _install_ols_oracle()
 @query(
     "part_copurchase_labelprop",
     headline=True,
-    oracle=None,  # installed below from the unrolled-round generator
+    oracle=graph.label_propagation_oracle_sql(rounds=5),
     doc="Synchronous label-propagation communities (Raghavan et al. "
         "2007) over the co-purchase graph, 5 rounds: per round one "
         "keyed edges-to-labels join, one (node, label) aggregate, one "
@@ -5218,13 +5001,10 @@ _install_ols_oracle()
         "label_propagation). The PageRank cost profile with "
         "community semantics. Hash-matched against the round-unrolled "
         "DuckDB twin.",
-    driver=True,
 )
 def q_part_copurchase_labelprop(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import graph
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -5233,54 +5013,29 @@ def q_part_copurchase_labelprop(
     ).orderBy("node")
 
 
-def _install_labelprop_oracle() -> None:
-    from .operators import graph
-
-    REGISTRY["part_copurchase_labelprop"].oracle = (
-        graph.label_propagation_oracle_sql(rounds=5)
-    )
-
-
-_install_labelprop_oracle()
-
-
 @query(
     "lineitem_ols2_price_model",
-    oracle=None,  # installed below from the Cramer-twin generator
+    oracle=stats.grouped_ols2_oracle_sql(
+        "l_quantity", "l_discount", "l_extendedprice",
+        ["l_returnflag"], "lineitem",
+    ),
     doc="Per-flag TWO-feature OLS (extendedprice on quantity and "
         "discount) by Cramer's rule over the 3x3 normal equations — "
         "one aggregation pass of nine exact-decimal sufficient "
         "statistics, coefficients as fixed-operation-order double "
         "arithmetic the SQL twin mirrors token-for-token "
         "(operators/stats.py grouped_ols2). Hash-matched.",
-    driver=True,
 )
 def q_lineitem_ols2_price_model(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import stats as stats_ops
-
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_discount", "l_extendedprice"
     )
-    return stats_ops.grouped_ols2(
+    return stats.grouped_ols2(
         l, "l_quantity", "l_discount", "l_extendedprice",
         ["l_returnflag"],
     ).orderBy("l_returnflag")
-
-
-def _install_ols2_oracle() -> None:
-    from .operators import stats as stats_ops
-
-    REGISTRY["lineitem_ols2_price_model"].oracle = (
-        stats_ops.grouped_ols2_oracle_sql(
-            "l_quantity", "l_discount", "l_extendedprice",
-            ["l_returnflag"], "lineitem",
-        )
-    )
-
-
-_install_ols2_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -5327,14 +5082,10 @@ _install_ols2_oracle()
         "because windowed float SUM strategies (segment tree vs "
         "sliding) are engine- AND plan-dependent "
         "(operators/analytics.py seasonal_decompose). Hash-matched.",
-    driver=True,
 )
 def q_events_seasonal_profile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .functions import dsum
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     grid = ev.groupBy(
         F.date_trunc("hour", "ts").alias("ts")
@@ -5359,13 +5110,10 @@ def q_events_seasonal_profile(
         "filter, output bounded by the rare combinations being "
         "hunted (operators/analytics.py k_anonymity_audit). "
         "Hash-matched.",
-    driver=True,
 )
 def q_orders_k_anonymity_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import analytics
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderstatus",
         "o_orderpriority",
@@ -5412,13 +5160,10 @@ def q_orders_k_anonymity_audit(
         "coercions REFUSED. One metadata decision + one map per "
         "input, no shuffle. The operation a decade-old 100 TB lake "
         "needs instead of a historical rewrite. Hash-matched.",
-    driver=True,
 )
 def q_orders_schema_evolution_union(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .sources.evolution import align_schemas
-
     o = load_table(spark, sf_dir, "orders")
     v1 = o.where(F.col("o_orderkey") % 2 == 0).select(
         F.col("o_orderkey").cast("int").alias("o_orderkey"),
@@ -5473,13 +5218,10 @@ def q_orders_schema_evolution_union(
         "Doubles derive from exact BIGINT counts via one division "
         "and one sqrt, so the window order is engine-reproducible. "
         "Hash-matched against the brute-force self-join oracle.",
-    driver=True,
 )
 def q_part_item_similarity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import basket
-
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -5502,9 +5244,7 @@ _RRF_TERMS = ["vector", "spark", "merge"]
 
 
 def _rrf_oracle_sql() -> str:
-    from .operators.index import bm25_oracle_sql
-
-    lex0 = bm25_oracle_sql("documents", "doc_id", "text", _RRF_TERMS, k=50)
+    lex0 = index.bm25_oracle_sql("documents", "doc_id", "text", _RRF_TERMS, k=50)
     # bm25_oracle_sql returns a full SELECT (with its own WITH); DuckDB
     # nests it verbatim as a subquery.
     dot = _DOT_FOLD.format(a="q.vec", b="c.vec")
@@ -5540,7 +5280,7 @@ def _rrf_oracle_sql() -> str:
 
 @query(
     "text_hybrid_rrf_topk",
-    oracle=None,  # assembled below (shares the BM25 oracle generator)
+    oracle=_rrf_oracle_sql(),
     doc="Hybrid search: Reciprocal Rank Fusion (1/(60+rank)) of the "
         "BM25 top-50 lexical list and the embedding-cosine top-50 "
         "dense list for the vec_id=0 query — UNION + ONE hash "
@@ -5553,17 +5293,15 @@ def _rrf_oracle_sql() -> str:
     headline=True,
 )
 def q_text_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import index as idx
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
-    lex = idx.bm25_topk(docs, "doc_id", "text", _RRF_TERMS, k=50)
+    lex = index.bm25_topk(docs, "doc_id", "text", _RRF_TERMS, k=50)
     w = Window.orderBy(F.col("bm25").desc(), F.col("doc_id"))
     lex = lex.select("doc_id", F.row_number().over(w).alias("rank"))
     dense = similarity.cosine_topk(
         emb, emb.where(F.col("vec_id") == 0), "vec_id", "embedding", k=50
     ).select(F.col("neighbor_id").alias("doc_id"), "rank")
-    return idx.rrf_fuse([lex, dense], "doc_id", k=10, c=60)
+    return index.rrf_fuse([lex, dense], "doc_id", k=10, c=60)
 
 
 _RP_OUT_DIMS = 8
@@ -5593,7 +5331,7 @@ def _rp_oracle_sql() -> str:
 
 @query(
     "embeddings_random_projection",
-    oracle=None,  # assembled below (embeds the ±1 sign literals)
+    oracle=_rp_oracle_sql(),
     doc="Johnson-Lindenstrauss dimensionality reduction 64→8 with the "
         "deterministic Achlioptas ±1 sign matrix: each output "
         "coordinate is one sequential zip_with/aggregate fold against "
@@ -5679,7 +5417,7 @@ def _stump_oracle_sql() -> str:
 
 @query(
     "lineitem_stump_splits",
-    oracle=None,  # assembled below (generated per feature)
+    oracle=_stump_oracle_sql(),
     doc="Distributed decision-stump split finder by Gini gain — the "
         "histogram primitive GBDT trainers run per node: one tiny "
         "min/max aggregate, ONE data scan unpivoted map-side to "
@@ -5692,13 +5430,11 @@ def _stump_oracle_sql() -> str:
     headline=True,
 )
 def q_lineitem_stump_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import stats as st
-
     li = load_table(spark, sf_dir, "lineitem").select(
         *_STUMP_FEATURES,
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_return"),
     )
-    return st.histogram_split_finder(
+    return stats.histogram_split_finder(
         li, _STUMP_FEATURES, "is_return", n_bins=_STUMP_BINS
     )
 
@@ -5736,18 +5472,9 @@ def q_events_markov_transitions(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return _analytics.markov_transitions(
+    return analytics.markov_transitions(
         events, "user_id", ["ts", "event_id"], "event_type"
     )
-
-
-def _install_wave14_oracles() -> None:
-    REGISTRY["text_hybrid_rrf_topk"].oracle = _rrf_oracle_sql()
-    REGISTRY["embeddings_random_projection"].oracle = _rp_oracle_sql()
-    REGISTRY["lineitem_stump_splits"].oracle = _stump_oracle_sql()
-
-
-_install_wave14_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -5759,7 +5486,13 @@ _install_wave14_oracles()
 
 @query(
     "lineitem_logreg_return_model",
-    oracle=None,  # assembled below (unrolled Newton-step twin)
+    oracle=stats.logistic_irls2_oracle_sql(
+        "lineitem",
+        "l_discount",
+        "l_quantity",
+        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END",
+        steps=3,
+    ),
     doc="Binary logistic regression (intercept + l_discount + "
         "l_quantity → P(returnflag='R')) by 3 Newton-Raphson steps "
         "from β=0: per step ONE map-side-combinable aggregate of the "
@@ -5781,7 +5514,7 @@ def q_lineitem_logreg_return_model(
         "l_quantity",
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_r"),
     )
-    return _stats.logistic_irls2(
+    return stats.logistic_irls2(
         li,
         "l_discount",
         "l_quantity",
@@ -5797,7 +5530,14 @@ def q_lineitem_logreg_return_model(
 
 @query(
     "documents_nb_token_logodds",
-    oracle=None,  # assembled below
+    oracle=index.nb_token_logodds_oracle_sql(
+        "documents",
+        "doc_id",
+        "text",
+        "CASE WHEN lang = 'en' THEN 1 ELSE 0 END",
+        alpha=1.0,
+        k=50,
+    ),
     doc="Multinomial Naive-Bayes training pass on the documents "
         "corpus (class: lang='en'): per-token class counts from ONE "
         "tokenize scan + ONE map-side-combined token aggregate, "
@@ -5811,39 +5551,10 @@ def q_lineitem_logreg_return_model(
 def q_documents_nb_token_logodds(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .operators import index as idx
-
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_en", F.when(F.col("lang") == "en", 1).otherwise(0)
     )
-    return idx.nb_token_logodds(docs, "doc_id", "text", "is_en", alpha=1.0, k=50)
-
-
-def _install_wave15_oracles() -> None:
-    from .operators import index as idx
-
-    REGISTRY["lineitem_logreg_return_model"].oracle = (
-        _stats.logistic_irls2_oracle_sql(
-            "lineitem",
-            "l_discount",
-            "l_quantity",
-            "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END",
-            steps=3,
-        )
-    )
-    REGISTRY["documents_nb_token_logodds"].oracle = (
-        idx.nb_token_logodds_oracle_sql(
-            "documents",
-            "doc_id",
-            "text",
-            "CASE WHEN lang = 'en' THEN 1 ELSE 0 END",
-            alpha=1.0,
-            k=50,
-        )
-    )
-
-
-_install_wave15_oracles()
+    return index.nb_token_logodds(docs, "doc_id", "text", "is_en", alpha=1.0, k=50)
 
 
 # ---------------------------------------------------------------------------
@@ -5860,7 +5571,7 @@ _PR_THRESHOLDS = [0.25, 0.3, 0.325, 0.33, 0.3325, 0.335, 0.34, 0.35, 0.4]
 
 
 def _eval_scored_ctes() -> str:
-    body = _stats.irls2_cte_body(
+    body = stats.irls2_cte_body(
         "lineitem",
         "l_discount",
         "l_quantity",
@@ -5929,7 +5640,7 @@ def _eval_scored_cells(spark: SparkSession, sf_dir: str):
         "l_quantity",
         F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("is_r"),
     )
-    b = _stats.irls2_fit(
+    b = stats.irls2_fit(
         li, "l_discount", "l_quantity", "is_r", steps=3, sufficient_cells=True
     )[-1]
     cells = li.groupBy("l_discount", "l_quantity", "is_r").agg(
@@ -5946,7 +5657,7 @@ def _eval_scored_cells(spark: SparkSession, sf_dir: str):
 
 @query(
     "lineitem_logreg_auc",
-    oracle=None,  # assembled below (shares the IRLS CTE body)
+    oracle=_auc_oracle_sql(),
     doc="ROC-AUC of the wave-15 logistic model by the tie-corrected "
         "Mann-Whitney rank sum WITHOUT ranking rows: the distinct-"
         "score histogram's running counts give each tie group's "
@@ -5959,12 +5670,12 @@ def _eval_scored_cells(spark: SparkSession, sf_dir: str):
 )
 def q_lineitem_logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = _eval_scored_cells(spark, sf_dir)
-    return _stats.binary_auc(scored, "score", "is_r", weight_col="cnt")
+    return stats.binary_auc(scored, "score", "is_r", weight_col="cnt")
 
 
 @query(
     "lineitem_logreg_pr_curve",
-    oracle=None,  # assembled below
+    oracle=_pr_oracle_sql(),
     doc="Confusion matrix + precision/recall/F1 of the wave-15 "
         "logistic model at 9 fixed thresholds, computed from the "
         "distinct-score histogram (one scan; per-threshold sums run "
@@ -5977,17 +5688,9 @@ def q_lineitem_logreg_pr_curve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     scored = _eval_scored_cells(spark, sf_dir)
-    return _stats.pr_curve(
+    return stats.pr_curve(
         scored, "score", "is_r", _PR_THRESHOLDS, weight_col="cnt"
     )
-
-
-def _install_wave16_oracles() -> None:
-    REGISTRY["lineitem_logreg_auc"].oracle = _auc_oracle_sql()
-    REGISTRY["lineitem_logreg_pr_curve"].oracle = _pr_oracle_sql()
-
-
-_install_wave16_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -6000,7 +5703,15 @@ _CV_FOLD_SQL = "(l_orderkey * 2654435761 + l_linenumber * 40503) % 5"
 
 @query(
     "lineitem_logreg_cv_auc",
-    oracle=None,  # assembled below (5 prefixed IRLS chains)
+    oracle=stats.logistic_cv_auc_oracle_sql(
+        "lineitem",
+        "l_discount",
+        "l_quantity",
+        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END",
+        _CV_FOLD_SQL,
+        n_folds=5,
+        steps=3,
+    ),
     doc="5-fold cross-validated AUC of the logistic return-flag "
         "model: folds from engine-portable integer hashing (no RNG), "
         "ONE data scan builds a global (x1, x2, y, fold) "
@@ -6028,26 +5739,9 @@ def q_lineitem_logreg_cv_auc(
             % 5
         ).cast("int").alias("fold"),
     )
-    return _stats.logistic_cv_auc(
+    return stats.logistic_cv_auc(
         li, "l_discount", "l_quantity", "is_r", "fold", n_folds=5, steps=3
     )
-
-
-def _install_wave17_oracles() -> None:
-    REGISTRY["lineitem_logreg_cv_auc"].oracle = (
-        _stats.logistic_cv_auc_oracle_sql(
-            "lineitem",
-            "l_discount",
-            "l_quantity",
-            "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END",
-            _CV_FOLD_SQL,
-            n_folds=5,
-            steps=3,
-        )
-    )
-
-
-_install_wave17_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -6056,9 +5750,34 @@ _install_wave17_oracles()
 # ---------------------------------------------------------------------------
 
 
+def _calibration_oracle_sql() -> str:
+    return f"""
+    WITH{_eval_scored_ctes()},
+    bb AS (
+      SELECT LEAST(CAST(FLOOR(score * 10) AS INT), 9) AS bin, score, n, n_pos
+      FROM h
+    ),
+    a AS (
+      SELECT bin, CAST(sum(n) AS BIGINT) AS n,
+             CAST(sum(n_pos) AS BIGINT) AS n_pos,
+             CAST(CAST(SUM(CAST(score AS DECIMAL(25,10))
+                           * CAST(n AS DECIMAL(12,0))) AS VARCHAR)
+                  AS DOUBLE) AS _ssum
+      FROM bb GROUP BY bin
+    )
+    SELECT bin, n, n_pos,
+           round(_ssum / CAST(n AS DOUBLE), 7) AS mean_pred,
+           round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 7) AS frac_pos,
+           round(abs(_ssum / CAST(n AS DOUBLE)
+                     - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)), 7)
+             AS abs_gap
+    FROM a ORDER BY bin
+    """
+
+
 @query(
     "lineitem_logreg_calibration",
-    oracle=None,  # assembled below (shares the scored-histogram CTEs)
+    oracle=_calibration_oracle_sql(),
     doc="Reliability diagram + per-bin ECE terms for the wave-15 "
         "logistic model: scores binned into 10 equal-width buckets "
         "over the distinct-score histogram; per bin the exact count, "
@@ -6072,7 +5791,7 @@ def q_lineitem_logreg_calibration(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     scored = _eval_scored_cells(spark, sf_dir)
-    return _stats.calibration_bins(
+    return stats.calibration_bins(
         scored, "score", "is_r", n_bins=10, weight_col="cnt"
     )
 
@@ -6122,41 +5841,9 @@ def q_orders_mi_feature_cells(
         .otherwise("lo")
         .alias("lbl"),
     )
-    return _stats.mi_contingency(
+    return stats.mi_contingency(
         orders, ["o_orderpriority", "o_year"], "lbl"
     )
-
-
-def _calibration_oracle_sql() -> str:
-    return f"""
-    WITH{_eval_scored_ctes()},
-    bb AS (
-      SELECT LEAST(CAST(FLOOR(score * 10) AS INT), 9) AS bin, score, n, n_pos
-      FROM h
-    ),
-    a AS (
-      SELECT bin, CAST(sum(n) AS BIGINT) AS n,
-             CAST(sum(n_pos) AS BIGINT) AS n_pos,
-             CAST(CAST(SUM(CAST(score AS DECIMAL(25,10))
-                           * CAST(n AS DECIMAL(12,0))) AS VARCHAR)
-                  AS DOUBLE) AS _ssum
-      FROM bb GROUP BY bin
-    )
-    SELECT bin, n, n_pos,
-           round(_ssum / CAST(n AS DOUBLE), 7) AS mean_pred,
-           round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 7) AS frac_pos,
-           round(abs(_ssum / CAST(n AS DOUBLE)
-                     - CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)), 7)
-             AS abs_gap
-    FROM a ORDER BY bin
-    """
-
-
-def _install_wave18_oracles() -> None:
-    REGISTRY["lineitem_logreg_calibration"].oracle = _calibration_oracle_sql()
-
-
-_install_wave18_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -6200,7 +5887,7 @@ def q_orders_target_encode_priority(
         "o_orderpriority",
         F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("y"),
     )
-    return _stats.target_encode_loo(
+    return stats.target_encode_loo(
         orders, ["o_orderkey"], "o_orderpriority", "y", m=10.0
     )
 
@@ -6269,8 +5956,6 @@ _CUSUM_ORACLE = """
     headline=True,
 )
 def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     scored = analytics.cusum_scores(
         ev,
@@ -6317,8 +6002,6 @@ def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "derived values keep the window-rank oracle bit-exact.",
 )
 def q_lineitem_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import order_stats
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.col("l_extendedprice").alias("v"),
@@ -6422,7 +6105,7 @@ def q_lineitem_conformal_interval(
             F.col("l_linenumber").cast("string"),
         ).alias("rid"),
     )
-    return _stats.conformal_ols_interval(
+    return stats.conformal_ols_interval(
         spark, li, "x", "y", "rid", alpha=0.1, train_frac=0.5, cal_frac=0.25
     )
 
@@ -6431,7 +6114,6 @@ def _benford_oracle_sql() -> str:
     """Oracle generated FROM the package's literal table so both
     engines inline bit-identical expected shares (computing log10
     in-plan would tie the match to two libm builds)."""
-    from .operators.quality import BENFORD_EXPECTED
 
     case = " ".join(
         f"WHEN {d} THEN {BENFORD_EXPECTED[d]!r}" for d in range(1, 10)
@@ -6476,8 +6158,6 @@ def _benford_oracle_sql() -> str:
         "(operators/quality.py benford_audit). 9 rows, bit-exact.",
 )
 def q_lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import quality
-
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_extendedprice").isNotNull()
     ).select(
@@ -6486,12 +6166,9 @@ def q_lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality.benford_audit(li, "cents")
 
 
-from .operators import graph as _graph  # noqa: E402
-
-
 @query(
     "part_copurchase_kcore",
-    oracle=_graph.kcore_oracle_sql(k=80, rounds=8),
+    oracle=graph.kcore_oracle_sql(k=80, rounds=8),
     doc="k-core decomposition (k=80) of the part co-purchase graph: "
         "iterative peel of degree<k nodes — per round one degree "
         "aggregate + two node-keyed semi-joins, survivor set monotone "
@@ -6503,7 +6180,7 @@ from .operators import graph as _graph  # noqa: E402
 )
 def q_part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    return _graph.kcore(_graph.copurchase_edges(li), k=80, max_rounds=8)
+    return graph.kcore(graph.copurchase_edges(li), k=80, max_rounds=8)
 
 
 def _profile_oracle_col(name: str, fam: str) -> str:
@@ -6550,8 +6227,6 @@ _PROFILE_COLS = [
     headline=True,
 )
 def q_orders_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import quality
-
     return quality.table_profile(load_table(spark, sf_dir, "orders"))
 
 
@@ -6646,7 +6321,6 @@ def _bootstrap_oracle_sql() -> str:
     """DuckDB twin of stats.bootstrap_mean_ci on lineitem price —
     same md5 52-bit uniforms, same literal Poisson(1) CDF table,
     same exact-decimal replicate means, same ceil order statistics."""
-    from .operators.stats import POISSON1_CDF
 
     w_terms = " + ".join(
         f"(CASE WHEN u > {t!r} THEN 1 ELSE 0 END)" for t in POISSON1_CDF
@@ -6722,7 +6396,7 @@ def q_lineitem_bootstrap_mean_ci(
             F.col("l_linenumber").cast("string"),
         ).alias("rid"),
     )
-    return _stats.bootstrap_mean_ci(li, "x", "rid", b=100, alpha=0.05)
+    return stats.bootstrap_mean_ci(li, "x", "rid", b=100, alpha=0.05)
 
 
 def _blb_input(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6737,7 +6411,7 @@ def _blb_input(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blb_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _stats.bootstrap_mean_ci_blb(
+    return stats.bootstrap_mean_ci_blb(
         _blb_input(spark, sf_dir), "x", "rid", b=100, alpha=0.05
     )
 
@@ -6776,7 +6450,7 @@ def q_lineitem_bootstrap_mean_ci_blb(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = _blb_input(spark, sf_dir)
-    blb = _stats.bootstrap_mean_ci_blb(li, "x", "rid", b=100, alpha=0.05)
+    blb = stats.bootstrap_mean_ci_blb(li, "x", "rid", b=100, alpha=0.05)
     clt = li.agg(F.stddev_samp(F.col("x")).alias("_sd"))
     width = F.col("ci_hi") - F.col("ci_lo")
     clt_w = (
@@ -6851,8 +6525,6 @@ def q_lineitem_bootstrap_mean_ci_blb(
         "stratum accounting out, bit-exact.",
 )
 def q_orders_neyman_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import curation
-
     orders = load_table(spark, sf_dir, "orders")
     flagged = curation.neyman_stratified_sample(
         orders, "o_orderpriority", "o_totalprice", "o_orderkey", total_n=1000
@@ -6956,8 +6628,6 @@ def q_documents_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(operators/curation.py dsir_log_weights). Bit-exact.",
 )
 def q_corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import curation
-
     docs = load_table(spark, sf_dir, "documents")
     return curation.dsir_log_weights(
         docs, F.col("lang") == "en", "doc_id", "text", dim=1024, salt="fh"
@@ -6968,10 +6638,8 @@ def _ndcg_oracle_sql(cutoff: str) -> str:
     """DuckDB twin of stats.ndcg_backtest on events at k = 3: same
     pivoted integer relevances, same literal discounts, same fixed
     fold order (0.0 + r1*d1 + r2*d2 + ...)."""
-    from .operators.stats import ndcg_discounts
-
     k = 3
-    disc = ndcg_discounts(k)
+    disc = stats.ndcg_discounts(k)
     r_cols = ", ".join(
         f"CAST(SUM(CASE WHEN rank = {i + 1} THEN rel ELSE 0 END) AS BIGINT)"
         f" AS r{i + 1}"
@@ -7046,7 +6714,7 @@ def _ndcg_oracle_sql(cutoff: str) -> str:
 )
 def q_events_ndcg_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return _stats.ndcg_backtest(
+    return stats.ndcg_backtest(
         ev, "user_id", "event_type", "ts", "2024-01-16 00:00:00", k=3
     )
 
@@ -7124,14 +6792,12 @@ def q_documents_sliding_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "2-number aggregate; the hash-match IS the recon claim.",
 )
 def q_orders_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import quality
-
     return quality.table_fingerprint(load_table(spark, sf_dir, "orders"))
 
 
 @query(
     "lineitem_pca_top_component",
-    oracle=_stats.pca_oracle_sql(_CORR_COLS, iterations=16),
+    oracle=stats.pca_oracle_sql(_CORR_COLS, iterations=16),
     doc="Top principal component of the 4-measure lineitem "
         "correlation matrix by 16 power-iteration steps: the data is "
         "scanned ONCE (the exact-decimal moment aggregate the "
@@ -7146,7 +6812,7 @@ def q_lineitem_pca_top_component(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(*_CORR_COLS)
-    return _stats.pca_top_component(li, _CORR_COLS, iterations=16).orderBy(
+    return stats.pca_top_component(li, _CORR_COLS, iterations=16).orderBy(
         "feature"
     )
 
@@ -7206,8 +6872,6 @@ def q_lineitem_pca_top_component(
         "gets wrong.",
 )
 def q_events_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics
-
     ev = load_table(spark, sf_dir, "events")
     span = ev.groupBy("user_id").agg(
         F.min("ts").alias("first_ts"),
@@ -7229,12 +6893,9 @@ def q_events_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MARKOV_STATES = ["click", "error", "purchase", "signup", "view"]
 
 
-from .operators import analytics as _analytics  # noqa: E402
-
-
 @query(
     "events_markov_attribution",
-    oracle=_analytics.markov_removal_oracle_sql(
+    oracle=analytics.markov_removal_oracle_sql(
         _MARKOV_STATES, "purchase", steps=8
     ),
     doc="Markov removal-effect attribution of purchases across the "
@@ -7249,7 +6910,7 @@ from .operators import analytics as _analytics  # noqa: E402
 )
 def q_events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return _analytics.markov_removal_attribution(
+    return analytics.markov_removal_attribution(
         ev,
         "user_id",
         ["ts", "event_id"],
@@ -7302,7 +6963,7 @@ def q_orders_woe_iv_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("cat"),
         F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("y"),
     )
-    return _stats.woe_iv(orders, "cat", "y", eps=0.5)
+    return stats.woe_iv(orders, "cat", "y", eps=0.5)
 
 
 @query(
@@ -7338,7 +6999,7 @@ def q_events_seasonal_naive_backtest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return _analytics.seasonal_naive_backtest(
+    return analytics.seasonal_naive_backtest(
         ev, "event_type", "ts", "value", 168, "2024-01-22 00:00:00"
     )
 
@@ -7396,7 +7057,7 @@ def q_orders_gini_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    return _stats.gini_coefficient(orders, "o_orderpriority", "cents")
+    return stats.gini_coefficient(orders, "o_orderpriority", "cents")
 
 
 @query(
@@ -7410,7 +7071,6 @@ def q_orders_gini_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "closed-form spec (events_cusum_changepoints), proving the "
         "recurrence == prefix-sum equivalence end-to-end through the "
         "streaming runtime (streaming/__init__.py cusum_stream).",
-    driver=False,
 )
 def q_streaming_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -7429,13 +7089,11 @@ def q_streaming_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and Kruskal-Wallis k-group tests.
 # ---------------------------------------------------------------------------
 
-from .operators import stats as _stats28  # noqa: E402
-
 
 @query(
     "orders_ks_price_drift",
     headline=True,
-    oracle=_stats28.ks_two_sample_oracle_sql(
+    oracle=stats.ks_two_sample_oracle_sql(
         "round(o_totalprice * 100)",
         "o_orderdate < TIMESTAMP '1995-07-01'",
         "orders",
@@ -7458,12 +7116,12 @@ def q_orders_ks_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate") < F.to_timestamp(F.lit("1995-07-01"))
         ).alias("pre"),
     )
-    return _stats28.ks_two_sample(o, "cents", "pre")
+    return stats.ks_two_sample(o, "cents", "pre")
 
 
 @query(
     "orders_kruskal_priority",
-    oracle=_stats28.kruskal_wallis_oracle_sql(
+    oracle=stats.kruskal_wallis_oracle_sql(
         "o_orderpriority", "round(o_totalprice * 100)", "orders"
     ),
     doc="EXACT tie-corrected Kruskal-Wallis H across the five order "
@@ -7483,7 +7141,7 @@ def q_orders_kruskal_priority(
         F.col("o_orderpriority"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    return _stats28.kruskal_wallis(o, "o_orderpriority", "cents")
+    return stats.kruskal_wallis(o, "o_orderpriority", "cents")
 
 
 # ---------------------------------------------------------------------------
@@ -7493,7 +7151,7 @@ def q_orders_kruskal_priority(
 
 @query(
     "events_cuped_adjustment",
-    oracle=_stats28.cuped_oracle_sql(
+    oracle=stats.cuped_oracle_sql(
         "user_id", "value", "ts", "2024-01-16 00:00:00", "events"
     ),
     doc="CUPED variance reduction (Deng et al. 2013): per-user pre-"
@@ -7510,14 +7168,14 @@ def q_events_cuped_adjustment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return _stats28.cuped_adjustment(
+    return stats.cuped_adjustment(
         ev, "user_id", "value", "ts", "2024-01-16 00:00:00"
     )
 
 
 @query(
     "events_ab_proportion_test",
-    oracle=_stats28.two_proportion_ztest_oracle_sql(
+    oracle=stats.two_proportion_ztest_oracle_sql(
         "arm_a",
         "converted",
         "(SELECT user_id % 2 = 0 AS arm_a, "
@@ -7544,12 +7202,12 @@ def q_events_ab_proportion_test(
     ).select(
         (F.col("user_id") % 2 == 0).alias("arm_a"), "converted"
     )
-    return _stats28.two_proportion_ztest(per_user, "arm_a", "converted")
+    return stats.two_proportion_ztest(per_user, "arm_a", "converted")
 
 
 @query(
     "events_welch_value_ttest",
-    oracle=_stats28.welch_ttest_oracle_sql(
+    oracle=stats.welch_ttest_oracle_sql(
         "user_id % 2 = 0", "value", "events"
     ),
     doc="Welch's unequal-variance t-test on the event value metric "
@@ -7565,12 +7223,12 @@ def q_events_welch_value_ttest(
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2 == 0).alias("arm_a"), "value"
     )
-    return _stats28.welch_ttest(ev, "arm_a", "value")
+    return stats.welch_ttest(ev, "arm_a", "value")
 
 
 @query(
     "orders_chi2_priority_status",
-    oracle=_stats28.chi2_independence_oracle_sql(
+    oracle=stats.chi2_independence_oracle_sql(
         "o_orderpriority", "o_orderstatus", "orders"
     ),
     doc="Pearson chi-square independence audit of order priority vs "
@@ -7585,7 +7243,7 @@ def q_orders_chi2_priority_status(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    return _stats28.chi2_independence(o, "o_orderpriority", "o_orderstatus")
+    return stats.chi2_independence(o, "o_orderpriority", "o_orderstatus")
 
 
 # ---------------------------------------------------------------------------
@@ -7600,7 +7258,7 @@ def q_orders_chi2_priority_status(
 @query(
     "orders_mannwhitney_price_drift",
     headline=True,
-    oracle=_stats28.mann_whitney_u_oracle_sql(
+    oracle=stats.mann_whitney_u_oracle_sql(
         "round(o_totalprice * 100)",
         "o_orderdate < TIMESTAMP '1995-07-01'",
         "orders",
@@ -7623,13 +7281,13 @@ def q_orders_mannwhitney_price_drift(
             F.col("o_orderdate") < F.to_timestamp(F.lit("1995-07-01"))
         ).alias("pre"),
     )
-    return _stats28.mann_whitney_u(o, "cents", "pre")
+    return stats.mann_whitney_u(o, "cents", "pre")
 
 
 @query(
     "lineitem_spearman_qty_price",
     headline=True,
-    oracle=_stats28.spearman_corr_oracle_sql(
+    oracle=stats.spearman_corr_oracle_sql(
         "CAST(l_quantity AS BIGINT)", "round(l_extendedprice * 100)",
         "lineitem",
     ),
@@ -7650,7 +7308,7 @@ def q_lineitem_spearman_qty_price(
         F.col("l_quantity").cast("long").alias("qty"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    return _stats28.spearman_corr(li, "qty", "cents")
+    return stats.spearman_corr(li, "qty", "cents")
 
 
 # ---------------------------------------------------------------------------
@@ -7665,7 +7323,7 @@ _ANOVA_CENTS = "CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DOUBLE)"
 
 @query(
     "orders_anova_priority",
-    oracle=_stats28.anova_oneway_oracle_sql(
+    oracle=stats.anova_oneway_oracle_sql(
         "o_orderpriority", _ANOVA_CENTS, "orders"
     ),
     doc="One-way ANOVA F of order price cents across the five "
@@ -7688,12 +7346,12 @@ def q_orders_anova_priority(
         .cast("double")
         .alias("cents"),
     )
-    return _stats28.anova_oneway(o, "o_orderpriority", "cents")
+    return stats.anova_oneway(o, "o_orderpriority", "cents")
 
 
 @query(
     "orders_levene_priority",
-    oracle=_stats28.brown_forsythe_oracle_sql(
+    oracle=stats.brown_forsythe_oracle_sql(
         "o_orderpriority", "round(o_totalprice * 100)", "orders"
     ),
     doc="Brown-Forsythe (median-centred Levene) variance-homogeneity "
@@ -7713,7 +7371,7 @@ def q_orders_levene_priority(
         F.col("o_orderpriority"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    return _stats28.brown_forsythe(o, "o_orderpriority", "cents")
+    return stats.brown_forsythe(o, "o_orderpriority", "cents")
 
 
 _LOGRANK_SUBJECTS_SQL = """
@@ -7734,7 +7392,7 @@ _LOGRANK_SUBJECTS_SQL = """
 @query(
     "events_logrank_arms",
     headline=True,
-    oracle=_stats28.logrank_oracle_sql(_LOGRANK_SUBJECTS_SQL),
+    oracle=stats.logrank_oracle_sql(_LOGRANK_SUBJECTS_SQL),
     doc="Two-group log-rank test of time-to-first-error across the "
         "deterministic user-parity arms — the inferential companion "
         "to the Kaplan-Meier churn curve (same subjects: duration = "
@@ -7763,13 +7421,13 @@ def q_events_logrank_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("first_err").isNotNull(), 1).otherwise(0).alias("e"),
         (F.col("user_id") % 2 == 0).alias("a"),
     )
-    return _stats28.logrank_test(subj, "t", "e", "a")
+    return stats.logrank_test(subj, "t", "e", "a")
 
 
 @query(
     "orders_bh_fdr_customers",
     headline=True,
-    oracle=_stats28.bh_fdr_oracle_sql(
+    oracle=stats.bh_fdr_oracle_sql(
         "o_custkey", _ANOVA_CENTS, "orders", q=0.05
     ),
     doc="Per-customer mean-price screen with Benjamini-Hochberg FDR "
@@ -7793,4 +7451,4 @@ def q_orders_bh_fdr_customers(
         .cast("double")
         .alias("cents"),
     )
-    return _stats28.bh_fdr(o, "o_custkey", "cents", q=0.05)
+    return stats.bh_fdr(o, "o_custkey", "cents", q=0.05)

@@ -135,3 +135,12 @@ def test_verb_dispatch(monkeypatch):
         ("plans", "after", True, ["k1", "k2"]),
         ("plans", "before", False, []),
     ]
+
+
+def test_drift_defaults_to_the_headline_bar(tmp_path, capsys):
+    old = _write(tmp_path / "old.json", {"queries": {"k": 1.0}})
+    new = _write(tmp_path / "new.json", {"queries": {"k": 1.2}})
+    assert bench.main(["drift", old, new]) == 0
+    out = capsys.readouterr().out
+    assert "REGRESSED" not in out
+    assert out.endswith("0 above the +30% bar\n")

@@ -347,3 +347,54 @@ def test_pending_values_wait_for_a_spec_outside_the_export():
         "only exported specs reach these functions: delete the values "
         "now and give those specs TOUCH rows"
     )
+
+
+def _query_calls():
+    """(file, ``@query(...)`` call) of every registered spec."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            for d in getattr(node, "decorator_list", []):
+                if (isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                        and d.func.id == "query"):
+                    yield path.name, d
+
+
+def test_every_spec_declares_its_oracle_and_nothing_else_sets_it():
+    """A spec is declared once, by its ``@query``: the oracle is an
+    argument there, not ``None`` patched later, and the driver export
+    is computed by the rotation, not flagged per spec."""
+    no_oracle, flagged = [], []
+    for fname, call in _query_calls():
+        spec = f"{fname}:{call.args[0].value}"
+        kw = {k.arg: k.value for k in call.keywords}
+        oracle = call.args[1] if len(call.args) > 1 else kw.get("oracle")
+        if oracle is None or (isinstance(oracle, ast.Constant) and oracle.value is None):
+            no_oracle.append(spec)
+        if "driver" in kw:
+            flagged.append(spec)
+    assert no_oracle == [], f"specs without an oracle: {no_oracle}"
+    assert flagged == [], f"specs passing driver=: {flagged}"
+
+
+def test_no_statement_mutates_a_registered_spec():
+    def registry_item(node: ast.AST) -> bool:
+        """``REGISTRY[...].x`` or ``module.REGISTRY[...].x``."""
+        if not (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Subscript)):
+            return False
+        base = node.value.value
+        return "REGISTRY" in (getattr(base, "id", None), getattr(base, "attr", None))
+
+    mutated = []
+    for path in _caller_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            else:
+                continue
+            for t in targets:
+                for n in ast.walk(t):
+                    if registry_item(n):
+                        mutated.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert mutated == [], f"assignments to REGISTRY[...] attributes: {mutated}"

@@ -8,21 +8,23 @@ import pytest
 from nbi_oedi_etl_v2_spark import workload
 from nbi_oedi_etl_v2_spark.testing import check_query
 
-ALL_SPECS = workload.all_specs()  # includes pytest-only (driver=False)
-ORACLE_SPECS = [s for s in ALL_SPECS.values() if s.oracle is not None]
+ALL_SPECS = workload.all_specs()  # exported to the driver or not
 
 
-@pytest.mark.parametrize("spec", ORACLE_SPECS, ids=lambda s: s.name)
+@pytest.mark.parametrize("spec", ALL_SPECS.values(), ids=lambda s: s.name)
 def test_query_matches_oracle(spark, sf_dir, spec):
     problems = check_query(spark, sf_dir, spec.fn, spec.oracle)
     assert not problems, f"{spec.name}:\n" + "\n".join(problems)
 
 
 def test_every_spec_carries_an_oracle():
-    """Since round 5 every spec is DuckDB-oracle-able (the sketch/
-    approx ones via in-plan invariant columns) — a spec landing
-    without an oracle is a regression, not a category."""
-    assert [s.name for s in ALL_SPECS.values() if s.oracle is None] == []
+    """Every spec is DuckDB-oracle-able (the sketch/approx ones via
+    in-plan invariant columns) — a spec landing without an oracle is a
+    regression, not a category."""
+    assert [
+        s.name for s in ALL_SPECS.values()
+        if not (isinstance(s.oracle, str) and s.oracle.strip())
+    ] == []
 
 
 def test_entry_contract(spark):
@@ -30,7 +32,7 @@ def test_entry_contract(spark):
 
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
-    assert set(o) <= set(q)
+    assert set(o) == set(q)
     df = entry_mod.entry(spark)
     assert df.count() > 0
 
