@@ -57,15 +57,11 @@ def _md5_byte0(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 2), 16, 10).cast("int")
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 32,
-) -> DataFrame:
-    """(node, component) for every node in the pair graph, where
-    ``component`` is the minimum node id reachable from ``node``
-    (including itself) — a stable, engine-portable cluster label.
+def connected_components(pairs: DataFrame, max_iterations: int = 32) -> DataFrame:
+    """(node, component) for every node in the (id_a, id_b) pair
+    graph, where ``component`` is the minimum node id reachable from
+    ``node`` (including itself) — a stable, engine-portable cluster
+    label.
 
     Two-phase **large-star / small-star** contraction (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC 2014):
@@ -94,7 +90,7 @@ def connected_components(
     # the pairs are checkpointed once, so the node set read at return
     # does not re-run the caller's pair generation
     raw, _ = checkpoint(
-        pairs.select(F.col(f"`{src}`").alias("a"), F.col(f"`{dst}`").alias("b"))
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     )
     nodes = (
         raw.select(F.col("a").alias("node"))
@@ -161,8 +157,7 @@ def connected_components(
 
 
 def resolve_near_duplicates(
-    docs: DataFrame, id_col: str, pairs: DataFrame,
-    src: str = "id_a", dst: str = "id_b",
+    docs: DataFrame, id_col: str, pairs: DataFrame
 ) -> DataFrame:
     """The curated corpus: drop every doc that belongs to a near-dup
     cluster but is not its (min-id) representative.
@@ -175,7 +170,7 @@ def resolve_near_duplicates(
     broadcast would OOM the driver where a shuffled anti-join still
     works.
     """
-    components = connected_components(pairs, src, dst)
+    components = connected_components(pairs)
     losers = components.where(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

@@ -132,14 +132,12 @@ def _pinned_partitions(df: DataFrame) -> int:
 def _prefix_shingles(
     ex: DataFrame,
     threshold: float,
-    max_doc_freq: int | None,
     n_parts: int,
 ) -> DataFrame:
     """AllPairs prefix selection shared by the self-join and bipartite
     Jaccard paths: rank each doc's shingles by global document
     frequency ascending, keep the ``n - ceil(t·n) + 1`` rarest
-    ("prefix") shingles, optionally stop-shingling hotter-than-
-    ``max_doc_freq`` shingles first, and pin the partitioning of the
+    ("prefix") shingles, and pin the partitioning of the
     CPU-quadratic join boundary.
 
     Operates on ``h = xxhash64(shingle)`` — every downstream exchange
@@ -158,11 +156,9 @@ def _prefix_shingles(
     dfreq = exh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     rank_w = Window.partitionBy("doc").orderBy("df", "h")
     prefix_len = F.col("n_shingles") - F.ceil(F.lit(threshold) * F.col("n_shingles")) + 1
-    ranked = exh.join(dfreq, "h")
-    if max_doc_freq is not None:
-        ranked = ranked.where(F.col("df") <= max_doc_freq)
     prefix = (
-        ranked.withColumn("pos", F.row_number().over(rank_w))
+        exh.join(dfreq, "h")
+        .withColumn("pos", F.row_number().over(rank_w))
         .where(F.col("pos") <= prefix_len)
         .select("doc", "n_shingles", "h", "pos", "df")
     )
@@ -219,7 +215,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
     hot_shingle_limit: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard ≥ t).
@@ -236,16 +231,6 @@ def ngram_jaccard_pairs(
     fraction of the joined rows (positional filtering alone cuts
     candidates ~3.4× on the sf1 replica corpus; ~4× faster
     end-to-end).
-
-    ``max_doc_freq`` stop-shingles the candidate join: shingles whose
-    document frequency exceeds it never generate candidates (one extra
-    predicate on the already-computed df — no extra pass). This bounds
-    the worst key's join fan-out to max_doc_freq² for boilerplate the
-    prefix filter can't save (e.g. license headers shared by half the
-    corpus). Exactness caveat: a true pair found ONLY through hotter-
-    than-threshold prefix shingles would be missed, so results are
-    guaranteed unchanged when ``max_doc_freq`` ≥ the highest df among
-    prefix shingles; verification always uses full shingle sets.
 
     ``hot_shingle_limit`` (VERDICT r6 missing #4) is the OUTPUT guard
     the sf10 soak demanded: a duplicate cluster of m near-identical
@@ -265,7 +250,7 @@ def ngram_jaccard_pairs(
     uses. Verification stays exact-Jaccard either way.
     """
     ex = shingle_rows(df, id_col, text_col, k)
-    prefix = _prefix_shingles(ex, threshold, max_doc_freq, _pinned_partitions(df))
+    prefix = _prefix_shingles(ex, threshold, _pinned_partitions(df))
     cold = prefix
     hot_pairs = None
     if hot_shingle_limit is not None:
@@ -323,7 +308,7 @@ def hot_shingle_accounting(
     """One-row accounting for ``hot_shingle_limit`` (the no-silent-caps
     convention, mirroring ``basket_truncation_accounting``): over the
     SAME prefix-shingle table :func:`ngram_jaccard_pairs` joins on at
-    its defaults (k=3, threshold 0.8, no document-frequency cap),
+    its defaults (k=3, threshold 0.8),
     how many distinct prefix shingles exceeded the limit
     (``n_hot_shingles`` — these routed via star instead of
     all-pairs), how many (doc, shingle) prefix occurrences they carry
@@ -331,7 +316,7 @@ def hot_shingle_accounting(
     the hottest shingle's document frequency (``max_df`` — if ≤ the
     limit, the cap changed nothing). Grid-sized output."""
     ex = shingle_rows(df, id_col, text_col, 3)
-    prefix = _prefix_shingles(ex, 0.8, None, _pinned_partitions(df))
+    prefix = _prefix_shingles(ex, 0.8, _pinned_partitions(df))
     return prefix.agg(
         F.count_distinct("h").cast("bigint").alias("n_prefix_shingles"),
         F.count_distinct(
@@ -368,7 +353,7 @@ def cross_jaccard_pairs(
     r_cols = right.select(F.col(f"`{id_col}`"), F.col(f"`{text_col}`"))
     union = l_cols.unionByName(r_cols)
     ex = shingle_rows(union, id_col, text_col, k)
-    prefix = _prefix_shingles(ex, threshold, None, _pinned_partitions(left))
+    prefix = _prefix_shingles(ex, threshold, _pinned_partitions(left))
     ids_l = l_cols.select(F.col(f"`{id_col}`").alias("doc")).distinct()
     ids_r = r_cols.select(F.col(f"`{id_col}`").alias("doc")).distinct()
     a = (
@@ -537,10 +522,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # pattern above) saves ~250 ms of driver construction time
     # (measured 386 -> 138 ms on the minhash twin). NOT applied:
     # dedup_simhash is off the bench, and the round-11 driver
-    # rotation has no TOUCH slot left for a changed off-bench spec
-    # (rotation.py ROUND-11 NOTE — the forced age-5 cohort and the
-    # round-10 backlog consume the cap). The pattern is proven and
-    # one edit away when a slot opens.
+    # rotation had no TOUCH slot left for a changed off-bench spec
+    # (the forced age-5 cohort and the round-10 backlog consumed the
+    # cap). The pattern is proven and one edit away when a slot opens.
     sums = ex.groupBy("doc").agg(
         *[
             F.sum(

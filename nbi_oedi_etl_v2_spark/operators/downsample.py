@@ -1,4 +1,4 @@
-"""Hourly (or arbitrary-granularity) time-series downsample.
+"""Hourly time-series downsample.
 
 Reference parity (SURVEY §2.4 A1/A2, §2.8 F1/F2, §2.2 P4):
 ``/root/reference/etl/oedi_etl/worker.py:60-137`` floors 15-minute
@@ -48,15 +48,13 @@ def downsample(
     df: DataFrame,
     timestamp_col: str = "timestamp",
     entity_col: str | None = "bldg_id",
-    granularity: str = "hour",
-    decimal_places: int = DECIMAL_PLACES,
     extra_group_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Downsample a time-series DataFrame to ``granularity``.
+    """Downsample a time-series DataFrame to the hour.
 
     Mirrors worker.py:60-137: group by (floored timestamp[, entity]);
     mean for float columns, min otherwise; keys also min-aggregated;
-    float aggregates rounded to ``decimal_places``. Output columns are
+    float aggregates rounded to ``DECIMAL_PLACES``. Output columns are
     ``{col}_{fn}`` for every input column, then the plain-named group
     keys (pyarrow output order parity).
 
@@ -71,7 +69,7 @@ def downsample(
     extra = [c for c in (extra_group_cols or []) if c in df.columns]
 
     floored = df.withColumn(
-        timestamp_col, F.date_trunc(granularity, F.col(f"`{timestamp_col}`"))
+        timestamp_col, F.date_trunc("hour", F.col(f"`{timestamp_col}`"))
     )
 
     # worker.py:105-109 — group by [timestamp, bldg_id] when bldg_id
@@ -80,7 +78,7 @@ def downsample(
     if entity_col is not None and entity_col in df.columns:
         keys.append(entity_col)
 
-    aggs, ordered = classify_aggregates(df, keys, extra, decimal_places)
+    aggs, ordered = classify_aggregates(df, keys, extra)
     out = floored.groupBy(*[F.col(f"`{k}`") for k in keys + extra]).agg(*aggs)
     return out.select(*ordered)
 
@@ -89,7 +87,6 @@ def classify_aggregates(
     df: DataFrame,
     keys: list[str],
     extra: list[str],
-    decimal_places: int = DECIMAL_PLACES,
 ) -> tuple[list[F.Column], list[str]]:
     """The worker.py:104-126 type-dispatched aggregate list and the
     pyarrow-parity output column order (aggregates first, then keys).
@@ -121,7 +118,7 @@ def classify_aggregates(
                 F.when(F.isnan(total) | (F.abs(total) == float("inf")), total / n)
                 .otherwise(F.sum(quoted.cast("decimal(38,10)")).cast("double") / n)
             )
-            aggs.append(F.round(mean, decimal_places).alias(f"{name}_mean"))
+            aggs.append(F.round(mean, DECIMAL_PLACES).alias(f"{name}_mean"))
         else:
             # worker.py:119-122 — everything else → min.
             aggs.append(F.min(quoted).alias(f"{name}_min"))

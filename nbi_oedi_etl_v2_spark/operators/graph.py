@@ -174,11 +174,7 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 5) -> DataFrame:
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
-def copurchase_edges(
-    lineitem: DataFrame,
-    order_col: str = "l_orderkey",
-    item_col: str = "l_partkey",
-) -> DataFrame:
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Directed distinct co-occurrence edges: (a, b) when items a ≠ b
     appear in the same order. Pair generation is IN-ROW over each
     order's ``collect_set`` (fan-out bounded by items-per-order², a
@@ -196,9 +192,9 @@ def copurchase_edges(
     identical: both formulations produce exactly {(a, b): a ≠ b,
     same-order co-occurrence}, deduped.
     """
-    sets = lineitem.groupBy(
-        F.col(f"`{order_col}`").alias("o")
-    ).agg(F.collect_set(F.col(f"`{item_col}`")).alias("items"))
+    sets = lineitem.groupBy(F.col("l_orderkey").alias("o")).agg(
+        F.collect_set("l_partkey").alias("items")
+    )
     pair = F.explode(
         F.flatten(
             F.transform(

@@ -76,13 +76,12 @@ def bm25_topk(
     text_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k documents for a bag-of-terms query under BM25
     (Robertson/Sparck Jones, the Okapi formulation with the +1 idf
     floor): score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·|d|/avgdl)),
-    idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)).
+    idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)), with the usual
+    k1 = 1.2 and b = 0.75.
 
     Engine-portability note: ln() is the one transcendental in the
     tree; glibc and the JVM agree to ≤1 ulp, so the score is rounded
@@ -100,6 +99,7 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
+    k1, b = 1.2, 0.75
     toks = _token_rows(df, id_col, text_col)
     # per-doc length over the FULL corpus (BM25's normalizer), one agg
     doclen = toks.groupBy("doc").agg(F.count(F.lit(1)).alias("dl"))

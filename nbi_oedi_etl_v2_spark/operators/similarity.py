@@ -209,7 +209,6 @@ def ivf_assign(
     centroids: DataFrame,
     id_alias: str,
     vec_alias: str = "vec",
-    norm_alias: str = "norm",
     nprobe: int = 1,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids by
@@ -230,7 +229,7 @@ def ivf_assign(
     removes is k× the corpus row count, which is the term that
     matters on a cluster."""
     scored = df.crossJoin(F.broadcast(centroids)).withColumn(
-        "c_sim", F.expr(_dot(vec_alias, "c_vec")) / (F.col(norm_alias) * F.col("c_norm"))
+        "c_sim", F.expr(_dot(vec_alias, "c_vec")) / (F.col("norm") * F.col("c_norm"))
     )
     if nprobe == 1:
         best = scored.groupBy(id_alias).agg(
@@ -239,14 +238,14 @@ def ivf_assign(
                     F.col("c_sim"),
                     (-F.col("cid")).alias("nc"),
                     F.col(vec_alias).alias("v"),
-                    F.col(norm_alias).alias("n"),
+                    F.col("norm").alias("n"),
                 )
             ).alias("b")
         )
         return best.select(
             id_alias,
             F.col("b.v").alias(vec_alias),
-            F.col("b.n").alias(norm_alias),
+            F.col("b.n").alias("norm"),
             (-F.col("b.nc")).alias("cid"),
             F.lit(1).alias("probe_rank"),
         )
@@ -254,7 +253,7 @@ def ivf_assign(
     return (
         scored.withColumn("probe_rank", F.row_number().over(w))
         .where(F.col("probe_rank") <= nprobe)
-        .select(id_alias, vec_alias, norm_alias, "cid", "probe_rank")
+        .select(id_alias, vec_alias, "norm", "cid", "probe_rank")
     )
 
 

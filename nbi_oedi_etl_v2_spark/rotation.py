@@ -1,11 +1,7 @@
 """Driver-slot rotation policy (round 12).
 
 The verification driver records at most ``DRIVER_QUERY_CAP`` (50)
-correctness rows per round, while the registry holds 215 specs
-(209 + the wave-30 rank statistics: Mann-Whitney U and sort-free
-Spearman, + the wave-31 inference completion: one-way ANOVA F,
-Brown-Forsythe, log-rank, BH-FDR — all four DEFERRED to r11 for
-their first rows; both waves added in round 10).
+correctness rows per round, while the registry holds 215 specs.
 Rounds 1-5 hand-picked each round's export; VERDICT r5 ("What's
 wrong" #2) demanded the rotation guarantee a STALENESS BOUND -
 every spec re-earns a driver row within K rounds, or old green rows
@@ -21,7 +17,7 @@ This module encodes the bound STRUCTURALLY instead of by hand:
 * ``build_driver_export(registry)`` - computes the export as
   PIN (parity trio, permanent)
   + never-verified specs (every new operator gets its first row ASAP)
-  + TOUCH (operator code changed this round - semantics must re-prove)
+  + TOUCH (a change this round can alter what the spec computes)
   + ADVISED (explicit re-verification requests from VERDICT/ADVICE)
   + oldest-first fill to the cap (ties broken by name, so the export
     is deterministic and reproducible from this file alone).
@@ -30,32 +26,16 @@ A registry of R specs refreshed at most cap rows per round cannot
 bound staleness below ceil(R/cap) rounds, so
 ``STALENESS_BOUND_ROUNDS`` is ceil(215/50) = 5.
 
-ROUND-12 STATE: CORRECTNESS_r11 was 50/50 green and is merged below
-(every key in that file reads 11, including the four wave-31 first
-rows, so no spec is never-verified). The budget is tighter than the
-round-11 note predicted: after the merge 43 specs read 7, and that
-whole cohort is at age 5, so it MUST export this round. PIN(3) + the
-cohort leaves 4 slots, not ~9. This round's operator changes (one
-observed-checkpoint step for the iterative loops) take 3 of them as
-TOUCH rows; the fourth TOUCH spec sits inside the cohort, and the
-last slot was left for fill. Deleting the settable values that no caller set
-changed the operators of 11 more specs, so they hold TOUCH rows too
-(15 in all) and the export stays the same 50 specs; one of them,
-corpus_budget_select, reads 8 and takes the fill slot. The IEEE
-hourly mean adds etl_write_pipeline, inside the cohort. The
-values left in functions that a spec outside this export reaches
-wait for that spec's slot (``PENDING`` in
-tests/test_package_surface.py). The deferred simhash batching
-(operators/dedup.py in-code note) still has no slot.
-
-ROUND-13 NOTE (computed at the end of round 12): merge CORRECTNESS_r12
-greens first; the oldest cohort then becomes the specs reading 8 (38
-of them if every r12 row is green: the 40 that read 8 now, minus
-corpus_incremental_dedup and corpus_budget_select), so PIN + that cohort
-leaves ~9 slots for TOUCH + fill. Bound 5 stays feasible while
-R <= 250 (R = 215); the prospective capacity assert in
-tests/test_workload_oracle.py fails the round a spec lands past that
-ceiling.
+ROUND-13 BUDGET (computed at the end of round 12): merge
+CORRECTNESS_r12 greens first; the oldest cohort then becomes the
+specs reading 8 (38 of them if every r12 row is green: the 40 that
+read 8 now, minus corpus_incremental_dedup and corpus_budget_select),
+so PIN + that cohort leaves ~9 slots for TOUCH + fill. No deleted
+option waits for a slot: a change that keeps every reached spec's
+normalized plan identical needs no TOUCH row (see TOUCH). Bound 5
+stays feasible while R <= 250 (R = 215); the prospective capacity
+assert in tests/test_workload_oracle.py fails the round a spec lands
+past that ceiling.
 """
 
 from __future__ import annotations
@@ -290,51 +270,21 @@ PIN: frozenset[str] = frozenset({
     "topk_per_segment",
 })
 
-# TOUCH - specs whose operator code changed and must re-earn a
-# driver row (round 12). The iterative loops now read their
-# convergence signals from the checkpoint job (operators/_iterate.py):
-# part_copurchase_kcore, part_copurchase_labelprop, and
-# corpus_incremental_dedup, which reaches curation.connected_components
-# through incremental_near_dedup. embedding_normalize lost a dead
-# import; it reads 7, so it exports with the age-5 cohort anyway and
-# its row costs no slot. The other specs on the changed loops have no
-# slot left this round and keep their pytest DuckDB oracles:
-# part_copurchase_bfs / _sssp and corpus_curate read 10,
-# customer_entity_resolution reads 11; dedup_components and
-# corpus_near_dedup read 7 and export with the cohort.
-# connected_components also checkpoints its projected pairs once, so
-# its returned node set no longer re-runs the caller's pair generation;
-# the three specs on it (dedup_components, corpus_near_dedup,
-# corpus_incremental_dedup) already export this round, so the change
-# costs no slot; customer_entity_resolution (reads 11) keeps its pytest
-# DuckDB oracle. The settable values that no caller set are deleted,
-# with their defaults inlined, from the operators of 11 more specs;
-# each but corpus_budget_select (reads 8) reads 7, so it exports with
-# the age-5 cohort and its row costs no slot. The hourly mean now
-# follows IEEE on NaN and ±inf readings (downsample.classify_aggregates):
-# etl_write_pipeline reads 7 and exports with the cohort;
-# etl_hourly_downsample (reads 10) and streaming_hourly_downsample
-# (reads 10) have no slot and keep their pytest DuckDB oracles. The
-# budget: PIN(3) + 4 TOUCH outside the cohort (corpus_budget_select
-# holds what was the fill slot) + the 43-spec age-5 cohort = 50, so a
-# fifth would push an age-5 spec (user_running_value) out.
+# TOUCH - specs that must re-earn a driver row this round because a
+# change can alter what they compute. A change needs no row when it
+# leaves the spec's normalized plan identical and changes no UDF body
+# the spec runs; the plan is the exported form's (``spec.fn``) at
+# sf0.01, dumped by planning only and put through
+# ``bench.normalize_plan``. Round 12: the iterative loops read their
+# convergence signals from the checkpoint job (operators/_iterate.py),
+# the hourly mean follows IEEE on NaN and ±inf readings, and
+# embedding_normalize's UDF lost a line.
 TOUCH: frozenset[str] = frozenset({
     "part_copurchase_kcore",
     "part_copurchase_labelprop",
     "corpus_incremental_dedup",
-    "embedding_normalize",
-    "orders_dp_noised_counts",
-    "orders_psi_price_drift",
-    "corpus_budget_select",
-    "corpus_pack_chunks",
-    "corpus_pack_next_fit",
-    "similarity_topk_ivf",
-    "orders_lineitem_join_size_agms",
-    "streaming_attribution_join",
-    "streaming_dedup_events",
-    "streaming_ewma_alerts",
-    "streaming_sessionize",
     "etl_write_pipeline",
+    "embedding_normalize",
 })
 
 # ADVISED - explicit re-verification asks: none this round.

@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.downsample import DECIMAL_PLACES, classify_aggregates
+from ..operators.downsample import classify_aggregates
 from ..tables import _nano_timestamp_cols
 from ..session import tune_session
 
@@ -82,7 +82,7 @@ def hourly_downsample_stream(
     keys = [timestamp_col]
     if entity_col is not None and entity_col in df.columns:
         keys.append(entity_col)
-    aggs, ordered = classify_aggregates(df, keys, [], DECIMAL_PLACES)
+    aggs, ordered = classify_aggregates(df, keys, [])
 
     out = floored.groupBy(
         F.window(F.col(f"`{timestamp_col}`"), "1 hour"),
@@ -263,9 +263,7 @@ def ewma_batch(df: DataFrame) -> DataFrame:
     )
 
 
-def run_to_memory(
-    stream_df: DataFrame, mode: str = "append", name: str | None = None
-) -> DataFrame:
+def run_to_memory(stream_df: DataFrame, mode: str = "append") -> DataFrame:
     """Drain a (bounded) stream into a memory sink with
     ``trigger(availableNow=True)`` and return the result table.
 
@@ -276,7 +274,7 @@ def run_to_memory(
     withholds the tail windows. Use ``mode="complete"`` when the full
     result is required (tests), append for incremental sinks.
     """
-    name = name or f"stream_{uuid.uuid4().hex[:10]}"
+    name = f"stream_{uuid.uuid4().hex[:10]}"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)

@@ -697,8 +697,7 @@ def q_events_in_prior_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q7 shape: bidirectional nation-pair filter rides two "
         "broadcast dim joins (the OR predicate is dim-side, so it "
-        "prunes before the fact shuffle); per-year volume rollup. "
-        "pytest-oracled (driver cap).",
+        "prunes before the fact shuffle); per-year volume rollup.",
 )
 def q_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").where(
@@ -750,8 +749,7 @@ def q_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q10 shape: returned-revenue per customer over a "
         "quarter, top 20 — fact×fact shuffle join, broadcast nation "
         "dim, heap top-k on the exact-decimal aggregate (ties broken "
-        "by custkey so the LIMIT is deterministic). pytest-oracled "
-        "(driver cap).",
+        "by custkey so the LIMIT is deterministic).",
 )
 def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -790,8 +788,7 @@ def q_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q14 shape: promo revenue share in a quarter — "
         "conditional aggregate ratio over a part-dim join (broadcast "
         "when the part table fits, AQE decides); both sums "
-        "exact-decimal so the ratio is engine-portable. "
-        "pytest-oracled (driver cap).",
+        "exact-decimal so the ratio is engine-portable.",
 )
 def q_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = load_table(spark, sf_dir, "lineitem").where(

@@ -484,7 +484,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.fingerprint(docs, "doc_id", "text")
 
 
-_DUCK_TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
+_DUCK_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 _DUCK_LINES = (
     "list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), "
     "l -> l != '')"
@@ -504,7 +504,7 @@ def _duck_dup_frac(arr: str) -> str:
     "text_repetition_scores",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_DUCK_LINES} AS lines_, {_DUCK_TOKS} AS toks
+      SELECT doc_id, {_DUCK_LINES} AS lines_, {_DUCK_TOKENS} AS toks
       FROM documents
     ), s AS (
       SELECT doc_id, lines_, toks,
@@ -1391,7 +1391,7 @@ def q_corpus_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Stream-static dimension enrichment: events stream left-joins "
         "the broadcast customer dim each micro-batch (stateless, no "
         "watermark, exactly-once per input row); held to the plain "
-        "batch-join oracle. pytest-oracled (driver cap).",
+        "batch-join oracle.",
 )
 def q_streaming_dim_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming.read_table_stream(spark, sf_dir, "events")
@@ -1498,8 +1498,7 @@ def q_etl_gapfill_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Deterministic importance sampling: keep probability equals "
         "the (rounded, engine-portable) quality score — high-quality "
         "docs survive, junk is thinned proportionally, no global "
-        "sort. Salted md5 coin, row-local, shuffle-free. "
-        "pytest-oracled (driver cap).",
+        "sort. Salted md5 coin, row-local, shuffle-free.",
 )
 def q_corpus_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2176,9 +2175,6 @@ def q_part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Tokenizer-precursor corpus statistics (operators/text.py).
 # ---------------------------------------------------------------------------
 
-_DUCK_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
-
-
 @query(
     "text_vocabulary",
     oracle=f"""
@@ -2193,7 +2189,7 @@ _DUCK_TOKENS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
         "frequencies: one explode into one map-side-combined hash "
         "agg (shuffle is vocabulary-sized, not corpus-sized), top-n "
         "via per-partition heaps. Deterministic (tf desc, token) "
-        "truncation order. pytest-oracled; r4 rotation candidate.",
+        "truncation order.",
     headline=True,
 )
 def q_text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2236,8 +2232,7 @@ def q_text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "counts. Pair generation is an equi-join (each token row "
         "re-keyed at pos+1..pos+3 — no range join, no per-doc "
         "quadratic); aggregates are vocabulary-bounded; ln on exact "
-        "integer counts rounded to 5. pytest-oracled; r4 rotation "
-        "candidate.",
+        "integer counts rounded to 5.",
 )
 def q_text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2275,7 +2270,7 @@ def q_text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "history: runs of identical tracked values collapse to "
         "half-open effective-dated intervals + current flag. Two "
         "window passes over ONE (key, order) exchange (Catalyst "
-        "reuses it). pytest-oracled; r4 rotation candidate.",
+        "reuses it).",
 )
 def q_orders_scd2_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -2305,8 +2300,7 @@ def q_orders_scd2_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "for ≡1) applied onto the full orders snapshot via one "
         "latest-wins window + one AQE-sized full-outer equi-join. "
         "The oracle derives the expected table arithmetically — a "
-        "fully independent check of the merge plan. pytest-oracled; "
-        "r4 rotation candidate.",
+        "fully independent check of the merge plan.",
     headline=True,
 )
 def q_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2356,8 +2350,7 @@ def q_orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "percent_rank/cume_dist/first/last over two total orderings "
         "(ties broken by key so ranks are engine-portable). Both "
         "windows share the o_custkey hash exchange; only the "
-        "in-partition sort differs. pytest-oracled; r4 rotation "
-        "candidate.",
+        "in-partition sort differs.",
 )
 def q_orders_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -2409,7 +2402,7 @@ def q_orders_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "windowed sums so both engines see bit-identical moments; "
         "identical double arithmetic downstream). Flags |z| > 2.5 "
         "with ≥5-event history. One (user) exchange + one sorted "
-        "window pass. pytest-oracled; r4 rotation candidate.",
+        "window pass.",
 )
 def q_events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -2508,7 +2501,7 @@ _SEM_DOT_AB = _DOT_FOLD.format(a="na.vec", b="nb.vec")
         "prune vectors with a lower-id same-cluster neighbor at "
         "cosine ≥ 0.92. The O(n²) prune becomes 8 independent "
         "intra-cluster equi-joins; only the 8×64 centroid table is "
-        "broadcast. pytest-oracled; r4 rotation candidate.",
+        "broadcast.",
     headline=True,
 )
 def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2545,8 +2538,7 @@ def q_embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "degree-oriented wedge enumeration (each triangle counted "
         "once at its lowest-degree vertex; wedge volume Σ min-deg², "
         "the power-law-safe bound). Oracle enumerates naively by id "
-        "order — independent derivation, identical result. "
-        "pytest-oracled; r4 rotation candidate.",
+        "order — independent derivation, identical result.",
 )
 def q_part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -2581,7 +2573,7 @@ def q_part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hops, early-exit on an empty frontier (boolean probe, not "
         "data), localCheckpoint lineage truncation. Oracle: bounded "
         "recursive CTE + MIN(dist) — independently derived, identical "
-        "labels. pytest-oracled; r6 rotation candidate.",
+        "labels.",
 )
 def q_part_copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -2635,7 +2627,7 @@ def q_part_copurchase_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shortest-roundtrip, strings escaped), then aggregated "
         "hourly — the oracle aggregates the original table, so any "
         "encode/decode loss breaks the hash. Map-only until the one "
-        "agg. pytest-oracled; r4 rotation candidate.",
+        "agg.",
 )
 def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -2677,8 +2669,7 @@ def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cold on near-sequential synthetic names) + JVM levenshtein "
         "verify "
         "on candidates only. The oracle is the O(n²) cross join — "
-        "independent derivation. pytest-oracled; r4 rotation "
-        "candidate.",
+        "independent derivation.",
 )
 def q_customer_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
@@ -2710,8 +2701,7 @@ def q_customer_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-source weighted reservoir sample (Efraimidis–Spirakis "
         "A-RES, k=16): inclusion odds proportional to quality score, "
         "fully deterministic (md5-derived uniforms, no rand()), one "
-        "group exchange + per-partition top-k heaps. pytest-oracled; "
-        "r4 rotation candidate.",
+        "group exchange + per-partition top-k heaps.",
 )
 def q_corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -2744,7 +2734,7 @@ def q_corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         "whose time-ordered event-type string matches "
         "view→…→click→…→purchase. ONE user-keyed aggregate "
         "(map-side partial collect), row-local regex — no self-join, "
-        "no window. pytest-oracled; r4 rotation candidate.",
+        "no window.",
 )
 def q_events_pattern_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -2771,7 +2761,7 @@ def q_events_pattern_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "min/max re-aggregate, avg derives from merged sums. The "
         "algebra every incremental rollup view depends on; "
         "exact-decimal sums make the merge bit-identical to the "
-        "single-pass oracle. pytest-oracled; r4 rotation candidate.",
+        "single-pass oracle.",
 )
 def q_etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
@@ -2836,8 +2826,7 @@ def q_etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "volume, key uniqueness, null rates, value ranges from ONE "
         "aggregate pass (grouping-free agg with conditional "
         "expressions), plus referential integrity via a left-anti "
-        "join against the customer dimension. pytest-oracled; r4 "
-        "rotation candidate.",
+        "join against the customer dimension.",
 )
 def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
@@ -2896,8 +2885,7 @@ def q_dq_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="2-D skyline (Pareto front on price × recency) via one "
         "sorted sweep — per-x max aggregate + running max over "
         "distinct x + join back — instead of the quadratic NOT "
-        "EXISTS self-join the oracle runs. pytest-oracled; r4 "
-        "rotation candidate.",
+        "EXISTS self-join the oracle runs.",
 )
 def q_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").where(
@@ -2962,8 +2950,7 @@ def q_orders_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hour is prev + (next-prev) * elapsed/gap_len, the fraction a "
         "ratio of integer hour counts so both engines run identical "
         "IEEE arithmetic. Leading/trailing gaps back-/forward-fill. "
-        "One entity exchange serves all four bracketing windows. "
-        "pytest-oracled; r4 rotation candidate.",
+        "One entity exchange serves all four bracketing windows.",
 )
 def q_etl_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -3000,8 +2987,7 @@ def q_etl_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bit-identical across engines — the distributed formulation "
         "of regr_slope/regr_intercept/corr that stays hash-oracle-"
         "able. ONE map-side-combined hash aggregate over the fact "
-        "table; moments shuffle, never rows. pytest-oracled; r4 "
-        "rotation candidate.",
+        "table; moments shuffle, never rows.",
 )
 def q_lineitem_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -3168,8 +3154,7 @@ def q_events_quantile_sketch_rollup(
         "construction, so the result hash-matches a plain filtered "
         "scan — which is exactly what the oracle runs. Pruning "
         "efficacy (files skipped on EITHER z-dimension) is pinned in "
-        "tests/test_skipping.py. pytest-oracled; r4 rotation "
-        "candidate.",
+        "tests/test_skipping.py.",
 )
 def q_orders_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
@@ -3244,7 +3229,7 @@ def q_orders_skipping_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "native writer, per-stripe min/max indexes), read back with a "
         "pinned schema, hash-match the unserialized parquet table — "
         "codec losslessness proven in-plan, same pattern as the JSONL "
-        "roundtrip. pytest-oracled; r4 rotation candidate.",
+        "roundtrip.",
 )
 def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(

@@ -61,7 +61,7 @@ def _t(spark, sf_dir, *names):
     """,
     doc="TPC-H Q2 shape (no partsupp: pairs from lineitem, cost = "
         "s_acctbal): per-part max over a window, dim-filtered, "
-        "top-100. pytest-oracled (driver cap).",
+        "top-100.",
 )
 def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p, s, n, r = _t(spark, sf_dir, "lineitem", "part", "supplier", "nation", "region")
@@ -106,7 +106,7 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q4 shape (late = shipped >30d after order date): "
         "EXISTS → left-semi join with a cross-table residual "
-        "predicate, per-priority count. pytest-oracled (driver cap).",
+        "predicate, per-priority count.",
 )
 def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     o, l = _t(spark, sf_dir, "orders", "lineitem")
@@ -139,7 +139,7 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q6: range+between filters all pushed to the scan, one "
         "partial-aggregated global sum — zero joins, zero wide "
-        "shuffles. pytest-oracled (driver cap).",
+        "shuffles.",
 )
 def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l,) = _t(spark, sf_dir, "lineitem")
@@ -190,8 +190,7 @@ def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q8 shape: customer-region + part-type filtered 7-way "
         "join; NATION_3's share of yearly volume as a conditional "
-        "exact-decimal ratio. Dims broadcast, one fact shuffle chain. "
-        "pytest-oracled (driver cap).",
+        "exact-decimal ratio. Dims broadcast, one fact shuffle chain.",
 )
 def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p, s, o, c, n, r = _t(
@@ -251,7 +250,7 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q9 shape (cost = 0.4*retailprice/unit, no partsupp): "
         "LIKE-filtered part dim, profit rollup by supplier nation × "
-        "order year. pytest-oracled (driver cap).",
+        "order year.",
 )
 def q_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p, s, o, n = _t(spark, sf_dir, "lineitem", "part", "supplier", "orders", "nation")
@@ -300,7 +299,7 @@ def q_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q11 shape (value = nation-group shipped revenue): "
         "grouped decimal sums filtered against a scalar-subquery "
         "share-of-total threshold, integer-scaled so the comparison "
-        "is exact in both engines. pytest-oracled (driver cap).",
+        "is exact in both engines.",
 )
 def q_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, s, n = _t(spark, sf_dir, "lineitem", "supplier", "nation")
@@ -340,8 +339,7 @@ def q_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag
     """,
     doc="TPC-H Q12 shape (returnflag as the mode column): fact×fact "
-        "join, conditional high/low priority counts per group. "
-        "pytest-oracled (driver cap).",
+        "join, conditional high/low priority counts per group.",
 )
 def q_q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     o, l = _t(spark, sf_dir, "orders", "lineitem")
@@ -381,8 +379,7 @@ def q_q12_priority_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q13 shape (priority exclusion instead of comment "
         "LIKE): left outer join keeps order-less customers at "
-        "c_count=0, then the count-of-counts histogram. "
-        "pytest-oracled (driver cap).",
+        "c_count=0, then the count-of-counts histogram.",
 )
 def q_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c, o = _t(spark, sf_dir, "customer", "orders")
@@ -419,8 +416,7 @@ def q_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q15 shape: per-supplier quarter revenue, equality "
         "against the scalar max kept in DECIMAL so ties are exact, "
-        "supplier dim joined for the survivors only. pytest-oracled "
-        "(driver cap).",
+        "supplier dim joined for the survivors only.",
 )
 def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, s = _t(spark, sf_dir, "lineitem", "supplier")
@@ -468,7 +464,7 @@ def q_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q16 shape (pairs from lineitem; exclusion = "
         "negative-balance suppliers): NOT IN over a non-null key → "
         "broadcast anti-join, distinct-supplier counts per part "
-        "attribute triple. pytest-oracled (driver cap).",
+        "attribute triple.",
 )
 def q_q16_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p, s = _t(spark, sf_dir, "lineitem", "part", "supplier")
@@ -506,8 +502,7 @@ def q_q16_parts_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q17 shape (brand filter only): correlated per-part "
         "average quantity → decorrelated per-part agg joined back; "
         "the avg is exact (decimal sum / count) so the strict "
-        "inequality can't flip between engines. pytest-oracled "
-        "(driver cap).",
+        "inequality can't flip between engines.",
 )
 def q_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p = _t(spark, sf_dir, "lineitem", "part")
@@ -542,7 +537,7 @@ def q_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q19 shape: OR of three brand/size/quantity conjunction "
         "arms spanning the join — Catalyst pushes the derivable "
         "single-side disjuncts below the join and keeps the residual "
-        "on top. pytest-oracled (driver cap).",
+        "on top.",
 )
 def q_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p = _t(spark, sf_dir, "lineitem", "part")
@@ -588,7 +583,7 @@ def q_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="TPC-H Q20 shape (share-of-shipments instead of availqty): "
         "two-level grouped decimal sums, integer-scaled share "
         "threshold, name-prefix part filter, nation-filtered "
-        "suppliers. pytest-oracled (driver cap).",
+        "suppliers.",
 )
 def q_q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, p, s, n = _t(spark, sf_dir, "lineitem", "part", "supplier", "nation")
@@ -649,7 +644,7 @@ def q_q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "plan decorrelates both into ONE per-order aggregate "
         "(distinct suppliers, distinct late suppliers, the single "
         "late supplier's line count) — one fact shuffle instead of "
-        "two correlated self-joins. pytest-oracled (driver cap).",
+        "two correlated self-joins.",
 )
 def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l, o, s, n = _t(spark, sf_dir, "lineitem", "orders", "supplier", "nation")
@@ -703,8 +698,7 @@ def q_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="TPC-H Q22 shape (country code = custkey mod 10): scalar "
         "exact-decimal average threshold broadcast into the filter, "
-        "NOT EXISTS → anti-join against orders, per-code counts. "
-        "pytest-oracled (driver cap).",
+        "NOT EXISTS → anti-join against orders, per-code counts.",
 )
 def q_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c, o = _t(spark, sf_dir, "customer", "orders")

@@ -36,38 +36,6 @@ def test_minhash_lsh_recall(docs):
     assert recall >= 0.95, f"LSH recall {recall:.2f} over {len(exact)} pairs"
 
 
-def test_ngram_stop_shingle_above_observed_df_is_identity(docs):
-    # max_doc_freq above the corpus's highest shingle df → the stop-
-    # shingle predicate drops nothing and results are bit-identical
-    base = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.8)
-    max_df = (
-        dedup.shingle_rows(docs, "doc_id", "text", 3)
-        .groupBy("shingle")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    capped = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", 3, 0.8, max_doc_freq=max_df
-    )
-    assert _pair_set(capped) == _pair_set(base)
-
-
-def test_ngram_stop_shingle_prunes_boilerplate_but_keeps_pairs(spark):
-    # every doc shares a boilerplate header (df = corpus size); the
-    # near-dup pair differs in one token and is found via its rare
-    # body shingles even when the header shingles are stop-dropped
-    header = "standard license header text block"
-    bodies = [f"unique body {i} content alpha beta gamma delta" for i in range(20)]
-    rows = [(i, f"{header} {b}") for i, b in enumerate(bodies)]
-    rows.append((100, f"{header} unique body 0 content alpha beta gamma echo"))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    pairs = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", 3, 0.5, max_doc_freq=5
-    )
-    assert (0, 100) in _pair_set(pairs)
-
-
 def test_repetition_scores_on_planted_repeats(spark):
     from nbi_oedi_etl_v2_spark.operators import text as text_ops
 

@@ -14,17 +14,12 @@ liveness.
 
 Parameters: every defaulted parameter of every package function must
 be passed, by keyword or by position, by some call in a caller file,
-or sit on ``KEEP_PARAMS`` (with its reason) or ``PENDING``. Calls are
+or sit on ``KEEP_PARAMS`` with its reason. Calls are
 matched to functions by name, so two functions of one name share
 their callers. ``f(*args)`` passes every positional parameter,
 ``f(**helper(...))`` passes the keys of the dict literal that
 ``helper`` returns (any other ``**`` passes every keyword), and
 ``pool.submit(f, ...)`` counts as a call of ``f``.
-
-Pending values: each ``PENDING`` entry must sit in a function that
-some spec outside the current driver export reaches, by the same
-by-name call matching, through the calls of the spec's function and
-its ``@query`` decorator.
 """
 
 from __future__ import annotations
@@ -66,10 +61,14 @@ KEEP_PARAMS = {
     # test seams: force the other branch of an automatic path choice
     "operators.cluster.lloyd_kmeans.assign_strategy":
         "test seam: literal vs broadcast centroid assign",
+    "operators.curation.connected_components.max_iterations":
+        "test seam: the non-convergence error",
     "operators.dedup.minhash_lsh_pairs.hot_band_limit":
         "test seam: the hot-band star vs all-pairs",
     "operators.dedup.hot_shingle_accounting.hot_shingle_limit":
         "test seam: accounting for the hot-shingle star vs all-pairs",
+    "operators.dedup.ngram_jaccard_pairs.hot_shingle_limit":
+        "test seam: the hot-shingle star vs all-pairs",
     "operators.frequency.heavy_hitters.broadcast_limit":
         "test seam: broadcast vs shuffled candidate join",
     "operators.graph.weighted_sssp.early_exit":
@@ -82,41 +81,6 @@ KEEP_PARAMS = {
     "operators.bpe.learn_bpe.exact": "reference: exact vs fast batched merges",
     "operators.quality.table_profile.exact_ndv": "reference: exact vs sketched NDV",
     "streaming.cusum_batch.key_cols": "reference: composite-key twin of the closed form",
-}
-
-# defaulted parameters that no caller passes, in functions that a spec
-# outside the current driver export reaches (the specs that reach each
-# function: exported; not exported): deleting them changes that spec's
-# code, so they go in a round that gives the spec a TOUCH row
-PENDING = {
-    # corpus_incremental_dedup, corpus_near_dedup, dedup_components;
-    # corpus_curate, customer_entity_resolution
-    "operators.curation.connected_components.max_iterations",
-    # corpus_incremental_dedup, corpus_near_dedup; corpus_curate
-    "operators.curation.resolve_near_duplicates.dst",
-    "operators.curation.resolve_near_duplicates.src",
-    # corpus_incremental_dedup, corpus_near_dedup, dedup_components,
-    # dedup_ngram_jaccard; corpus_curate, dedup_minhash_lsh
-    "operators.dedup.ngram_jaccard_pairs.hot_shingle_limit",
-    "operators.dedup.ngram_jaccard_pairs.max_doc_freq",
-    # etl_write_pipeline; etl_hourly_downsample
-    "operators.downsample.downsample.decimal_places",
-    "operators.downsample.downsample.granularity",
-    # part_copurchase_kcore, part_copurchase_labelprop;
-    # part_copurchase_bfs, part_copurchase_pagerank, part_copurchase_sssp,
-    # part_copurchase_triangles
-    "operators.graph.copurchase_edges.item_col",
-    "operators.graph.copurchase_edges.order_col",
-    # text_hybrid_rrf_topk; text_bm25_topk
-    "operators.index.bm25_topk.b",
-    "operators.index.bm25_topk.k1",
-    # similarity_topk_ivf; embedding_semantic_dedup, similarity_topk_ivfpq
-    "operators.similarity.ivf_assign.norm_alias",
-    # streaming_attribution_join, streaming_dedup_events,
-    # streaming_ewma_alerts, streaming_sessionize; streaming_cm_sketch,
-    # streaming_cusum_alerts, streaming_dim_enrich,
-    # streaming_hourly_downsample
-    "streaming.run_to_memory.name",
 }
 
 
@@ -249,10 +213,6 @@ def _callee(call: ast.Call) -> tuple[str | None, list[ast.expr]]:
     return getattr(func, "id", None) or getattr(func, "attr", None), args
 
 
-def _called(node: ast.AST) -> set[str]:
-    return {_callee(c)[0] for c in ast.walk(node) if isinstance(c, ast.Call)} - {None}
-
-
 def _passed() -> dict[str, tuple[set[str], int]]:
     """Per called name: (keywords passed, most positionals passed)."""
     trees = [ast.parse(path.read_text()) for path in _caller_files()]
@@ -293,60 +253,12 @@ def _unpassed_params() -> list[str]:
 
 def test_every_defaulted_parameter_is_passed_by_a_non_test_caller():
     unpassed = set(_unpassed_params())
-    assert sorted(unpassed - set(KEEP_PARAMS) - PENDING) == [], (
+    assert sorted(unpassed - set(KEEP_PARAMS)) == [], (
         "defaulted parameters no caller passes (delete each, inline its "
         "default and port its tests, or add it to KEEP_PARAMS with the reason)"
     )
-    # the lists only shrink: an entry that is passed again, or gone, leaves
-    assert sorted((set(KEEP_PARAMS) | PENDING) - unpassed) == []
-    assert sorted(set(KEEP_PARAMS) & PENDING) == []
-
-
-def _spec_reach() -> dict[str, set[str]]:
-    """Per registered spec: the function names its code reaches, by
-    name, through the calls of its function and its ``@query``
-    decorator, and of the module constants those name."""
-    trees = [ast.parse(path.read_text()) for path in sorted(PACKAGE.rglob("*.py"))]
-    calls: dict[str, set[str]] = {}
-    for tree in trees:
-        for node in ast.walk(tree):
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                calls.setdefault(node.name, set()).update(_called(node))
-    reach = {}
-    for tree in trees:
-        consts = {t.id: node.value for node in tree.body
-                  if isinstance(node, ast.Assign)
-                  for t in node.targets if isinstance(t, ast.Name)}
-        for node in tree.body:
-            if not _is_query(node):
-                continue
-            deco = next(d for d in node.decorator_list if isinstance(d, ast.Call))
-            todo = _called(node)
-            for n in ast.walk(node):
-                if isinstance(n, ast.Name) and n.id in consts:
-                    todo |= _called(consts[n.id])
-            seen: set[str] = set()
-            while todo:
-                name = todo.pop()
-                if name not in seen:
-                    seen.add(name)
-                    todo |= calls.get(name, set())
-            reach[deco.args[0].value] = seen
-    return reach
-
-
-def test_pending_values_wait_for_a_spec_outside_the_export():
-    from nbi_oedi_etl_v2_spark import rotation, workload
-
-    reach = _spec_reach()
-    assert sorted(reach) == sorted(workload.all_specs())
-    export = rotation.build_driver_export(set(reach), workload.DRIVER_QUERY_CAP)
-    outside = set().union(*(r for spec, r in reach.items() if spec not in export))
-    early = sorted(p for p in PENDING if p.rsplit(".", 2)[1] not in outside)
-    assert early == [], (
-        "only exported specs reach these functions: delete the values "
-        "now and give those specs TOUCH rows"
-    )
+    # the list only shrinks: an entry that is passed again, or gone, leaves
+    assert sorted(set(KEEP_PARAMS) - unpassed) == []
 
 
 def _query_calls():
